@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.{GraftSession, Json}
 object Bench {
   /** Fixed-work calibration canary, run once per timed pass.
     *
@@ -29,10 +31,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Contract default is local[32]; SPARK_GRAFT_CPUS overrides for
     // iterating on smaller boxes.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCpus(32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
       // TableIO.normalizeEventTs's TIMESTAMP_NTZ branch casts through the
       // session timezone; without this pin, bench semantics over ts would
@@ -66,10 +68,15 @@ object Bench {
     // signature — a handful of unchanged queries 30-50x their round-2
     // times. Separating the samples by a whole pass makes min() robust to
     // any stall shorter than the pass itself.
+    // First failure per query, "Class: message", so a -1 entry says why.
+    val errors = scala.collection.mutable.Map.empty[String, String]
     def timedPass(): Map[String, Double] = SparkEntry.benchQueries.map { name =>
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+        errors.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
+        false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // Drop intermediates persisted by operators (dedup gram/band
       // tables) so successive runs are timed from a clean state.
@@ -145,8 +152,11 @@ object Bench {
         .map { case (k, _) =>
           "\"" + k + "\":[" + p(pass1(k)) + "," + p(pass2(k)) + "," + p(pass3(k)) + "]" }
         .mkString("{", ",", "}")
+      val errs = errors.toSeq.sortBy(_._1)
+        .map { case (k, e) => Json.quote(k) + ":" + Json.quote(e) }
+        .mkString("{", ",", "}")
       val json =
-        s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","canary":${f"$canary%.3f"},"canary_passes":[${f"$canary1%.3f"},${f"$canary2%.3f"},${f"$canary3%.3f"}],"value_norm":${f"$totalNorm%.3f"},"cpus":$cpus,"failed":$failed,"queries":$detail,"passes":$passes,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","canary":${f"$canary%.3f"},"canary_passes":[${f"$canary1%.3f"},${f"$canary2%.3f"},${f"$canary3%.3f"}],"value_norm":${f"$totalNorm%.3f"},"cpus":$cpus,"failed":$failed,"queries":$detail,"passes":$passes,"errors":$errs,"sf":"$sfDir"}"""
       // BENCH_DETAIL.json is the committed cross-round artifact and is only
       // comparable at the canonical scale factor: a dev-loop run at sf0.001
       // replacing an sf0.1 baseline once masqueraded as a 2x speedup that

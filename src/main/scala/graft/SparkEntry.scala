@@ -1,14691 +1,44 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{TextFunctions, VectorOps}
-import graft.operators.{Anomaly, BehavioralFeatures, Cdc, Chunker, Components, Dedup, Dsir, EventAnalytics, HybridRetrieval, Layout, Multimodal, Quantization, Selection, SemanticDedup, SimilaritySearch, SubstringDedup, TfIdf, TrainingData, Upsert}
-import graft.quality.{Between, InSet, NotNull, RowCheck}
-import graft.sources.TableIO
+import graft.contract._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every query has a deterministic total ordering and engine-exact
-  * numerics: floating aggregates go through DECIMAL(18,2) sums (exact,
-  * order-independent in both Spark and DuckDB) and are cast back to
-  * double; integer sums are cast to BIGINT on the oracle side (DuckDB
-  * widens to HUGEINT); similarity scores are rounded to 6dp on both
-  * sides. Column aliases match the oracle SQL exactly.
+/** The query contract: every query the engine answers, each with its DuckDB
+  * oracle where one exists. The contracts live per engine family in
+  * `graft.contract.<Family>Contracts`, each Spark query directly above
+  * its oracle SQL; this object is their concatenation.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    TableIO.table(s, dir, name)
+  private val contracts: Seq[Contract] = Seq(
+    RelationalContracts.contracts,
+    LayoutContracts.contracts,
+    EventContracts.contracts,
+    AnomalyContracts.contracts,
+    GraphContracts.contracts,
+    SketchContracts.contracts,
+    TextContracts.contracts,
+    DedupContracts.contracts,
+    CorpusContracts.contracts,
+    SimilarityContracts.contracts,
+    MultimodalContracts.contracts,
+    LabelContracts.contracts,
+    PreferenceContracts.contracts).flatten
 
-  /** Shared fixture for the preference family (q_pref_*): adjacent-doc
-    * quality comparisons become source-vs-source winner/loser records
-    * (higher 4-gate score wins, ties to the lexicographically smaller
-    * source; same-source pairs skipped).
-    */
-  /** The 3-filter labeling panel melted to long-form votes (one row
-    * per (doc, rater, boolean-label)) — the fleiss/alpha panel reused
-    * as Dawid-Skene input. Rater ids r1/r2/r3 sort in panel order, so
-    * the E-step's sorted-rater product replays as a written chain.
-    */
-  private def dsPanelVotes(s: SparkSession, d: String): DataFrame = {
-    val rated = t(s, d, "documents").select(col("doc_id"),
-      (TextFunctions.qualityScore(col("text")) >= 0.5).as("r1"),
-      graft.quality.GopherRules.passes(col("text")).as("r2"),
-      (TextFunctions.languageId(col("text")) === "en").as("r3"))
-    rated.select(col("doc_id").as("u"),
-        posexplode(array(col("r1").cast("string"), col("r2").cast("string"),
-          col("r3").cast("string"))).as(Seq("pos", "l")))
-      .select(col("u"),
-        concat(lit("r"), (col("pos") + 1).cast("string")).as("r"), col("l"))
-  }
+  private lazy val registry: Map[String, Contract] = Contract.registry(contracts)
 
-  /** Scalar-grade panel for the consensus-fit queries (r18): three
-    * deterministic graders per document — g1 = the 4-gate quality
-    * score, g2 = Flesch/100 (abstains when the text has no words),
-    * g3 = 2·quality + 0.25, a planted harsh-stretched replica whose
-    * lens the fit must recover. Long form (u, r, y); the raters melt
-    * from ONE doc scan (the fleiss/alpha house pattern).
-    */
-  private def scalarGradeVotes(s: SparkSession, d: String): DataFrame = {
-    val q = TextFunctions.qualityScore(col("text"))
-    val fl = TextFunctions.fleschReadingEase(col("text"))
-    t(s, d, "documents").select(col("doc_id").as("u"),
-        posexplode(array(
-          round(q, 6),
-          round(fl / 100.0, 6),
-          round(q * 2.0 + 0.25, 6))).as(Seq("pos", "y")))
-      .select(col("u"),
-        concat(lit("g"), (col("pos") + 1).cast("string")).as("r"), col("y"))
-  }
-
-  private def prefComparisons(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
-      .select(col("doc_id"), col("source"),
-        TextFunctions.qualityScore(col("text")).as("q"))
-    val a = docs.select(col("doc_id").as("ida"),
-      col("source").as("sa"), col("q").as("qa"))
-    val b = docs.select((col("doc_id") - 1).as("ida"),
-      col("source").as("sb"), col("q").as("qb"))
-    a.join(b, Seq("ida"))
-      .filter(col("sa") =!= col("sb"))
-      .select(
-        when(col("qa") > col("qb"), col("sa"))
-          .when(col("qa") < col("qb"), col("sb"))
-          .otherwise(least(col("sa"), col("sb"))).as("winner"),
-        when(col("qa") > col("qb"), col("sb"))
-          .when(col("qa") < col("qb"), col("sa"))
-          .otherwise(greatest(col("sa"), col("sb"))).as("loser"),
-        // presentation position: the lower-doc_id side is "shown first"
-        col("sa").as("first"),
-        // judge identity for the per-judge QC readout (r17): three
-        // deterministic judges striped over the anchor doc
-        concat(lit("j"), (col("ida") % 3).cast("string")).as("judge"))
-  }
-
-  /** Exact decimal-backed sum of a 2dp money column, returned as double. */
-  // For 2dp MONEY columns only (TPC-H prices, balances) — exact for them.
-  // Arbitrary-precision measures (events.value windows) use decimal(38,12)
-  // instead so no sub-cent digits are rounded away per row.
-  private def dsum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
-
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on the sf0.001 testdata, smoke-checked for rows > 0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_join_revenue")(spark, "/root/testdata/sf0.001")
 
-  // ------------------------------------------------------------------ //
-  //  Queries. One per implemented operator family from SURVEY.md §2     //
-  //  plus the LLM-data-pipeline extensions (dedup / similarity / text / //
-  //  multimodal).                                                       //
-  // ------------------------------------------------------------------ //
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // S3/P4/P5: parquet scan + timestamp range predicate + projection.
-    // Filter and 4-column projection both push to the parquet scan.
-    "q_scan_filter_project" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .filter(col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
-        .select(
-          col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"),
-          to_date(col("l_shipdate")).as("ship_date"))
-        .orderBy("l_orderkey", "l_linenumber")),
-
-    // P1/P2: null predicates (nullif manufactures nulls — testdata has none).
-    "q_null_predicate" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("et", expr("nullif(event_type, 'click')"))
-        .filter(col("et").isNull)
-        .select("event_id", "user_id")
-        .orderBy("event_id")),
-
-    // F7/F8: fillna over a nullable column, then aggregate.
-    "q_fillna" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("et", expr("nullif(event_type, 'click')"))
-        .na.fill(Map("et" -> "unknown"))
-        .groupBy("et").agg(count(lit(1)).as("n"))
-        .orderBy("et")),
-
-    // P6/F1-F5: temporal derivations (year/month/hour/dayofweek/weekend/date).
-    "q_temporal_derive" -> ((s, d) =>
-      t(s, d, "events").select(
-        col("event_id"),
-        year(col("ts")).as("y"),
-        month(col("ts")).as("m"),
-        hour(col("ts")).as("h"),
-        dayofweek(col("ts")).as("dow"),
-        when(dayofweek(col("ts")).isin(1, 7), 1).otherwise(0).as("is_weekend"),
-        to_date(col("ts")).as("event_date"))
-        .orderBy("event_id")),
-
-    // F5/F6: conditional + boolean->int cast.
-    "q_cast_conditional" -> ((s, d) =>
-      t(s, d, "events").select(
-        col("event_id"),
-        (col("value") > 100.0).cast("int").as("is_large"),
-        when(col("event_type") === "purchase", col("value")).otherwise(0.0).as("purchase_value"))
-        .orderBy("event_id")),
-
-    // A3/A4/F2/F10/O1: daily grouped aggregation with derived ratio
-    // (gold.py:31-41 pattern on the orders table).
-    "q_agg_daily" -> ((s, d) =>
-      t(s, d, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("order_date"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("total_value"),
-          (dsum(col("o_totalprice")) / count(lit(1))).as("avg_value"),
-          (sum(when(col("o_orderpriority") === "1-URGENT", 1).otherwise(0)).cast("double")
-            / count(lit(1))).as("urgent_rate"))
-        .orderBy("order_date")),
-
-    // Incremental maintenance of q_agg_daily: partial-state table built
-    // on pre-split history, delta folded in key-wise, derived columns
-    // finalized at read — bit-identical to the full recompute, so the
-    // oracle IS the full-recompute SQL. At 100 TB the delta merge costs
-    // one aggregation of the new day plus |keys| state rows; history is
-    // never re-scanned.
-    "q_agg_incremental" -> ((s, d) => {
-      import graft.operators.IncrementalAgg
-      val split = java.sql.Timestamp.valueOf("1997-01-01 00:00:00")
-      def prep(df: DataFrame): DataFrame = df.select(
-        to_date(col("o_orderdate")).as("order_date"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"),
-        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L).as("urgent"))
-      val orders = t(s, d, "orders")
-      val hist = IncrementalAgg.partialState(
-        prep(orders.filter(col("o_orderdate") < lit(split))), Seq("order_date"),
-        sums = Seq("price_sum" -> col("price"), "n_urgent" -> col("urgent")))
-      val delta = IncrementalAgg.partialState(
-        prep(orders.filter(col("o_orderdate") >= lit(split))), Seq("order_date"),
-        sums = Seq("price_sum" -> col("price"), "n_urgent" -> col("urgent")))
-      IncrementalAgg.merge(hist, delta, Seq("order_date"),
-          sumCols = Seq("price_sum", "n_urgent"))
-        .select(
-          col("order_date"),
-          col("n").as("n_orders"),
-          col("price_sum").cast("double").as("total_value"),
-          (col("price_sum").cast("double") / col("n")).as("avg_value"),
-          (col("n_urgent").cast("double") / col("n")).as("urgent_rate"))
-        .orderBy("order_date")
-    }),
-
-    // Mergeable distinct-count state: countDistinct is not a monoid, so
-    // IncrementalAgg can't maintain it — the HLL sketch column is
-    // (register-wise max). History + delta sketches union key-wise;
-    // estimate at read. Rows-only: the estimate is DataSketches register
-    // state no SQL engine replays (SURVEY §8); SketchesSpec pins
-    // merged == direct as an exact identity plus an error bound vs
-    // exact distinct counts.
-    "q_distinct_incremental" -> ((s, d) => {
-      import graft.operators.Sketches
-      val split = java.sql.Timestamp.valueOf("2024-01-16 00:00:00")
-      val events = t(s, d, "events")
-      val hist = Sketches.hllState(
-        events.filter(col("ts") < lit(split)), Seq("event_type"), "user_id")
-      val delta = Sketches.hllState(
-        events.filter(col("ts") >= lit(split)), Seq("event_type"), "user_id")
-      Sketches.hllEstimate(
-          Sketches.hllMerge(hist, delta, Seq("event_type")), "n_users_est")
-        .select(col("event_type"), col("n_users_est"))
-        .orderBy("event_type")
-    }),
-
-    // Mergeable quantile-digest state (GK QuantileSummaries as a binary
-    // column): per-period digests built independently, unioned key-wise,
-    // quantiles read at the end — percentile_approx's own machinery,
-    // exposed so quantile state persists and folds incrementally like
-    // the HLL sketches. Rows-only: the digest's sample set is
-    // engine-internal (SURVEY §8); QuantileStateSpec pins the GK rank
-    // -error bound for direct, split and chained-merge builds.
-    "q_quantile_incremental" -> ((s, d) => {
-      import graft.plans.QuantileStateAgg.{quantileFromState, quantileState, quantileStateMerge}
-      val split = java.sql.Timestamp.valueOf("2024-01-16 00:00:00")
-      val events = t(s, d, "events")
-      def state(df: DataFrame): DataFrame = df.groupBy("event_type")
-        .agg(quantileState(col("value"), 0.001).as("qs"))
-      state(events.filter(col("ts") < lit(split)))
-        .unionByName(state(events.filter(col("ts") >= lit(split))))
-        .groupBy("event_type")
-        .agg(quantileStateMerge(col("qs"), 0.001).as("qs"))
-        .select(col("event_type"),
-          round(quantileFromState(col("qs"), 0.5), 6).as("p50_value"),
-          round(quantileFromState(col("qs"), 0.95), 6).as("p95_value"))
-        .orderBy("event_type")
-    }),
-
-    // A5/F3: hourly grouped aggregation (gold.py:45-52 pattern) + countDistinct.
-    "q_agg_hourly" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(hour(col("ts")).as("event_hour"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          dsum(col("value")).as("total_value"),
-          (dsum(col("value")) / count(col("value"))).as("avg_value"),
-          countDistinct(col("user_id")).as("n_users"))
-        .orderBy("event_hour")),
-
-    // W1: trailing 1h count over a per-user value-range window
-    // (build_features.py:28,35 pattern on events).
-    "q_window_velocity" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("ts_unix", unix_timestamp(col("ts")))
-        .select(
-          col("event_id"), col("user_id"),
-          BehavioralFeatures.trailingCount("user_id", "ts_unix", 3600L).as("velocity_1h"))
-        .orderBy("event_id")),
-
-    // W2/W3: trailing 24h average (exact decimal form) and deviation.
-    "q_window_avg_dev" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("ts_unix", unix_timestamp(col("ts")))
-        .select(
-          col("event_id"), col("user_id"),
-          (col("value") - BehavioralFeatures.trailingAvgExact(
-            col("value"), "user_id", "ts_unix", 86400L)).as("value_dev_24h"))
-        .orderBy("event_id")),
-
-    // W4: distinct-set cardinality over a trailing 6h range window.
-    "q_window_distinct" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("ts_unix", unix_timestamp(col("ts")))
-        .select(
-          col("event_id"), col("user_id"),
-          BehavioralFeatures.trailingDistinct(
-            col("event_type"), "user_id", "ts_unix", 21600L).as("type_diversity_6h"))
-        .orderBy("event_id")),
-
-    // W1 blocked: skew-proof trailing count — provably output-identical to
-    // q_window_velocity (SURVEY §3.3 hot-key risk), so the oracle is the
-    // SAME plain-window SQL. Three bounded shuffles instead of one skewed one.
-    "q_window_blocked" -> ((s, d) =>
-      BehavioralFeatures.blockedTrailingCount(
-          t(s, d, "events").withColumn("ts_unix", unix_timestamp(col("ts"))),
-          "user_id", "ts_unix", 3600L, "velocity_1h")
-        .select("event_id", "user_id", "velocity_1h")
-        .orderBy("event_id")),
-
-    // W2/W3 blocked: skew-proof exact trailing average (decimal partials
-    // recombine bit-equal) — oracle is q_window_avg_dev's SQL verbatim.
-    "q_window_blocked_avg" -> ((s, d) =>
-      BehavioralFeatures.blockedTrailingAvgExact(
-          t(s, d, "events").withColumn("ts_unix", unix_timestamp(col("ts"))),
-          "value", "user_id", "ts_unix", 86400L, "_avg24")
-        .select(
-          col("event_id"), col("user_id"),
-          (col("value") - col("_avg24")).as("value_dev_24h"))
-        .orderBy("event_id")),
-
-    // W4 blocked: skew-proof trailing distinct — oracle is
-    // q_window_distinct's SQL verbatim.
-    "q_window_blocked_distinct" -> ((s, d) =>
-      BehavioralFeatures.blockedTrailingDistinct(
-          t(s, d, "events").withColumn("ts_unix", unix_timestamp(col("ts"))),
-          "event_type", "user_id", "ts_unix", 21600L, "type_diversity_6h")
-        .select("event_id", "user_id", "type_diversity_6h")
-        .orderBy("event_id")),
-
-    // The reference's full W1-W4 feature set in ONE call with every
-    // window in its blocked skew-proof form (addFeaturesBlocked) — the
-    // 100 TB pipeline entry. Blocked forms are output-identical to the
-    // plain windows, so the oracle is the three plain-window SQLs merged.
-    "q_features_blocked" -> ((s, d) =>
-      BehavioralFeatures.addFeaturesBlocked(
-          t(s, d, "events"),
-          accountCol = "user_id", tsCol = "ts",
-          amountCol = "value", receiverCol = "event_type")
-        .select("event_id", "user_id", "velocity_1h", "avg_diff_24h", "merchant_diversity")
-        .orderBy("event_id")),
-
-    // Batch gap-based sessionization (lag + running sum, both O(n)
-    // cumulative frames; deterministic under timestamp ties).
-    "q_sessionize" -> ((s, d) =>
-      BehavioralFeatures.sessionIndex(
-          t(s, d, "events").withColumn("ts_unix", unix_timestamp(col("ts"))),
-          "user_id", "ts_unix", 1800L)
-        .select("event_id", "user_id", "session_idx")
-        .orderBy("event_id")),
-
-    // Per-session summary at the (user, session) grain.
-    "q_session_stats" -> ((s, d) =>
-      BehavioralFeatures.sessionStats(
-          t(s, d, "events").withColumn("ts_unix", unix_timestamp(col("ts"))),
-          "user_id", "ts_unix", 1800L)
-        .orderBy("user_id", "session_idx")),
-
-    // O1/O2: global sort.
-    "q_sort_global" -> ((s, d) =>
-      t(s, d, "events")
-        .select("event_id", "event_type", "value")
-        .orderBy(desc("value"), asc("event_id"))),
-
-    // Top-k: order + limit (planned as TakeOrderedAndProject — no full sort).
-    "q_topk_limit" -> ((s, d) =>
-      t(s, d, "events")
-        .select("event_id", "user_id", "value")
-        .orderBy(desc("value"), asc("event_id"))
-        .limit(100)),
-
-    // Per-group top-k via the bounded-heap TypedImperativeAggregate:
-    // map-side combine carries <= k entries per (partition, group)
-    // through the shuffle, where the rank-window form (q_window_rank's
-    // shape) sorts and buffers every row of every group. Total order
-    // (value DESC, id ASC) makes the rank-k boundary deterministic, so
-    // the window replay is an exact oracle.
-    "q_group_topk" -> ((s, d) =>
-      t(s, d, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(graft.plans.TopKAgg.topKByValue(col("o_totalprice"), col("o_orderkey"), 3).as("top"))
-        .select(col("o_custkey"), posexplode(col("top")).as(Seq("i", "e")))
-        .select(
-          col("o_custkey"),
-          (col("i") + 1).cast("int").as("rnk"),
-          col("e.id").as("o_orderkey"),
-          col("e.value").as("totalprice"))
-        .orderBy("o_custkey", "rnk")),
-
-    // Q1-Q5: the fused single-pass data-quality aggregate (one scan for
-    // the whole suite — the engine improvement over GX's N scans).
-    "q_quality_fused" -> ((s, d) => {
-      val checks: Seq[(String, RowCheck)] = Seq(
-        "null_quantity" -> NotNull("l_quantity"),
-        "quantity_range_violations" -> Between("l_quantity", 1, 50),
-        "returnflag_domain_violations" -> InSet("l_returnflag", Seq("A", "N", "R")),
-        "discount_range_violations" -> Between("l_discount", 0, 0.05))
-      val aggs = count(lit(1)).as("n_rows") +:
-        checks.map { case (alias, c) => sum(when(c.violation, 1L).otherwise(0L)).as(alias) }
-      t(s, d, "lineitem").agg(aggs.head, aggs.tail: _*)
-    }),
-
-    // Joins (SURVEY §2.3: none in the reference; required for the
-    // extension ops and engine completeness): 5-table star join with
-    // broadcast dims, grouped revenue (decimal-exact), ordered.
-    "q_join_revenue" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val orders = t(s, d, "orders")
-        .filter(col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
-          col("o_orderdate") < lit(java.sql.Timestamp.valueOf("1998-01-01 00:00:00")))
-      val customer = t(s, d, "customer")
-      val nation = t(s, d, "nation")
-      val region = t(s, d, "region")
-      val revenue = sum(
-        col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-        .cast("double")
-      li.join(orders, col("l_orderkey") === col("o_orderkey"))
-        .join(customer, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA")
-        .groupBy(col("n_name"))
-        .agg(revenue.as("revenue"), count(lit(1)).as("n_items"))
-        .orderBy(desc("revenue"), asc("n_name"))
-    }),
-
-    // Left-semi join (EXISTS).
-    "q_join_semi" -> ((s, d) => {
-      val urgent = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
-      t(s, d, "customer")
-        .join(urgent, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    }),
-
-    // Left-anti join (NOT EXISTS): customers with no urgent orders.
-    "q_join_anti" -> ((s, d) => {
-      val urgent = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
-      t(s, d, "customer")
-        .join(urgent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    }),
-
-    // Manual skew-join split (Skew.skewedEquiJoin): top-k heavy keys on
-    // the big side salted 8 ways, matching small-side rows replicated —
-    // an algebraic identity with the plain join for ANY input, so the
-    // oracle is the unsalted SQL. Usable when AQE can't see the skew
-    // (post-filter skew, deterministic plans).
-    "q_join_skewed" -> ((s, d) => {
-      val events = t(s, d, "events")
-      val customer = t(s, d, "customer").select("c_custkey", "c_mktsegment")
-      val heavy = graft.operators.Skew.heavyHitters(events, "user_id", topK = 10)
-      graft.operators.Skew.skewedEquiJoin(
-          events, customer, "user_id", "c_custkey", heavy,
-          numSalts = 8, saltSource = col("event_id"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // Grouped countDistinct.
-    "q_distinct_agg" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          countDistinct(col("l_partkey")).as("n_parts"),
-          countDistinct(col("l_suppkey")).as("n_supps"))
-        .orderBy("l_returnflag")),
-
-    // Set ops: union + distinct.
-    "q_set_union" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      li.select(col("l_returnflag").as("flag"))
-        .union(li.select(col("l_linestatus").as("flag")))
-        .distinct()
-        .orderBy("flag")
-    }),
-
-    // Set ops: except.
-    "q_set_except" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      li.select(col("l_returnflag").as("flag"))
-        .except(li.select(col("l_linestatus").as("flag")))
-        .orderBy("flag")
-    }),
-
-    // Set ops: intersect (customers that placed orders).
-    "q_set_intersect" -> ((s, d) =>
-      t(s, d, "customer").select(col("c_custkey").as("k"))
-        .intersect(t(s, d, "orders").select(col("o_custkey").as("k")))
-        .orderBy("k")),
-
-    // Date arithmetic: datediff, date_add, trunc-to-month, last_day.
-    "q_date_arith" -> ((s, d) =>
-      t(s, d, "orders")
-        .select(
-          col("o_orderkey"),
-          datediff(lit(java.sql.Date.valueOf("2000-01-01")),
-            to_date(col("o_orderdate"))).as("days_to_y2k"),
-          date_add(to_date(col("o_orderdate")), 30).as("due_date"),
-          trunc(to_date(col("o_orderdate")), "month").as("order_month"),
-          last_day(to_date(col("o_orderdate"))).as("month_end"))
-        .orderBy("o_orderkey")),
-
-    // As-of (point-in-time) join — an operator Spark lacks natively,
-    // composed as tagged-union + one window pass (single shuffle of
-    // |L|+|R| rows, no inequality-join pair blowup).
-    "q_asof_join" -> ((s, d) => {
-      val events = t(s, d, "events")
-      val orders = t(s, d, "orders")
-      graft.operators.AsOfJoin.join(
-        left = events.select("event_id", "user_id", "ts"),
-        right = orders,
-        leftKey = "user_id", rightKey = "o_custkey",
-        leftTs = "ts", rightTs = "o_orderdate",
-        rightPayload = Seq("o_orderkey", "o_totalprice"),
-        rightOrderCol = "o_orderkey")
-        .select("event_id", "user_id", "o_orderkey", "o_totalprice")
-        .orderBy("event_id")
-    }),
-
-    // Forward as-of join: earliest event at-or-after each order (orders
-    // predate the events table, so this direction is the populated one).
-    "q_asof_forward" -> ((s, d) => {
-      val events = t(s, d, "events")
-      val orders = t(s, d, "orders")
-      graft.operators.AsOfJoin.join(
-        left = orders.select("o_orderkey", "o_custkey", "o_orderdate"),
-        right = events,
-        leftKey = "o_custkey", rightKey = "user_id",
-        leftTs = "o_orderdate", rightTs = "ts",
-        rightPayload = Seq("event_id", "value"),
-        rightOrderCol = "event_id",
-        direction = "forward")
-        .select("o_orderkey", "o_custkey", "event_id", "value")
-        .orderBy("o_orderkey")
-    }),
-
-    // Range (interval-containment) join — Spark plans the raw inequality
-    // predicate as BroadcastNestedLoopJoin, O(|L| x |R|); RangeJoin's bin
-    // bucketing turns it into a hash equi-join on the bin id. 7-day
-    // windows binned weekly: each interval explodes into <=2 replicas.
-    "q_range_join" -> ((s, d) => {
-      val points = t(s, d, "lineitem")
-        .filter(col("l_quantity") === 50.0)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
-      val intervals = t(s, d, "orders")
-        .filter(col("o_totalprice") > 490000.0)
-        .select(col("o_orderkey"), col("o_orderdate"),
-          (col("o_orderdate") + expr("INTERVAL 7 DAYS")).as("o_end"))
-      graft.operators.RangeJoin.pointInInterval(
-          points, intervals, "l_shipdate", "o_orderdate", "o_end",
-          binWidth = 7 * 86400.0, broadcastIntervals = true)
-        .select(
-          col("o_orderkey"), col("l_orderkey"), col("l_linenumber"),
-          to_date(col("l_shipdate")).as("ship_date"),
-          to_date(col("o_orderdate")).as("order_date"))
-        .orderBy("o_orderkey", "l_orderkey", "l_linenumber")
-    }),
-
-    // Interval-overlap join (half-open; touching endpoints don't match).
-    // Each overlapping pair is emitted exactly once — in the bin of the
-    // later start — so no distinct pass is needed after the bin join.
-    "q_range_overlap" -> ((s, d) => {
-      val orders = t(s, d, "orders")
-      val a = orders
-        .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 440000.0)
-        .select(col("o_orderkey").as("a_key"), col("o_orderdate").as("a_start"),
-          (col("o_orderdate") + expr("INTERVAL 7 DAYS")).as("a_end"))
-      val b = orders
-        .filter(col("o_orderstatus") === "F" && col("o_totalprice") > 470000.0)
-        .select(col("o_orderkey").as("b_key"), col("o_orderdate").as("b_start"),
-          (col("o_orderdate") + expr("INTERVAL 7 DAYS")).as("b_end"))
-      graft.operators.RangeJoin.intervalOverlap(
-          a, b, "a_start", "a_end", "b_start", "b_end",
-          binWidth = 7 * 86400.0, broadcastRight = true)
-        .select(col("a_key"), col("b_key"),
-          to_date(col("a_start")).as("a_date"), to_date(col("b_start")).as("b_date"))
-        .orderBy("a_key", "b_key")
-    }),
-
-    // Multi-level aggregation: rollup over (returnflag, linestatus).
-    "q_rollup" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          count(lit(1)).as("n"),
-          dsum(col("l_extendedprice")).as("total_price"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
-
-    // S1/S2/S4: CSV sink + schema-enforced PERMISSIVE CSV scan round-trip
-    // (ingestion_pyspark.py:28-35 pattern); oracle checks against the
-    // original parquet, so the round-trip must be lossless.
-    "q_csv_roundtrip" -> ((s, d) => {
-      val dir = "target/tmp/csv_roundtrip"
-      val tsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-      t(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .write.mode("overwrite")
-        .option("header", "true").option("timestampFormat", tsFmt)
-        .csv(dir)
-      val schema = StructType.fromDDL(
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
-      s.read
-        .option("header", "true").option("mode", "PERMISSIVE")
-        .option("timestampFormat", tsFmt)
-        .schema(schema)
-        .csv(dir)
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n"),
-          unix_micros(min(col("ts"))).as("min_ts_us"),
-          unix_micros(max(col("ts"))).as("max_ts_us"),
-          dsum(col("value")).as("total_value"))
-        .orderBy("event_type")
-    }),
-
-    // ORC sink + scan round-trip: the second columnar format Spark ships
-    // natively (Avro would need the spark-avro jar — absent offline).
-    // Oracle checks against the original parquet, so the round-trip must
-    // be lossless, decimals included.
-    "q_orc_roundtrip" -> ((s, d) => {
-      val dir = "target/tmp/orc_roundtrip"
-      t(s, d, "customer").write.mode("overwrite").orc(dir)
-      s.read.orc(dir)
-        .groupBy("c_mktsegment")
-        .agg(
-          count(lit(1)).as("n"),
-          dsum(col("c_acctbal")).as("total_bal"),
-          countDistinct(col("c_nationkey")).as("n_nations"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // JSON-lines sink + schema-enforced scan round-trip: the interchange
-    // format of every scraped/LLM corpus. Timestamps go through unix
-    // micros (JSON has no timestamp type) so the round-trip is exact.
-    "q_json_roundtrip" -> ((s, d) => {
-      val dir = "target/tmp/json_roundtrip"
-      t(s, d, "events")
-        .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("user_id"), col("event_type"), col("value"))
-        .write.mode("overwrite").json(dir)
-      val schema = StructType.fromDDL(
-        "event_id BIGINT, ts_us BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
-      s.read.schema(schema).json(dir)
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n"),
-          min(col("ts_us")).as("min_ts_us"),
-          dsum(col("value")).as("total_value"))
-        .orderBy("event_type")
-    }),
-
-    // JDBC sink + partitioned-read round-trip through embedded Derby (the
-    // one RDBMS whose driver ships in /opt/spark/jars). The read-back is
-    // range-partitioned on s_suppkey — the parallel-scan shape a real
-    // Postgres/MySQL mart read uses at scale — and the oracle checks
-    // against the original parquet, so the round-trip must be lossless.
-    "q_jdbc_roundtrip" -> ((s, d) => {
-      val url = graft.sources.JdbcIO.derbyUrl("target/tmp/derby/graftdb")
-      graft.sources.JdbcIO.write(t(s, d, "supplier"), url, "supplier_rt")
-      graft.sources.JdbcIO
-        .readPartitioned(s, url, "supplier_rt", "s_suppkey",
-          lowerBound = 0L, upperBound = 100000L, numPartitions = 8)
-        .groupBy("s_nationkey")
-        .agg(
-          count(lit(1)).as("n"),
-          dsum(col("s_acctbal")).as("total_bal"),
-          min(col("s_suppkey")).as("min_suppkey"))
-        .orderBy("s_nationkey")
-    }),
-
-    // -------------------- LLM-data-pipeline extensions --------------------
-
-    // Exact dedup: content-hash groups with deterministic keeper.
-    "q_dedup_exact" -> ((s, d) =>
-      Dedup.exactDuplicateGroups(t(s, d, "documents"), "doc_id", "text")
-        .orderBy("content_hash")),
-
-    // Exact dedup over the AGGRESSIVE canonicalization: collapses
-    // smart-quote / digit-variant / invisible-char copies the plain
-    // fingerprint keeps distinct; same group shape, normalized key.
-    "q_dedup_exact_aggressive" -> ((s, d) =>
-      t(s, d, "documents")
-        .groupBy(TextFunctions.fingerprintAggressive(col("text")).as("content_hash"))
-        .agg(
-          min(col("doc_id")).as("keeper_id"),
-          count(lit(1)).as("n_copies"))
-        .orderBy("content_hash")),
-
-    // Typed-Dataset variant of exact dedup: same digest through an
-    // Aggregator (map-side combined), same oracle as q_dedup_exact.
-    "q_dedup_exact_typed" -> ((s, d) => {
-      import s.implicits._
-      val docs = t(s, d, "documents").select("doc_id", "text").as[(Long, String)]
-      graft.operators.TypedDedup.exactDuplicateGroups[(Long, String)](
-        docs, r => graft.operators.TypedDedup.md5Hex(r._2), _._1)
-        .orderBy("content_hash")
-    }),
-
-    // Exhaustive n-gram Jaccard near-dup pairs (the dedup correctness oracle).
-    "q_dedup_jaccard" -> ((s, d) =>
-      Dedup.jaccardPairs(t(s, d, "documents"), "doc_id", "text", n = 3, minJaccard = 0.2)
-        .orderBy("id_a", "id_b")),
-
-    // LSH quality audit (r15b): precision/recall of the portable
-    // banded-MinHash pair set against the exhaustive Jaccard truth at
-    // the same 0.5 threshold — the "no silent caps" self-measurement
-    // made a standing query (banding recall loss and estimator
-    // false-positives are now numbers the pipeline watches, not
-    // footnotes). Both sides replay fully in SQL, so even this audit
-    // is oracle-exact.
-    "q_lsh_quality" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val exact = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3,
-          minJaccard = 0.5)
-        .select(col("id_a"), col("id_b"), lit(1).as("__e"))
-      val lsh = Dedup.minHashPairsPortable(docs, "doc_id", "text", n = 3,
-          perms = 16, bands = 4, minEstJaccard = 0.5)
-        .select(col("id_a"), col("id_b"), lit(1).as("__l"))
-      exact.join(lsh, Seq("id_a", "id_b"), "full_outer")
-        .agg(
-          sum(when(col("__e").isNotNull, 1L).otherwise(0L)).as("n_exact"),
-          sum(when(col("__l").isNotNull, 1L).otherwise(0L)).as("n_lsh"),
-          sum(when(col("__e").isNotNull && col("__l").isNotNull, 1L)
-            .otherwise(0L)).as("n_both"))
-        .select(col("n_exact"), col("n_lsh"), col("n_both"),
-          when(col("n_lsh") > 0,
-            round(col("n_both").cast("double")
-              / col("n_lsh").cast("double"), 6)).as("lsh_precision"),
-          when(col("n_exact") > 0,
-            round(col("n_both").cast("double")
-              / col("n_exact").cast("double"), 6)).as("lsh_recall"))
-    }),
-
-    // LSH operating curve (r16): q_lsh_quality generalized — precision/
-    // recall per (bands, rows/band) config from ONE signature pass, the
-    // table a threshold-tuning pass reads instead of re-running audits.
-    // Fully oracle-replayed (both sides are the same md5/grid
-    // arithmetic as q_minhash_pairs plus the exhaustive truth).
-    "q_lsh_curve" -> ((s, d) =>
-      Dedup.lshOperatingCurve(t(s, d, "documents"), "doc_id", "text",
-          n = 3, perms = 16, minJaccard = 0.5)
-        .orderBy("bands")),
-
-    // Transitive duplicate clusters: exact-jaccard pairs -> connected
-    // components (min-label + pointer jumping) -> per-doc cluster id.
-    // The oracle recomputes the closure as a recursive CTE.
-    "q_dedup_clusters" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Components.clusterMembership(docs, "doc_id",
-          Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.2))
-        .select(col("doc_id"), col("cluster_id"))
-        .orderBy("doc_id")
-    }),
-
-    // Cluster-representative dedup: keep the min-id member per duplicate
-    // cluster — the transitive-closure-correct "drop near duplicates".
-    "q_dedup_keep" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Components.keepClusterRepresentatives(docs, "doc_id",
-          Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.2))
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    }),
-
-    // Quality-aware EXACT keep: case/whitespace variants synthesized
-    // in-query (the fixture has no fingerprint-equal pairs), keeper =
-    // longest copy per normalized-fingerprint group, tie -> min id.
-    "q_dedup_keep_best" -> ((s, d) => {
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val variants = docs.filter(col("doc_id") % 3 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"),
-          concat(upper(col("text")), lit("  ")).as("text"))
-      Dedup.dropDuplicatesKeepBest(
-          docs.unionByName(variants), "doc_id",
-          TextFunctions.fingerprint(col("text")), length(col("text")))
-        .select(col("doc_id"), length(col("text")).cast("long").as("len"))
-        .orderBy("doc_id")
-    }),
-
-    // Quality-aware keep over NEAR-dup clusters: same clusters as
-    // q_dedup_keep, keeper = longest member instead of min id.
-    "q_dedup_keep_best_cluster" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Components.keepBestPerCluster(docs, "doc_id",
-          Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.2),
-          length(col("text")))
-        .select(col("doc_id"), length(col("text")).cast("long").as("len"))
-        .orderBy("doc_id")
-    }),
-
-    // MinHash+LSH near-dup (scale path; rows-only — randomized banding is
-    // not SQL-expressible. Verified against exact Jaccard in DedupSpec.)
-    // 32 hashes x 16 bands (r=2) puts the banding threshold (1/16)^(1/2)
-    // ~= 0.25 next to the 0.2 verify cutoff — better recall at the target
-    // similarity AND half the signature CPU of the r=4 shape.
-    // Perf note (round 5): the round-4 driver bench showed this SLOWER
-    // than the exhaustive oracle (2.17 vs 1.83 s) after round 3 showed it
-    // faster (1.4 vs 1.9). Re-measured with 3 separated full passes
-    // (tools.TimeQueries, sf0.1): minhash min 2.04 s (2.95/2.04/2.15) vs
-    // jaccard min 2.19 s (2.43/2.20/2.19) — minhash wins again; the r4
-    // flip sits inside this box's established ±20% noise band. The thin
-    // margin at sf0.1 is expected: 5k docs is where the exhaustive
-    // gram-join is still cheap; the asymptotic gap is the design point.
-    "q_dedup_minhash" -> ((s, d) =>
-      Dedup.minHashNearDuplicates(
-        t(s, d, "documents"), "doc_id", "text",
-        n = 3, numHashes = 32, bands = 16, minJaccard = 0.2)
-        .orderBy("id_a", "id_b")),
-
-    // PORTABLE MinHash signatures (r14, re-keyed r15): ONE 52-bit md5
-    // parse per gram, permutation i = the affine (A_i·x + B_i) mod 2^52
-    // in overflow-free integer limbs — the oracle-checkable twin of the
-    // seeded LCG family (which stays rows-only by §8); 16 perms, long
-    // form. 1/16th the digest cost of the r14 per-(gram,perm) md5.
-    "q_minhash_sig" -> ((s, d) =>
-      Dedup.minHashSignaturesPortable(
-          t(s, d, "documents"), "doc_id", "text", n = 3, perms = 16)
-        .orderBy("id", "perm")),
-
-    // Portable-MinHash LSH pairs (r14): 4 bands x 4 rows, candidates by
-    // exact band-tuple match, estimate = matching-perm fraction >= 0.5
-    // — banding, candidacy and estimate ALL replay in the oracle, so
-    // the hash match PROVES the LSH pipeline end to end (the seeded
-    // family can only be spec-pinned).
-    "q_minhash_pairs" -> ((s, d) =>
-      Dedup.minHashPairsPortable(
-          t(s, d, "documents"), "doc_id", "text",
-          n = 3, perms = 16, bands = 4, minEstJaccard = 0.5)
-        .orderBy("id_a", "id_b")),
-
-    // MinHash CONTAINMENT (r15): the asymmetric overlap the symmetric
-    // Jaccard hides (quote-inside-document) — estimated intersection
-    // from ĵ and the exact per-doc gram counts, per banded candidate
-    // pair at the loose 0.2 threshold; fully oracle-replayed.
-    "q_minhash_containment" -> ((s, d) =>
-      Dedup.minHashContainment(
-          t(s, d, "documents"), "doc_id", "text",
-          n = 3, perms = 16, bands = 4, minEstJaccard = 0.2)
-        .orderBy("id_a", "id_b")),
-
-    // Portable collection-level MinHash overlap (r15b): one signature
-    // per SOURCE via the element-wise-min aggregate (min over docs of
-    // per-doc minima = min over the source's gram set), then pairwise
-    // estimated Jaccard between sources — the sketch-path complement to
-    // q_source_overlap's exact census matrix, and the first FULL-oracle
-    // pinning of the custom MinHashUnionAgg.
-    "q_source_minhash" -> ((s, d) =>
-      Dedup.groupOverlapPortable(
-          t(s, d, "documents"), "source", "text", n = 3, perms = 16)
-        .orderBy("group_a", "group_b")),
-
-    // Fused end-to-end near-dedup — the flagship "dedup the corpus" call:
-    // MinHash banding -> jaccard-verified pairs -> connected components ->
-    // keep the min-id member per cluster, one operator
-    // (Components.dropNearDuplicates). Rows-only (randomized banding is
-    // not SQL-expressible); ComponentsSpec pins composition identity and
-    // the exact-cluster subset law (kept_exact is a subset of kept_lsh).
-    "q_dedup_drop_near" -> ((s, d) =>
-      Components.dropNearDuplicates(
-          t(s, d, "documents"), "doc_id", "text",
-          n = 3, numHashes = 32, bands = 16, minJaccard = 0.2)
-        .select("doc_id", "source")
-        .orderBy("doc_id")),
-
-    // Span-level exact-substring dedup (Lee et al. 2022 ExactSubstr,
-    // re-expressed as gram explode -> duplicated-gram agg -> semi-join ->
-    // per-doc gaps-and-islands): maximal spans whose every character lies
-    // in a 30-gram occurring at >1 corpus site. hashGrams=false is the
-    // oracle-exact mode (raw substring keys, replayed verbatim in SQL);
-    // the 100 TB default keys the shuffle by xxhash64 instead.
-    "q_dedup_substring" -> ((s, d) =>
-      SubstringDedup.duplicatedSpans(
-          t(s, d, "documents"), "doc_id", "text", minLen = 30, hashGrams = false)
-        .orderBy("doc_id", "span_start")),
-
-    // Per-source span-duplication rollup — the corpus-health view of the
-    // same spans (how much of each source is boilerplate).
-    "q_dedup_substring_stats" -> ((s, d) =>
-      SubstringDedup.duplicationStats(
-          t(s, d, "documents"), "doc_id", "text", "source",
-          minLen = 30, hashGrams = false)
-        .orderBy("source")),
-
-    // Token-level span dedup (ExactSubstr's published granularity):
-    // 6-token windows, spans in token offsets, same window census and
-    // islands as the char form.
-    "q_dedup_substring_tokens" -> ((s, d) =>
-      SubstringDedup.duplicatedTokenSpans(
-          t(s, d, "documents"), "doc_id", "text", minTokens = 6, hashGrams = false)
-        .orderBy("doc_id", "span_start")),
-
-    // Token-space incremental span dedup: same restriction law as the
-    // char form, probing odd docs against a persisted TOKEN-gram census
-    // of the evens (round-12 token parity for the substring family).
-    "q_dedup_substring_tokens_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val census = SubstringDedup.tokenGramCensus(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        minTokens = 6, hashGrams = false)
-      SubstringDedup.duplicatedTokenSpansAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", census,
-          minTokens = 6, hashGrams = false)
-        .orderBy("doc_id", "span_start")
-    }),
-
-    // Token-space strip: remove every duplicated token span and pin the
-    // REBUILT text (space-joined kept tokens for span-bearing docs,
-    // byte-identical original for clean docs) via md5 — the oracle
-    // reassembles kept tokens with string_agg in token order.
-    "q_dedup_substring_tokens_strip" -> ((s, d) =>
-      SubstringDedup.stripDuplicatedTokenSpans(
-          t(s, d, "documents"), "doc_id", "text", minTokens = 6, hashGrams = false)
-        .select(
-          col("doc_id"),
-          length(col("text")).cast("long").as("clean_len"),
-          md5(col("text")).as("clean_hash"))
-        .orderBy("doc_id")),
-
-    // Incremental span dedup: evens are the standing corpus (persisted
-    // gram census), odds the new batch — batch spans are duplicated
-    // against census + batch counts, no corpus rescan. Equals the
-    // full-rebuild spans restricted to odd docs (the oracle replays the
-    // restriction law directly).
-    "q_dedup_substring_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val census = SubstringDedup.gramCensus(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        minLen = 30, hashGrams = false)
-      SubstringDedup.duplicatedSpansAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", census,
-          minLen = 30, hashGrams = false)
-        .orderBy("doc_id", "span_start")
-    }),
-
-    // Strip every duplicated span and pin the REBUILT text exactly: the
-    // oracle reassembles the kept gaps with string_agg and compares
-    // md5(clean_text) — reconstruction-level, not just length-level.
-    "q_dedup_substring_strip" -> ((s, d) =>
-      SubstringDedup.stripDuplicatedSpans(
-          t(s, d, "documents"), "doc_id", "text", minLen = 30, hashGrams = false)
-        .select(
-          col("doc_id"),
-          length(col("text")).cast("long").as("clean_len"),
-          md5(col("text")).as("clean_hash"))
-        .orderBy("doc_id")),
-
-    // Incremental dedup (rows-only — minhash agreement is not
-    // SQL-expressible; behavior pinned in DedupSpec): even doc_ids act as
-    // the indexed corpus, odd ones as the new batch — survivors are odd
-    // docs with no exact or near copy among the evens.
-    "q_dedup_incremental" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val index = Dedup.fingerprintIndex(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text")
-      Dedup.dropAgainstIndex(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", index,
-          numHashes = 64, bands = 16, minAgreement = 0.4)
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    }),
-
-    // Full per-batch ingestion step (rows-only — composes the minhash
-    // index probe; pinned end-to-end in IngestSpec): evens are the
-    // standing corpus (batch 0), odds the new batch — hard copies drop
-    // (agreement >= 0.9), soft revisions survive but LINK into the
-    // standing cluster store, and the output is each survivor with its
-    // standing cluster id.
-    "q_ingest_increment" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val base = s"target/tmp/q_ingest_${System.nanoTime()}"
-      val (idx, store, out) = (s"$base/idx", s"$base/store", s"$base/out")
-      operators.Ingest.ingestIncrement(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        idx, store, out, batchId = 0L)
-      val r = operators.Ingest.ingestIncrement(
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-        idx, store, out, batchId = 1L)
-      operators.ClusterStore.membershipFor(s, store, r.survivors, "doc_id")
-        .select("doc_id", "source", "cluster_id")
-        .orderBy("doc_id")
-    }),
-
-    // Cross-batch PAIR emission (rows-only — minhash agreement is not
-    // SQL-expressible; pinned in ClusterStoreSpec's two-batch ingestion
-    // composition): the pairs that link a new batch's documents into the
-    // standing ClusterStore, keeping leakage-safe splits safe ACROSS
-    // batches. Exact copies pair at agreement 1.0.
-    "q_dedup_pairs_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val index = Dedup.fingerprintIndex(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text")
-      Dedup.pairsAgainstIndex(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", index,
-          numHashes = 64, bands = 16, minAgreement = 0.4)
-        .withColumn("agreement", round(col("agreement"), 6))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // SimHash 64-bit fingerprints through the custom SimHash64Expr kernel,
-    // fed md5-derived token hashes so the DuckDB oracle can recompute the
-    // identical value stream and hash-check the majority-vote/bit
-    // semantics end-to-end. Production dedup uses the FNV-1a fused form
-    // (Dedup.simHash, ~10x cheaper per token; determinism + near-dup
-    // behavior pinned in DedupSpec) — the kernel under test is the same.
-    "q_dedup_simhash" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          graft.plans.HashExpressions.simHash64(
-            TextFunctions.md5TokenHashes(col("text"))).as("simhash64"))
-        .orderBy("doc_id")),
-
-    // Collection-level dedup: one MinHash signature per source via the
-    // custom TypedImperativeAggregate (elementwise-min union identity),
-    // pairwise estimated overlap (rows-only: MinHash estimate; the union
-    // identity and ranking are pinned in DedupSpec).
-    "q_dedup_group_overlap" -> ((s, d) =>
-      Dedup.groupOverlap(t(s, d, "documents"), "source", "text",
-        n = 3, numHashes = 64)
-        .withColumn("est_jaccard", round(col("est_jaccard"), 6))
-        .orderBy("group_a", "group_b")),
-
-    // Text quality/statistics features — single tokenization pass: all
-    // five stats derive from one tokenStats struct (TextFunctions fuses
-    // the fold; the two-level projection survives CollapseProject because
-    // the struct is referenced multiply and non-cheap).
-    "q_text_stats" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          length(col("text")).as("n_chars"),
-          TextFunctions.tokenStats(col("text")).as("_ts"))
-        .select(
-          col("doc_id"), col("n_chars"),
-          col("_ts.n_tokens").as("n_tokens"),
-          col("_ts.n_stopwords").as("n_stopwords"),
-          (col("_ts.total_len").cast("double") / col("_ts.n_tokens")).as("avg_token_len"),
-          (col("_ts.n_stopwords").cast("double") / col("_ts.n_tokens")).as("stopword_ratio"))
-        .orderBy("doc_id")),
-
-    // BPE-ish token counting (LLM-token estimation vs whitespace words).
-    "q_text_bpe_tokens" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          TextFunctions.tokenCount(col("text")).as("n_ws_tokens"),
-          TextFunctions.bpeTokenCount(col("text")).as("n_bpe_tokens"))
-        .orderBy("doc_id")),
-
-    // Intra-document repetition (duplicate n-gram fraction): the
-    // boilerplate quality gate, row-local over hashed shingles.
-    "q_text_repetition" -> ((s, d) => {
-      val grams = graft.plans.HashExpressions.wordNGramHashes(col("text"), 3)
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          size(grams).as("n_grams"),
-          size(array_distinct(grams)).as("n_distinct_grams"))
-        .withColumn("rep_ratio", round(
-          when(col("n_grams") > 0,
-            lit(1.0) - col("n_distinct_grams").cast("double") / col("n_grams"))
-            .otherwise(0.0), 6))
-        .orderBy("doc_id")
-    }),
-
-    // Token-budget shard packing (concat-and-chunk): per-source window
-    // cumsum, no global sort anywhere in the plan.
-    "q_pack_shards" -> ((s, d) =>
-      TrainingData.packShards(
-          t(s, d, "documents"), "doc_id", "source",
-          TextFunctions.tokenCount(col("text")), budgetTokens = 2048L)
-        .select("doc_id", "source", "n_tokens", "shard_idx")
-        .orderBy("doc_id")),
-
-    // Packing with loader offsets: same single window pass also yields
-    // each document's in-shard token offset (closed-form from the
-    // cumulative sum), so the loader layout is engine-replayable.
-    "q_pack_offsets" -> ((s, d) =>
-      TrainingData.packShardsWithOffsets(
-          t(s, d, "documents"), "doc_id", "source",
-          TextFunctions.tokenCount(col("text")), budgetTokens = 2048L)
-        .select("doc_id", "source", "n_tokens", "shard_idx", "start_offset")
-        .orderBy("doc_id")),
-
-    // Embedding covariance matrix (upper triangle) — the EXACT decimal
-    // form: components quantized to the 6dp grid, d^2 cross products
-    // summed as decimals (order-free; map-side partial agg collapses
-    // each partition to d(d+1)/2 counters before one tiny shuffle),
-    // cov assembled in fixed scalar-IEEE order. Bit-portable where the
-    // r13 double moment fold was a per-run ulp coin flip at the
-    // round(,6) boundary (hash-FAILed); oracle replays the identical
-    // decimal staging per pair.
-    "q_emb_covariance" -> ((s, d) =>
-      graft.operators.EmbeddingStats.covarianceExact(t(s, d, "embeddings"), "embedding")
-        // + 0.0 canonicalizes -0.0 → +0.0 (IEEE754: -0.0 + 0.0 = +0.0).
-        // Spark's round() goes through BigDecimal (no signed zero) while
-        // DuckDB rounds in float space; without this, a tiny negative cov
-        // that rounds to zero hashes differently (r14: one cell, (5,9)).
-        .select(col("i"), col("j"), (round(col("cov"), 6) + lit(0.0)).as("cov"))
-        .orderBy("i", "j")),
-
-    // Distributed PCA (same moment fold + driver eigendecomposition,
-    // sign-canonicalized axes) projecting every embedding to 8
-    // components via one codegen'd affine mat-vec. Rows-only: LAPACK
-    // eigenvector state is engine-internal (SURVEY §8); the basis is
-    // spec-pinned (orthonormal, descending, variance-capturing).
-    // PCA whitening (r13): the projection with per-axis 1/sqrt(λ)
-    // rescale folded into the same codegen'd mat-vec. Rows-only — same
-    // LAPACK-eigenbasis class as q_emb_pca (§8); covariance-of-whitened
-    // == identity is spec-pinned in VectorOpsSpec.
-    "q_emb_whiten" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val model = graft.operators.EmbeddingStats.pca(emb, "embedding", 8)
-      graft.operators.EmbeddingStats.pcaWhiten(emb, "embedding", model, "white")
-        .select(col("vec_id"), round(element_at(col("white"), 1), 6).as("w1"))
-        .orderBy("vec_id")
-    }),
-
-    "q_emb_pca" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val model = graft.operators.EmbeddingStats.pca(emb, "embedding", 8)
-      graft.operators.EmbeddingStats.pcaProject(emb, "embedding", model, "proj")
-        .select(col("vec_id"), posexplode(col("proj")).as(Seq("component", "value")))
-        .select(col("vec_id"), col("component"),
-          round(col("value"), 6).as("value"))
-        .orderBy("vec_id", "component")
-    }),
-
-    // FineWeb-style per-domain cap: synthesize deterministic URLs
-    // (md5-chosen host from a fixed list), extract host + registered
-    // domain (portable regex / label heuristic — NOT parse_url, which
-    // has no cross-engine twin), keep at most 30 md5-deterministic
-    // docs per registered domain via the bounded-heap per-group
-    // sampler. Oracle replays extraction + a rank window.
-    "q_url_domain_cap" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val hosts = array(
-        lit("en.wikipedia.org"), lit("news.bbc.co.uk"), lit("blogs.example.com"),
-        lit("www.gov.uk"), lit("cdn.a.co.jp"), lit("example.net"))
-      val urld = docs.withColumn("url",
-          concat(lit("https://"),
-            element_at(hosts,
-              (pmod(conv(substring(md5(concat(col("doc_id").cast("string"), lit("u"))), 1, 2),
-                16, 10).cast("long"), lit(6L)) + 1).cast("int")),
-            lit("/p/"), col("doc_id").cast("string")))
-        .withColumn("host", TextFunctions.urlHost(col("url")))
-        .withColumn("domain", TextFunctions.registeredDomain(col("host")))
-      TrainingData.exactSamplePerGroup(urld, "doc_id", "domain", k = 30, salt = "dc")
-        .select("doc_id", "host", "domain")
-        .orderBy("doc_id")
-    }),
-
-    // URL canonicalization (r15b): deterministic messy-URL synthesis
-    // (mixed-case scheme/host, default port, trailing slash, utm/ref
-    // tracking params, fragment — variant by md5) through the CCNet
-    // dedup-key normalization chain; the oracle replays every regex in
-    // RE2 syntax.
-    "q_url_canonical" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val hosts = array(
-        lit("EN.Wikipedia.ORG"), lit("news.bbc.co.uk"), lit("Blogs.Example.COM"))
-      val variant = pmod(conv(substring(
-        md5(concat(col("doc_id").cast("string"), lit("cu"))), 1, 2),
-        16, 10).cast("long"), lit(6L))
-      docs
-        .withColumn("__v", variant)
-        .withColumn("url", concat(
-          when(col("__v") < 3, lit("HTTPS://")).otherwise(lit("https://")),
-          element_at(hosts, (pmod(col("__v"), lit(3L)) + 1).cast("int")),
-          when(col("__v") === 0, lit(":443")).otherwise(lit("")),
-          lit("/Path/"), col("doc_id").cast("string"),
-          when(col("__v") === 1, lit("/")).otherwise(lit("")),
-          when(col("__v") <= 1, lit("?utm_source=feed&id="))
-            .otherwise(lit("?id=")),
-          col("doc_id").cast("string"),
-          when(col("__v") === 2, lit("&utm_campaign=x&ref=home"))
-            .otherwise(lit("")),
-          when(col("__v") >= 4, lit("#section-2")).otherwise(lit(""))))
-        .select(col("doc_id"), col("url"),
-          TextFunctions.canonicalUrl(col("url")).as("canon"))
-        .orderBy("doc_id")
-    }),
-
-    // CCNet web dedup end-to-end (r16, [[Dedup.webDedup]]): deterministic
-    // messy-URL synthesis where the FETCH TARGET is doc_id % 400 (so
-    // distinct docs share canonical URLs) and the noise variant is
-    // md5-derived (mixed case, :443, trailing slash, tracking params,
-    // fragment — all canonicalization-invariant by construction); exact
-    // collapse on the canonical URL, then portable-MinHash near-dup
-    // within registered-domain groups. FULL oracle: regex chain, domain
-    // heuristic, md5 band keys and grid estimates all replay.
-    "q_dedup_url" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val hosts = array(
-        lit("EN.Wikipedia.ORG"), lit("news.bbc.co.uk"), lit("Blogs.Example.COM"))
-      val u = pmod(col("doc_id"), lit(400L))
-      val variant = pmod(conv(substring(
-        md5(concat(col("doc_id").cast("string"), lit("du"))), 1, 2),
-        16, 10).cast("long"), lit(6L))
-      val urld = docs
-        .withColumn("__v", variant)
-        .withColumn("__u", u)
-        .withColumn("url", concat(
-          when(col("__v") < 3, lit("HTTPS://")).otherwise(lit("https://")),
-          element_at(hosts, (pmod(col("__u"), lit(3L)) + 1).cast("int")),
-          when(col("__v") === 0, lit(":443")).otherwise(lit("")),
-          lit("/p/"), col("__u").cast("string"),
-          when(col("__v") === 1, lit("/")).otherwise(lit("")),
-          when(col("__v") <= 1, lit("?utm_source=feed&ref=home"))
-            .otherwise(lit("")),
-          when(col("__v") >= 4, lit("#sec")).otherwise(lit(""))))
-      Dedup.webDedup(urld, "doc_id", "url", "text",
-          n = 3, perms = 16, bands = 4, minEstJaccard = 0.5)
-        .orderBy("doc_id")
-    }),
-
-    // Registered domain under the shipped PSL snapshot (r13): hosts
-    // chosen to hit every rule class — multi-label registry suffixes
-    // (co.uk, pvt.k12.ma.us, k12.ca.us), the *.kawasaki.jp wildcard,
-    // its !city exception, *.ck/!www.ck, the private section
-    // (github.io), and the implicit default rule. The oracle replays
-    // the md5 host pick and joins a hand-derived host->domain mapping
-    // (worked from the public PSL algorithm independently of the
-    // engine's matcher).
-    "q_url_domain_psl" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val hosts = array(
-        lit("news.bbc.co.uk"), lit("www.school.pvt.k12.ma.us"),
-        lit("sub.city.kawasaki.jp"), lit("bar.foo.kawasaki.jp"),
-        lit("shop.www.ck"), lit("alice.github.io"),
-        lit("deep.sub.example.com"), lit("district.k12.ca.us"))
-      docs.withColumn("host",
-          element_at(hosts,
-            (pmod(conv(substring(md5(concat(col("doc_id").cast("string"), lit("p"))), 1, 2),
-              16, 10).cast("long"), lit(8L)) + 1).cast("int")))
-        .withColumn("domain", TextFunctions.registeredDomainPsl(col("host")))
-        .select("doc_id", "host", "domain")
-        .orderBy("doc_id")
-    }),
-
-    // GPT-style concat-and-chunk sequence packing: the corpus token
-    // stream (in doc_id order) cut into fixed 64-token training
-    // windows; one row per (doc x overlapped sequence) with the
-    // in-doc token range and in-sequence offset. Global cumsum runs
-    // two-phase (range partitions -> counter prefix -> parallel
-    // windows); the oracle replays the naive global window.
-    "q_pack_sequences" -> ((s, d) =>
-      TrainingData.packSequences(
-          t(s, d, "documents"), "doc_id",
-          TextFunctions.tokenCount(col("text")), seqLen = 64L, numRanges = 5)
-        .orderBy("doc_id", "seq_idx")),
-
-    // Quality-weighted sampling: keep probability = the document's
-    // quality score, drawn deterministically from md5(id,salt) — the
-    // standard curation move (sample better data more) with replayable
-    // membership.
-    "q_quality_sample" -> ((s, d) =>
-      TrainingData.weightedSample(
-          t(s, d, "documents")
-            .withColumn("quality", TextFunctions.qualityScore(col("text"))),
-          "doc_id", col("quality"), salt = "qw")
-        .select("doc_id", "quality")
-        .orderBy("doc_id")),
-
-    // Deterministic mixture sampling: per-source keep fractions decided
-    // by md5(id,salt) prefix — replayable membership, no RNG state.
-    "q_mix_sample" -> ((s, d) =>
-      TrainingData.mixtureSample(
-          t(s, d, "documents"), "doc_id", "source",
-          keepFrac = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.5),
-          defaultFrac = 0.25, salt = "mix")
-        .select("doc_id", "source")
-        .orderBy("doc_id")),
-
-    // Epoch-mix UPSAMPLING (r11, [[TrainingData.epochMixSample]]): per
-    // source, a char budget expands docs to floor(f) whole epochs plus
-    // an md5-selected fractional epoch, f capped at maxEpochs — the
-    // data-mixture recipe ("3.3 epochs of Wikipedia") as a deterministic,
-    // shuffle-free plan (metadata-sized totals broadcast; row-local
-    // explode). Fully SQL-replayable: the oracle recomputes f from the
-    // same sums and replays membership + generate_series.
-    "q_mix_epochs" -> ((s, d) =>
-      TrainingData.epochMixSample(
-          t(s, d, "documents"), "doc_id", "source", "n_chars",
-          targets = Map("src0" -> 20000L, "src1" -> 1000000L, "src2" -> 4000L),
-          maxEpochs = 3.0, salt = "ep")
-        .select("doc_id", "source", "epoch")
-        .orderBy("doc_id", "epoch")),
-
-    // Temperature-scaled mixture budgets (share ∝ n^alpha, alpha = 0.5
-    // flattens the source head): the `targets` table epochMixSample
-    // consumes, derived from the corpus instead of hand-tuned. One
-    // metadata-sized aggregate; the corpus never shuffles.
-    "q_mix_temperature" -> ((s, d) =>
-      TrainingData.temperatureMixBudgets(
-          t(s, d, "documents"), "source", col("n_chars"),
-          alpha = 0.5, totalBudget = 1000000L)
-        .orderBy("source")),
-
-    // Exactly-k deterministic sample ([[TrainingData.exactSample]]):
-    // the k-th smallest md5-prefix key found by the Selection descent
-    // (no global sort, no TakeOrdered of k rows), strict-below rows
-    // kept row-locally, cutoff ties resolved by id. tailThreshold
-    // forced low so the distributed rounds run at test scale; the
-    // oracle replays membership as ORDER BY substr(md5(..),1,13), id
-    // LIMIT k.
-    "q_exact_sample" -> ((s, d) =>
-      TrainingData.exactSample(
-          t(s, d, "documents"), "doc_id", 150L, salt = "xs", tailThreshold = 64)
-        .orderBy("doc_id")),
-
-    // Standing exactly-k sample folded per ingestion batch (r13,
-    // [[SampleStore]]): two batch folds with k rows of state must equal
-    // the one-shot race over the whole corpus — the oracle IS
-    // q_exact_sample's SQL (fold identity; same k and salt).
-    "q_sample_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val root = "target/tmp/sample_store_contract"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      Seq(0L, 1L).foreach { b =>
-        graft.operators.SampleStore.fold(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", 150L, root, b, salt = "xs")
-      }
-      graft.operators.SampleStore.read(s, root)
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    // Exactly-k WEIGHTED sample (Efraimidis-Spirakis race on the same
-    // md5 uniform): P(in sample) proportional to n_chars, without
-    // replacement, deterministic in (id, salt). Oracle recomputes
-    // -ln((h52+1)/2^52)/w in SQL and replays ORDER BY key, id LIMIT k.
-    "q_sample_weighted" -> ((s, d) =>
-      TrainingData.exactSampleWeighted(
-          t(s, d, "documents"), "doc_id", col("n_chars"), 150L,
-          salt = "ws", tailThreshold = 64)
-        .orderBy("doc_id")),
-
-    // Weighted stratified exactly-k: the ES race per source through
-    // the bounded-heap TopKAgg (groups x k pairs cross the wire).
-    "q_sample_weighted_stratified" -> ((s, d) =>
-      TrainingData.exactSamplePerGroupWeighted(
-          t(s, d, "documents"), "doc_id", "source", col("n_chars"),
-          k = 10, salt = "wst")
-        .select("doc_id", "source")
-        .orderBy("doc_id")),
-
-    // DSIR importance weights (Xie et al. 2023): log p_target - log p_raw
-    // under bag-of-hashed-ngram unigram models (uni+bi grams, 1024
-    // buckets, add-one smoothing); target = the English slice. Scoring
-    // is a row-local fold over the doc's sorted bucket sequence against
-    // an inlined log-ratio array — zero shuffle. Oracle rebuilds both
-    // censuses, the dense smoothed ratio table, and the ordered fold.
-    "q_dsir_weights" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // Fused pair builder: one corpus hash pass, counts identical to
-      // the separate featureCensus calls (spec-pinned), oracle unchanged.
-      val (tc, rc) = Dsir.featureCensusPair(docs, "text", 1024, col("lang") === "en")
-      Dsir.importanceWeights(docs, "doc_id", "text", tc, rc, 1024)
-        .select(col("doc_id"), round(col("log_weight"), 6).as("log_weight"))
-        .orderBy("doc_id")
-    }),
-
-    // Incremental DSIR (r13): both censuses accrete per ingestion batch
-    // through CensusStore deltas (overwrite-idempotent, fold-watermark
-    // guarded), scoring reads the standing stores. Counts add exactly,
-    // so the oracle is the FULL-corpus recompute — hash equality IS the
-    // fold-identity law (the q_quality_surprisal_incr pattern).
-    "q_dsir_weights_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val root = "target/tmp/dsir_census_contract"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      Seq(0L, 1L).foreach { b =>
-        Dsir.appendFeatureCensusPairDeltas(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === b),
-          "text", 1024, col("lang") === "en", root, b)
-      }
-      Dsir.importanceWeights(docs, "doc_id", "text",
-          Dsir.readFeatureCensus(s, s"$root/target"),
-          Dsir.readFeatureCensus(s, s"$root/raw"), 1024)
-        .select(col("doc_id"), round(col("log_weight"), 6).as("log_weight"))
-        .orderBy("doc_id")
-    }),
-
-    // DSIR resample: exactly-k without replacement, P proportional to
-    // exp(log_weight), via the ES race in LOG space (key =
-    // ln(-ln u) - log_weight; exp never materialized). Oracle replays
-    // the full weight computation plus the log-key ORDER BY ... LIMIT k.
-    "q_dsir_sample" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val (tc, rc) = Dsir.featureCensusPair(docs, "text", 1024, col("lang") === "en")
-      val w = Dsir.importanceWeights(docs, "doc_id", "text", tc, rc, 1024)
-      Dsir.resampleTopK(w, "doc_id", col("log_weight"), 120L,
-          salt = "dsir", tailThreshold = 64)
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
-    }),
-
-    // Stratified exactly-k ([[TrainingData.exactSamplePerGroup]]):
-    // min(k, |group|) deterministic rows per source via the bounded-
-    // heap TopKAgg over the md5-prefix key — only groups x k pairs
-    // cross the wire (map-side partial heaps), vs the full sort-
-    // shuffle a row_number window costs. Oracle replays membership as
-    // that very window at test scale.
-    "q_sample_exact_stratified" -> ((s, d) =>
-      TrainingData.exactSamplePerGroup(
-          t(s, d, "documents"), "doc_id", "source", k = 10, salt = "st")
-        .select("doc_id", "source")
-        .orderBy("doc_id")),
-
-    // Stratified standing sample folded per batch (r13,
-    // [[SampleStore.foldPerGroup]]): two folds with k·|groups| rows of
-    // state must equal the one-shot per-group race — the oracle IS
-    // q_sample_exact_stratified's SQL (same k and salt).
-    "q_sample_incr_stratified" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val root = "target/tmp/sample_store_strat_contract"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      Seq(0L, 1L).foreach { b =>
-        graft.operators.SampleStore.foldPerGroup(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "source", k = 10, root, b, salt = "st")
-      }
-      graft.operators.SampleStore.read(s, root)
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    }),
-
-    // Quota-table stratified sampling ([[TrainingData.exactSampleQuotas]]):
-    // per-group k from a (group, quota) DataFrame — one bounded-heap
-    // pass at max(quota), per-group trim by heap rank. Quotas chosen to
-    // exercise every edge on the 20x25 fixture: below group size (src0
-    // 15, src1 5), above it (src2 40 -> whole group), absent groups
-    // (all others) contribute nothing.
-    "q_sample_quotas" -> ((s, d) => {
-      import s.implicits._
-      val quotas = Seq(("src0", 15), ("src1", 5), ("src2", 40)).toDF("source", "quota")
-      TrainingData.exactSampleQuotas(
-          t(s, d, "documents"), "doc_id", "source", quotas, salt = "qt")
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    }),
-
-    // Count-min sketch as a bounded groupBy (depth 4 x width 512):
-    // exact top-20 user counts side by side with their CMS estimates.
-    // md5-derived bucketing makes the sketch itself engine-replayable,
-    // so the approximation error is hash-checked, not just bounded.
-    "q_cms_topk" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val counters = graft.operators.Skew.cmsCounters(ev, "user_id", depth = 4, width = 512)
-      val exact = ev.groupBy("user_id").agg(count(lit(1)).as("exact_n"))
-        .orderBy(desc("exact_n"), col("user_id")).limit(20)
-      graft.operators.Skew.cmsEstimate(counters, exact, "user_id", depth = 4, width = 512)
-        .join(broadcast(exact), Seq("user_id"))
-        .select("user_id", "exact_n", "cms_count")
-        .orderBy(desc("exact_n"), col("user_id"))
-    }),
-
-    // Shard manifest: per-(source, shard) doc count, token sum, id range
-    // — the loader-facing summary of q_pack_shards' assignment.
-    "q_pack_manifest" -> ((s, d) =>
-      TrainingData.shardManifest(
-          TrainingData.packShards(
-            t(s, d, "documents"), "doc_id", "source",
-            TextFunctions.tokenCount(col("text")), budgetTokens = 2048L),
-          "source", "doc_id")
-        .orderBy("source", "shard_idx")),
-
-    // Robust per-group anomaly score: (x - median) / (1.4826 * MAD) over
-    // event_type groups — median/MAD resist the outliers they flag.
-    "q_anomaly_robust_z" -> ((s, d) =>
-      Anomaly.robustZScore(
-          t(s, d, "events").select("event_id", "event_type", "value"),
-          "event_type", "value")
-        .select(col("event_id"), col("event_type"), col("value"),
-          round(col("med"), 6).as("med"), round(col("mad"), 6).as("mad"),
-          col("robust_z"), col("is_outlier"))
-        .orderBy("event_id")),
-
-    // Frozen-baseline robust z (r13): stats fitted on the even-id
-    // slice (the "clean history"), EVERY event scored against that
-    // frozen table — the train/serve split that keeps an anomaly burst
-    // from inflating its own baseline. Row-local beyond one broadcast
-    // of the metadata-sized stats; fully replayed in SQL.
-    "q_anomaly_frozen" -> ((s, d) => {
-      val ev = t(s, d, "events").select("event_id", "event_type", "value")
-      val stats = Anomaly.robustStats(
-        ev.filter(pmod(col("event_id"), lit(2L)) === 0), "event_type", "value")
-      Anomaly.scoreAgainstStats(ev, "event_type", "value", stats)
-        .select(col("event_id"), col("event_type"), col("value"),
-          round(col("med"), 6).as("med"), round(col("mad"), 6).as("mad"),
-          col("robust_z"), col("is_outlier"))
-        .orderBy("event_id")
-    }),
-
-    // Seasonal robust z (r13): each event scored against its
-    // (event_type, hour-of-day) distribution — the calendar-aware
-    // baseline; a mid-range value can be anomalous FOR ITS HOUR while
-    // invisible to the whole-group score (spec-pinned). Composition of
-    // robustZScore over the composite key, fully replayed in SQL.
-    "q_anomaly_seasonal" -> ((s, d) =>
-      Anomaly.seasonalRobustZ(
-          t(s, d, "events").select("event_id", "event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .select(col("event_id"), col("event_type"), col("season_bucket"),
-          col("value"), round(col("med"), 6).as("med"),
-          round(col("mad"), 6).as("mad"), col("robust_z"), col("is_outlier"))
-        .orderBy("event_id")),
-
-    // Mahalanobis anomaly score (r13): D² = ||whiten(x)||² over the
-    // full-rank PCA basis — the covariance-aware multivariate upgrade
-    // of the per-column z/IQR gates. Rows-only (LAPACK eigenbasis, §8,
-    // same class as q_emb_pca); the invariance/χ²-band/planted-outlier
-    // contract is pinned in EmbeddingStatsSpec.
-    "q_anomaly_mahalanobis" -> ((s, d) =>
-      graft.operators.EmbeddingStats.mahalanobisScore(
-          t(s, d, "embeddings"), "embedding", "d2")
-        .select(col("vec_id"), round(col("d2"), 6).as("d2"))
-        .orderBy("vec_id")),
-
-    // Tukey-fence (IQR) outliers per event_type.
-    "q_anomaly_iqr" -> ((s, d) =>
-      Anomaly.iqrOutliers(
-          t(s, d, "events").select("event_id", "event_type", "value"),
-          "event_type", "value")
-        .select("event_id", "event_type", "value", "lo", "hi", "is_outlier")
-        .orderBy("event_id")),
-
-    // EWMA control chart (r13): per event_type, the daily-mean series
-    // smoothed by z_k = 0.3*m_k + 0.7*z_{k-1}; a day alarms when the
-    // innovation against yesterday's baseline clears L*sigma*sqrt(a/(2-a))
-    // — the small-persistent-shift detector. The recursion runs over the
-    // metadata-sized daily roll-up only; the oracle replays it as a
-    // recursive CTE (each step rounded to 6 in both engines).
-    "q_anomaly_ewma" -> ((s, d) =>
-      Anomaly.ewmaChart(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .orderBy("event_type", "day")),
-
-    // CUSUM change-point scan (r13): per event_type, the argmax over
-    // split points of |S_k - (k/n) S_n| on the daily-mean series — the
-    // max-type CUSUM statistic; reports the split day and the
-    // before/after means. Window arithmetic over the daily roll-up.
-    "q_changepoint" -> ((s, d) =>
-      Anomaly.changePointScan(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .orderBy("event_type")),
-
-    // PSI drift (r13): decile edges frozen on the first-half-of-month
-    // baseline, both halves histogrammed against them, PSI per
-    // event_type with per-bucket contributions — the industry drift
-    // gate. Edges broadcast; bucket assignment is a row-local array fold.
-    "q_drift_psi" -> ((s, d) =>
-      Anomaly.psiDrift(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "value", dayofmonth(col("ts")) <= 15)
-        .orderBy("event_type", "bucket")),
-
-    // Benford first-digit screen (r13): observed vs log10(1+1/d) leading-
-    // digit shares per event_type with the group chi-square — the classic
-    // forensic fraud test. The digit reads off the integer-cents string,
-    // never float log10, so engines agree at power-of-ten boundaries.
-    "q_fraud_benford" -> ((s, d) =>
-      Anomaly.benfordDeviation(
-          t(s, d, "events").select("event_type", "value"),
-          "event_type", "value")
-        .orderBy("event_type", "digit")),
-
-    // Ordered-step funnel (r13): per user, first view -> first click
-    // strictly after it -> first purchase strictly after that; min-ts
-    // chain semantics over shrinking per-user milestone tables.
-    // Milestone timestamps dump as unix micros (house ts convention, so
-    // the DuckDB compare never sees tz-aware vs naive parquet).
-    "q_funnel" -> ((s, d) =>
-      EventAnalytics.funnel(
-          t(s, d, "events").select("user_id", "ts", "event_type"),
-          "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-        .select(col("user_id"),
-          unix_micros(col("step1_ts")).as("step1_ts_us"),
-          unix_micros(col("step2_ts")).as("step2_ts_us"),
-          unix_micros(col("step3_ts")).as("step3_ts_us"),
-          col("steps_completed"))
-        .orderBy("user_id")),
-
-    // Funnel conversion roll-up (r13): one row per step with reach and
-    // conversion vs step 1 — a single aggregation over the funnel.
-    "q_funnel_summary" -> ((s, d) =>
-      EventAnalytics.funnelSummary(
-          t(s, d, "events").select("user_id", "ts", "event_type"),
-          "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-        .orderBy("step")),
-
-    // Weekly cohort retention (r13): users cohorted by first-event week
-    // (fixed anchor), activity counted per week offset; the only
-    // full-fact pass is the (user, week) distinct.
-    "q_cohort_retention" -> ((s, d) =>
-      EventAnalytics.cohortRetention(
-          t(s, d, "events").select("user_id", "ts"), "user_id", "ts")
-        .orderBy("cohort_week", "week_offset")),
-
-    // Holt linear-trend forecast (r13): level+trend double-exponential
-    // smoothing over the daily roll-up; alarms on |one-step forecast
-    // error| > 3*sigma_e — trend-adjusted, so steady ramps stay quiet.
-    // Second recursive-CTE oracle (two mutually-recursive states).
-    "q_anomaly_holt" -> ((s, d) =>
-      Anomaly.holtForecast(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .orderBy("event_type", "day")),
-
-    // RFM user scoring (r13): recency/frequency/monetary quintiles
-    // against frozen user-table quantile edges (recency reversed);
-    // the fraud-features segmentation input.
-    "q_rfm" -> ((s, d) =>
-      EventAnalytics.rfmScores(
-          t(s, d, "events").select("user_id", "ts", "value"),
-          "user_id", "ts", "value")
-        .orderBy("user_id")),
-
-    // Last-touch attribution (r13): each purchase attributed to the
-    // most recent view/click within 7 days — composed from the as-of
-    // join (backward + tolerance); unattributed conversions keep a
-    // null touch (the direct/organic bucket).
-    "q_attribution" -> ((s, d) =>
-      EventAnalytics.lastTouchAttribution(
-          t(s, d, "events").select("event_id", "user_id", "ts", "event_type"),
-          "user_id", "ts", "event_type", "event_id",
-          conversionType = "purchase", touchTypes = Seq("view", "click"),
-          windowSeconds = 7L * 86400L)
-        .orderBy("conversion_id")),
-
-    // Kaplan-Meier survival over user lifetimes (r13): right-censored
-    // churn curve — users last seen near the corpus end are at risk,
-    // never deaths.
-    "q_survival" -> ((s, d) =>
-      EventAnalytics.survivalCurve(
-          t(s, d, "events").select("user_id", "ts"), "user_id", "ts",
-          churnGapDays = 7)
-        .orderBy("t")),
-
-    // Nelson-Aalen cumulative hazard + Fleming-Harrington survival
-    // (r15): the additive twin of q_survival's Kaplan-Meier product —
-    // hazard increments d/n on a 12dp grid folded through an exact
-    // decimal window sum; exp(−H) needs no zero-carry flag.
-    "q_hazard" -> ((s, d) =>
-      EventAnalytics.cumulativeHazard(
-          t(s, d, "events").select("user_id", "ts"), "user_id", "ts",
-          churnGapDays = 7)
-        .orderBy("t")),
-
-    // PSI fit/score split (r13): edges + baseline counts frozen by
-    // psiBaseline, the current half scored by psiAgainstBaseline —
-    // composition == the one-shot q_drift_psi bit-for-bit, so the
-    // oracle IS q_drift_psi's SQL.
-    "q_drift_psi_frozen" -> ((s, d) => {
-      val ev = t(s, d, "events").select("event_type", "ts", "value")
-      val base = Anomaly.psiBaseline(
-        ev.filter(dayofmonth(col("ts")) <= 15), "event_type", "value")
-      Anomaly.psiAgainstBaseline(
-          ev.filter(dayofmonth(col("ts")) > 15), "event_type", "value", base)
-        .orderBy("event_type", "bucket")
-    }),
-
-    // Classical seasonal decomposition (r13): trend = centered 7-day
-    // moving average (null partial edges), seasonal = mean detrended
-    // per day-of-week, residual = the anomaly-gate input.
-    "q_seasonal_decompose" -> ((s, d) =>
-      Anomaly.seasonalDecompose(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .orderBy("event_type", "day")),
-
-    // Autocorrelation function (r13): Pearson r at lags 1..7 over the
-    // daily series, from exact decimal moment sums (engine-portable).
-    "q_acf" -> ((s, d) =>
-      Anomaly.autocorrelation(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value", maxLag = 7)
-        .orderBy("event_type", "lag")),
-
-    // Two-sample KS drift (r13): max CDF distance between the
-    // first-half-of-month baseline and the rest — binning-free
-    // companion to q_drift_psi.
-    "q_drift_ks" -> ((s, d) =>
-      Anomaly.ksDrift(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "value", dayofmonth(col("ts")) <= 15)
-        .orderBy("event_type")),
-
-    // Gini value concentration (r13): rank-formula inequality per
-    // event_type, decimal-exact rank-weighted sums.
-    "q_value_gini" -> ((s, d) =>
-      EventAnalytics.giniConcentration(
-          t(s, d, "events").select("event_type", "value"),
-          "event_type", "value")
-        .orderBy("event_type")),
-
-    // PMI collocations (r13): adjacent word pairs beating chance
-    // co-occurrence, from the same unigram/bigram censuses the
-    // surprisal LMs read; count floor 3 on the small fixtures.
-    "q_pmi" -> ((s, d) =>
-      graft.operators.CorpusStats.pmiCollocations(
-          t(s, d, "documents"), "doc_id", "text", minCount = 3L)
-        .orderBy("w1", "w2")),
-
-    // Within-session event-type transition matrix (r13): Markov counts
-    // + row-normalized probabilities; cross-session pairs excluded.
-    "q_transitions" -> ((s, d) =>
-      EventAnalytics.transitionMatrix(
-          t(s, d, "events").select("event_id", "user_id", "ts", "event_type"),
-          "user_id", "ts", "event_type", gapSeconds = 1800L,
-          tieBreak = col("event_id"))
-        .orderBy("from_type", "to_type")),
-
-    // Session path mining (r13): first-3 event types per session as a
-    // ">"-joined path, counted with global share — depth-truncation
-    // BEFORE the fold bounds both per-session state and the path
-    // vocabulary.
-    "q_session_paths" -> ((s, d) =>
-      EventAnalytics.topPaths(
-          t(s, d, "events").select("event_id", "user_id", "ts", "event_type"),
-          "user_id", "ts", "event_type", gapSeconds = 1800L,
-          tieBreak = col("event_id"), depth = 3)
-        .orderBy("path")),
-
-    // Rolling-origin forecast backtest (r13): Holt one-step MAE vs the
-    // naive "tomorrow equals today" baseline + skill = 1 - MAEh/MAEn,
-    // over the days where both forecasts exist — the model-evaluation
-    // gate that belongs BEFORE any forecast-error alarm goes live.
-    "q_forecast_backtest" -> ((s, d) =>
-      Anomaly.forecastBacktest(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .orderBy("event_type")),
-
-    // Host-graph PageRank (r13): the crawl-quality prior — documents
-    // pick (src, dst) hosts by the md5 assignment (the q_url_domain_cap
-    // synthesis, two salts), self-loops dropped, 10 damped iterations
-    // of the 6dp fixed-point dynamics. Oracle = 10 unrolled CTE stages
-    // mirroring the arithmetic literally.
-    "q_pagerank_domains" -> ((s, d) => {
-      val hosts = array(
-        lit("en.wikipedia.org"), lit("news.bbc.co.uk"), lit("blogs.example.com"),
-        lit("www.gov.uk"), lit("cdn.a.co.jp"), lit("example.net"))
-      def pick(salt: String) = element_at(hosts,
-        (pmod(conv(substring(md5(concat(col("doc_id").cast("string"), lit(salt))),
-          1, 2), 16, 10).cast("long"), lit(6L)) + 1).cast("int"))
-      val edges = t(s, d, "documents")
-        .select(pick("u").as("src"), pick("v").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      graft.operators.Graph.pageRank(edges, "src", "dst", iterations = 10)
-        .orderBy("node")
-    }),
-
-    // Warm-start PageRank (r13): a cold 10-iteration run resumed for 2
-    // more — the incremental-graph path. The oracle is the cold
-    // 12-stage replay: the identity warm(cold10, 2) == cold12 is the
-    // contract, proven cross-engine.
-    "q_pagerank_warm" -> ((s, d) => {
-      val hosts = array(
-        lit("en.wikipedia.org"), lit("news.bbc.co.uk"), lit("blogs.example.com"),
-        lit("www.gov.uk"), lit("cdn.a.co.jp"), lit("example.net"))
-      def pick(salt: String) = element_at(hosts,
-        (pmod(conv(substring(md5(concat(col("doc_id").cast("string"), lit(salt))),
-          1, 2), 16, 10).cast("long"), lit(6L)) + 1).cast("int"))
-      val edges = t(s, d, "documents")
-        .select(pick("u").as("src"), pick("v").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val cold = graft.operators.Graph.pageRank(edges, "src", "dst",
-        iterations = 10)
-      graft.operators.Graph.pageRank(edges, "src", "dst", iterations = 2,
-          seedRanks = Some(cold))
-        .orderBy("node")
-    }),
-
-    // Personalized PageRank (r14): teleport concentrated on two seed
-    // hosts — rank-relative-to-known-good over the same md5 host
-    // graph; the oracle unrolls the identical personalized update.
-    "q_pagerank_personalized" -> ((s, d) => {
-      val hosts = array(
-        lit("en.wikipedia.org"), lit("news.bbc.co.uk"), lit("blogs.example.com"),
-        lit("www.gov.uk"), lit("cdn.a.co.jp"), lit("example.net"))
-      def pick(salt: String) = element_at(hosts,
-        (pmod(conv(substring(md5(concat(col("doc_id").cast("string"), lit(salt))),
-          1, 2), 16, 10).cast("long"), lit(6L)) + 1).cast("int"))
-      val edges = t(s, d, "documents")
-        .select(pick("u").as("src"), pick("v").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      import s.implicits._
-      val seeds = Seq("en.wikipedia.org", "www.gov.uk").toDF("node")
-      graft.operators.Graph.personalizedPageRank(
-          edges, "src", "dst", seeds, iterations = 10)
-        .orderBy("node")
-    }),
-
-    // TextRank keywords (r13): PageRank over the symmetric word
-    // co-occurrence graph (consecutive whitespace tokens) — corpus-wide
-    // keyword salience without any model. Full-vocabulary output is the
-    // deterministic contract (callers top-k).
-    "q_textrank" -> ((s, d) =>
-      graft.operators.Graph.textRank(t(s, d, "documents"), "text",
-          iterations = 10)
-        .orderBy("word")),
-
-    // HITS hubs & authorities (r14): the complementary crawl prior to
-    // PageRank, over the bipartite doc->host graph (each doc links its
-    // two md5-picked hosts — the q_pagerank_domains synthesis with the
-    // doc side kept as nodes): authorities separate the hosts by who
-    // links them, hubs separate the docs by where they point. Five
-    // L1-normalized iterations on the 12dp grid; the oracle unrolls
-    // the identical half-step arithmetic.
-    "q_hits" -> ((s, d) => {
-      val hosts = array(
-        lit("en.wikipedia.org"), lit("news.bbc.co.uk"), lit("blogs.example.com"),
-        lit("www.gov.uk"), lit("cdn.a.co.jp"), lit("example.net"))
-      def pick(salt: String) = element_at(hosts,
-        (pmod(conv(substring(md5(concat(col("doc_id").cast("string"), lit(salt))),
-          1, 2), 16, 10).cast("long"), lit(6L)) + 1).cast("int"))
-      val docs = t(s, d, "documents")
-      val edges = docs
-        .select(concat(lit("doc:"), col("doc_id").cast("string")).as("src"),
-          pick("u").as("dst"))
-        .unionByName(docs
-          .select(concat(lit("doc:"), col("doc_id").cast("string")).as("src"),
-            pick("v").as("dst")))
-      graft.operators.Graph.hits(edges, "src", "dst", iterations = 5)
-        .orderBy("node")
-    }),
-
-    // Co-purchase pair mining (r13): parts sharing an order, with
-    // cosine/lift/confidence — the pair explosion is map-side from each
-    // basket's sorted item list, never a self-join.
-    "q_basket_pairs" -> ((s, d) =>
-      graft.operators.MarketBasket.pairStats(
-          t(s, d, "lineitem").select("l_orderkey", "l_partkey"),
-          "l_orderkey", "l_partkey", minPairCount = 2L)
-        .orderBy("item_a", "item_b")),
-
-    // Viral-basket cap (r16): pairStats with maxBasketSize = 5 — orders
-    // with more distinct parts are excluded ENTIRELY (pairs, item
-    // census, N), the logged fan-out guard for co-purchase mining at
-    // crawl scale. FULL oracle: the cap is one HAVING gate on the
-    // deduped item table; cap = infinity is identity-pinned to
-    // q_basket_pairs in MarketBasketSpec.
-    "q_basket_capped" -> ((s, d) =>
-      graft.operators.MarketBasket.pairStats(
-          t(s, d, "lineitem").select("l_orderkey", "l_partkey"),
-          "l_orderkey", "l_partkey", minPairCount = 2L, maxBasketSize = 5)
-        .orderBy("item_a", "item_b")),
-
-    // Grid resampling, LOCF (r13): per event_type, the hourly grid
-    // inside the observed range, last-observation-carried-forward —
-    // two as-of joins fused into one union+window pass.
-    "q_resample_locf" -> ((s, d) =>
-      graft.operators.Resample.toGrid(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value", stepSeconds = 3600L, method = "locf")
-        .orderBy("event_type", "grid_ts_sec")),
-
-    // Grid resampling, linear interpolation (r13): same grid, each tick
-    // blended between its straddling observations.
-    "q_resample_interp" -> ((s, d) =>
-      graft.operators.Resample.toGrid(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value", stepSeconds = 3600L, method = "interp")
-        .orderBy("event_type", "grid_ts_sec")),
-
-    // Wilson 95% interval on the daily purchase rate (r13): the
-    // small-n-honest conversion chart.
-    "q_rate_wilson" -> ((s, d) =>
-      EventAnalytics.rateWilson(
-          t(s, d, "events").select("ts", "event_type"),
-          "ts", col("event_type") === "purchase")
-        .orderBy("day")),
-
-    // Holt-Winters additive triple smoothing (r13): level + trend +
-    // 7-day seasonal state; the weekly rhythm EWMA pages on becomes
-    // state here. Third recursive-CTE oracle, this one carrying the
-    // rolling seasonal vector as list state.
-    "q_anomaly_hw" -> ((s, d) =>
-      Anomaly.holtWintersForecast(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value", period = 7)
-        .orderBy("event_type", "day")),
-
-    // Seasonal period detection (r13): ACF argmax over lags 2..14 with
-    // shortest-lag tie-break — picks Holt-Winters' period from data.
-    "q_detect_period" -> ((s, d) =>
-      Anomaly.detectPeriod(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value", maxLag = 14, minAcf = 0.3)
-        .orderBy("event_type")),
-
-    // Join-key skew report (r13): top-10 heaviest user_ids with shares
-    // and the max/mean skew ratio — the pre-shuffle salting decision.
-    "q_skew_report" -> ((s, d) =>
-      graft.operators.Profile.skewReport(
-          t(s, d, "events").select("user_id"), "user_id", topK = 10)
-        .orderBy("rank")),
-
-    // Two-step Markov transitions (r13): P^2 over the q_transitions
-    // matrix — 12dp decimal mid-state sums, metadata-sized self-join.
-    "q_transitions_2step" -> ((s, d) =>
-      EventAnalytics.transitionMatrix2(
-          t(s, d, "events").select("event_id", "user_id", "ts", "event_type"),
-          "user_id", "ts", "event_type", gapSeconds = 1800L,
-          tieBreak = col("event_id"))
-        .orderBy("from_type", "to_type")),
-
-    // Top-3 co-purchase recommendations (r13): pairStats symmetrized,
-    // ranked per item by (cosine desc, partner) — "customers also
-    // bought" from the mined pair table.
-    "q_basket_recs" -> ((s, d) =>
-      graft.operators.MarketBasket.topRecommendations(
-          graft.operators.MarketBasket.pairStats(
-            t(s, d, "lineitem").select("l_orderkey", "l_partkey"),
-            "l_orderkey", "l_partkey", minPairCount = 2L),
-          k = 3)
-        .orderBy("item", "rank")),
-
-    // Rolling 14-day purchase-vs-view correlation (r13): integer window
-    // sums are exact in both engines; full windows only.
-    "q_corr_rolling" -> ((s, d) =>
-      Anomaly.rollingCorrelation(
-          t(s, d, "events").select("ts", "event_type"),
-          "ts", "event_type", "purchase", "view", windowDays = 14)
-        .orderBy("day")),
-
-    // Chi-square independence + Cramér's V (r13): event mix vs weekday
-    // over the FULL grid (zero cells included); 12dp decimal-exact
-    // contribution sums.
-    "q_chi2_independence" -> ((s, d) =>
-      Anomaly.chiSquareIndependence(
-          t(s, d, "events").select(col("event_type"),
-            weekday(col("ts")).as("dow")),
-          "event_type", "dow")
-        .orderBy("event_type", "dow")),
-
-    // Two-proportion A/B z-test (r13): deterministic md5 coin, pooled
-    // variance, |z| > 1.96 verdict.
-    "q_ab_test" -> ((s, d) =>
-      EventAnalytics.abTest(
-          t(s, d, "events").select("user_id", "event_type"),
-          "user_id", col("event_type") === "purchase")),
-
-    // CUPED variance-reduced A/B (r15, Deng et al. 2013): per-user
-    // value sums split pre/post at mid-month, theta from exact decimal
-    // moments, per-user adjustment re-gridded at 6dp, Welch z on the
-    // adjusted means plus the variance-reduction diagnostic.
-    "q_ab_cuped" -> ((s, d) =>
-      EventAnalytics.cupedTest(
-          t(s, d, "events").select("user_id", "ts", "value"),
-          "user_id", "value", dayofmonth(col("ts")) <= 15)),
-
-    // Mann-Whitney U A/B (r15): distribution-free rank test on the
-    // per-user value sum between the md5 arms — doubled-midrank integer
-    // rank sums (the q_roc_auc discipline), tie-corrected z, and the
-    // rank-biserial effect size.
-    "q_ab_mannwhitney" -> ((s, d) =>
-      EventAnalytics.mannWhitneyTest(
-          t(s, d, "events").select("user_id", "value"),
-          "user_id", "value")),
-
-    // Quantile treatment effects (r15): exact per-arm median/p90 of the
-    // user metric at integer ranks (the funnelLatency convention) plus
-    // the B−A differences — distribution movement the mean readouts
-    // average away.
-    "q_ab_quantiles" -> ((s, d) =>
-      EventAnalytics.quantileTest(
-          t(s, d, "events").select("user_id", "value"),
-          "user_id", "value")),
-
-    // Sample-ratio-mismatch gate (r15b, Fabijan et al. KDD 2019): the
-    // chi-square 50/50 check on the md5-coin arm sizes — the audit
-    // every other A/B readout presumes. Integer numerator, one
-    // division, 1-df critical value 3.841.
-    "q_ab_srm" -> ((s, d) =>
-      EventAnalytics.srmCheck(
-          t(s, d, "events").select("user_id"), "user_id")),
-
-    // Per-day SRM (r15b): the chi-square 50/50 check at day grain over
-    // each day's NEW entrants — localizes when an assignment/logging
-    // bias started.
-    "q_ab_srm_daily" -> ((s, d) =>
-      EventAnalytics.srmDaily(
-          t(s, d, "events").select("user_id", "ts"), "user_id", "ts")
-        .orderBy("day")),
-
-    // Covariate balance (r15b, Austin 2009): standardized mean
-    // difference between arms for the pre-period behavioral trio
-    // (value sum, event count, active days), flagged at |SMD| > 0.1 —
-    // the randomization-hygiene table.
-    "q_ab_balance" -> ((s, d) =>
-      EventAnalytics.balanceCheck(
-          t(s, d, "events").select("user_id", "ts", "value"),
-          "user_id", "ts", "value", dayofmonth(col("ts")) <= 15)
-        .orderBy("covariate")),
-
-    // Difference-in-differences (r15b): Welch z on per-user CHANGE
-    // scores (post − pre at mid-month) between the md5 arms — the
-    // panel DiD that removes time-invariant user effects; cell means
-    // and the effect from exact decimal moments.
-    "q_ab_did" -> ((s, d) =>
-      EventAnalytics.didTest(
-          t(s, d, "events").select("user_id", "ts", "value"),
-          "user_id", "value", dayofmonth(col("ts")) <= 15)),
-
-    // Benjamini-Hochberg FDR over the per-event-type conversion family
-    // (r15b): per-metric pooled z, two-sided p via the A-S 26.2.17
-    // normal-tail polynomial on the 6dp-gridded |z| (arithmetic + exp,
-    // replayed literally by the oracle), then the step-up adjustment
-    // as a window running-min — the multiple-testing layer one
-    // experiment read on many metrics requires.
-    "q_ab_fdr" -> ((s, d) =>
-      EventAnalytics.fdrAdjust(
-          t(s, d, "events").select("user_id", "event_type"),
-          "user_id", "event_type")
-        .orderBy("metric")),
-
-    // Funnel × experiment (r15b): per funnel step, users reaching it
-    // per md5 arm and the two-proportion z on the step-over-step
-    // conversion — "which step did the experiment move". One funnel
-    // lineage, one checkpointed aggregate row, melted per step.
-    "q_ab_funnel" -> ((s, d) =>
-      EventAnalytics.funnelAbTest(
-          t(s, d, "events").select("user_id", "ts", "event_type"),
-          "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-        .orderBy("step_idx")),
-
-    // Always-valid sequential A/B (r15b, Johari et al. KDD 2017): the
-    // mSPRT mixture likelihood ratio per day over cumulative user-day
-    // moments — a p-value valid under continuous peeking, with the
-    // running-min always-valid p and the first-stop verdict.
-    "q_ab_sequential" -> ((s, d) =>
-      EventAnalytics.sequentialTest(
-          t(s, d, "events").select("user_id", "ts", "value"),
-          "user_id", "ts", "value", tau = 1.0)
-        .orderBy("day")),
-
-    // Power / minimum-detectable-effect readout (r15b): the two-sided
-    // 80%-power MDE at current arm sizes from the pooled user-metric
-    // variance — the "can this test even see the effect we care
-    // about" gate, literals only (no inverse normal).
-    "q_ab_power" -> ((s, d) =>
-      EventAnalytics.powerCheck(
-          t(s, d, "events").select("user_id", "value"),
-          "user_id", "value")),
-
-    // Portable Bayesian-bootstrap CI (r15b, Rubin 1981): 40 replicates
-    // of hash-derived exponential weights (−ln of the md5 uniform, 6dp
-    // grid), weighted arm means through exact decimal folds, diff CI
-    // at the 2.5/97.5% integer ranks — a distribution-free interval
-    // with zero RNG state, replayed end to end by the oracle.
-    "q_ab_bootstrap" -> ((s, d) =>
-      EventAnalytics.bootstrapTest(
-          t(s, d, "events").select("user_id", "value"),
-          "user_id", "value", reps = 40)),
-
-    // Funnel step latency (r13): exact lower-median and p90 seconds per
-    // adjacent step transition — order statistics at integer ranks, no
-    // interpolation semantics to reconcile.
-    "q_funnel_latency" -> ((s, d) =>
-      EventAnalytics.funnelLatency(
-          t(s, d, "events").select("user_id", "ts", "event_type"),
-          "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-        .orderBy("step_idx")),
-
-    // Pairwise Pearson correlation matrix (r13): all pairs' sufficient
-    // statistics in ONE scan, r assembled from exact decimal sums.
-    "q_corr_matrix" -> ((s, d) =>
-      graft.operators.Profile.correlationMatrix(
-          t(s, d, "lineitem"),
-          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .orderBy("col_a", "col_b")),
-
-    // Forecast model selection (r13): one-step MAE of naive/EWMA/Holt/
-    // Holt-Winters per group + the Occam-tie-broken winner — which
-    // forecaster should page, decided by backtest, not taste.
-    "q_forecast_model_select" -> ((s, d) =>
-      Anomaly.forecastModelSelect(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value", period = 7)
-        .orderBy("event_type")),
-
-    // Per-group OLS trend fit (r13): slope/intercept/r2 of the daily
-    // mean vs day index from five exact sufficient statistics —
-    // drift-rate in closed form, no iteration.
-    "q_trend_ols" -> ((s, d) =>
-      Anomaly.trendFit(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .orderBy("event_type")),
-
-    // Spearman rank correlation (r14): monotone association between
-    // the daily purchase and view counts — average ranks on the 0.5
-    // grid, exact decimal moments, fixed Pearson assembly.
-    "q_corr_spearman" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(
-          count(when(col("event_type") === "purchase", 1)).as("x"),
-          count(when(col("event_type") === "view", 1)).as("y"))
-        .withColumn("pair", lit("purchase_vs_view"))
-      Anomaly.spearmanCorrelation(daily, "pair", "x", "y")
-        .orderBy("pair")
-    }),
-
-    // Kendall tau-b (r14): concordance-view monotone association over
-    // the same daily census — C-D as ONE integer sign-product sum,
-    // integer tie corrections, three fixed IEEE ops.
-    "q_corr_kendall" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(
-          count(when(col("event_type") === "purchase", 1)).as("x"),
-          count(when(col("event_type") === "view", 1)).as("y"))
-        .withColumn("pair", lit("purchase_vs_view"))
-      Anomaly.kendallTau(daily, "pair", "x", "y")
-        .orderBy("pair")
-    }),
-
-    // Fixed-edge histogram (r14): 50 equi-width bins over [0, 500) of
-    // event values per type — frozen caller-owned edges (the
-    // cross-run-comparable profile), clamped edge bins, one agg.
-    "q_histogram" -> ((s, d) =>
-      graft.operators.Profile.histogram(
-          t(s, d, "events"), "event_type", "value",
-          bins = 50, lo = 0.0, hi = 500.0)
-        .orderBy("event_type", "bin")),
-
-    // Day-of-week envelope (r14): exact p10/median/p90 of the daily
-    // means per (group, weekday) at integer ranks — the seasonal band
-    // a new day is judged against.
-    "q_dow_envelope" -> ((s, d) =>
-      Anomaly.dowEnvelope(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .orderBy("event_type", "dow")),
-
-    // Inter-arrival stats (r14): exact mean/p50/p90 event gaps in
-    // seconds per type — integer-microsecond lead gaps, rank-exact
-    // quantiles; sizes session timeouts and watermarks from data.
-    "q_interarrival" -> ((s, d) =>
-      EventAnalytics.interArrival(t(s, d, "events"), "event_type", "ts")
-        .orderBy("event_type")),
-
-    // Day-N retention (r14): D1/D7/D14/D28 per first-day cohort —
-    // "active EXACTLY day N later"; one min-day window + one
-    // aggregation, unobservable offsets null their rate.
-    "q_retention_days" -> ((s, d) =>
-      EventAnalytics.retentionDays(
-          t(s, d, "events"), "user_id", "ts", offsets = Seq(1, 7, 14, 28))
-        .orderBy("cohort")),
-
-    // N-day return rate (r14): of day-d actives, the share back within
-    // 7 days — one lead window over the distinct activity table;
-    // partial-horizon edge days keep counts but null the rate.
-    "q_return_rate" -> ((s, d) =>
-      EventAnalytics.returnRate(
-          t(s, d, "events"), "user_id", "ts", horizonDays = 7)
-        .orderBy("day")),
-
-    // Per-day type diversity (r14): Shannon entropy + Herfindahl of
-    // the event-type mix — 12dp-grid terms, exact decimal fold.
-    "q_type_entropy" -> ((s, d) =>
-      EventAnalytics.typeDiversity(t(s, d, "events"), "ts", "event_type")
-        .orderBy("day")),
-
-    // Time-weighted average (r14): the LOCF step integral over each
-    // group's observation span / the span — exact, no grid
-    // materialized; integer-microsecond weights x 6dp values fold as
-    // exact decimals.
-    "q_twap" -> ((s, d) =>
-      graft.operators.Resample.twap(
-          t(s, d, "events"), "event_type", "ts", "value")
-        .orderBy("event_type")),
-
-    // Trimmed + winsorized means (r14): rank-exact alpha=0.1 robust
-    // location per group — drop or clamp the floor(alpha*n) extremes;
-    // winsorized sum = trimmed sum + k*lo + k*hi, no self-join.
-    "q_trimmed_mean" -> ((s, d) =>
-      Anomaly.trimmedMeans(
-          t(s, d, "events"), "event_type", "value", alpha = 0.1)
-        .orderBy("event_type")),
-
-    // Rolling active users (r14): exact DAU/WAU(7)/MAU(28) + stickiness
-    // per observed day — one distinct pass then a map-side offset
-    // explode into the trailing windows; no day-grid join, one shuffle.
-    "q_active_users" -> ((s, d) =>
-      EventAnalytics.activeUsers(
-          t(s, d, "events"), "user_id", "ts")
-        .orderBy("day")),
-
-    // Mann-Kendall trend test (r14): the INTEGER S statistic + tie-
-    // corrected variance + continuity-corrected z — "is there a
-    // monotone trend at all" before q_trend_theilsen sizes it.
-    "q_trend_mannkendall" -> ((s, d) =>
-      Anomaly.mannKendall(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .orderBy("event_type")),
-
-    // Theil-Sen robust trend (r14): lower-median pairwise slope +
-    // lower-median residual intercept — the 29.3%-breakdown complement
-    // to q_trend_ols; pair slopes are single IEEE divisions, medians
-    // SELECT values (no float sums anywhere).
-    "q_trend_theilsen" -> ((s, d) =>
-      Anomaly.theilSenFit(
-          t(s, d, "events").select("event_type", "ts", "value"),
-          "event_type", "ts", "value")
-        .orderBy("event_type")),
-
-    // Exact distance-1 fuzzy join (r13): part names vs an md5-chosen
-    // one-char-deletion corruption of them — deletion-neighborhood
-    // (FastSS) blocking + equi-join + levenshtein verify. The oracle
-    // brute-forces all pairs; matching hashes PROVE the blocking is
-    // lossless.
-    "q_fuzzy_join" -> ((s, d) => {
-      // Match DISTINCT names (the real reconciliation grain — fan back
-      // to rows afterwards): output scales with name cardinality, not
-      // row count, so duplicate-heavy catalogs stay bounded.
-      val names = t(s, d, "part").groupBy(col("p_name"))
-        .agg(min(col("p_partkey")).as("name_key"))
-      val pos = (pmod(conv(substring(md5(concat(col("name_key").cast("string"),
-          lit("fz"))), 1, 2), 16, 10).cast("long"),
-        length(col("p_name")).cast("long")) + 1).cast("int")
-      val dirty = names.select(col("name_key").as("dirty_key"),
-        concat(col("p_name").substr(lit(1), pos - 1),
-          col("p_name").substr(pos + 1, length(col("p_name")) - pos))
-          .as("dirty_name"))
-      graft.operators.FuzzyJoin.join(names, dirty,
-          "name_key", "p_name", "dirty_key", "dirty_name")
-        .orderBy("name_key", "dirty_key")
-    }),
-
-    // Directed n-gram containment pairs (r13): |A∩B|/|A| — the
-    // asymmetric near-dup measure (quoted-inside catches Jaccard
-    // misses); same two-shuffle hashed-gram shape as q_dedup_jaccard.
-    "q_dedup_containment" -> ((s, d) =>
-      Dedup.containmentPairs(t(s, d, "documents"), "doc_id", "text",
-          n = 3, minContainment = 0.4)
-        .orderBy("id_a", "id_b")),
-
-    // Padding-minimizing BFD bin packing (r13): documents stay whole,
-    // bins are fixed-capacity, best-fit-decreasing within each hash
-    // partition (bins never span partitions — embarrassingly parallel).
-    // Rows-only (§8: the assignment depends on Spark's hash partitioning
-    // of ids, which no external engine replays); capacity/coverage/
-    // determinism/efficiency-vs-naive are spec-pinned in TrainingDataSpec.
-    "q_pack_bins" -> ((s, d) =>
-      TrainingData.packBinsBfd(
-          t(s, d, "documents"), "doc_id", col("n_chars"),
-          capacity = 2048L, numPartitions = 8)
-        .orderBy("id")),
-
-    // BFD packing, deterministic-key grain (r14): the same fold as
-    // q_pack_bins but grouped by floorMod(doc_id, 4) — integer
-    // arithmetic any engine reproduces — which makes the FULL bin
-    // assignment (ids, offsets, overflow flags) oracle-replayable: the
-    // DuckDB side runs the identical best-fit-decreasing recursion
-    // (smallest remaining >= n, ties to the most recently
-    // created-or-updated bin) as a recursive CTE carrying the bins
-    // list as state. Promotes the packing family from rows-only to a
-    // FULL oracle; the hash-grain form keeps its spec pinning as the
-    // shuffle-native scale default.
-    "q_pack_bins_det" -> ((s, d) =>
-      TrainingData.packBinsBfdByKey(
-          t(s, d, "documents"), "doc_id", col("n_chars"),
-          capacity = 2048L, parts = 4)
-        .orderBy("id")),
-
-    // Single-pass table profile: per-column null/distinct counts and
-    // value ranges, melted to one row per column — all columns' stats in
-    // ONE aggregation over one scan.
-    "q_profile" -> ((s, d) =>
-      graft.operators.Profile.profile(t(s, d, "events"), exactDistinct = true)
-        .orderBy("column")),
-
-    // The 100 TB-DEFAULT profile mode (r11): approx_count_distinct
-    // sketches instead of per-column exact distinct aggs — bounded
-    // memory, single scan, no extra distinct pass. Rows-only (the HLL
-    // estimate is engine-internal, §8); pinned within sketch error of
-    // the exact mode in ProfileSpec territory (PropertySpec) and every
-    // non-distinct field is identical to the oracle-checked q_profile.
-    "q_profile_approx" -> ((s, d) =>
-      graft.operators.Profile.profile(t(s, d, "events"))
-        .orderBy("column")),
-
-    // MERGEABLE profile state (r11): profile halves of the table
-    // independently, merge the states, render — the incremental shape
-    // that never rescans history at 100 TB. Rows-only (DataSketches
-    // HLL estimates, §8); the sharding-invariance identity (merged
-    // halves == one-shot state, byte-equivalent sketches) is pinned in
-    // ProfileSpec.
-    "q_profile_incremental" -> ((s, d) => {
-      import graft.operators.Profile
-      val events = t(s, d, "events")
-      val split = java.sql.Timestamp.valueOf("2024-01-16 00:00:00")
-      val hist = Profile.profileState(events.filter(col("ts") < lit(split)))
-      val delta = Profile.profileState(events.filter(col("ts") >= lit(split)))
-      Profile.profileFromState(Profile.mergeProfileStates(hist, delta))
-        .orderBy("column")
-    }),
-
-    // Corpus TF-IDF: top-5 salient terms per document, smoothed idf,
-    // deterministic tie-break (rounded score desc, term asc).
-    "q_tfidf_topk" -> ((s, d) =>
-      TfIdf.topTerms(t(s, d, "documents"), "doc_id", "text", k = 5)
-        .orderBy("doc_id", "rk")),
-
-    // Okapi BM25 lexical retrieval: top-10 documents for a fixed query
-    // bag, single corpus scan (per-term tf via array filter, no explode),
-    // 1-row broadcast stats, TakeOrderedAndProject top-k.
-    "q_bm25_topk" -> ((s, d) =>
-      TfIdf.bm25TopDocs(t(s, d, "documents"), "doc_id", "text",
-        Seq("hash", "join", "window"), k = 10)
-        .orderBy("rk")),
-
-    // PERSISTED inverted index: two disjoint batches fold into the
-    // postings/termdf/stats stores, then the probe answers from the
-    // STANDING store alone — restriction law makes this share
-    // q_bm25_topk's oracle SQL verbatim (identical output proves the
-    // incremental index equals the one-shot corpus scan).
-    "q_bm25_index" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val store = s"target/tmp/q_bm25_index_${System.nanoTime()}"
-      graft.operators.RetrievalIndex.appendBatch(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", store, 0L)
-      graft.operators.RetrievalIndex.appendBatch(
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", store, 1L)
-      graft.operators.RetrievalIndex.bm25TopK(
-          s, store, Seq("hash", "join", "window"), k = 10)
-        .orderBy("rk")
-    }),
-
-    // Snapshot diff (CDC without table-format ACID): synthesize
-    // version B deterministically from documents — drop id%7==0, flip
-    // text case for id%11==0, re-add docs 0..4 under shifted ids —
-    // and emit the added/removed/changed delta. Wide columns never
-    // shuffle (row-local md5, only id+digest cross the wire).
-    "q_snapshot_diff" -> ((s, d) => {
-      val a = t(s, d, "documents")
-      val b = a.filter(pmod(col("doc_id"), lit(7)) =!= 0)
-        .withColumn("text",
-          when(pmod(col("doc_id"), lit(11)) === 0, upper(col("text")))
-            .otherwise(col("text")))
-        .unionByName(
-          a.filter(col("doc_id") < 5).withColumn("doc_id", col("doc_id") + 10000))
-      graft.operators.SnapshotDiff.snapshotDiff(a, b, "doc_id", Seq("text", "source"))
-        .orderBy("doc_id")
-    }),
-
-    // Hybrid retrieval: BM25 top-50 fused with cosine top-50 (documents
-    // and embeddings share the id space) by reciprocal-rank fusion.
-    // Rank-only inputs -> the fusion is engine-exact; both candidate
-    // lists are bounded, so the join and final top-20 are tiny.
-    "q_hybrid_rrf" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val lex = TfIdf.bm25TopDocs(t(s, d, "documents"), "doc_id", "text",
-        Seq("hash", "join", "window"), k = 50)
-        .select(col("doc_id"), col("rk"))
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      val vec = SimilaritySearch.bruteForceTopK(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, k = 50)
-        // constant-but-non-foldable partition key over the ≤ 50-row
-        // post-limit candidate list — states single-partition intent,
-        // silences WindowExec (lit(0) would be folded away on Spark 4)
-        .withColumn("vec_rk", row_number().over(
-          Window.partitionBy(pmod(col("vec_id"), lit(1)))
-            .orderBy(desc("cos_sim"), col("vec_id"))).cast("int"))
-        .select(col("vec_id").as("doc_id"), col("vec_rk"))
-      HybridRetrieval.rrfFuse(lex, "rk", vec, "vec_rk", "doc_id", rrfK = 60, k = 20)
-        .orderBy(desc("rrf"), col("doc_id"))
-    }),
-
-    // Z-order clustering key: bucket (value, user_id) on fixed linear
-    // boundaries and interleave the bits — the row-local half of
-    // Layout.writeZOrdered (the layout win itself is pinned in
-    // LayoutSpec's file-pruning test; the curve math is oracle-exact).
-    "q_zorder" -> ((s, d) => {
-      val vB = Layout.linearBoundaries(0.0, 512.0, 3)
-      val uB = Layout.linearBoundaries(0.0, 1600.0, 3)
-      t(s, d, "events")
-        .select(
-          col("event_id"),
-          Layout.bucketIndex(col("value"), vB).as("bx"),
-          Layout.bucketIndex(col("user_id").cast("double"), uB).as("by"))
-        .withColumn("z_value", Layout.zValue(Seq(col("bx"), col("by")), bits = 3))
-        .orderBy("event_id")
-    }),
-
-    // Hilbert clustering key on the same buckets as q_zorder: the
-    // no-jump space-filling curve (canonical xy2d orientation for 2-D).
-    // The oracle replays the quadrant-rotation loop as a recursive CTE —
-    // the curve math is deterministic, so this is hash-matched, not
-    // rows-only.
-    "q_hilbert" -> ((s, d) => {
-      val vB = Layout.linearBoundaries(0.0, 512.0, 3)
-      val uB = Layout.linearBoundaries(0.0, 1600.0, 3)
-      t(s, d, "events")
-        .select(
-          col("event_id"),
-          Layout.bucketIndex(col("value"), vB).as("bx"),
-          Layout.bucketIndex(col("user_id").cast("double"), uB).as("by"))
-        .withColumn("h_value", Layout.hilbertValue(Seq(col("bx"), col("by")), bits = 3))
-        .orderBy("event_id")
-    }),
-
-    // 3-D Hilbert key (value x user_id x hour-of-day buckets) through
-    // the Skilling transpose kernel — curve parity at every
-    // dimensionality Z-order serves. The oracle replays the transform
-    // as a recursive CTE over (a, b, c, q) state with the sequential
-    // per-dimension exchange steps nested as subqueries, so this is
-    // hash-matched like the 2-D xy2d oracle, not rows-only.
-    "q_hilbert3" -> ((s, d) => {
-      val vB = Layout.linearBoundaries(0.0, 512.0, 3)
-      val uB = Layout.linearBoundaries(0.0, 1600.0, 3)
-      val hB = Layout.linearBoundaries(0.0, 24.0, 3)
-      t(s, d, "events")
-        .select(
-          col("event_id"),
-          Layout.bucketIndex(col("value"), vB).as("bx"),
-          Layout.bucketIndex(col("user_id").cast("double"), uB).as("by"),
-          Layout.bucketIndex(hour(col("ts")).cast("double"), hB).as("bz"))
-        .withColumn("h3_value",
-          Layout.hilbertValue(Seq(col("bx"), col("by"), col("bz")), bits = 3))
-        .orderBy("event_id")
-    }),
-
-    // Deterministic hash split: engine-independent train/val/test
-    // membership (md5-prefix thresholds; the oracle is the same string
-    // comparison in plain SQL).
-    "q_split_hash" -> ((s, d) =>
-      TrainingData.deterministicSplit(
-          t(s, d, "documents").select("doc_id"), "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "split")
-        .orderBy("doc_id")),
-
-    // Leakage-safe split: membership decided per duplicate CLUSTER
-    // (connected component of exact-jaccard pairs), so near-duplicates
-    // never straddle train/test. Oracle = the q_dedup_clusters recursive
-    // CTE composed with q_split_hash's md5-threshold rule on cluster_id.
-    "q_split_leakage_safe" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TrainingData.leakageSafeSplit(
-          docs, "doc_id",
-          Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.2),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "cluster_id", "split")
-        .orderBy("doc_id")
-    }),
-
-    // INCREMENTAL leakage-safe split: the near-dup pair list folds into a
-    // persisted ClusterStore in two batches (delta-label CC + relabel per
-    // batch — no pair-history rescan), and the split reads the standing
-    // membership. The oracle replays the FULL recompute (recursive-CTE
-    // clusters over all pairs + md5 split), so equality IS the
-    // restriction law at contract level.
-    "q_split_leakage_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // persist: both folds probe the same pair list; without it the
-      // jaccard shingle pipeline runs once per batch
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.2)
-        .persist()
-      val store = s"target/tmp/q_split_incr_${System.nanoTime()}"
-      operators.ClusterStore.applyEdges(s, store, pairs.filter(col("id_a") % 2 === 0))
-      operators.ClusterStore.applyEdges(s, store, pairs.filter(col("id_a") % 2 === 1))
-      pairs.unpersist()
-      TrainingData.leakageSafeSplitIncremental(
-          docs, "doc_id", store, Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "cluster_id", "split")
-        .orderBy("doc_id")
-    }),
-
-    // Bloom-filter decontamination — the beyond-broadcast scale path:
-    // eval grams fold into a ~MB bloom sketch and the corpus side is
-    // ONE row-local projection, zero shuffles (plan-asserted in
-    // TrainingDataSpec). Rows-only: bloom hits depend on the sketch's
-    // internal hashing, which no external engine replays; fixture
-    // equality with the exact operator and the flags-superset property
-    // are spec-pinned.
-    "q_contamination_bloom" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TrainingData.benchmarkContaminationBloom(
-          docs.filter(col("doc_id") % 50 =!= 0), "doc_id", "text",
-          docs.filter(col("doc_id") % 50 === 0), "text",
-          n = 3, flagThreshold = 0.5, expectedGrams = 100000L, fpp = 0.001)
-        .withColumn("contamination", round(col("contamination"), 6))
-        .orderBy("doc_id")
-    }),
-
-    // Benchmark decontamination: n-gram overlap of each corpus doc with
-    // a (broadcast) eval set — every 50th doc plays the benchmark here.
-    "q_contamination" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TrainingData.benchmarkContamination(
-          docs.filter(col("doc_id") % 50 =!= 0), "doc_id", "text",
-          docs.filter(col("doc_id") % 50 === 0), "text",
-          n = 3, flagThreshold = 0.5)
-        .withColumn("contamination", round(col("contamination"), 6))
-        .orderBy("doc_id")
-    }),
-
-    // SPAN-grain decontamination detector: maximal corpus spans sharing a
-    // verbatim 30-char window with any eval doc — the GPT-3/PaLM-style
-    // surgical complement to the doc-grain q_contamination gate.
-    "q_contamination_spans" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      SubstringDedup.contaminatedSpans(
-          docs.filter(col("doc_id") % 50 =!= 0), "doc_id", "text",
-          docs.filter(col("doc_id") % 50 === 0), "text",
-          minLen = 30, hashGrams = false)
-        .orderBy("doc_id", "span_start")
-    }),
-
-    // Decontamination against a PERSISTED eval gram store: the eval
-    // suite's census lands through CensusStore in two delta batches
-    // (append-as-benchmarks-land), and the corpus probes the store —
-    // no eval rescan per batch. Oracle identical to q_contamination_spans:
-    // equality IS the store == direct-eval law.
-    "q_contamination_spans_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val eval = docs.filter(col("doc_id") % 50 === 0)
-      val store = s"target/tmp/q_decon_store_${System.nanoTime()}"
-      operators.CensusStore.appendDelta(
-        SubstringDedup.gramCensus(
-          eval.filter(col("doc_id") % 100 === 0), "doc_id", "text",
-          minLen = 30, hashGrams = false), store, 0L)
-      operators.CensusStore.appendDelta(
-        SubstringDedup.gramCensus(
-          eval.filter(col("doc_id") % 100 =!= 0), "doc_id", "text",
-          minLen = 30, hashGrams = false), store, 1L)
-      SubstringDedup.contaminatedSpansAgainstCensus(
-          docs.filter(col("doc_id") % 50 =!= 0), "doc_id", "text",
-          operators.CensusStore.read(s, store, "g"), minLen = 30, hashGrams = false)
-        .orderBy("doc_id", "span_start")
-    }),
-
-    // And the strip: corpus text with every eval-overlapping span removed,
-    // pinned at reconstruction level (md5 of the rebuilt text).
-    "q_contamination_strip" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      SubstringDedup.stripContaminatedSpans(
-          docs.filter(col("doc_id") % 50 =!= 0), "doc_id", "text",
-          docs.filter(col("doc_id") % 50 === 0), "text",
-          minLen = 30, hashGrams = false)
-        .select(
-          col("doc_id"),
-          length(col("text")).cast("long").as("clean_len"),
-          md5(col("text")).as("clean_hash"))
-        .orderBy("doc_id")
-    }),
-
-    // Winnowing fingerprints (MOSS): rows-only — selection depends on the
-    // engine hash function; properties asserted in DedupSpec.
-    // Winnowing (Schleimer et al.) through the custom selection kernel,
-    // over md5-derived gram hashes so the DuckDB oracle replays the exact
-    // window-min/rightmost-tie/consecutive-dedup algorithm and checks
-    // both the count and an order-insensitive digest (xor) of the
-    // selected fingerprints. Production winnowing uses the fused FNV
-    // gram hashes (winnowFingerprints); the selection kernel is the same.
-    "q_text_winnow" -> ((s, d) => {
-      val fps = graft.plans.HashExpressions.winnowHashes(
-        TextFunctions.md5GramHashes(col("text"), 3), 4)
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          size(fps).as("n_fingerprints"),
-          aggregate(fps, lit(0L), (a, x) => a.bitwiseXOR(x)).as("fp_xor"))
-        .orderBy("doc_id")
-    }),
-
-    // Gopher-style top-gram fraction: share of each doc's word 2-grams
-    // taken by its most frequent gram — the long-loop boilerplate signal.
-    // Row-local (sorted-array longest-run fold, no shuffle).
-    "q_text_topgram" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          size(TextFunctions.wordNGrams(col("text"), 2)).as("n_grams"),
-          round(TextFunctions.topGramFraction(col("text"), 2), 6).as("top_gram_frac"))
-        .orderBy("doc_id")),
-
-    // Cross-document boilerplate: fraction of each doc's distinct
-    // 3-grams occurring in >= 3 documents corpus-wide. Document
-    // frequency via one partial-aggregated groupBy(gram) + join back.
-    "q_text_boilerplate" -> ((s, d) =>
-      graft.operators.CorpusStats.gramDocFrequency(
-        t(s, d, "documents"), "doc_id", "text", n = 3, minDf = 3)
-        .orderBy("doc_id")),
-
-    // Scene segmentation over a pre-extracted frames table (the decode
-    // fleet's output shape; container parsing itself is out of scope —
-    // SURVEY round-12 candidate (b)). Frames synthesized
-    // deterministically from documents (md5-derived brightness), so the
-    // oracle replays features, boundaries, islands and keyframes in SQL.
-    "q_frames_scenes" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val frames = docs.select(
-          col("doc_id").as("video_id"),
-          explode(sequence(lit(0), (pmod(col("n_chars"), lit(7)) + 3).cast("int")))
-            .as("frame_idx"))
-        .withColumn("bright",
-          conv(substring(md5(concat(col("video_id"), lit("_"), col("frame_idx"))), 1, 2),
-            16, 10).cast("double"))
-        .withColumn("feat", array(col("bright")))
-      Multimodal.sceneManifest(frames, "video_id", "frame_idx", "feat", threshold = 90.0)
-        .select(
-          col("video_id"), col("scene_idx"),
-          col("start_frame").cast("long").as("start_frame"),
-          col("end_frame").cast("long").as("end_frame"),
-          col("n_frames"), col("keyframe_idx").cast("long").as("keyframe_idx"))
-        .orderBy("video_id", "scene_idx")
-    }),
-
-    // PER-VIDEO adaptive scene threshold: each video cuts at its own
-    // k-th-order-statistic distance (k = ceil(0.7 * n_dists)) instead of
-    // one global number — the k-th order statistic (never an interpolated
-    // percentile) keeps the threshold bit-reproducible across engines,
-    // so the whole adaptive manifest is a full oracle.
-    "q_frames_scenes_adaptive" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val frames = docs.select(
-          col("doc_id").as("video_id"),
-          explode(sequence(lit(0), (pmod(col("n_chars"), lit(7)) + 3).cast("int")))
-            .as("frame_idx"))
-        .withColumn("bright",
-          conv(substring(md5(concat(col("video_id"), lit("_"), col("frame_idx"))), 1, 2),
-            16, 10).cast("double"))
-        .withColumn("feat", array(col("bright")))
-      Multimodal.sceneManifestAdaptive(
-          frames, "video_id", "frame_idx", "feat", quantile = 0.7)
-        .select(
-          col("video_id"), col("scene_idx"),
-          col("start_frame").cast("long").as("start_frame"),
-          col("end_frame").cast("long").as("end_frame"),
-          col("n_frames"), col("keyframe_idx").cast("long").as("keyframe_idx"))
-        .orderBy("video_id", "scene_idx")
-    }),
-
-    // Corpus self-perplexity (unigram surprisal, the CCNet-style LM
-    // filter's degenerate-but-replayable form): token census broadcast
-    // back onto the exploded tokens, per-doc mean -log2 p(token).
-    "q_quality_surprisal" -> ((s, d) =>
-      graft.operators.CorpusStats.unigramSurprisal(
-        t(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // BIGRAM surprisal with stupid backoff (Brants 2007): mean
-    // -log2 p(w|prev), p = bigram ratio when seen, alpha*unigram when
-    // not, unigram for the first token — order-sensitive where the
-    // unigram filter is blind (word salad keeps its unigram score and
-    // loses every bigram).
-    "q_quality_surprisal_bigram" -> ((s, d) =>
-      graft.operators.CorpusStats.bigramSurprisal(
-        t(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // TRIGRAM surprisal, full backoff chain: trigram ratio when seen,
-    // alpha*bigram ratio, alpha^2*unigram — the chain entered at each
-    // token's available history depth.
-    "q_quality_surprisal_trigram" -> ((s, d) =>
-      graft.operators.CorpusStats.trigramSurprisal(
-        t(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // Frozen trigram LM: odds scored under the evens' three censuses,
-    // full backoff chain + add-one unigrams, unseen contexts fall to
-    // the unigram floor.
-    "q_quality_surprisal_trigram_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val evens = docs.filter(col("doc_id") % 2 === 0)
-      graft.operators.CorpusStats.trigramSurprisalAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-          graft.operators.CorpusStats.tokenCensus(evens, "text"),
-          graft.operators.CorpusStats.bigramCensus(evens, "doc_id", "text"),
-          graft.operators.CorpusStats.trigramCensus(evens, "doc_id", "text"))
-        .orderBy("doc_id")
-    }),
-
-    // Frozen bigram LM: odds scored under the evens' unigram + bigram
-    // censuses, add-one-smoothed unigrams, stupid backoff for unseen
-    // bigrams, unigram fallback for unseen contexts.
-    "q_quality_surprisal_bigram_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val evens = docs.filter(col("doc_id") % 2 === 0)
-      graft.operators.CorpusStats.bigramSurprisalAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-          graft.operators.CorpusStats.tokenCensus(evens, "text"),
-          graft.operators.CorpusStats.bigramCensus(evens, "doc_id", "text"))
-        .orderBy("doc_id")
-    }),
-
-    // Count-cutoff PRUNED frozen bigram LM (SRILM-style): pruned
-    // bigrams score through the backoff branch — the storage story for
-    // persisted n-gram stores. minCount=15 sits mid-distribution on
-    // this tiny-vocabulary fixture (real corpora prune at 2-5), so
-    // BOTH the seen and the pruned->backoff branches are exercised and
-    // oracle-checked.
-    "q_quality_surprisal_bigram_pruned" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val evens = docs.filter(col("doc_id") % 2 === 0)
-      graft.operators.CorpusStats.bigramSurprisalAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-          graft.operators.CorpusStats.tokenCensus(evens, "text"),
-          graft.operators.CorpusStats.pruneCensus(
-            graft.operators.CorpusStats.bigramCensus(evens, "doc_id", "text"), 15L))
-        .orderBy("doc_id")
-    }),
-
-    // Frozen-LM surprisal: odd docs scored under the EVEN docs' token
-    // census (the reference-LM shape of CCNet's filter — scores don't
-    // drift with the batch), add-one smoothing with one OOV bucket.
-    // The census is mergeable and CensusStore-persistable: streaming
-    // ingestion scores each batch without rescanning the corpus.
-    "q_quality_surprisal_incr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val census = graft.operators.CorpusStats.tokenCensus(
-        docs.filter(col("doc_id") % 2 === 0), "text")
-      graft.operators.CorpusStats.surprisalAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", census)
-        .orderBy("doc_id")
-    }),
-
-    // LSH-bucketed embedding near-dup (scale path; rows-only — recall is
-    // probabilistic. Precision vs brute force asserted in DedupSpec.)
-    "q_emb_neardup_lsh" -> ((s, d) =>
-      Dedup.embeddingNearDuplicatesLSH(
-        t(s, d, "embeddings"), "vec_id", "embedding", 0.5, numPlanes = 16, maxHamming = 2)
-        .withColumn("cos_sim", round(col("cos_sim"), 6))
-        .orderBy("id_a", "id_b")),
-
-    // Generator functions: explode tokens, top-20 token frequencies.
-    "q_explode_tokens" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(explode(TextFunctions.tokens(lower(col("text")))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), asc("token"))
-        .limit(20)),
-
-    // BPE merge training (rows-only — a greedy driver-coordinated
-    // fixpoint is not single-query-expressible; the merge order is
-    // deterministic and pinned against the hand-derived Sennrich
-    // fixture in BpeSpec): learn the tokenizer FROM the corpus. The
-    // corpus collapses to a word-frequency table before round one, so
-    // the rounds never touch corpus-sized data.
-    "q_bpe_learn" -> ((s, d) => {
-      import s.implicits._
-      operators.Bpe.learnMerges(t(s, d, "documents"), "text", numMerges = 20)
-        .map(m => (m.rank, m.left, m.right, m.count))
-        .toDF("rank", "left", "right", "pair_count")
-        .orderBy("rank")
-    }),
-
-    // Apply the learned merges: per-doc subword counts (rows-only —
-    // downstream of the learned table; encode loop pinned in BpeSpec
-    // incl. the lossless-reassembly property).
-    "q_bpe_encode" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val merges = operators.Bpe.learnMerges(docs, "text", numMerges = 20)
-      operators.Bpe.encode(docs, "doc_id", "text", merges)
-        .select(col("doc_id"), col("n_bpe_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // FastText-style learned quality score (rows-only — MLlib LBFGS
-    // internals, same §8 class as the fraud model; separability, AUC
-    // floor, determinism and the shuffle-free inference plan pinned in
-    // QualityClassifierSpec): weak labels from the heuristic quality
-    // gate train a hashed-BoW logistic regression that then scores
-    // every document — the GPT-3-lineage corpus filter.
-    "q_quality_classifier" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val labeled = docs.select(
-        col("text"),
-        (TextFunctions.qualityScore(col("text")) >= 0.5).cast("int").as("label"))
-      val model = graft.ml.QualityClassifier.train(labeled, "text", "label")
-      graft.ml.QualityClassifier.score(model, docs, "doc_id", "text")
-        .select(col("doc_id"), round(col("quality_score"), 6).as("quality_score"))
-        .orderBy("doc_id")
-    }),
-
-    // Gopher rule battery (Rae et al. 2021 §A1.1): the seven published
-    // document-quality rules as separate signals + 0/1 flags, one
-    // row-local pass, published thresholds. Fully deterministic ->
-    // full oracle (DuckDB replays every signal over the same \S+
-    // tokenization and line split).
-    "q_quality_gopher" -> ((s, d) =>
-      graft.quality.GopherRules.signals(t(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // LINE-grain dedup (Dolma/RefinedWeb boilerplate pass) over
-    // synthesized multi-line docs: every doc gains a shared footer
-    // line and its own 40-char prefix line (the q_audio_features
-    // synthesis trick — multi-line structure the fixture lacks, built
-    // deterministically in BOTH engines). dropAll mode: census +
-    // anti-join, no per-key window — the scale shape.
-    "q_dedup_lines" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit("\nsubscribe to our newsletter for updates\n"),
-          substring(col("text"), 1, 40)).as("text2"))
-      graft.operators.LineDedup.stripDuplicatedLines(docs, "doc_id", "text2")
-        .select(col("doc_id"), md5(col("clean_text")).as("clean_hash"),
-          length(col("clean_text")).cast("long").as("clean_len"))
-        .orderBy("doc_id")
-    }),
-
-    // keepFirst mode: the lowest (doc_id, line_idx) occurrence of each
-    // duplicated line survives (Dolma's mark-after-first semantics).
-    "q_dedup_lines_keep" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit("\nsubscribe to our newsletter for updates\n"),
-          substring(col("text"), 1, 40)).as("text2"))
-      graft.operators.LineDedup.stripDuplicatedLines(
-          docs, "doc_id", "text2", keepFirst = true)
-        .select(col("doc_id"), md5(col("clean_text")).as("clean_hash"),
-          length(col("clean_text")).cast("long").as("clean_len"))
-        .orderBy("doc_id")
-    }),
-
-    // The boilerplate inventory: every corpus-duplicated line with its
-    // site and document counts.
-    "q_dedup_lines_table" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit("\nsubscribe to our newsletter for updates\n"),
-          substring(col("text"), 1, 40)).as("text2"))
-      graft.operators.LineDedup.duplicatedLines(docs, "doc_id", "text2")
-        .select(md5(col("line")).as("line_hash"), col("n_sites"), col("n_docs"))
-        .orderBy("line_hash")
-    }),
-
-    // WITHIN-document line dedup (row-local, zero shuffle): the doc's
-    // own prefix line repeats around it; only the first survives.
-    "q_dedup_lines_indoc" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          md5(graft.operators.LineDedup.dedupLinesInDoc(
-            concat(substring(col("text"), 1, 30), lit("\n"),
-              col("text"), lit("\n"),
-              substring(col("text"), 1, 30)))).as("clean_hash"))
-        .orderBy("doc_id")),
-
-    // Per-source corpus DATA CARD: volume, lexical diversity,
-    // duplication and LM-fit metrics in long format — the datasheet
-    // table a corpus release publishes. Every metric fully replayed in
-    // the oracle.
-    "q_corpus_report" -> ((s, d) =>
-      graft.operators.CorpusReport.dataCard(
-          t(s, d, "documents"), "doc_id", "text", "source")
-        .orderBy("source", "metric")),
-
-    // WET-style markup strip over synthesized HTML (script/style die
-    // with content, tags -> space, entities unescape, &amp; last);
-    // reconstruction pinned at md5 level after whitespace normalize.
-    "q_text_strip_markup" -> ((s, d) => {
-      val html = concat(
-        lit("<html><head><style type=\"text/css\">p {color: red}</style>" +
-          "</head><body class=\"main\"><h1>"),
-        substring(col("text"), 1, 20),
-        lit("</h1><p>"), col("text"),
-        lit(" &amp; more &lt;tags&gt;</p>" +
-          "<script>var x = 1 < 2; if (x) { alert(\"hi\"); }</script>" +
-          "</body></html>"))
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          md5(TextFunctions.normalizeWhitespace(TextFunctions.stripMarkup(html)))
-            .as("clean_hash"),
-          length(TextFunctions.normalizeWhitespace(TextFunctions.stripMarkup(html)))
-            .cast("long").as("clean_len"))
-        .orderBy("doc_id")
-    }),
-
-    // Unicode NFC normalization: decomposed sequences (combining
-    // accents) compose; byte lengths shrink, md5 pinned.
-    "q_text_nfc" -> ((s, d) => {
-      val decomposed = concat(col("text"),
-        // DECOMPOSED accents (e + U+0301, i + U+0308) — NFC composes them
-        lit(" cafe\u0301 nai\u0308ve"))
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          octet_length(decomposed).cast("long").as("bytes_raw"),
-          octet_length(TextFunctions.normalizeNfc(decomposed)).cast("long")
-            .as("bytes_nfc"),
-          md5(TextFunctions.normalizeNfc(decomposed)).as("nfc_hash"))
-        .orderBy("doc_id")
-    }),
-
-    // Per-source distribution drift: KL(source || corpus) over unigram
-    // distributions — the feed-went-bad dashboard number.
-    "q_corpus_divergence" -> ((s, d) =>
-      graft.operators.CorpusStats.sourceDivergence(
-          t(s, d, "documents"), "doc_id", "text", "source")
-        .orderBy("source")),
-
-    // Jensen-Shannon divergence per source vs corpus (r15): the
-    // symmetric, bounded complement of q_corpus_divergence's KL —
-    // finite under support mismatch, √JSD a metric; the off-support
-    // tail folds to the closed-form ½(1 − q_mass_in_source), so the
-    // per-source work stays |source vocab|. Decimal-staged term sums.
-    "q_corpus_js" -> ((s, d) =>
-      graft.operators.CorpusStats.sourceJsDivergence(
-          t(s, d, "documents"), "text", "source")
-        .orderBy("source")),
-
-    // Fightin' Words marked tokens (r15, Monroe et al. 2008): top-10
-    // most over-represented tokens per source by the Dirichlet-prior
-    // log-odds z — the itemized view of q_corpus_divergence/_js, ranked
-    // on the 6dp grid with a token tiebreak so the order replays.
-    "q_marked_tokens" -> ((s, d) =>
-      graft.operators.CorpusStats.markedTokens(
-          t(s, d, "documents"), "text", "source", topK = 10, alpha0 = 100.0)
-        .orderBy("source", "rank")),
-
-    // Zipf fit (r15): OLS of ln(freq) on ln(rank) over the top-100
-    // census tokens — slope ≈ −1 for natural text; templated corpora go
-    // flat. Total-ordered top-N, 12dp decimal moment staging.
-    "q_zipf_fit" -> ((s, d) =>
-      graft.operators.CorpusStats.zipfFit(
-          t(s, d, "documents"), "text", topN = 100)),
-
-    // Heaps'-law vocabulary-growth fit (r15b): OLS of ln(vocab) on
-    // ln(tokens) over 20 integer doc-id prefixes — β ≈ 0.4-0.6 for
-    // natural text, ~1 for open-vocabulary noise, ~0 for templates.
-    // No global window: grid bucketing + first-occurrence census +
-    // bounded cumsum.
-    "q_heaps_fit" -> ((s, d) =>
-      graft.operators.CorpusStats.heapsFit(
-          t(s, d, "documents"), "doc_id", "text", buckets = 20)),
-
-    // Hapax / Good-Turing unseen-mass report (r15b): per source, V1/N
-    // (the Turing estimate of next-token-unseen probability) and the
-    // hapax ratio V1/V — the open-vocabulary noise signal. Pure census
-    // arithmetic.
-    "q_hapax" -> ((s, d) =>
-      graft.operators.CorpusStats.hapaxStats(
-          t(s, d, "documents"), "source", "text")
-        .orderBy("source")),
-
-    // Cross-source n-gram overlap matrix (r15): per ordered source
-    // pair, containment of A's distinct 3-gram vocabulary in B plus
-    // symmetric Jaccard — the "which sources mirror which" forensics
-    // screen. Hashed grams engine-side, string grams in the oracle
-    // (set counts identical — the q_dedup_jaccard argument).
-    "q_source_overlap" -> ((s, d) =>
-      graft.operators.CorpusStats.sourceOverlap(
-          t(s, d, "documents"), "text", "source", n = 3)
-        .orderBy("source_a", "source_b")),
-
-    // Compression-ratio quality signal (r15, Gopher A1): deflate bytes
-    // over raw bytes via the codegen'd zlib kernel. Rows-only — no SQL
-    // engine replays zlib (§8); ratio laws are spec-pinned (repetitive
-    // text compresses far below prose, high-entropy text does not).
-    "q_text_compress" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          octet_length(col("text")).as("n_bytes"),
-          TextFunctions.deflateSize(col("text")).as("n_deflate"),
-          TextFunctions.compressionRatio(col("text")).as("ratio"))
-        .orderBy("doc_id")),
-
-    // Embedding-space dispersion per label: centroid norm + mean
-    // squared distance to centroid via the variance identity.
-    "q_emb_dispersion" -> ((s, d) =>
-      graft.operators.EmbeddingStats.dispersion(
-          t(s, d, "embeddings"), "embedding", "label")
-        .withColumnRenamed("grp", "label")
-        .orderBy("label")),
-
-    // Byte-entropy quality signal: one codegen'd 256-counter pass;
-    // padding/noise tails gate on this where token signals see words.
-    "q_quality_entropy" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          length(col("text")).cast("long").as("n_chars"),
-          round(TextFunctions.byteEntropy(col("text")), 6).as("entropy_bits"))
-        .orderBy("doc_id")),
-
-    // C4-style blocklist gate: lexicon token hits per doc (the demo
-    // lexicon reuses fixture vocabulary; the list is caller policy).
-    // One codegen'd tokenize+set-probe pass, row-local.
-    "q_quality_blocklist" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-          TextFunctions.lexiconHitCount(col("text"), Seq("slow", "corrupt"))
-            .cast("long").as("n_hits"))
-        .withColumn("hit_frac", round(
-          when(col("n_tokens") > 0,
-            col("n_hits").cast("double") / col("n_tokens")).otherwise(0.0), 6))
-        .withColumn("flagged", col("n_hits") > 0)
-        .orderBy("doc_id")),
-
-    // Curriculum plan: global short-to-long phases (k-th order
-    // statistic boundaries) + per-epoch md5 shuffle key within phase.
-    "q_curriculum_plan" -> ((s, d) =>
-      TrainingData.curriculumPlan(
-          t(s, d, "documents"), "doc_id",
-          TextFunctions.tokenCount(col("text")).cast("long"),
-          phases = 3, epoch = 2, salt = "cur")
-        .orderBy("doc_id")),
-
-    // Per-source doc-length quantiles by k-th order statistic (exact
-    // mode; the sketch path is spec-pinned against it).
-    "q_corpus_length_quantiles" -> ((s, d) =>
-      graft.operators.CorpusReport.lengthQuantiles(
-          t(s, d, "documents"), "doc_id", "text", "source")
-        .orderBy("source")),
-
-    // Per-source Gopher curation rollup: survival rate + per-rule
-    // failure fractions over the landed signal table.
-    "q_quality_gopher_rollup" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.quality.GopherRules.rollup(
-          graft.quality.GopherRules.signals(docs, "doc_id", "text"),
-          docs, "doc_id", "source")
-        .orderBy("source")
-    }),
-
-    // Deterministic per-epoch shuffle plan: epoch-keyed md5 sort key +
-    // balanced shard, fully value-oracled (epoch 3, 8 shards).
-    "q_shuffle_epoch" -> ((s, d) =>
-      TrainingData.epochShuffle(
-          t(s, d, "documents").select("doc_id"), "doc_id",
-          epoch = 3, numShards = 8, salt = "es")
-        .orderBy("doc_id")),
-
-    // CCNet-style per-source perplexity buckets (head/middle/tail by
-    // self-LM surprisal, k-th order-statistic boundaries — exact mode
-    // is the oracle contract; the sketch-cutoff scale path is pinned
-    // against it in CorpusStatsSpec).
-    "q_quality_ppl_buckets" -> ((s, d) =>
-      graft.operators.CorpusStats.perplexityBuckets(
-          t(s, d, "documents"), "doc_id", "text", "source")
-        .select("doc_id", "source", "n_tokens", "avg_surprisal", "bucket", "bucket_label")
-        .orderBy("doc_id")),
-
-    // SEMANTIC decontamination: corpus embeddings vs a broadcast eval
-    // set (vec_id % 20 == 0 plays the benchmark suite), nearest-eval
-    // cosine + flag. Deterministic brute max -> full oracle (the SQL
-    // replays the same nearest pick as a rank window).
-    "q_contamination_semantic" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      TrainingData.semanticContamination(
-          emb.filter(col("vec_id") % 20 =!= 0), "vec_id", "embedding",
-          emb.filter(col("vec_id") % 20 === 0), "vec_id", "embedding",
-          minCosine = 0.3)
-        .orderBy("vec_id")
-    }),
-
-    // IVF-bucketed semantic decontamination (r15): the 100 TB arm of
-    // q_contamination_semantic — corpus cell-assigned once, each eval
-    // vector probes its nprobe nearest cells, cosine only on the
-    // cell-matched join (never corpus × eval). Rows-only (KMeans cell
-    // state, §8 — the q_sim_ivf rationale); TrainingDataSpec pins the
-    // nprobe=nlist == brute identity and precision-1/planted-recall at
-    // partial probe.
-    "q_contamination_semantic_ivf" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      TrainingData.semanticContaminationIvf(
-          emb.filter(col("vec_id") % 20 =!= 0), "vec_id", "embedding",
-          emb.filter(col("vec_id") % 20 === 0), "vec_id", "embedding",
-          minCosine = 0.3, nlist = 16, nprobe = 4)
-        .orderBy("vec_id")
-    }),
-
-    // Composite text-quality score (length/token/punct/stopword gates).
-    "q_text_quality" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")),
-
-    // Script-mix profile (r14): per-doc character counts over EXPLICIT
-    // code-point ranges (portable where \p{Script} class names are
-    // not), latin share, and the dominant script with fixed tie
-    // precedence — the routing signal before any per-language model.
-    "q_text_script" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          length(col("text")).as("n_chars"),
-          TextFunctions.scriptCount(col("text"), "latin").as("n_latin"),
-          TextFunctions.scriptCount(col("text"), "cyrillic").as("n_cyrillic"),
-          TextFunctions.scriptCount(col("text"), "cjk").as("n_cjk"),
-          TextFunctions.scriptCount(col("text"), "digit").as("n_digit"),
-          when(length(col("text")) > 0,
-            round(TextFunctions.scriptCount(col("text"), "latin").cast("double")
-              / length(col("text")), 6)).as("latin_ratio"),
-          TextFunctions.mainScript(col("text")).as("main_script"))
-        .orderBy("doc_id")),
-
-    // Windowed funnel (r14): view -> click -> purchase with a 48h
-    // per-transition deadline bound to the previous MILESTONE — the
-    // product form of conversion; deadline is one integer-micros
-    // comparison per step.
-    "q_funnel_windowed" -> ((s, d) =>
-      EventAnalytics.funnelWindowed(
-          t(s, d, "events"), "user_id", "ts", "event_type",
-          Seq("view", "click", "purchase"), maxGapSeconds = 48L * 3600)
-        .select(col("user_id"),
-          unix_micros(col("step1_ts")).as("step1_us"),
-          unix_micros(col("step2_ts")).as("step2_us"),
-          unix_micros(col("step3_ts")).as("step3_us"),
-          col("steps_completed"))
-        .orderBy("user_id")),
-
-    // Readability battery (r14): Flesch reading ease + Flesch-Kincaid
-    // grade from deterministic regex counters (whitespace words,
-    // terminator-run sentences, vowel-group syllables with the ≥1-per-
-    // word floor) — two integer-ratio divisions and a fixed scalar
-    // chain per formula, row-local, no dictionary.
-    "q_text_readability" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).as("n_words"),
-          TextFunctions.sentenceCount(col("text")).as("n_sentences"),
-          TextFunctions.syllableCount(col("text")).as("n_syllables"),
-          TextFunctions.fleschReadingEase(col("text")).as("flesch"),
-          TextFunctions.fleschKincaidGrade(col("text")).as("fk_grade"))
-        .orderBy("doc_id")),
-
-    // Exact ROC-AUC (r14): does the heuristic quality score separate
-    // English docs per source? Mann-Whitney U from INTEGER rank sums
-    // over the (source, distinct score) counts — doubled midranks keep
-    // every intermediate a BIGINT, one division at the end, so the AUC
-    // is engine-exact by construction (no trapezoid float accumulation).
-    // The evaluation gate a score column must pass before it filters
-    // training data.
-    "q_roc_auc" -> ((s, d) =>
-      graft.operators.MlEval.rocAuc(
-          t(s, d, "documents"), "source",
-          col("lang") === "en", TextFunctions.qualityScore(col("text")))
-        .orderBy("source")),
-
-    // ROC operating points (r14): per source and distinct threshold,
-    // cumulative integer tp/fp plus the two ratio divisions — the curve
-    // q_roc_auc summarizes, bounded by distinct grid scores per group.
-    "q_roc_curve" -> ((s, d) =>
-      graft.operators.MlEval.rocCurve(
-          t(s, d, "documents"), "source",
-          col("lang") === "en", TextFunctions.qualityScore(col("text")))
-        .orderBy("source", "threshold")),
-
-    // Calibration bins (r14): mean predicted score (decimal-staged on
-    // the 4dp score grid) vs observed positive rate (integer ratio)
-    // per fixed-width bucket — "does 0.8 mean 80%" for the same
-    // score/label pair the ROC queries grade.
-    "q_calibration" -> ((s, d) =>
-      graft.operators.MlEval.calibrationBins(
-          t(s, d, "documents"), "source",
-          col("lang") === "en", TextFunctions.qualityScore(col("text")),
-          bins = 10)
-        .orderBy("source", "bin")),
-
-    // Brier score + Murphy decomposition (r15): the proper-scoring-rule
-    // rollup of q_calibration's bins — total loss, reliability
-    // (mis-calibration), resolution (discrimination), uncertainty (the
-    // base-rate floor); every fold decimal-exact, one double division
-    // per emitted column.
-    "q_brier" -> ((s, d) =>
-      graft.operators.MlEval.brierDecomposition(
-          t(s, d, "documents"), "source",
-          col("lang") === "en", TextFunctions.qualityScore(col("text")),
-          bins = 10)
-        .orderBy("source")),
-
-    // Inter-rater agreement (r16, Cohen 1960): chance-corrected kappa
-    // between two automatic quality raters — the 4-gate heuristic score
-    // at 0.5 and the Gopher rule conjunction — over the same corpus.
-    // The labeled-data QC readout ("do two filters measure the same
-    // thing beyond chance?"); both raters and the kappa assembly replay
-    // in SQL, so the composition carries a FULL oracle.
-    "q_label_kappa" -> ((s, d) =>
-      graft.operators.MlEval.cohenKappa(
-        t(s, d, "documents").select(
-          (TextFunctions.qualityScore(col("text")) >= 0.5).as("rater_quality"),
-          graft.quality.GopherRules.passes(col("text")).as("rater_gopher")),
-        "rater_quality", "rater_gopher")),
-
-    // Gwet's AC1 (r17, Gwet 2008): the paradox-resistant twin of
-    // q_label_kappa on the same rater pair — quality-filter panels
-    // live in the skewed-marginal regime where Cohen's chance term
-    // punishes high agreement (Feinstein-Cicchetti). Integer marginal
-    // folds + fixed-order IEEE assembly; FULL oracle.
-    "q_label_ac1" -> ((s, d) =>
-      graft.operators.MlEval.gwetAc1(
-        t(s, d, "documents").select(
-          (TextFunctions.qualityScore(col("text")) >= 0.5).as("rater_quality"),
-          graft.quality.GopherRules.passes(col("text")).as("rater_gopher")),
-        "rater_quality", "rater_gopher")),
-
-    // Verbosity-bias gate (r17): the OTHER standard LLM-judge failure
-    // besides position — does the longer side win beyond what a fair
-    // coin explains? Same census + chi-square shape as the position
-    // gate, with "shown first" replaced by "is longer" (token count).
-    // A flag means length is leaking into labels (or genuinely tracks
-    // quality — the screen says LOOK, not GUILTY). FULL oracle.
-    "q_pref_length_bias" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("source"),
-        TextFunctions.qualityScore(col("text")).as("q"),
-        TextFunctions.tokenCount(col("text")).as("nt"))
-      val a = docs.select(col("doc_id").as("ida"), col("source").as("sa"),
-        col("q").as("qa"), col("nt").as("na"))
-      val b = docs.select((col("doc_id") - 1).as("ida"), col("source").as("sb"),
-        col("q").as("qb"), col("nt").as("nb"))
-      val cmp = a.join(b, Seq("ida"))
-        .filter(col("sa") =!= col("sb"))
-        .select(
-          when(col("qa") > col("qb"), col("sa"))
-            .when(col("qa") < col("qb"), col("sb"))
-            .otherwise(least(col("sa"), col("sb"))).as("winner"),
-          when(col("na") >= col("nb"), col("sa")).otherwise(col("sb"))
-            .as("longer"))
-      graft.operators.Preferences.positionBias(cmp, "winner", "longer")
-    }),
-
-    // Bradley-Terry preference aggregation (r16, Hunter 2004 MM): the
-    // RLHF-preference-data readout — adjacent-doc quality comparisons
-    // become source-vs-source "wins" (winner = the higher 4-gate score,
-    // ties to the lexicographically smaller source), and 10 MM sweeps
-    // fit the global strengths. Every iterate lands on the 6dp grid
-    // with decimal-staged sums, so the FIXED-iteration fit replays
-    // bitwise — an oracle-checkable model fit.
-    "q_pref_bradley_terry" -> ((s, d) =>
-      graft.operators.Preferences.bradleyTerry(
-          prefComparisons(s, d), "winner", "loser", iters = 10)
-        .orderBy("item")),
-
-    // Per-pair fit-quality for the Bradley-Terry model (r16): predicted
-    // vs empirical win rates with the absolute gap — WHERE a single
-    // strength scale misrepresents the preference data (the pairwise
-    // refinement of the global triad check). FULL oracle: the fit chain
-    // plus ratio arithmetic.
-    "q_pref_calibration" -> ((s, d) =>
-      graft.operators.Preferences.bradleyTerryCalibration(
-          prefComparisons(s, d), "winner", "loser", iters = 10)
-        .orderBy("item_a", "item_b")),
-
-    // Ties-aware Bradley-Terry (r16, Rao & Kupper 1967, fixed θ = 1.5):
-    // near-equal quality scores (|Δq| < 0.05) become TIES instead of
-    // lexicographic coin-flips — the model for judges with a "both
-    // equal" button. Same grid-staged MM sweeps; FULL oracle unrolls
-    // them with the two-denominator Rao-Kupper terms.
-    "q_pref_bt_ties" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("source"),
-          TextFunctions.qualityScore(col("text")).as("q"))
-      val a = docs.select(col("doc_id").as("ida"),
-        col("source").as("sa"), col("q").as("qa"))
-      val b = docs.select((col("doc_id") - 1).as("ida"),
-        col("source").as("sb"), col("q").as("qb"))
-      val cmp = a.join(b, Seq("ida"))
-        .filter(col("sa") =!= col("sb"))
-        .select(col("sa").as("item_a"), col("sb").as("item_b"),
-          when(abs(col("qa") - col("qb")) < 0.05, lit("tie"))
-            .when(col("qa") > col("qb"), lit("a"))
-            .otherwise(lit("b")).as("outcome"))
-      graft.operators.Preferences.bradleyTerryTies(
-          cmp, "item_a", "item_b", "outcome", theta = 1.5, iters = 10)
-        .orderBy("item")
-    }),
-
-    // Order-effect Bradley-Terry (r17, Davidson & Beaver 1977; Hunter
-    // 2004 MM alternation): the position-bias story completed — the
-    // gate DETECTS the leak, this fits THROUGH it, estimating the
-    // first-position multiplier θ jointly with the strengths so
-    // strengths stop absorbing presentation luck. Same 6dp-grid
-    // staging; the FULL oracle unrolls the γ/θ alternation.
-    "q_pref_bt_order" -> ((s, d) =>
-      graft.operators.Preferences.bradleyTerryOrder(
-          prefComparisons(s, d), "winner", "loser", "first", iters = 10)
-        .orderBy("item")),
-
-    // Per-item win rates with Wilson intervals (r17): the MODEL-FREE
-    // uncertainty screen beside the BT standard errors — raw wins /
-    // appearances per item with the small-n-honest interval. FULL
-    // oracle (the rateWilson expression tree, mirrored literally).
-    "q_pref_item_wilson" -> ((s, d) =>
-      graft.operators.Preferences.itemWinRates(
-          prefComparisons(s, d), "winner", "loser")
-        .orderBy("item")),
-
-    // Bradley-Terry standard errors (r17): strengths with UNCERTAINTY
-    // — the Fisher-information diagonal at the fitted γ, se(ln γ) =
-    // 1/√I. Per-pair information terms land on the 6dp grid and fold
-    // as exact decimals; sqrt and the division are IEEE-correctly-
-    // rounded, so the readout extends the fit's FULL oracle one stage.
-    "q_pref_bt_se" -> ((s, d) =>
-      graft.operators.Preferences.bradleyTerryStdErr(
-          prefComparisons(s, d), "winner", "loser", iters = 10)
-        .orderBy("item")),
-
-    // Per-judge QC readout (r17): the pooled gates say the COLLECTION
-    // has a problem; this says WHICH judge — per-judge position bias,
-    // record-weighted calibration gap vs the pooled fit, and Cohen's
-    // kappa vs the pooled pair majority. All compositions of oracled
-    // pieces; FULL oracle on the fit chain.
-    "q_pref_judge_bias" -> ((s, d) =>
-      graft.operators.Preferences.judgeQc(
-          prefComparisons(s, d), "winner", "loser", "first", "judge",
-          iters = 10)
-        .orderBy("judge")),
-
-    // Position-bias gate (r16): first-position win census and the
-    // chi-square against the 50% null — the LLM-judge QC for pairwise
-    // labels (the lower-doc_id side plays "shown first" here). FULL
-    // oracle: one census + the srm-shaped gate.
-    "q_pref_position_bias" -> ((s, d) =>
-      graft.operators.Preferences.positionBias(
-        prefComparisons(s, d), "winner", "first")),
-
-    // Preference-consistency QC (r16, Kendall & Babington Smith 1940):
-    // majority-vote the same comparison records into a tournament and
-    // count circular triads — preference data contradicting itself,
-    // which no Bradley-Terry strength vector can explain. Kendall's
-    // consistency coefficient attaches when the tournament is complete.
-    // FULL oracle (pair majorities, the 3-cycle self-join, the d_max
-    // closed form all replay).
-    "q_pref_consistency" -> ((s, d) =>
-      graft.operators.Preferences.circularTriads(
-        prefComparisons(s, d), "winner", "loser")),
-
-    // Comparison-graph connectivity gate (r18 — the Hunter condition
-    // COMPUTED, r17 verdict top item): language-stratified quality
-    // comparisons (items = lang/source, compared only within a
-    // language) form a deliberately disconnected tournament — one
-    // island per language. One row per weakly-connected component with
-    // item/pair/comparison counts and the zero-win/zero-loss censuses,
-    // so a BT fit on such data fails loudly instead of publishing
-    // cross-island gauge as strengths. FULL oracle: integer censuses +
-    // recursive transitive closure over the bounded item graph.
-    "q_pref_connectivity" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("lang"),
-        col("source"), TextFunctions.qualityScore(col("text")).as("q"))
-      val a = docs.select(col("doc_id").as("ida"), col("lang").as("la"),
-        col("source").as("sa"), col("q").as("qa"))
-      val b = docs.select((col("doc_id") - 1).as("ida"), col("lang").as("lb"),
-        col("source").as("sb"), col("q").as("qb"))
-      val ia = concat_ws("/", col("la"), col("sa"))
-      val ib = concat_ws("/", col("lb"), col("sb"))
-      val cmp = a.join(b, Seq("ida"))
-        .filter(col("la") === col("lb") && col("sa") =!= col("sb"))
-        .select(
-          when(col("qa") > col("qb"), ia)
-            .when(col("qa") < col("qb"), ib)
-            .otherwise(least(ia, ib)).as("winner"),
-          when(col("qa") > col("qb"), ib)
-            .when(col("qa") < col("qb"), ia)
-            .otherwise(greatest(ia, ib)).as("loser"))
-      graft.operators.Preferences.preferenceConnectivity(cmp, "winner", "loser")
-        .orderBy("component")
-    }),
-
-    // Plackett-Luce listwise ranking fit (r18, Plackett 1975; Hunter
-    // 2004 MM): the LISTWISE extension of the BT family — ranking
-    // sessions of 4 consecutive docs ordered by quality score (ties to
-    // source asc, same-source dups collapse to the best slot) fit the
-    // sequential-choice model P(ordering) = Π γ_(t)/S_t. Same 6dp-grid
-    // / exact-decimal staging as the pairwise fits, so 10 fixed sweeps
-    // replay bitwise: the FULL oracle unrolls them with decimal window
-    // suffix/prefix sums over the distinct-orderings census.
-    "q_pref_plackett_luce" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-      val docs = t(s, d, "documents").select(
-        floor(col("doc_id") / 4).cast("long").as("grp"),
-        col("source"),
-        TextFunctions.qualityScore(col("text")).as("q"))
-      val best = docs.groupBy("grp", "source").agg(max(col("q")).as("q"))
-      val ranked = best.select(col("grp"), col("source").as("item"),
-        row_number().over(
-          w.partitionBy("grp").orderBy(col("q").desc, col("source").asc))
-          .as("rk"))
-      graft.operators.Preferences.plackettLuce(
-          ranked, "grp", "item", "rk", iters = 10)
-        .orderBy("item")
-    }),
-
-    // Listwise connectivity (r18): the rankBreak bridge feeding the
-    // Hunter-condition gate — language-stratified ranking sessions
-    // (per-(lang, 4-doc-block) groups) rank-break to pairwise
-    // comparisons whose graph can only connect within a language, so
-    // the gate reads one island per co-ranked cluster. Demonstrates
-    // the bridge composing with the pairwise QC toolbox end to end;
-    // FULL oracle reuses the recursive-closure connectivity chain on
-    // the rank-broken pairs.
-    "q_pref_list_connectivity" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-      val docs = t(s, d, "documents").select(col("doc_id"), col("lang"),
-        col("source"), TextFunctions.qualityScore(col("text")).as("q"))
-      val best = docs
-        .select(col("lang"), floor(col("doc_id") / 4).cast("long").as("blk"),
-          col("source"), col("q"))
-        .groupBy("lang", "blk", "source").agg(max(col("q")).as("q"))
-      val ranked = best.select(
-        concat_ws("/", col("lang"), col("blk")).as("grp"),
-        concat_ws("/", col("lang"), col("source")).as("item"),
-        row_number().over(
-          w.partitionBy("lang", "blk").orderBy(col("q").desc, col("source").asc))
-          .as("rk"))
-      graft.operators.Preferences.preferenceConnectivity(
-          graft.operators.Preferences.rankBreak(ranked, "grp", "item", "rk"),
-          "winner", "loser")
-        .orderBy("component")
-    }),
-
-    // Stratified Bradley-Terry (r18): the plain fit run independently
-    // per LANGUAGE over within-language quality comparisons — the
-    // strengths-level drift screen beside the sliced kappa/position
-    // gates: a source order that flips inside a segment is exactly
-    // what the pooled fit averages away (Simpson's-paradox risk for
-    // training mixes). Per-slice arithmetic is bitwise the plain BT
-    // fit on the filtered records; the FULL oracle runs all slices'
-    // 10 MM sweeps slice-keyed in one unrolled chain.
-    "q_pref_bt_by_lang" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("lang"),
-        col("source"), TextFunctions.qualityScore(col("text")).as("q"))
-      val a = docs.select(col("doc_id").as("ida"), col("lang").as("la"),
-        col("source").as("sa"), col("q").as("qa"))
-      val b = docs.select((col("doc_id") - 1).as("ida"), col("lang").as("lb"),
-        col("source").as("sb"), col("q").as("qb"))
-      val cmp = a.join(b, Seq("ida"))
-        .filter(col("la") === col("lb") && col("sa") =!= col("sb"))
-        .select(col("la").as("slice"),
-          when(col("qa") > col("qb"), col("sa"))
-            .when(col("qa") < col("qb"), col("sb"))
-            .otherwise(least(col("sa"), col("sb"))).as("winner"),
-          when(col("qa") > col("qb"), col("sb"))
-            .when(col("qa") < col("qb"), col("sa"))
-            .otherwise(greatest(col("sa"), col("sb"))).as("loser"))
-      graft.operators.Preferences.bradleyTerryBySlice(
-          cmp, "slice", "winner", "loser", iters = 10)
-        .orderBy("slice", "item")
-    }),
-
-    // Listwise first-place rates with Wilson intervals (r18): the
-    // MODEL-FREE screen beside the PL fit's strengths — per source,
-    // appearances in the 4-doc ranking sessions, times ranked FIRST,
-    // and the small-n-honest interval (the Wilson tree mirrored from
-    // itemWinRates term for term). FULL oracle.
-    "q_pref_list_top1" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-      val docs = t(s, d, "documents").select(
-        floor(col("doc_id") / 4).cast("long").as("grp"),
-        col("source"),
-        TextFunctions.qualityScore(col("text")).as("q"))
-      val best = docs.groupBy("grp", "source").agg(max(col("q")).as("q"))
-      val ranked = best.select(col("grp"), col("source").as("item"),
-        row_number().over(
-          w.partitionBy("grp").orderBy(col("q").desc, col("source").asc))
-          .as("rk"))
-      graft.operators.Preferences.listwiseTopRates(
-          ranked, "grp", "item", "rk")
-        .orderBy("item")
-    }),
-
-    // Rank-broken listwise consistency (r18): the rankBreak bridge —
-    // every in-session pair of the ranking fixture becomes a pairwise
-    // comparison (winner = better-ranked) and the circularTriads gate
-    // runs on the result. Within one session rank-breaking can never
-    // produce a cycle (rankings are total orders); cycles here mean
-    // SESSIONS CONTRADICT EACH OTHER — the listwise form of the
-    // preference-data self-contradiction check. FULL oracle: the posx
-    // self-join feeds the same consistency chain as q_pref_consistency.
-    "q_pref_list_consistency" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-      val docs = t(s, d, "documents").select(
-        floor(col("doc_id") / 4).cast("long").as("grp"),
-        col("source"),
-        TextFunctions.qualityScore(col("text")).as("q"))
-      val best = docs.groupBy("grp", "source").agg(max(col("q")).as("q"))
-      val ranked = best.select(col("grp"), col("source").as("item"),
-        row_number().over(
-          w.partitionBy("grp").orderBy(col("q").desc, col("source").asc))
-          .as("rk"))
-      graft.operators.Preferences.circularTriads(
-        graft.operators.Preferences.rankBreak(ranked, "grp", "item", "rk"),
-        "winner", "loser")
-    }),
-
-    // Rank Centrality (r18, Negahban-Oh-Shah 2012): the SPECTRAL
-    // estimator on the same comparison records as q_pref_bradley_terry
-    // — the comparison Markov chain's stationary distribution read off
-    // a fixed power iteration. A genuinely different estimator on the
-    // same census: rank disagreements vs the MM fit localize pairs the
-    // single-scale model strains on. 6dp-grid transitions fixed once,
-    // exact-decimal flow folds per sweep; the FULL oracle unrolls all
-    // 10 sweeps.
-    "q_pref_rank_centrality" -> ((s, d) =>
-      graft.operators.Preferences.rankCentrality(
-          prefComparisons(s, d), "winner", "loser", iters = 10)
-        .orderBy("item")),
-
-    // Weighted (ordinal) kappa (r16, Cohen 1968): two ORDINAL quality
-    // graders — the 4-gate score quartile (0-3) and the Flesch
-    // reading-ease band (0-3) — scored with quadratic-disagreement
-    // kappa, which credits near-miss grades where the nominal form
-    // charges them fully. Exact integer numerators; full oracle.
-    "q_label_kappa_weighted" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(TextFunctions.tokenCount(col("text")) > 0)
-      val fl = TextFunctions.fleschReadingEase(col("text"))
-      val graded = docs.select(
-        least(floor(TextFunctions.qualityScore(col("text")) * 4), lit(3L))
-          .cast("long").as("grade_quality"),
-        when(fl >= 80, 3L).when(fl >= 60, 2L).when(fl >= 30, 1L)
-          .otherwise(0L).as("grade_flesch"))
-      graft.operators.MlEval.cohenKappaWeighted(
-        graded, "grade_quality", "grade_flesch")
-    }),
-
-    // Weighted-kappa surprisal twin (r17): a second ORDINAL rater pair
-    // exercising cohenKappaWeighted on the perplexity pipeline — the
-    // unigram-surprisal QUARTILE grade (cutpoints as exact order
-    // statistics via Selection.quantilesDisc, the 100 TB-safe descent,
-    // never a global sort) against the 4-gate quality quartile. FULL
-    // oracle: the surprisal chain, rank-derived cutpoints, and the
-    // quadratic-disagreement assembly all replay.
-    "q_label_kappa_surprisal" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // persist: the doc-grain surprisal table feeds the eager
-      // quantile descent AND the final vote job — unpersisted, each
-      // consumer re-ran the tokenize + census + join lineage (r20;
-      // the bench/verify harnesses clearCache() between queries)
-      val sur = graft.operators.CorpusStats.unigramSurprisal(
-          docs, "doc_id", "text")
-        .filter(col("n_tokens") > 0)
-        .persist()
-      val cuts = graft.operators.Selection.quantilesDisc(
-        sur, "avg_surprisal", Seq(0.25, 0.5, 0.75))
-      val gradedS = sur.select(col("doc_id"),
-        ((col("avg_surprisal") > cuts(0.25)).cast("long")
-          + (col("avg_surprisal") > cuts(0.5)).cast("long")
-          + (col("avg_surprisal") > cuts(0.75)).cast("long"))
-          .as("grade_surprisal"))
-      val gradedQ = docs.filter(TextFunctions.tokenCount(col("text")) > 0)
-        .select(col("doc_id"),
-          least(floor(TextFunctions.qualityScore(col("text")) * 4), lit(3L))
-            .cast("long").as("grade_quality"))
-      graft.operators.MlEval.cohenKappaWeighted(
-        gradedS.join(gradedQ, Seq("doc_id")),
-        "grade_surprisal", "grade_quality")
-    }),
-
-    // Krippendorff's alpha (r16): the UNBALANCED-panel agreement
-    // readout — the langid rater ABSTAINS on docs it can't call
-    // (pred = 'und'), so units carry 2 or 3 votes; Fleiss refuses that
-    // design, alpha is built for it (units with < 2 votes drop as
-    // unpairable). Same one-scan melt; per-unit disagreement lands on
-    // the 6dp grid and folds as an exact decimal sum, so the readout
-    // replays bitwise.
-    "q_label_alpha" -> ((s, d) => {
-      val rated = t(s, d, "documents").select(col("doc_id"),
-        (TextFunctions.qualityScore(col("text")) >= 0.5).as("r1"),
-        graft.quality.GopherRules.passes(col("text")).as("r2"),
-        TextFunctions.languageId(col("text")).as("pl"))
-      val long = rated.select(col("doc_id").as("u"),
-          explode(array(col("r1").cast("string"), col("r2").cast("string"),
-            when(col("pl") =!= "und", (col("pl") === "en").cast("string"))))
-            .as("k"))
-        .filter(col("k").isNotNull)
-      graft.operators.MlEval.krippendorffAlpha(long, "u", "k")
-    }),
-
-    // Interval-metric Krippendorff alpha (r17): the GRADED-label form
-    // — adjacent grades disagree mildly (the quadratic-weight idea)
-    // WITH alpha's unbalanced-panel support. Panel: quality quartile +
-    // Flesch band on every doc with tokens; the surprisal-quartile
-    // rater ABSTAINS on non-English docs (an English-centric grader
-    // has no business scoring them), so units carry 2 or 3 ordinal
-    // votes. Moment-identity integer folds; FULL oracle.
-    "q_label_alpha_interval" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // persist: the doc-grain surprisal table feeds the eager
-      // quantile descent AND the final vote job — unpersisted, each
-      // consumer re-ran the tokenize + census + join lineage (r20;
-      // the bench/verify harnesses clearCache() between queries)
-      val sur = graft.operators.CorpusStats.unigramSurprisal(
-          docs, "doc_id", "text")
-        .filter(col("n_tokens") > 0)
-        .persist()
-      val cuts = graft.operators.Selection.quantilesDisc(
-        sur, "avg_surprisal", Seq(0.25, 0.5, 0.75))
-      val g3 = sur
-        .join(docs.filter(col("lang") === "en").select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        .select(col("doc_id").as("u"),
-          ((col("avg_surprisal") > cuts(0.25)).cast("long")
-            + (col("avg_surprisal") > cuts(0.5)).cast("long")
-            + (col("avg_surprisal") > cuts(0.75)).cast("long")).as("x"))
-      val base = docs.filter(TextFunctions.tokenCount(col("text")) > 0)
-      val fl = TextFunctions.fleschReadingEase(col("text"))
-      // both text-kernel graders melt from ONE doc scan (the fleiss/
-      // alpha house pattern) — a union of selects would run the
-      // kernels once per branch
-      val g12 = base.select(col("doc_id").as("u"),
-          explode(array(
-            least(floor(TextFunctions.qualityScore(col("text")) * 4), lit(3L))
-              .cast("long"),
-            when(fl >= 80, 3L).when(fl >= 60, 2L).when(fl >= 30, 1L)
-              .otherwise(0L))).as("x"))
-      val votes = g12.unionByName(g3)
-      graft.operators.MlEval.krippendorffAlphaInterval(votes, "u", "x")
-    }),
-
-    // Multi-rater agreement (r16, Fleiss 1971): the 3-filter panel —
-    // quality heuristic at 0.5, Gopher conjunction, langid == 'en' (all
-    // keep/drop gates for an English training corpus) — scored with
-    // Fleiss' kappa from ONE text scan (the raters melt through a
-    // row-local explode). Exact integer numerators make the whole
-    // readout oracle-replayable.
-    "q_label_kappa_fleiss" -> ((s, d) => {
-      val rated = t(s, d, "documents").select(col("doc_id"),
-        (TextFunctions.qualityScore(col("text")) >= 0.5).as("r1"),
-        graft.quality.GopherRules.passes(col("text")).as("r2"),
-        (TextFunctions.languageId(col("text")) === "en").as("r3"))
-      graft.operators.MlEval.fleissKappa(
-        rated.select(col("doc_id").as("u"),
-          explode(array(col("r1"), col("r2"), col("r3"))).as("k")),
-        "u", "k")
-    }),
-
-    // Dawid-Skene consensus labels (r17, Dawid & Skene 1979 EM): the
-    // truth-inference step after the agreement readouts — the same
-    // 3-filter panel the fleiss query melts votes per document, and 5
-    // EM sweeps weight each rater by its own estimated confusion matrix
-    // instead of counting votes equally. Every iterate lands on the 6dp
-    // grid with exact-decimal M-step folds and pinned-order E-step
-    // products, so the FIXED-sweep fit replays bitwise — an
-    // oracle-checkable EM fit (the bradleyTerry posture). 5 sweeps:
-    // EM on a 3-rater binary panel converges in 2-3.
-    "q_label_dawid_skene" -> ((s, d) =>
-      graft.operators.DawidSkene.label(
-          dsPanelVotes(s, d), "u", "r", "l", iters = 5)
-        .select(col("u").cast("long").as("doc_id"), col("label"),
-          col("p_posterior"))
-        .orderBy("doc_id")),
-
-    // The fitted per-rater confusion matrices from the same 5-sweep
-    // Dawid-Skene fit: WHICH filter flips WHICH class — the itemized
-    // readout behind the consensus labels (a rater with an off-diagonal
-    // row is corrected, not just discounted). Complete raters × classes²
-    // grid, Laplace-smoothed; FULL oracle (one extra unrolled M-step).
-    "q_label_ds_confusion" -> ((s, d) =>
-      graft.operators.DawidSkene.fit(
-          dsPanelVotes(s, d), "u", "r", "l", iters = 5)
-        .confusion
-        .select(col("r").as("rater"), col("j").as("true_label"),
-          col("l").as("observed_label"), col("pi"))
-        .orderBy("rater", "true_label", "observed_label")),
-
-    // Scalar-grade truth inference (r18, the continuous-response
-    // companion to Dawid-Skene — r17 verdict item #2): three
-    // deterministic scalar graders per doc (4-gate quality, Flesch/100
-    // with no-word abstention, and a planted harsh-stretched replica
-    // 2q+0.25) fitted with 5 alternating-least-squares sweeps — per
-    // sweep a rater OLS, a mean-0/mean-1 gauge fix, and a precision-
-    // weighted truth readback, every iterate on the 6dp grid with
-    // exact decimal folds. Emits the per-doc consensus read THROUGH
-    // the fitted lenses. FULL oracle: sweeps unrolled as CTEs, gauge
-    // scalars as subqueries.
-    "q_label_consensus_scalar" -> ((s, d) =>
-      graft.operators.ScalarConsensus.fit(
-          scalarGradeVotes(s, d), "u", "r", "y", iters = 5)
-        .truth
-        .select(col("u").cast("long").as("doc_id"),
-          (col("truth") + lit(0.0)).as("truth"), col("n_votes"))
-        .orderBy("doc_id")),
-
-    // The fitted rater lenses from the same 5-sweep fit: WHICH grader
-    // is harsh (bias) and WHICH stretches the rubric (scale), gauge-
-    // normalized — the planted 2q+0.25 rater must surface with the
-    // largest scale. FULL oracle (same unrolled CTE chain).
-    "q_label_rater_scale" -> ((s, d) =>
-      graft.operators.ScalarConsensus.fit(
-          scalarGradeVotes(s, d), "u", "r", "y", iters = 5)
-        .raters
-        .select(col("r").as("rater"), (col("bias") + lit(0.0)).as("bias"),
-          (col("scale") + lit(0.0)).as("scale"), col("n_votes"))
-        .orderBy("rater")),
-
-    // Rater-drift slices (r18, r17 verdict item #8): Cohen's kappa per
-    // 125-doc annotation batch for the quality-vs-Gopher rater pair —
-    // the corpus-monitor shape applied to labels ("did agreement drift
-    // this batch"). One sliced cell census; the exact cohenKappa
-    // assembly per slice. FULL oracle.
-    "q_label_drift" -> ((s, d) => {
-      val rated = t(s, d, "documents").select(
-        floor(col("doc_id") / lit(125)).cast("long").as("batch"),
-        (TextFunctions.qualityScore(col("text")) >= 0.5).as("r1"),
-        graft.quality.GopherRules.passes(col("text")).as("r2"))
-      graft.operators.LabelMonitor.kappaBySlice(rated, "batch", "r1", "r2")
-        .select(col("slice"), col("n"), col("po"), col("pe"),
-          (col("kappa") + lit(0.0)).as("kappa"))
-        .orderBy("slice")
-    }),
-
-    // Store-fed label monitor (r18, r17 verdict item #3): the same
-    // sliced kappa readout computed THROUGH the incremental store —
-    // two annotation runs (even/odd doc_id) fold to mergeable cell
-    // states, merge key-wise, finalize at read. The monoid merge makes
-    // the store-fed result bit-identical to the one-shot compute, so
-    // this carries the SAME FULL oracle as q_label_drift (the identity
-    // IS the claim); LabelMonitorSpec pins the streamed fold on a real
-    // file stream.
-    "q_label_monitor" -> ((s, d) => {
-      val rated = t(s, d, "documents").select(col("doc_id"),
-        floor(col("doc_id") / lit(125)).cast("long").as("batch"),
-        (TextFunctions.qualityScore(col("text")) >= 0.5).as("r1"),
-        graft.quality.GopherRules.passes(col("text")).as("r2"))
-      val runA = graft.operators.LabelMonitor.cellState(
-        rated.filter(col("doc_id") % 2 === 0), "batch", "r1", "r2")
-      val runB = graft.operators.LabelMonitor.cellState(
-        rated.filter(col("doc_id") % 2 =!= 0), "batch", "r1", "r2")
-      graft.operators.LabelMonitor.kappaFromState(
-          graft.operators.LabelMonitor.mergeCellState(runA, runB))
-        .select(col("slice"), col("n"), col("po"), col("pe"),
-          (col("kappa") + lit(0.0)).as("kappa"))
-        .orderBy("slice")
-    }),
-
-    // Gold-unit rater evaluation (r18): the spammer screen where
-    // ground truth exists — every 5th doc carries its metadata
-    // language as a gold "keep if English" label, and each of the 3
-    // panel filters is scored on its gold votes with a Wilson 95%
-    // interval (the langid rater must dominate: it measures the gold
-    // criterion; the quality gates measure something else). The
-    // model-free companion to the DS confusion fits. FULL oracle
-    // (integer censuses + the rateWilson tree).
-    "q_label_gold" -> ((s, d) => {
-      val gold = t(s, d, "documents")
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("u"), (col("lang") === "en").as("gold"))
-      graft.operators.MlEval.raterGoldEval(
-          dsPanelVotes(s, d), "u", "r", "l", gold, "u", "gold")
-        .orderBy("rater")
-    }),
-
-    // Position-bias drift (r18): the positionBias gate per 125-doc
-    // annotation batch through the LabelMonitor position census —
-    // "did a position leak appear after the UI change", the sliced
-    // twin of q_pref_position_bias. FULL oracle.
-    "q_pref_position_drift" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("source"),
-        TextFunctions.qualityScore(col("text")).as("q"))
-      val a = docs.select(col("doc_id").as("ida"), col("source").as("sa"),
-        col("q").as("qa"))
-      val b = docs.select((col("doc_id") - 1).as("ida"), col("source").as("sb"),
-        col("q").as("qb"))
-      val cmp = a.join(b, Seq("ida"))
-        .filter(col("sa") =!= col("sb"))
-        .select(floor(col("ida") / lit(125)).cast("long").as("batch"),
-          when(col("qa") > col("qb"), col("sa"))
-            .when(col("qa") < col("qb"), col("sb"))
-            .otherwise(least(col("sa"), col("sb"))).as("winner"),
-          col("sa").as("first"))
-      graft.operators.LabelMonitor.positionBySlice(
-          cmp, "batch", "winner", "first")
-        .orderBy("slice")
-    }),
-
-    // Active-vote routing (r18, r17 verdict item #4): the "needs more
-    // votes" queue every annotation pipeline drains — units whose
-    // 5-sweep Dawid-Skene posterior margin (top minus runner-up class)
-    // falls below 0.333, the lowest-confidence tail of this panel,
-    // with consensus, margin and vote count. Pure composition of the
-    // oracled EM chain; FULL oracle (one margin CTE past the unrolled
-    // sweeps).
-    "q_label_route" -> ((s, d) =>
-      graft.operators.DawidSkene.route(
-          dsPanelVotes(s, d), "u", "r", "l", iters = 5, marginBelow = 0.333)
-        .select(col("u").cast("long").as("doc_id"), col("label"),
-          col("p_posterior"), col("margin"), col("n_votes"))
-        .orderBy("doc_id")),
-
-    // PR operating points (r14): the imbalanced-regime twin of
-    // q_roc_curve — precision/recall as single integer-ratio divisions
-    // per distinct threshold.
-    "q_pr_curve" -> ((s, d) =>
-      graft.operators.MlEval.prCurve(
-          t(s, d, "documents"), "source",
-          col("lang") === "en", TextFunctions.qualityScore(col("text")))
-        .orderBy("source", "threshold")),
-
-    // Average precision (r14): step-interpolated area under q_pr_curve;
-    // per-threshold terms are pure functions of integer counts rounded
-    // onto a 12dp grid, folded as exact decimals (order-free), one
-    // final division by n_pos.
-    "q_avg_precision" -> ((s, d) =>
-      graft.operators.MlEval.averagePrecision(
-          t(s, d, "documents"), "source",
-          col("lang") === "en", TextFunctions.qualityScore(col("text")))
-        .orderBy("source")),
-
-    // Best-F1 operating point (r14): argmax F1 threshold per source,
-    // highest threshold breaking 6dp-grid ties — the one number a
-    // quality-gate deployer actually sets.
-    "q_best_f1" -> ((s, d) =>
-      graft.operators.MlEval.bestF1(
-          t(s, d, "documents"), "source",
-          col("lang") === "en", TextFunctions.qualityScore(col("text")))
-        .orderBy("source")),
-
-    // Multimodal decode path: the stub decoder is a deterministic
-    // function of the content digest, so even the "decoded" dimensions
-    // are oracle-checkable (DuckDB recomputes them from sha256 hex).
-    "q_multimodal_features" -> ((s, d) => {
-      val feats = Multimodal.extractFeatures(
-        Multimodal.fromDocuments(t(s, d, "documents")))
-      feats.toDF()
-        .select(col("media_id"), col("n_bytes"), col("width"), col("height"), col("n_frames"))
-        .orderBy("media_id")
-    }),
-
-    // REAL image codec contract (r13, the PNG sibling of
-    // q_audio_features): render an 8x8 PNG per document whose pixels
-    // are a pure md5 function of (doc_id, x, y), decode back through
-    // javax.imageio (ImageIoDecoder), and pin dimensions, frame count
-    // and the full 8-dim pixel feature (mean RGB, quadrant luma,
-    // aspect). PNG is lossless for INT_RGB, and at 8x8 the 64-point
-    // sample lattice visits every pixel exactly once — so the oracle
-    // replays the pixel formula and the lattice sums analytically (in
-    // (y, x) order, through float32), never the bytes: a decode that
-    // drops, reorders or mis-scales one pixel hash-mismatches.
-    "q_image_features" -> ((s, d) => {
-      import s.implicits._
-      val ids = t(s, d, "documents").select(col("doc_id")).as[Long]
-      val media = ids.mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { id =>
-          val bytes = Multimodal.synthPngRgb(8, 8, (x, y) => {
-            md.reset()
-            val hx = md.digest(s"$id:$x:$y".getBytes("UTF-8"))
-              .map("%02x".format(_)).mkString
-            (Integer.parseInt(hx.substring(0, 2), 16) << 16) |
-              (Integer.parseInt(hx.substring(2, 4), 16) << 8) |
-              Integer.parseInt(hx.substring(4, 6), 16)
-          })
-          (id, "image", bytes, "synth")
-        }
-      }.toDF("media_id", "modality", "content", "source")
-      val feats = Multimodal.extractFeatures(
-        media, graft.operators.ImageIoDecoder).toDF()
-      def f6(i: Int, name: String) =
-        round(element_at(col("embedding"), i).cast("double"), 6).as(name)
-      feats.select(col("media_id"), col("width"), col("height"), col("n_frames"),
-          f6(1, "r_mean"), f6(2, "g_mean"), f6(3, "b_mean"),
-          f6(4, "luma_tl"), f6(5, "luma_tr"), f6(6, "luma_bl"), f6(7, "luma_br"),
-          f6(8, "aspect"))
-        .orderBy("media_id")
-    }),
-
-    // REAL audio codec contract: synthesize 16-bit mono PCM WAV bytes
-    // whose samples are a pure md5 function of (doc_id, frame index),
-    // decode them back through javax.sound (JavaSoundDecoder), and pin
-    // sample rate / frame count / duration / overall + per-window RMS.
-    // The oracle never sees the bytes — it replays the sample formula
-    // and the window RMS math analytically, so a decode that drops,
-    // reorders, or mis-scales even one frame hash-mismatches.
-    "q_audio_features" -> ((s, d) => {
-      import s.implicits._
-      val media = t(s, d, "documents")
-        .select(col("doc_id"), pmod(col("n_chars"), lit(5)).cast("int").as("m"))
-        .as[(Long, Int)]
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.map { case (id, m) =>
-            val n = 400 + m * 80
-            val samples = Array.tabulate(n) { k =>
-              md.reset()
-              val dgt = md.digest(s"${id}_$k".getBytes("UTF-8"))
-              // first digest byte == first two md5 hex chars, centered
-              // and scaled to the full signed-16-bit lattice
-              (((dgt(0) & 0xff) - 128) * 256).toShort
-            }
-            graft.operators.MediaRecord(id, "audio", Multimodal.synthWavPcm16Mono(8000, samples), "synth")
-          }
-        }
-      Multimodal.extractAudioFeatures(media.toDF(), windows = 4)
-        .toDF()
-        .select(
-          col("media_id"),
-          col("n_bytes").cast("long").as("n_bytes"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("channels").cast("long").as("channels"),
-          col("n_frames"),
-          round(col("duration_s"), 6).as("duration_s"),
-          round(col("rms"), 6).as("rms"),
-          posexplode(col("embedding")).as(Seq("win_idx", "__w")))
-        .select(
-          col("media_id"), col("n_bytes"), col("sample_rate"), col("channels"),
-          col("n_frames"), col("duration_s"), col("rms"),
-          col("win_idx").cast("long").as("win_idx"),
-          round(col("__w").cast("double"), 6).as("win_rms"))
-        .orderBy("media_id", "win_idx")
-    }),
-
-    // kNN join: every document's 5 nearest neighbors by embedding cosine
-    // (brute force with a rank window — LSH-bucket first at scale).
-    "q_knn_join" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      SimilaritySearch.knnJoin(emb, emb, "vec_id", "vec_id", "embedding", "embedding", k = 5)
-        .orderBy("id_l", "rank")
-    }),
-
-    // LSH-bucketed kNN join (scale path; rows-only — bucketing recall is
-    // probabilistic; recall vs brute force pinned in SimilaritySpec).
-    "q_knn_lsh" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      SimilaritySearch.knnJoinLSH(emb, emb, "vec_id", "vec_id", "embedding", "embedding",
-        k = 5, numPlanes = 14, maxHamming = 2)
-        .orderBy("id_l", "rank")
-    }),
-
-    // Sequence-length bucketing (batch-shaping planner): per (source,
-    // power-of-two bucket) row/token counts and the padding waste a
-    // fixed-length batcher at that bucket would pay. Exact integer CASE
-    // chain, never log2 (boundary-exact across engines).
-    "q_pack_length_buckets" -> ((s, d) =>
-      TrainingData.lengthBuckets(
-          t(s, d, "documents"), "source",
-          TextFunctions.tokenCount(col("text")))
-        .orderBy("group", "bucket_len")),
-
-    // CCNet-style aggressive normalization (dedup canonicalization):
-    // lower + punctuation unification + invisible deletion + digit
-    // bucketing + whitespace collapse, pinned at reconstruction level
-    // (md5 of the normalized text).
-    "q_text_normalize" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          length(TextFunctions.normalizeAggressive(col("text"))).cast("long")
-            .as("norm_len"),
-          md5(TextFunctions.normalizeAggressive(col("text"))).as("norm_hash"))
-        .orderBy("doc_id")),
-
-    // N-gram novelty vs a standing census (r13): trigram census from
-    // the even-id half of the corpus, every doc scored by the fraction
-    // of its trigram occurrences unseen in it — the "is this batch new
-    // text" ingestion signal. Exact integer membership, FULL oracle.
-    "q_text_novelty" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val census = graft.operators.CorpusStats.trigramCensus(
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 0), "doc_id", "text")
-      graft.operators.CorpusStats.gramNovelty(docs, "doc_id", "text", census, n = 3)
-        .orderBy("doc_id")
-    }),
-
-    // Deterministic document fingerprint (case/whitespace-normalized md5).
-    "q_text_fingerprint" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")),
-
-    // Heuristic language ID. Deterministic (script regexes + stopword
-    // argmax), so the oracle replays the full decision procedure in SQL;
-    // multilingual accuracy is additionally pinned in TextFunctionsSpec.
-    "q_text_langid" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.languageId(col("text")).as("predicted_lang"))
-        .orderBy("doc_id")),
-
-    // Language-ID confusion matrix (r15b): declared lang column vs the
-    // heuristic detector — the mislabeled-corpus screen (a source whose
-    // declared row disagrees with detection is a labeling or mixing
-    // bug). Per (declared, predicted): count + within-declared share.
-    "q_langid_confusion" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      t(s, d, "documents")
-        .select(col("lang").as("declared"),
-          TextFunctions.languageId(col("text")).as("predicted"))
-        .groupBy(col("declared"), col("predicted"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("frac",
-          round(col("n").cast("double")
-            / sum(col("n")).over(Window.partitionBy(col("declared")))
-              .cast("double"), 6))
-        .orderBy("declared", "predicted")
-    }),
-
-    // PII redaction: counts per kind + fingerprint of the redacted text.
-    // The synthetic corpus is digit-free, so a deterministic PII-bearing
-    // suffix (email/IP/SSN/phone derived from doc_id) is appended first —
-    // the oracle replays the same augmentation, so every pattern and the
-    // full replacement cascade are hash-checked, not just no-op'd.
-    "q_pii_redact" -> ((s, d) => {
-      val aug = concat(
-        col("text"),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@example.com from 10.0."), pmod(col("doc_id"), lit(256)).cast("string"),
-        lit(".7 ssn 123-45-6789 tel +1 555 123 4567"))
-      t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          TextFunctions.piiCount(aug, "EMAIL").as("n_emails"),
-          TextFunctions.piiCount(aug, "IP").as("n_ips"),
-          TextFunctions.piiCount(aug, "SSN").as("n_ssns"),
-          TextFunctions.piiCount(aug, "PHONE").as("n_phones"),
-          md5(TextFunctions.redactPii(aug)).as("redacted_fp"))
-        .orderBy("doc_id")
-    }),
-
-    // Sliding-window chunking (window 64 tokens, stride 48): the
-    // document -> training-sequence explode. Integer-only boundary
-    // arithmetic, so the oracle reproduces chunk text byte-for-byte.
-    "q_chunk_docs" -> ((s, d) =>
-      Chunker.chunkDocuments(t(s, d, "documents"), "text", "doc_id", window = 64, stride = 48)
-        .orderBy("doc_id", "chunk_id")),
-
-    // End-to-end corpus prep — the full training-data pipeline in one
-    // plan: quality gate -> language gate -> exact dedup (keep lowest
-    // id per fingerprint) -> chunk (64/48, source carried through the
-    // explode) -> token-budget shard packing per source. Every stage is
-    // deterministic (row-local projections + two key-partitioned
-    // windows, no model state), so the WHOLE composition hash-checks
-    // against one DuckDB replay — the operators aren't just
-    // independently correct, they compose correctly.
-    "q_corpus_prep" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val scored = t(s, d, "documents").select(
-        col("doc_id"), col("source"), col("text"),
-        TextFunctions.qualityScore(col("text")).as("quality"),
-        TextFunctions.languageId(col("text")).as("lang_pred"),
-        TextFunctions.fingerprint(col("text")).as("fp"))
-      val deduped = scored
-        .filter(col("quality") >= 0.5 && col("lang_pred") === "en")
-        .withColumn("_rn", row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
-        .filter(col("_rn") === 1)
-      val chunks = Chunker
-        .chunkDocuments(deduped, "text", "doc_id", window = 64, stride = 48,
-          carryCols = Seq("source"))
-        .withColumn("chunk_uid", col("doc_id") * 1000 + col("chunk_id"))
-      TrainingData
-        .packShards(chunks, "chunk_uid", "source", col("n_chunk_tokens"), budgetTokens = 1024L)
-        .select("chunk_uid", "doc_id", "chunk_id", "source", "n_chunk_tokens", "shard_idx")
-        .orderBy("chunk_uid")
-    }),
-
-    // Brute-force cosine top-k against the vec_id=0 query vector.
-    "q_sim_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      SimilaritySearch.bruteForceTopK(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, k = 20)
-    }),
-
-    // Contrastive-pair mining (r15b): per anchor (vec_ids 0-2), the
-    // positives (cos >= 0.95) and top-10 HARD negatives — the most
-    // similar candidates inside the [0.2, 0.9) band, the DPR/SBERT
-    // training recipe. Anchors broadcast; one row-local scoring pass.
-    "q_hard_negatives" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      SimilaritySearch.hardNegatives(
-          emb.filter(col("vec_id") > 2), emb.filter(col("vec_id") <= 2),
-          "vec_id", "embedding", "vec_id", "embedding",
-          k = 10, posMin = 0.95, negMin = 0.2, negMax = 0.9)
-        .orderBy(col("anchor_id"), col("role"), desc("cos_sim"), col("vec_id"))
-    }),
-
-    // IVF-routed contrastive mining (r16): same roles/bands as
-    // q_hard_negatives but anchors route through the IVF index instead
-    // of broadcasting — the corpus-scale-anchor path. Probed
-    // exhaustively (nprobe = nlist) so the output EQUALS the brute
-    // mining pass bitwise (rows-only: KMeans cell assignment is model
-    // state; the brute identity + partial-probe recall floor are pinned
-    // in SimilaritySpec).
-    "q_hard_negatives_ivf" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val idx = SimilaritySearch.buildIvfIndex(
-        emb.filter(col("vec_id") > 2), "vec_id", "embedding", nlist = 16)
-      SimilaritySearch.hardNegativesIvf(idx, emb.filter(col("vec_id") <= 2),
-          "vec_id", "embedding",
-          k = 10, posMin = 0.95, negMin = 0.2, negMax = 0.9, nprobe = 16)
-        .orderBy(col("anchor_id"), col("role"), desc("cos_sim"), col("vec_id"))
-    }),
-
-    // Attribute-filtered exact search: cosine top-k WITHIN the label=1
-    // slice (search restricted to a source/license/label subset — the
-    // standard production vector-search requirement). Exact, so full
-    // SQL oracle; the pruning scale path for the same semantics is
-    // ivfTopKWhere (q_sim_ivf_filtered + SimilaritySpec).
-    "q_sim_filtered" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      SimilaritySearch.bruteForceTopK(
-        emb.filter(col("vec_id") =!= 0 && col("label") === 1),
-        "vec_id", "embedding", q, k = 20)
-    }),
-
-    // Attribute-filtered IVF probe ([[SimilaritySearch.ivfTopKWhere]]):
-    // the label predicate prunes INSIDE the probe, between the cell
-    // filter and the scoring projection (the index carries `label` via
-    // carryCols). Probed exhaustively (nprobe = nlist) the result is
-    // EXACTLY the filtered brute-force top-k — model-independent, hence
-    // a full DuckDB hash oracle; nprobe-pruned recall is pinned in
-    // SimilaritySpec.
-    "q_sim_ivf_filtered" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      val idx = SimilaritySearch.buildIvfIndex(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", nlist = 8,
-        carryCols = Seq("label"))
-      SimilaritySearch.ivfTopKWhere(
-        idx, "vec_id", q, col("label") === 1, k = 20, nprobe = 8)
-    }),
-
-    // Auto-widening filtered IVF probe (r11,
-    // [[SimilaritySearch.ivfTopKWhereWiden]]): starts at nprobe = 2 and
-    // widens until the predicate-satisfying candidate pool reaches
-    // 4*k. The ~1%-selective predicate here (<= 19 matches at every SF,
-    // pool target 80) provably forces the widen to every cell, so the
-    // result is EXACTLY filtered brute force — model-independent, full
-    // DuckDB hash oracle. The under-fill-then-recover behavior and the
-    // dense-predicate early stop are pinned in SimilaritySpec.
-    "q_sim_ivf_widen" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      val idx = SimilaritySearch.buildIvfIndex(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", nlist = 8,
-        carryCols = Seq("label"))
-      SimilaritySearch.ivfTopKWhereWiden(
-        idx, "vec_id", q, col("vec_id") % 100 === 0, k = 20, nprobe = 2)
-    }),
-
-    // BATCH auto-widen (r11, [[SimilaritySearch.ivfTopKBatchWhereWiden]]):
-    // per-query MINIMAL-prefix widening from one slice counting pass —
-    // each query keeps the shortest prefix of its distance-ranked cells
-    // whose cumulative slice count reaches 4*k. The selective predicate
-    // (<= 19 slice rows at every SF) forces every query's prefix to all
-    // cells, so per-query results are exactly filtered brute force —
-    // model-independent, full DuckDB hash oracle.
-    "q_sim_ivf_widen_batch" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val idx = SimilaritySearch.buildIvfIndex(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", nlist = 8,
-        carryCols = Seq("label"))
-      SimilaritySearch.ivfTopKBatchWhereWiden(
-          idx, emb.filter(col("vec_id").isin(0L, 1L, 2L)), "vec_id", "embedding",
-          col("vec_id") % 100 === 0, k = 20, nprobe = 2)
-        .orderBy("qid", "rank")
-    }),
-
-    // LSH-bucketed ANN variant (rows-only; recall asserted in SimilaritySpec).
-    "q_sim_ann" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      SimilaritySearch.lshTopK(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q,
-        k = 20, numPlanes = 8, maxProbeHamming = 2)
-    }),
-
-    // IVF ANN: KMeans-cell-probed top-k (rows-only — centroid assignment
-    // is model-dependent; recall vs brute force asserted in SimilaritySpec).
-    "q_sim_ivf" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      val idx = SimilaritySearch.buildIvfIndex(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", nlist = 16)
-      SimilaritySearch.ivfTopK(idx, "vec_id", q, k = 20, nprobe = 4)
-    }),
-
-    // Batch ANN: 50 query vectors routed through the IVF index in one
-    // plan (rows-only — cell assignment is model-dependent; equivalence
-    // to the single-query path is pinned in SimilaritySpec).
-    "q_sim_ivf_batch" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val idx = SimilaritySearch.buildIvfIndex(emb, "vec_id", "embedding", nlist = 16)
-      SimilaritySearch.ivfTopKBatch(
-        idx, emb.filter(col("vec_id") < 50), "vec_id", "embedding", k = 10, nprobe = 4)
-        .orderBy("qid", "rank")
-    }),
-
-    // Persisted IVF: save centroids JSON + cell-bucketed assignment,
-    // reload, probe — equal to the in-session path (same deterministic
-    // clustering; identity + no-shuffle plan pinned in SimilaritySpec).
-    // Rows-only: cell assignment is model-dependent.
-    "q_sim_ivf_persisted" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      val idx = SimilaritySearch.buildIvfIndex(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", nlist = 16)
-      SimilaritySearch.saveIvfIndex(
-        idx, "vec_id", "ivf_persisted_q", "target/tmp/ivf_persisted_q", buckets = 8)
-      val loaded = SimilaritySearch.loadIvfIndex(s, "ivf_persisted_q", "target/tmp/ivf_persisted_q")
-      SimilaritySearch.ivfTopK(loaded, "vec_id", q, k = 20, nprobe = 4)
-    }),
-
-    // IVF hot-cell rebalance, probed exhaustively: nprobe = nlist scans
-    // every (rebalanced) cell, so the result is EXACTLY brute-force
-    // cosine top-k — model-independent, hence a full DuckDB hash oracle
-    // (same SQL as q_sim_topk) even though cell contents are KMeans
-    // state. hotFactor 1.1 forces real splits on the skew the random
-    // 8-cell clustering leaves; balance/recall are pinned in
-    // SimilaritySpec.
-    "q_sim_ivf_rebalanced" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      val idx = SimilaritySearch.buildIvfIndex(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", nlist = 8)
-      val reb = SimilaritySearch.rebalanceIvfIndex(
-        idx, "vec_id", hotFactor = 1.1, maxSplit = 8)
-      SimilaritySearch.ivfTopK(reb, "vec_id", q, k = 20, nprobe = reb.centroids.length)
-    }),
-
-    // IVF x SQ8: cell pruning + byte codes in one probe (rows-only —
-    // KMeans cell state, like every IVF query; recall vs the float
-    // probe and vs brute force pinned in QuantizationSpec).
-    "q_sim_ivf_sq8" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      val corpus = emb.filter(col("vec_id") =!= 0)
-      val idx = SimilaritySearch.buildIvfIndex(corpus, "vec_id", "embedding", nlist = 16)
-      val (mins, maxs) = Quantization.sq8Params(corpus, "embedding")
-      Quantization.ivfSq8TopK(idx, "vec_id", q, mins, maxs, k = 20, nprobe = 4)
-    }),
-
-    // Scalar-quantized (SQ8) batch top-k: per-dimension min/max params,
-    // integer codes, integer dot-product scores. Fully deterministic
-    // (floor rounding, no model state), so unlike the KMeans/LSH ANN
-    // variants this is a full value oracle over the whole
-    // params -> codes -> scores -> top-k pipeline.
-    "q_sim_sq8" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Quantization.sq8TopKBatch(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-        .orderBy("qid", "rnk")
-    }),
-
-    // 1-bit sign quantization + Hamming top-k: the memory floor of the
-    // quantization family (8 bytes/vector at d=64). No model state —
-    // the bits are the data's own signs — so this ANN query carries a
-    // FULL DuckDB oracle, unique in the family.
-    "q_sim_binary" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0).toArray
-      SimilaritySearch.binarySignTopK(
-          emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, k = 20)
-        .orderBy("hamming", "vec_id")
-    }),
-
-    // Batch form: one corpus scan serves 5 queries (broadcast packed
-    // queries, pairwise popcount, per-query rank window). Engine-exact
-    // like the single-query form — second full oracle of the pair.
-    "q_sim_binary_batch" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      SimilaritySearch.binarySignTopKBatch(
-          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-        .orderBy("qid", "rnk")
-    }),
-
-    // Product quantization, ADC shortlist + exact re-rank (rows-only —
-    // per-subspace KMeans codebooks are model state, like the IVF cell
-    // queries; the ADC == dot(query, reconstruction) identity, recall
-    // floors, and rerank dominance are pinned in QuantizationSpec).
-    "q_sim_pq" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0).toArray
-      val corpus = emb.filter(col("vec_id") =!= 0)
-      val model = Quantization.trainPq(corpus, "embedding", m = 16, kc = 64)
-      Quantization.pqTopKReranked(corpus, model, "vec_id", "embedding", q, k = 20)
-    }),
-
-    // OPQ-lite: seeded orthonormal rotation before PQ — spreads
-    // concentrated variance across subspaces (recall 6/10 vs 0/10 on
-    // the concentrated fixture in QuantizationSpec); re-rank scores
-    // original vectors, so rotation never changes final scores
-    // (rows-only — rotated codebooks are model state like plain PQ).
-    "q_sim_opq" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0).toArray
-      val corpus = emb.filter(col("vec_id") =!= 0)
-      val model = Quantization.trainPqRotated(corpus, "embedding", m = 16, kc = 64)
-      Quantization.opqTopKReranked(corpus, model, "vec_id", "embedding", q, k = 20)
-    }),
-
-    // Full OPQ: the rotation is LEARNED by alternating minimization
-    // (codebook fit <-> orthogonal Procrustes against reconstructions,
-    // distributed d x d scatter + driver SVD). On the concentrated
-    // fixture the learned rotation cuts quantization distortion 3.5x
-    // vs the seeded warm start and lifts shortlist recall 6/10 -> 8/10
-    // (QuantizationSpec). rows-only — learned rotation + codebooks are
-    // model state like every PQ query.
-    "q_sim_opq_learned" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0).toArray
-      val corpus = emb.filter(col("vec_id") =!= 0)
-      val model = Quantization.trainOpq(corpus, "embedding", m = 8, kc = 64, opqIters = 2)
-      Quantization.opqTopKReranked(corpus, model, "vec_id", "embedding", q, k = 20)
-    }),
-
-    // Exhaustive-shortlist PQ re-rank: with the ADC shortlist covering
-    // the whole corpus, the re-rank arm scores EVERYTHING at full
-    // precision, so the result is exact brute-force top-k regardless of
-    // codebooks — which makes this the PQ family's full DuckDB oracle
-    // (the q_sim_ivf_rebalanced trick). A deliberately tiny model keeps
-    // the bench honest about what the identity does NOT depend on.
-    "q_sim_pq_exhaustive" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0).toArray
-      val corpus = emb.filter(col("vec_id") =!= 0)
-      val model = Quantization.trainPq(corpus, "embedding", m = 8, kc = 16, maxIter = 2)
-      Quantization.pqTopKReranked(corpus, model, "vec_id", "embedding", q,
-        k = 20, shortlist = 200)
-    }),
-
-    // PCA->IVF composed retrieval (r13): the learned eigenbasis routes
-    // and shortlists in 16 of 64 dims, the carried full vectors re-rank
-    // exactly. Exhaustive mode (nprobe = nlist, shortlist covering the
-    // corpus) makes the output exact brute-force top-k independent of
-    // basis and cells — the family's full oracle (the
-    // q_sim_pq_exhaustive trick); realistic-parameter recall is
-    // floor-pinned in SimilaritySpec.
-    "q_sim_pca_ivf" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      val corpus = emb.filter(col("vec_id") =!= 0)
-      val n = corpus.count()
-      val idx = SimilaritySearch.buildPcaIvfIndex(corpus, "vec_id", "embedding",
-        components = 16, nlist = 8, maxIter = 2)
-      SimilaritySearch.pcaIvfTopK(idx, "vec_id", q, k = 20,
-        nprobe = 8, shortlist = ((n / 20) + 1).toInt)
-    }),
-
-    // Persisted PQ store: codes at rest + codebook sidecar; the probe
-    // scans ONLY codes (rows-only — same PQ model state; the
-    // stored == in-session ADC identity is pinned in QuantizationSpec).
-    "q_sim_pq_persisted" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0).toArray
-      val corpus = emb.filter(col("vec_id") =!= 0)
-      val model = Quantization.trainPq(corpus, "embedding", m = 16, kc = 64)
-      val path = "target/tmp/pq_store_contract"
-      Quantization.savePqIndex(corpus, model, "vec_id", "embedding", path)
-      Quantization.pqTopKStored(s, path, q, k = 20)
-    }),
-
-    // IVF x PQ (FAISS composition): cell pruning + ADC shortlist +
-    // exact re-rank (rows-only — IVF cells AND PQ codebooks are model
-    // state; exhaustive-probe == plain-PQ identity and pruned-probe
-    // overlap with the float probe pinned in QuantizationSpec).
-    "q_sim_ivf_pq" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0).toArray
-      val corpus = emb.filter(col("vec_id") =!= 0)
-      val idx = SimilaritySearch.buildIvfIndex(corpus, "vec_id", "embedding", nlist = 16)
-      val model = Quantization.trainPq(corpus, "embedding", m = 16, kc = 64)
-      Quantization.ivfPqTopK(idx, model, "vec_id", q, k = 20, nprobe = 4)
-    }),
-
-    // Multi-probe LSH ANN: explicit probe-signature IN-list (prunable at
-    // scale) instead of the XOR scan filter — identical results to
-    // q_sim_ann by construction (identity pinned in SimilaritySpec).
-    "q_sim_ann_multiprobe" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      SimilaritySearch.lshTopKMultiProbe(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q,
-        k = 20, numPlanes = 8, maxProbeHamming = 2)
-    }),
-
-    // Embedding cosine near-dup pairs (brute-force; exact threshold).
-    "q_emb_neardup" -> ((s, d) =>
-      Dedup.embeddingNearDuplicates(t(s, d, "embeddings"), "vec_id", "embedding", 0.5)
-        .withColumn("cos_sim", round(col("cos_sim"), 6))
-        .orderBy("id_a", "id_b")),
-
-    // Truncated-dimension retrieval (matryoshka pattern): cosine top-20
-    // over the FIRST 16 of 64 dims — the probe reads a quarter of each
-    // vector's bytes; full-dim re-rank is a composition. Deterministic
-    // slice, so unlike LSH/IVF this reduced-cost path carries a full
-    // value oracle; recall vs full-dim search pinned in SimilaritySpec.
-    "q_sim_truncated" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.truncate(col("embedding"), 16)).head().getSeq[Double](0)
-      SimilaritySearch.bruteForceTopK(
-        emb.filter(col("vec_id") =!= 0)
-          .withColumn("emb16", VectorOps.truncate(col("embedding"), 16)),
-        "vec_id", "emb16", q, k = 20)
-    }),
-
-    // Coarse-to-fine: truncated 16-dim scan picks 60 candidates, exact
-    // 64-dim cosine re-ranks to 20 — the matryoshka serving pattern,
-    // deterministic at BOTH stages, so the full composition is
-    // hash-checked (candidate boundary included).
-    "q_sim_rerank" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
-      SimilaritySearch.coarseToFineTopK(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q,
-        k = 20, coarseDims = 16, coarseK = 60)
-    }),
-
-    // SemDeDup: KMeans-cluster-scoped semantic dedup (rows-only — cell
-    // assignment is model state like every IVF query; precision-1 /
-    // recall pins vs the brute-force baseline live in SemanticDedupSpec).
-    // Threshold matches q_emb_neardup so the two paths are comparable.
-    // rebalance=true exercises the production scale path: on balanced
-    // embeddings the histogram finds no hot cell and it's a no-op; on a
-    // Zipfian corpus it caps the O(cell^2) self-join (SemanticDedupSpec).
-    "q_dedup_semantic" -> ((s, d) =>
-      SemanticDedup.semanticDedup(t(s, d, "embeddings"), "vec_id", "embedding",
-        nClusters = 8, minCosine = 0.5, rebalance = true)
-        .select("vec_id", "label")
-        .orderBy("vec_id")),
-
-    // Adaptive per-cell epsilon (r11): tau_cell rises with the cell's
-    // ambient similarity (median cos-to-cell-mean squared), so dense
-    // cells don't over-merge at a corpus-global floor. Rows-only for
-    // the same reason as q_dedup_semantic (KMeans cell state); the
-    // dense-tightens / sparse-keeps-floor / precision-subset pins are
-    // SemanticDedupSpec's adaptive case.
-    "q_dedup_semantic_adaptive" -> ((s, d) =>
-      SemanticDedup.semanticDedupAdaptive(t(s, d, "embeddings"), "vec_id", "embedding",
-        nClusters = 8, tauFloor = 0.5, beta = 0.5)
-        .select("vec_id", "label")
-        .orderBy("vec_id")),
-
-    // Multimodal: binary content column + metadata pass (decode path is
-    // exercised via Multimodal.extractFeatures in MultimodalSpec).
-    "q_multimodal_meta" -> ((s, d) =>
-      Multimodal.metaStats(Multimodal.fromDocuments(t(s, d, "documents")))
-        .orderBy("media_id")),
-
-    // SQL-text surface: custom sketch expressions registered through
-    // SparkSessionExtensions (graft.plans.GraftExtensions) and invoked
-    // from spark.sql — the (c) extension point, oracle-checked through
-    // the sequential-sum dot product.
-    "q_sql_surface" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
-      t(s, d, "embeddings").createOrReplaceTempView("embeddings_v")
-      s.sql(
-        """SELECT vec_id,
-          |       round(graft_dot(CAST(embedding AS ARRAY<DOUBLE>),
-          |                       CAST(embedding AS ARRAY<DOUBLE>)), 6) AS norm2
-          |FROM embeddings_v ORDER BY vec_id""".stripMargin)
-    }),
-
-    // String scalar functions: case, substring, concat, regexp_replace,
-    // length — over part names.
-    "q_string_funcs" -> ((s, d) =>
-      t(s, d, "part").select(
-        col("p_partkey"),
-        upper(col("p_brand")).as("brand_upper"),
-        substring(col("p_name"), 1, 10).as("name_prefix"),
-        concat_ws("|", col("p_brand"), col("p_type")).as("brand_type"),
-        regexp_replace(col("p_name"), "[aeiou]", "").as("name_novowels"),
-        length(col("p_name")).as("name_len"))
-        .orderBy("p_partkey")),
-
-    // Array functions: deterministic collect (sort_array over
-    // collect_list), distinct set size, explode round-trip count.
-    "q_array_agg" -> ((s, d) =>
-      t(s, d, "orders")
-        .groupBy("o_custkey")
-        .agg(
-          sort_array(collect_list(col("o_orderpriority"))).as("priorities"),
-          size(array_distinct(collect_list(col("o_orderpriority")))).as("n_distinct_prio"),
-          count(lit(1)).as("n_orders"))
-        .select(
-          col("o_custkey"),
-          array_join(col("priorities"), ",").as("priorities_csv"),
-          col("n_distinct_prio"), col("n_orders"))
-        .orderBy("o_custkey")),
-
-    // Skew mitigation: two-phase salted aggregation — identical results
-    // to a plain groupBy (that identity IS the oracle check), but a hot
-    // user's rows spread over 16 reducers instead of one straggler.
-    "q_salted_agg" -> ((s, d) =>
-      graft.operators.Skew.saltedAgg(
-        t(s, d, "events"), "user_id", col("event_id"), numSalts = 16,
-        counts = Seq("n_events" -> "*"),
-        sums = Seq("total_value" -> col("value").cast("decimal(18,2)")))
-        .withColumn("total_value", col("total_value").cast("double"))
-        .orderBy("user_id")),
-
-    // HLL approximate distinct (rows-only: sketch internals are
-    // engine-specific; the <2% relative-error bound vs exact is asserted
-    // in EntrySmokeSpec's smoke run via the exact q_agg_hourly numbers).
-    "q_approx_distinct" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy("event_type")
-        .agg(
-          approx_count_distinct(col("user_id"), 0.02).as("approx_users"),
-          countDistinct(col("user_id")).as("exact_users"))
-        .orderBy("event_type")),
-
-    // PORTABLE HLL (r14): the oracle-checkable twin of q_approx_distinct
-    // — md5-register sketch, integer harmonic numerator, fixed 3-op IEEE
-    // raw estimate; bit-reproducible across engines/runs/shardings, so
-    // unlike the built-in HLL++ this one hash-matches DuckDB.
-    "q_hll_distinct" -> ((s, d) =>
-      graft.operators.PortableHll.distinctApprox(
-          t(s, d, "events"), "event_type", col("user_id"))
-        .orderBy("event_type")),
-
-    // Sketch-union contract (r14): events split by event_id parity,
-    // sketched per shard, merged by per-register max — equals the
-    // one-shot sketch bit for bit, so the oracle IS q_hll_distinct's
-    // SQL (the composition identity, the same pattern as
-    // q_drift_psi_frozen and q_sample_incr).
-    "q_hll_merge" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val hll = graft.operators.PortableHll
-      val merged = hll.merge(
-        hll.registers(ev.filter(pmod(col("event_id"), lit(2)) === 0),
-          "event_type", col("user_id")),
-        hll.registers(ev.filter(pmod(col("event_id"), lit(2)) === 1),
-          "event_type", col("user_id")))
-      hll.estimate(merged, "event_type").orderBy("event_type")
-    }),
-
-    // HLL set-operation estimates (r15b): pairwise audience overlap
-    // between event types — union by register-wise max (exact sketch
-    // algebra), intersection by inclusion-exclusion floored at 0,
-    // implied Jaccard. One sketch pass; the pair fan-out replicates
-    // ≤256 counter rows per pair.
-    "q_hll_overlap" -> ((s, d) =>
-      graft.operators.PortableHll.overlapEstimate(
-          t(s, d, "events"), "event_type", col("user_id"))
-        .orderBy("ga", "gb")),
-
-    // Map functions: JSON -> map<string,int>, element_at, map_keys.
-    "q_map_funcs" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("m", from_json(col("props"), org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.IntegerType)))
-        .select(
-          col("event_id"),
-          element_at(col("m"), "k").as("k_val"),
-          size(map_keys(col("m"))).as("n_keys"))
-        .orderBy("event_id")),
-
-    // JSON functions: schema-declared from_json over the props column,
-    // extracted field feeding a grouped aggregate.
-    "q_json_extract" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("k", from_json(col("props"), StructType.fromDDL("k INT")).getField("k"))
-        .groupBy((col("k") % 10).as("k_mod"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
-        .orderBy("k_mod")),
-
-    // Exact percentiles (median/p90) — Spark `percentile` and DuckDB
-    // `quantile_cont` both linearly interpolate, so values hash-match.
-    "q_percentile" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          expr("percentile(l_quantity, 0.5)").as("median_qty"),
-          expr("percentile(l_extendedprice, 0.9)").as("p90_price"))
-        .orderBy("l_returnflag")),
-
-    // Shuffle-side join coverage: lineitem x part (both large — sort-merge
-    // or shuffled-hash territory at scale) + broadcast supplier, revenue
-    // by brand.
-    "q_join_part_supp" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val part = t(s, d, "part")
-      val supp = t(s, d, "supplier")
-      li.join(part, col("l_partkey") === col("p_partkey"))
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .groupBy("p_brand")
-        .agg(
-          count(lit(1)).as("n_items"),
-          dsum(col("l_extendedprice")).as("total_price"),
-          countDistinct(col("s_suppkey")).as("n_suppliers"))
-        .orderBy("p_brand")
-    }),
-
-    // Ranking window functions: row_number / rank / dense_rank over a
-    // per-user total ordering (ties broken by event_id for determinism).
-    "q_window_rank" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(desc("value"), asc("event_id"))
-      t(s, d, "events")
-        .select(
-          col("event_id"), col("user_id"),
-          row_number().over(w).as("rn"),
-          rank().over(w).as("rk"),
-          dense_rank().over(w).as("drk"))
-        .filter(col("rn") <= 3)
-        .orderBy("user_id", "rn")
-    }),
-
-    // Analytic lag/lead: inter-event gap per user (the reference's
-    // time_since_last_transaction shape, silver.py cousin) + next type.
-    "q_window_lag" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-      t(s, d, "events")
-        .select(
-          col("event_id"), col("user_id"),
-          (unix_timestamp(col("ts")) -
-            lag(unix_timestamp(col("ts")), 1).over(w)).as("secs_since_prev"),
-          lead(col("event_type"), 1).over(w).as("next_type"))
-        .orderBy("event_id")
-    }),
-
-    // Running (cumulative) aggregation: unbounded-preceding row frame.
-    "q_window_running" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "events")
-        .select(
-          col("event_id"), col("user_id"),
-          sum(col("value").cast("decimal(38,12)")).over(w).cast("double").as("running_value"),
-          count(lit(1)).over(w).as("event_seq"))
-        .orderBy("event_id")
-    }),
-
-    // Distribution window functions: percent_rank, cume_dist, ntile —
-    // over events, whose unique event_id makes the ordering total
-    // (lineitem's (orderkey, linenumber) is not unique in this data).
-    "q_window_pct" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("event_type").orderBy(asc("value"), asc("event_id"))
-      t(s, d, "events")
-        .select(
-          col("event_id"), col("event_type"),
-          round(percent_rank().over(w), 6).as("pct_rank"),
-          round(cume_dist().over(w), 6).as("cume"),
-          ntile(4).over(w).as("quartile"))
-        .orderBy("event_id")
-    }),
-
-    // Pivot: event_type counts spread to columns per hour.
-    "q_pivot" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(hour(col("ts")).as("event_hour"))
-        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .agg(count(lit(1)))
-        .na.fill(0L, Seq("click", "view", "purchase", "signup", "error"))
-        .orderBy("event_hour")),
-
-    // Cube: all grouping-set combinations over (returnflag, linestatus).
-    "q_cube" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("total_price"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
-
-    // S4 + partition pruning: partitioned parquet sink round-trip. The
-    // read-back filter on the partition column prunes to 1/|years| of the
-    // files (PartitionFilters in the scan); oracle checks against the
-    // source table, so the round-trip must be lossless.
-    "q_sink_partitioned" -> ((s, d) => {
-      val dir = "target/tmp/orders_by_year"
-      t(s, d, "orders")
-        .withColumn("o_year", year(col("o_orderdate")))
-        // Partition-aligned repartition: one writer task per year value
-        // instead of every task writing every partition (32 tasks x 7
-        // years = 224 small files -> 7 right-sized files; at cluster
-        // scale this is the standard dynamic-partition small-files fix).
-        .repartition(col("o_year"))
-        .write.mode("overwrite").partitionBy("o_year").parquet(dir)
-      s.read.parquet(dir)
-        .filter(col("o_year") === 1997)
-        .groupBy("o_orderpriority")
-        .agg(
-          count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("total_value"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // MERGE INTO semantics ([[Upsert.merge]]): matched orders replaced
-    // wholesale, unmatched inserted — anti-join + union, the exact plan
-    // the oracle replays in SQL. Updated money goes through DECIMAL so
-    // the +1000 stays engine-exact.
-    "q_upsert_merge" -> ((s, d) => {
-      val orders = t(s, d, "orders")
-      val updates = orders.filter(col("o_orderkey") % 97 === 0)
-        .withColumn("o_totalprice",
-          (col("o_totalprice").cast("decimal(18,2)") + lit(1000)).cast("double"))
-        .withColumn("o_orderpriority", lit("1-URGENT"))
-      val inserts = orders.filter(col("o_orderkey") % 89 === 3)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(100000000L))
-      Upsert.merge(orders, updates.unionByName(inserts), Seq("o_orderkey"))
-        .groupBy("o_orderstatus", "o_orderpriority")
-        .agg(
-          count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("total_value"))
-        .orderBy("o_orderstatus", "o_orderpriority")
-    }),
-
-    // Partition-scoped copy-on-write upsert over a keyed parquet store
-    // ([[Upsert.upsertPartitioned]]): the batch contains partition-MOVERS
-    // (o_year+1), so matched rows relocate across partition directories
-    // and only affected partitions rewrite. The read-back equals the
-    // logical merge, which is what the oracle computes from the raw
-    // table — so the physical store machinery (manifest pruning, dynamic
-    // overwrite, drain cleanup) is behind a full hash gate.
-    "q_upsert_partitioned" -> ((s, d) => {
-      val dir = "target/tmp/upsert_store_contract"
-      val orders = t(s, d, "orders").withColumn("o_year", year(col("o_orderdate")))
-      Upsert.writeKeyedTable(orders, dir, "o_year", "o_orderkey")
-      val updates = orders.filter(col("o_orderkey") % 131 === 0)
-        .withColumn("o_year", col("o_year") + lit(1))
-        .withColumn("o_totalprice",
-          (col("o_totalprice").cast("decimal(18,2)") + lit(500)).cast("double"))
-      Upsert.upsertPartitioned(s, dir, "o_year", "o_orderkey", updates)
-      Upsert.readKeyedTable(s, dir)
-        .groupBy("o_year")
-        .agg(
-          count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("total_value"))
-        .orderBy("o_year")
-    }),
-
-    // Changelog application ([[Cdc.applyChangelog]]): a Debezium-shaped
-    // op stream (upsert/delete + seq) folds onto a keyed snapshot,
-    // highest seq per key winning. The synthesized log has conflicting
-    // upserts (seq 1 vs 2), deletes that override them (seq 3 on keys in
-    // both residue classes), and fresh inserts — the oracle replays the
-    // same rank window + anti-join + union in SQL.
-    "q_cdc_apply" -> ((s, d) => {
-      val orders = t(s, d, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-      def bump(amt: Int) = (col("o_totalprice").cast("decimal(18,2)") + lit(amt)).cast("double")
-      val c1 = orders.filter(col("o_orderkey") % 113 === 0)
-        .withColumn("o_totalprice", bump(100))
-        .withColumn("seq", lit(1L)).withColumn("op", lit("upsert"))
-      val c2 = orders.filter(col("o_orderkey") % 113 === 0)
-        .withColumn("o_totalprice", bump(200))
-        .withColumn("o_orderstatus", lit("X"))
-        .withColumn("seq", lit(2L)).withColumn("op", lit("upsert"))
-      val c3 = orders.filter(col("o_orderkey") % 127 === 0)
-        .withColumn("seq", lit(3L)).withColumn("op", lit("delete"))
-      val c4 = orders.filter(col("o_orderkey") % 151 === 3)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(200000000L))
-        .withColumn("seq", lit(1L)).withColumn("op", lit("upsert"))
-      val changes = c1.unionByName(c2).unionByName(c3).unionByName(c4)
-      Cdc.applyChangelog(orders, changes, "o_orderkey", "seq", "op")
-        .groupBy("o_orderstatus")
-        .agg(
-          count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("total_value"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // SCD Type-2 dimension history ([[Cdc.scd2Init]]/[[scd2Apply]]): two
-    // successive attribute snapshots fold into a versioned customer
-    // dimension (%5 keys change at fold 1, %10 ⊂ %5 change again at
-    // fold 2 → three versions). The oracle writes the version table
-    // directly from the residue classes; the (is_current, valid_from)
-    // rollup pins closure dates, flags, and per-version balances.
-    "q_scd2" -> ((s, d) => {
-      val cust = t(s, d, "customer").select("c_custkey", "c_name", "c_acctbal")
-      def bump(amt: Int) = (col("c_acctbal").cast("decimal(18,2)") + lit(amt)).cast("double")
-      val dim0 = Cdc.scd2Init(cust, to_date(lit("2024-01-01")))
-      val u1 = cust.filter(col("c_custkey") % 5 === 0).withColumn("c_acctbal", bump(100))
-      val dim1 = Cdc.scd2Apply(dim0, u1, "c_custkey", Seq("c_name", "c_acctbal"),
-        to_date(lit("2024-02-01")))
-      val u2 = cust.filter(col("c_custkey") % 10 === 0).withColumn("c_acctbal", bump(200))
-      val dim2 = Cdc.scd2Apply(dim1, u2, "c_custkey", Seq("c_name", "c_acctbal"),
-        to_date(lit("2024-03-01")))
-      dim2.groupBy("is_current", "valid_from")
-        .agg(
-          count(lit(1)).as("n_rows"),
-          dsum(col("c_acctbal")).as("sum_bal"))
-        .orderBy("is_current", "valid_from")
-    }),
-
-    // Snapshot-versioned table ([[VersionedTable]]): two appends, then
-    // an overwrite — reading BOTH v2 (pre-overwrite) and v3 afterwards
-    // proves old versions stay readable (time travel) and the overwrite
-    // is a manifest reset, not a data rewrite. Versions are
-    // deterministic year slices, so the readback hash-matches SQL that
-    // reconstructs each version's contents from the base table.
-    // Schema evolution on the versioned table (r13, closing S7's
-    // overwriteSchema gap on the plain-parquet substitute): v1 commits
-    // (doc_id, lang) for even ids, v2 appends (doc_id, lang, source)
-    // for odd ids under mergeSchema — the latest read returns the
-    // EVOLVED schema with v1's rows null in the new column (explicit-
-    // schema name-resolved read; no mergeSchema footer scan). Oracle
-    // replays the null-fill rule directly.
-    "q_schema_evolution" -> ((s, d) => {
-      val dir = "target/tmp/vtable_schema_contract"
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val docs = t(s, d, "documents")
-      graft.sources.VersionedTable.commit(s, dir,
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 0).select("doc_id", "lang"))
-      graft.sources.VersionedTable.commit(s, dir,
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 1)
-          .select("doc_id", "lang", "source"),
-        mergeSchema = true)
-      graft.sources.VersionedTable.read(s, dir)
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
-    }),
-
-    "q_time_travel" -> ((s, d) => {
-      val dir = "target/tmp/vtable_contract"
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val orders = t(s, d, "orders")
-        .select("o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate")
-      graft.sources.VersionedTable.commit(s, dir,
-        orders.filter(year(col("o_orderdate")) <= 1994))
-      graft.sources.VersionedTable.commit(s, dir,
-        orders.filter(year(col("o_orderdate")).isin(1995, 1996)))
-      graft.sources.VersionedTable.commit(s, dir,
-        orders.filter(year(col("o_orderdate")) >= 1997), overwrite = true)
-      val v2 = graft.sources.VersionedTable.read(s, dir, 2).withColumn("version", lit(2))
-      val v3 = graft.sources.VersionedTable.read(s, dir, 3).withColumn("version", lit(3))
-      v2.unionByName(v3)
-        .groupBy("version", "o_orderpriority")
-        .agg(
-          count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("total_value"))
-        .orderBy("version", "o_orderpriority")
-    }),
-
-    // Token-budget quota sampling ([[TrainingData.budgetSample]]): keep
-    // documents per language in deterministic md5 order until an
-    // absolute unit budget is hit (exclusive-< rule: the crossing doc is
-    // included). fr's budget exceeds its corpus (all kept), zh's is 0
-    // (group empty), es has no budget (dropped). The hybrid
-    // bucket-histogram plan is bit-identical to the naive window the
-    // oracle replays.
-    "q_budget_sample" -> ((s, d) =>
-      TrainingData.budgetSample(
-          t(s, d, "documents"), "doc_id", "lang", "n_chars",
-          Map("en" -> 30000L, "de" -> 10000L, "fr" -> 1000000L, "zh" -> 0L))
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars_kept"))
-        .orderBy("lang")),
-
-    // Exact distributed order statistics ([[Selection.kthSmallestMulti]]):
-    // ONE shared iterative-histogram descent finds true elements at all
-    // three ranks — the per-round (group x bucket) pass serves every
-    // rank until their candidate ranges diverge, so the full-data scan
-    // count is that of a single descent, not three (the r9 plan ran
-    // three independent descents; judge graded it weak on scans).
-    // tailThreshold forced low so the distributed rounds actually run
-    // at test scale. The oracle reads the same ranks off a row_number
-    // window.
-    "q_exact_kth" -> ((s, d) => {
-      import s.implicits._
-      val li = t(s, d, "lineitem")
-      val n = li.filter(col("l_extendedprice").isNotNull).count()
-      val named = Seq(
-        ("p25", (n - 1) / 4 + 1),
-        ("p50", (n - 1) / 2 + 1),
-        ("p99", (n - 1) * 99 / 100 + 1))
-      val vals = Selection.kthSmallestMulti(
-        li, "l_extendedprice", named.map(_._2), tailThreshold = 1000)
-      named.map { case (name, k) => (name, k, vals(k)) }
-        .toDF("pct", "k", "kth_value")
-        .orderBy("pct")
-    }),
-
-    // Bloom-prefiltered big-big join ([[BloomJoin.bloomFilteredJoin]]):
-    // lineitem rows whose order key cannot match the urgent-orders build
-    // side are dropped ROW-LOCALLY before the shuffle (codegen'd
-    // mightContainLong per row); false positives die in the exact join,
-    // so the result — and its hash — equals the plain SQL join.
-    "q_join_bloom" -> ((s, d) => {
-      val urgent = t(s, d, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_orderkey", "o_orderstatus")
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"), col("l_extendedprice"), col("l_discount"))
-      graft.operators.BloomJoin.bloomFilteredJoin(
-          li, urgent, Seq("o_orderkey"), "inner", expectedKeys = 100000L)
-        .groupBy("o_orderstatus")
-        .agg(
-          count(lit(1)).as("n_items"),
-          sum(col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-            .cast("double").as("revenue"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // M8: stratified sample (sampleBy). Rows-only — Bernoulli draws are
-    // seed+partitioning-dependent, not SQL-reproducible; the repartition
-    // pins the layout so our own runs are deterministic (SURVEY §7.5.7).
-    "q_sample_stratified" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .repartition(8, col("l_orderkey"))
-        .stat.sampleBy("l_returnflag", Map("A" -> 0.1, "N" -> 0.05, "R" -> 0.1), 42L)
-        .groupBy("l_returnflag").agg(count(lit(1)).as("n_sampled"))
-        .orderBy("l_returnflag")),
-
-    // M1-M4, M8, M9: assembler -> scaler -> seeded RandomForest pipeline,
-    // trained on a modulo split, scored on the holdout, confusion-matrix
-    // rollup. Rows-only — tree induction isn't SQL-expressible; protocol
-    // correctness (CV grid, AUC, persistence) is pinned in FraudModelSpec.
-    "q_ml_train_predict" -> ((s, d) => {
-      import org.apache.spark.ml.Pipeline
-      import org.apache.spark.ml.classification.RandomForestClassifier
-      import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
-      val li = t(s, d, "lineitem")
-        .withColumn("label", (col("l_returnflag") === "R").cast("int"))
-      val train = li.filter(col("l_orderkey") % 5 =!= 0)
-        .stat.sampleBy("label", Map(0 -> 0.5, 1 -> 1.0), 42L)
-      val test = li.filter(col("l_orderkey") % 5 === 0)
-      val assembler = new VectorAssembler()
-        .setInputCols(Array("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .setOutputCol("raw_features").setHandleInvalid("skip")
-      val scaler = new StandardScaler()
-        .setInputCol("raw_features").setOutputCol("features")
-        .setWithStd(true).setWithMean(true)
-      val rf = new RandomForestClassifier()
-        .setLabelCol("label").setFeaturesCol("features")
-        .setNumTrees(20).setMaxDepth(5).setSeed(42L)
-      val model = new Pipeline().setStages(Array(assembler, scaler, rf)).fit(train)
-      model.transform(test)
-        .groupBy(col("label"), col("prediction").cast("int").as("predicted"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("label", "predicted")
-    })
-  )
-
-  /** Names run by Bench. Excludes the quadratic brute-force pair queries
-    * (small-scale oracles for their LSH scale paths — q_emb_neardup_lsh
-    * and q_knn_lsh are benched instead) and the ML training query (tree
-    * induction measures MLlib fit time, not engine throughput).
-    */
-  def benchQueries: Seq[String] =
-    queries.keys.toSeq.sorted
-      .filterNot(Set("q_emb_neardup", "q_knn_join", "q_ml_train_predict"))
-
-  // ------------------------------------------------------------------ //
-  //  DuckDB oracle SQL — same tables, same aliases, same ordering.      //
-  // ------------------------------------------------------------------ //
-
-  def oracleSql: Map[String, String] = {
-    val base = oracleSqlBase
-    // Incremental == one-shot fold identities: each incremental query's
-    // oracle IS the full recompute, verbatim.
-    base +
-      ("q_dsir_weights_incr" -> base("q_dsir_weights")) +
-      ("q_sample_incr" -> base("q_exact_sample")) +
-      ("q_sample_incr_stratified" -> base("q_sample_exact_stratified")) +
-      // Fit-on-baseline + score-on-current == the one-shot drift query
-      // bit-for-bit (frozen edges + stored counts reproduce the same
-      // histogram), so its oracle IS q_drift_psi's SQL.
-      ("q_drift_psi_frozen" -> base("q_drift_psi"))
-  }
-
-  // The portable-HLL raw-estimate replay over events(user_id) per
-  // event_type (shared by q_hll_distinct and q_hll_merge — sketch
-  // union is per-register max, so merged shards replay identically).
-  // The alpha*m^2 literal is the ENGINE's own constant, interpolated
-  // so neither side depends on constant-folding order.
-  private def portableHllOracleSql: String = {
-    val aM2 = graft.operators.PortableHll.alphaM2(8)
-    s"""WITH h AS (
-       |  SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS hx
-       |  FROM events WHERE user_id IS NOT NULL
-       |), rr AS (
-       |  SELECT event_type,
-       |    CAST((strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-       |       + (strpos('0123456789abcdef', substr(hx, 2, 1)) - 1) AS BIGINT) AS reg,
-       |    CAST(list_sum(list_transform(range(13), i ->
-       |      (CAST(strpos('0123456789abcdef', substr(hx, CAST(i+3 AS INT), 1)) AS BIGINT) - 1)
-       |      * (CAST(1 AS BIGINT) << CAST(4*(12-i) AS INT)))) AS BIGINT) AS w
-       |  FROM h
-       |), regs AS (
-       |  SELECT event_type, reg,
-       |         max(CASE WHEN w = 0 THEN 53 ELSE 53 - length(bin(w)) END) AS rho
-       |  FROM rr GROUP BY 1, 2
-       |), agg AS (
-       |  SELECT event_type, CAST(count(*) AS BIGINT) AS present,
-       |         CAST(sum(CAST(1 AS BIGINT) << CAST(53 - rho AS INT)) AS BIGINT) AS np
-       |  FROM regs GROUP BY 1
-       |)
-       |SELECT event_type,
-       |       256 - present AS n_zero,
-       |       round($aM2 /
-       |             (CAST(np + (256 - present) * (CAST(1 AS BIGINT) << 53) AS DOUBLE)
-       |              / 9007199254740992.0), 4) AS approx_distinct
-       |FROM agg ORDER BY event_type""".stripMargin
-  }
-
-  // HLL pairwise-overlap replay: the register CTE shared with
-  // portableHllOracleSql, singles estimates, per-pair register
-  // max-union, inclusion-exclusion intersection floored at 0.
-  // Bradley-Terry replay (r16): quality-per-doc, adjacent-pair
-  // comparisons, the pair/win censuses, then `iters` UNROLLED MM sweeps
-  // — each a 6dp-grid denominator fold (exact decimal sum), the win
-  // ratio, and the mean-1 renormalization, byte-identical arithmetic to
-  // Preferences.bradleyTerry.
-  /** Shared q/cmpx CTE head for the preference-family oracles: the
-    * quality grid per doc and the adjacent-pair winner/loser records.
-    */
-  private def prefCmpCteSql: String =
-      """WITH q AS MATERIALIZED (
-        |  SELECT doc_id, source,
-        |    round((
-        |      (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) AS q
-        |  FROM (SELECT doc_id, source,
-        |          length(text) AS n_chars,
-        |          len(regexp_extract_all(text, '\S+')) AS n_tok,
-        |          len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-        |            ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |          len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct
-        |        FROM documents)
-        |), cmpx AS MATERIALIZED (
-        |  SELECT CASE WHEN a.q > b.q THEN a.source
-        |              WHEN a.q < b.q THEN b.source
-        |              ELSE least(a.source, b.source) END AS w,
-        |         CASE WHEN a.q > b.q THEN b.source
-        |              WHEN a.q < b.q THEN a.source
-        |              ELSE greatest(a.source, b.source) END AS l,
-        |         a.source AS f,
-        |         'j' || CAST(a.doc_id % 3 AS VARCHAR) AS g
-        |  FROM q a JOIN q b ON b.doc_id = a.doc_id + 1
-        |  WHERE a.source <> b.source
-        |)""".stripMargin
-
-  // Consistency replay (r16): pair majorities, the directed-3-cycle
-  // self-join (each cycle counted once per rotation, // 3 exact), the
-  // closed-form d_max, the completeness gate.
-  private def prefConsistencyOracleSql: String =
-    prefCmpCteSql + consistencyChainSql("cmpx")
-
-  /** The circularTriads replay chain from a comparisons CTE named
-    * `cmp` with (w, l) columns — shared by the pairwise fixture and
-    * the rank-broken listwise fixture.
-    */
-  private def consistencyChainSql(cmp: String): String =
-      s""", pv AS MATERIALIZED (
-        |  SELECT least(w, l) AS a, greatest(w, l) AS b,
-        |         CAST(sum(CASE WHEN w < l THEN 1 ELSE 0 END) AS BIGINT) AS wa,
-        |         CAST(sum(CASE WHEN w > l THEN 1 ELSE 0 END) AS BIGINT) AS wb
-        |  FROM $cmp GROUP BY 1, 2
-        |), edges AS MATERIALIZED (
-        |  SELECT CASE WHEN wa > wb THEN a ELSE b END AS src,
-        |         CASE WHEN wa > wb THEN b ELSE a END AS dst
-        |  FROM pv WHERE wa <> wb
-        |), cyc AS (
-        |  SELECT CAST(count(*) // 3 AS BIGINT) AS n_cyclic_triads
-        |  FROM edges e1
-        |  JOIN edges e2 ON e2.src = e1.dst
-        |  JOIN edges e3 ON e3.src = e2.dst AND e3.dst = e1.src
-        |), ka AS (
-        |  SELECT CAST(count(DISTINCT item) AS BIGINT) AS n_items FROM
-        |    (SELECT w AS item FROM $cmp UNION ALL SELECT l FROM $cmp)
-        |), ea AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_edges FROM edges
-        |), pa AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM pv
-        |)
-        |SELECT n_items, n_pairs, n_edges, n_cyclic_triads,
-        |  CASE WHEN n_edges = n_items * (n_items - 1) // 2
-        |        AND (CASE WHEN n_items % 2 = 0
-        |               THEN n_items * (n_items * n_items - 4) // 24
-        |               ELSE n_items * (n_items * n_items - 1) // 24 END) > 0
-        |       THEN round(1.0 - CAST(n_cyclic_triads AS DOUBLE)
-        |            / CAST(CASE WHEN n_items % 2 = 0
-        |                     THEN n_items * (n_items * n_items - 4) // 24
-        |                     ELSE n_items * (n_items * n_items - 1) // 24 END
-        |                   AS DOUBLE), 6)
-        |  END AS consistency
-        |FROM ka, ea, pa, cyc""".stripMargin
-
-  // Connectivity replay (r18): lang-stratified items, unordered pair
-  // census, recursive transitive closure over the bounded item graph
-  // (WITH RECURSIVE; the UNION-dedup recursion terminates at the
-  // closure fixpoint), then component-keyed integer censuses. min()
-  // over VARCHAR matches the engine's rank-ordered min id: both are
-  // binary string order on ASCII items.
-  private def prefConnectivityOracleSql: String =
-    """WITH RECURSIVE q AS MATERIALIZED (
-      |  SELECT doc_id, source, lang,
-      |    round((
-      |      (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-      |      (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-      |            THEN 1.0 ELSE 0.0 END) +
-      |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-      |            THEN 1.0 ELSE 0.0 END) +
-      |      least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-      |    ) / 4.0, 4) AS q
-      |  FROM (SELECT doc_id, source, lang,
-      |          length(text) AS n_chars,
-      |          len(regexp_extract_all(text, '\S+')) AS n_tok,
-      |          len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-      |            ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-      |          len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct
-      |        FROM documents)
-      |), cmpx AS MATERIALIZED (
-      |  SELECT CASE WHEN a.q > b.q THEN a.lang || '/' || a.source
-      |              WHEN a.q < b.q THEN b.lang || '/' || b.source
-      |              ELSE least(a.lang || '/' || a.source, b.lang || '/' || b.source) END AS w,
-      |         CASE WHEN a.q > b.q THEN b.lang || '/' || b.source
-      |              WHEN a.q < b.q THEN a.lang || '/' || a.source
-      |              ELSE greatest(a.lang || '/' || a.source, b.lang || '/' || b.source) END AS l
-      |  FROM q a JOIN q b ON b.doc_id = a.doc_id + 1
-      |  WHERE a.lang = b.lang AND a.source <> b.source
-      |)""".stripMargin + connectivityChainSql("cmpx")
-
-  /** The connectivity replay chain from a comparisons CTE named `cmp`
-    * with (w, l) columns — shared by the pairwise lang-stratified
-    * fixture and the rank-broken listwise fixture. The caller's WITH
-    * clause must carry the RECURSIVE prefix (the reach CTE).
-    */
-  private def connectivityChainSql(cmp: String): String =
-      s""", pairs AS MATERIALIZED (
-      |  SELECT least(w, l) AS a, greatest(w, l) AS b,
-      |         CAST(count(*) AS BIGINT) AS n
-      |  FROM $cmp GROUP BY 1, 2
-      |), itemsx AS MATERIALIZED (
-      |  SELECT it.item,
-      |         CAST(coalesce(wx.n_wins, 0) AS BIGINT) AS n_wins,
-      |         CAST(coalesce(lx.n_losses, 0) AS BIGINT) AS n_losses
-      |  FROM (SELECT DISTINCT item FROM
-      |          (SELECT w AS item FROM $cmp UNION ALL SELECT l FROM $cmp)) it
-      |  LEFT JOIN (SELECT w AS item, CAST(count(*) AS BIGINT) AS n_wins
-      |             FROM $cmp GROUP BY 1) wx ON wx.item = it.item
-      |  LEFT JOIN (SELECT l AS item, CAST(count(*) AS BIGINT) AS n_losses
-      |             FROM $cmp GROUP BY 1) lx ON lx.item = it.item
-      |), ed AS MATERIALIZED (
-      |  SELECT a AS s, b AS d FROM pairs
-      |  UNION
-      |  SELECT b AS s, a AS d FROM pairs
-      |), reach AS (
-      |  SELECT item AS s, item AS d FROM itemsx
-      |  UNION
-      |  SELECT r.s, e.d FROM reach r JOIN ed e ON e.s = r.d
-      |), comp AS MATERIALIZED (
-      |  SELECT s AS item, min(d) AS component FROM reach GROUP BY 1
-      |), istat AS (
-      |  SELECT c.component, CAST(count(*) AS BIGINT) AS n_items,
-      |         CAST(sum(CASE WHEN i.n_wins = 0 THEN 1 ELSE 0 END) AS BIGINT)
-      |           AS n_zero_win_items,
-      |         CAST(sum(CASE WHEN i.n_losses = 0 THEN 1 ELSE 0 END) AS BIGINT)
-      |           AS n_zero_loss_items
-      |  FROM itemsx i JOIN comp c ON c.item = i.item GROUP BY 1
-      |), pstat AS (
-      |  SELECT c.component, CAST(count(*) AS BIGINT) AS n_pairs,
-      |         CAST(sum(p.n) AS BIGINT) AS n_comparisons
-      |  FROM pairs p JOIN comp c ON c.item = p.a GROUP BY 1
-      |)
-      |SELECT istat.component, n_items, n_pairs, n_comparisons,
-      |       n_zero_win_items, n_zero_loss_items
-      |FROM istat JOIN pstat ON pstat.component = istat.component
-      |ORDER BY istat.component""".stripMargin
-
-  // Dawid-Skene replay (r17, Dawid & Skene 1979): the same 3-rater
-  // boolean panel the fleiss oracle replays (quality >= 0.5, Gopher
-  // conjunction, langid == 'en'), vote-share init on the 6dp grid,
-  // then `iters` unrolled EM sweeps. M-step confusion cells and class
-  // priors fold the grid posteriors as EXACT decimals with one rounded
-  // IEEE division per cell (Laplace 0.01); the E-step product runs in
-  // sorted-rater order and the class total in sorted-class order —
-  // both written as the same left-associated chains the engine's
-  // pinned array folds produce, so the whole fit replays bitwise.
-  private def dawidSkenePanelSql: String =
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         regexp_extract_all(text, '\S+') AS t,
-        |         string_split(text, chr(10)) AS ln,
-        |         regexp_extract_all(lower(text), '\S+') AS lt
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id, text,
-        |         CAST(len(t) AS BIGINT) AS n_words,
-        |         length(text) AS n_chars,
-        |         len(list_filter(t, x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS mean_word_len,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST((length(text) - length(replace(text, '#', '')))
-        |                + len(regexp_extract_all(text, '\.\.\.|…')) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS symbol_ratio,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '^\s*[-*•]'))) AS DOUBLE) / len(ln), 6) AS bullet_frac,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '(\.\.\.|…)\s*$'))) AS DOUBLE) / len(ln), 6) AS ellipsis_line_frac,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS alpha_frac,
-        |         CAST(list_contains(list_transform(t, x -> lower(x)), 'the') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'be') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'to') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'of') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'and') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'that') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'have') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'with') AS BIGINT)
-        |           AS stopword_hits,
-        |         len(list_filter(lt, x -> x IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS en,
-        |         len(list_filter(lt, x -> x IN
-        |           ('el','la','de','que','y','en','un','una','los','es'))) AS es,
-        |         len(list_filter(lt, x -> x IN
-        |           ('der','die','das','und','ist','ein','eine','zu','den','nicht'))) AS de,
-        |         len(list_filter(lt, x -> x IN
-        |           ('le','la','les','de','et','un','une','est','que','pour'))) AS fr
-        |  FROM s
-        |), r AS (
-        |  SELECT doc_id,
-        |    (round((
-        |      (CASE WHEN n_words BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_words > 0 AND CAST(n_chars AS DOUBLE)/n_words BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN n_words > 0 THEN CAST(n_stop AS DOUBLE)/n_words ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) >= 0.5) AS r1,
-        |    (n_words BETWEEN 50 AND 100000
-        |     AND mean_word_len BETWEEN 3.0 AND 10.0
-        |     AND symbol_ratio <= 0.1
-        |     AND bullet_frac <= 0.9
-        |     AND ellipsis_line_frac <= 0.3
-        |     AND alpha_frac >= 0.8
-        |     AND stopword_hits >= 2) AS r2,
-        |    (CASE
-        |       WHEN regexp_matches(text, '[ぁ-ゟ゠-ヿ]') THEN 'ja'
-        |       WHEN regexp_matches(text, '[가-힣]') THEN 'ko'
-        |       WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-        |       WHEN regexp_matches(text, '[А-яЁё]') THEN 'ru'
-        |       WHEN regexp_matches(text, '[؀-ۿ]') THEN 'ar'
-        |       WHEN regexp_matches(text, '[ऀ-ॿ]') THEN 'hi'
-        |       WHEN greatest(en, es, de, fr) > 0 THEN
-        |         CASE WHEN en = greatest(en, es, de, fr) THEN 'en'
-        |              WHEN es = greatest(en, es, de, fr) THEN 'es'
-        |              WHEN de = greatest(en, es, de, fr) THEN 'de'
-        |              ELSE 'fr' END
-        |       ELSE 'und'
-        |     END = 'en') AS r3
-        |  FROM m
-        |)""".stripMargin +
-      """, nunits AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS nn FROM r
-        |), p0 AS MATERIALIZED (
-        |  SELECT doc_id AS u,
-        |    round(CAST(3 - nt AS DOUBLE) / CAST(3 AS DOUBLE), 6) AS pf,
-        |    round(CAST(nt AS DOUBLE) / CAST(3 AS DOUBLE), 6) AS pt
-        |  FROM (SELECT doc_id,
-        |          CAST(r1 AS INT) + CAST(r2 AS INT) + CAST(r3 AS INT) AS nt
-        |        FROM r)
-        |)""".stripMargin
-
-  private def dawidSkeneSweepSql(i: Int): String = {
-    val prev = s"p${i - 1}"
-    s""", c${i}r AS MATERIALIZED (
-       |  SELECT
-       |    CAST(sum(CAST(p.pf AS DECIMAL(28,6))) AS DOUBLE) AS den_f,
-       |    CAST(sum(CAST(p.pt AS DECIMAL(28,6))) AS DOUBLE) AS den_t,
-       |    CAST(coalesce(sum(CASE WHEN NOT r.r1 THEN CAST(p.pf AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n1ff,
-       |    CAST(coalesce(sum(CASE WHEN r.r1 THEN CAST(p.pf AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n1ft,
-       |    CAST(coalesce(sum(CASE WHEN NOT r.r1 THEN CAST(p.pt AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n1tf,
-       |    CAST(coalesce(sum(CASE WHEN r.r1 THEN CAST(p.pt AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n1tt,
-       |    CAST(coalesce(sum(CASE WHEN NOT r.r2 THEN CAST(p.pf AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n2ff,
-       |    CAST(coalesce(sum(CASE WHEN r.r2 THEN CAST(p.pf AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n2ft,
-       |    CAST(coalesce(sum(CASE WHEN NOT r.r2 THEN CAST(p.pt AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n2tf,
-       |    CAST(coalesce(sum(CASE WHEN r.r2 THEN CAST(p.pt AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n2tt,
-       |    CAST(coalesce(sum(CASE WHEN NOT r.r3 THEN CAST(p.pf AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n3ff,
-       |    CAST(coalesce(sum(CASE WHEN r.r3 THEN CAST(p.pf AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n3ft,
-       |    CAST(coalesce(sum(CASE WHEN NOT r.r3 THEN CAST(p.pt AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n3tf,
-       |    CAST(coalesce(sum(CASE WHEN r.r3 THEN CAST(p.pt AS DECIMAL(28,6)) END), 0) AS DOUBLE) AS n3tt,
-       |  FROM r JOIN $prev p ON p.u = r.doc_id
-       |), c$i AS MATERIALIZED (
-       |  SELECT
-       |    round((n1ff + 0.01) / (den_f + 0.01 * 2), 6) AS pi1ff,
-       |    round((n1ft + 0.01) / (den_f + 0.01 * 2), 6) AS pi1ft,
-       |    round((n1tf + 0.01) / (den_t + 0.01 * 2), 6) AS pi1tf,
-       |    round((n1tt + 0.01) / (den_t + 0.01 * 2), 6) AS pi1tt,
-       |    round((n2ff + 0.01) / (den_f + 0.01 * 2), 6) AS pi2ff,
-       |    round((n2ft + 0.01) / (den_f + 0.01 * 2), 6) AS pi2ft,
-       |    round((n2tf + 0.01) / (den_t + 0.01 * 2), 6) AS pi2tf,
-       |    round((n2tt + 0.01) / (den_t + 0.01 * 2), 6) AS pi2tt,
-       |    round((n3ff + 0.01) / (den_f + 0.01 * 2), 6) AS pi3ff,
-       |    round((n3ft + 0.01) / (den_f + 0.01 * 2), 6) AS pi3ft,
-       |    round((n3tf + 0.01) / (den_t + 0.01 * 2), 6) AS pi3tf,
-       |    round((n3tt + 0.01) / (den_t + 0.01 * 2), 6) AS pi3tt,
-       |    round((den_f + 0.01) / ((SELECT nn FROM nunits) + 0.01 * 2), 6) AS prf,
-       |    round((den_t + 0.01) / ((SELECT nn FROM nunits) + 0.01 * 2), 6) AS prt
-       |  FROM c${i}r
-       |), e$i AS MATERIALIZED (
-       |  SELECT r.doc_id AS u,
-       |    c.prf * (1.0
-       |      * (CASE WHEN r.r1 THEN c.pi1ft ELSE c.pi1ff END)
-       |      * (CASE WHEN r.r2 THEN c.pi2ft ELSE c.pi2ff END)
-       |      * (CASE WHEN r.r3 THEN c.pi3ft ELSE c.pi3ff END)) AS nf,
-       |    c.prt * (1.0
-       |      * (CASE WHEN r.r1 THEN c.pi1tt ELSE c.pi1tf END)
-       |      * (CASE WHEN r.r2 THEN c.pi2tt ELSE c.pi2tf END)
-       |      * (CASE WHEN r.r3 THEN c.pi3tt ELSE c.pi3tf END)) AS nt
-       |  FROM r, c$i c
-       |), p$i AS MATERIALIZED (
-       |  SELECT u, round(nf / (0.0 + nf + nt), 6) AS pf,
-       |         round(nt / (0.0 + nf + nt), 6) AS pt
-       |  FROM e$i
-       |)""".stripMargin
-  }
-
-  // Scalar-consensus replay (r18): the 3-grader panel (quality,
-  // Flesch/100, the planted 2q+0.25 lens), plain-mean init on the 6dp
-  // grid, then `iters` unrolled ALS sweeps — per sweep the rater OLS
-  // from five exact decimal sufficient statistics, the mean-0/mean-1
-  // gauge fix as scalar subqueries, and the precision-weighted truth
-  // readback. Every division is fixed-order IEEE over decimal-staged
-  // folds, so the fit replays bitwise.
-  private def scalarVotesCteSql: String =
-    """WITH m AS MATERIALIZED (
-      |  SELECT doc_id,
-      |         length(text) AS n_chars,
-      |         len(regexp_extract_all(text, '\S+')) AS n_tok,
-      |         len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-      |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-      |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-      |         greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS snt,
-      |         len(regexp_extract_all(lower(text), '[aeiouy]+'))
-      |           + (len(regexp_extract_all(text, '\S+'))
-      |              - len(regexp_extract_all(lower(text), '\S*[aeiouy]\S*'))) AS syl
-      |  FROM documents
-      |), qv AS MATERIALIZED (
-      |  SELECT doc_id,
-      |    round((
-      |      (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-      |      (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-      |            THEN 1.0 ELSE 0.0 END) +
-      |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-      |            THEN 1.0 ELSE 0.0 END) +
-      |      least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-      |    ) / 4.0, 4) AS q,
-      |    CASE WHEN n_tok > 0 THEN
-      |      round(206.835 - 1.015 * (CAST(n_tok AS DOUBLE) / snt)
-      |            - 84.6 * (CAST(syl AS DOUBLE) / n_tok), 4) END AS flesch
-      |  FROM m
-      |), votes AS MATERIALIZED (
-      |  SELECT u, r, y FROM (
-      |    SELECT doc_id AS u, 'g1' AS r, round(q, 6) AS y FROM qv
-      |    UNION ALL
-      |    SELECT doc_id, 'g2', round(flesch / 100.0, 6) FROM qv
-      |    UNION ALL
-      |    SELECT doc_id, 'g3', round(q * 2.0 + 0.25, 6) FROM qv
-      |  ) WHERE y IS NOT NULL
-      |), nr AS MATERIALIZED (
-      |  SELECT CAST(count(DISTINCT r) AS DOUBLE) AS k FROM votes
-      |), t0 AS MATERIALIZED (
-      |  SELECT u, round(CAST(sum(CAST(y AS DECIMAL(28,6))) AS DOUBLE)
-      |                  / CAST(count(*) AS DOUBLE), 6) AS t
-      |  FROM votes GROUP BY 1
-      |)""".stripMargin
-
-  private def scalarSweepSql(i: Int): String = {
-    val prev = s"t${i - 1}"
-    s""", r${i}s AS MATERIALIZED (
-       |  SELECT v.r, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(CAST(t.t AS DECIMAL(28,6))) AS DOUBLE) AS st,
-       |    CAST(sum(CAST(v.y AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-       |    CAST(sum(CAST(round(t.t * v.y, 6) AS DECIMAL(28,6))) AS DOUBLE) AS sty,
-       |    CAST(sum(CAST(round(t.t * t.t, 6) AS DECIMAL(28,6))) AS DOUBLE) AS stt
-       |  FROM votes v JOIN $prev t ON t.u = v.u GROUP BY 1
-       |), r${i}f AS MATERIALIZED (
-       |  SELECT r, n, b, round((sy - b * st) / CAST(n AS DOUBLE), 6) AS a
-       |  FROM (
-       |    SELECT r, n, st, sy,
-       |      CASE WHEN CAST(n AS DOUBLE) * stt - st * st > 0.0
-       |           THEN round((CAST(n AS DOUBLE) * sty - st * sy)
-       |                      / (CAST(n AS DOUBLE) * stt - st * st), 6)
-       |           ELSE 1.0 END AS b
-       |    FROM r${i}s)
-       |), g$i AS MATERIALIZED (
-       |  SELECT round(CAST(sum(CAST(a AS DECIMAL(28,6))) AS DOUBLE)
-       |               / (SELECT k FROM nr), 6) AS abar,
-       |         round(CAST(sum(CAST(b AS DECIMAL(28,6))) AS DOUBLE)
-       |               / (SELECT k FROM nr), 6) AS bbar
-       |  FROM r${i}f
-       |), r$i AS MATERIALIZED (
-       |  SELECT r, n,
-       |    CASE WHEN (SELECT bbar FROM g$i) > 0.0
-       |         THEN round(a - b * round((SELECT abar FROM g$i)
-       |                                  / (SELECT bbar FROM g$i), 6), 6)
-       |         ELSE a END AS a,
-       |    CASE WHEN (SELECT bbar FROM g$i) > 0.0
-       |         THEN round(b / (SELECT bbar FROM g$i), 6)
-       |         ELSE b END AS b
-       |  FROM r${i}f
-       |), t$i AS MATERIALIZED (
-       |  SELECT u,
-       |    CASE WHEN den > 0.0 THEN round(num / den, 6)
-       |         ELSE round(sy / m, 6) END AS t
-       |  FROM (
-       |    SELECT v.u,
-       |      CAST(count(*) AS DOUBLE) AS m,
-       |      CAST(sum(CAST(round(r.b * (v.y - r.a), 6) AS DECIMAL(28,6))) AS DOUBLE) AS num,
-       |      CAST(sum(CAST(round(r.b * r.b, 6) AS DECIMAL(28,6))) AS DOUBLE) AS den,
-       |      CAST(sum(CAST(v.y AS DECIMAL(28,6))) AS DOUBLE) AS sy
-       |    FROM votes v JOIN r$i r ON r.r = v.r GROUP BY 1)
-       |)""".stripMargin
-  }
-
-  private def scalarConsensusOracleSql(iters: Int): String =
-    scalarVotesCteSql + (1 to iters).map(scalarSweepSql).mkString +
-      s"""
-         |, nv AS (SELECT u, CAST(count(*) AS BIGINT) AS n_votes
-         |         FROM votes GROUP BY 1)
-         |SELECT t.u AS doc_id, t.t + 0.0e0 AS truth, nv.n_votes
-         |FROM t$iters t JOIN nv ON nv.u = t.u
-         |ORDER BY doc_id""".stripMargin
-
-  private def scalarRaterOracleSql(iters: Int): String =
-    scalarVotesCteSql + (1 to iters).map(scalarSweepSql).mkString +
-      s"""
-         |SELECT r AS rater, a + 0.0e0 AS bias, b + 0.0e0 AS scale,
-         |       n AS n_votes
-         |FROM r$iters ORDER BY rater""".stripMargin
-
-  private def dawidSkeneOracleSql(iters: Int): String =
-    dawidSkenePanelSql +
-      (1 to iters).map(dawidSkeneSweepSql).mkString +
-      s"""
-         |SELECT u AS doc_id,
-         |  CASE WHEN pt > pf THEN 'true' ELSE 'false' END AS label,
-         |  CASE WHEN pt > pf THEN pt ELSE pf END AS p_posterior
-         |FROM p$iters ORDER BY doc_id""".stripMargin
-
-  // Sliced-kappa replay (r18, shared by q_label_drift and the
-  // store-fed q_label_monitor — the monoid merge makes them
-  // bit-identical by construction): the r1/r2 raters from the shared
-  // panel CTE, a per-batch cell census, then the exact cohenKappa
-  // assembly with the slice key carried through every fold.
-  private def labelDriftOracleSql: String =
-    dawidSkenePanelSql +
-      """, cellsx AS MATERIALIZED (
-        |  SELECT CAST(CAST(floor(doc_id / 125) AS BIGINT) AS VARCHAR) AS slice,
-        |         CAST(r1 AS VARCHAR) AS a, CAST(r2 AS VARCHAR) AS b,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM r GROUP BY 1, 2, 3
-        |), tot AS (
-        |  SELECT slice, CAST(sum(c) AS BIGINT) AS n,
-        |         CAST(coalesce(sum(CASE WHEN a = b THEN c END), 0) AS BIGINT) AS agree
-        |  FROM cellsx GROUP BY 1
-        |), nax AS (
-        |  SELECT slice, a, CAST(sum(c) AS BIGINT) AS na FROM cellsx GROUP BY 1, 2
-        |), nbx AS (
-        |  SELECT slice, b, CAST(sum(c) AS BIGINT) AS nb FROM cellsx GROUP BY 1, 2
-        |), pex AS (
-        |  SELECT nax.slice, CAST(coalesce(sum(nax.na * nbx.nb), 0) AS BIGINT) AS spe
-        |  FROM nax JOIN nbx ON nbx.slice = nax.slice AND nbx.b = nax.a
-        |  GROUP BY 1
-        |)
-        |SELECT t.slice, t.n,
-        |  round(CAST(agree AS DOUBLE) / CAST(n AS DOUBLE), 6) AS po,
-        |  round(CAST(spe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS pe,
-        |  CASE WHEN CAST(spe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) < 1.0
-        |       THEN round((CAST(agree AS DOUBLE) / CAST(n AS DOUBLE)
-        |                   - CAST(spe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-        |                  / (1.0 - CAST(spe AS DOUBLE)
-        |                           / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6)
-        |            + 0.0e0
-        |  END AS kappa
-        |FROM tot t LEFT JOIN pex ON pex.slice = t.slice
-        |ORDER BY t.slice""".stripMargin
-
-  // Gold-eval replay (r18): the panel's three raters melted long, the
-  // every-5th-doc gold subset labeled from the metadata lang column,
-  // one rater-keyed integer census, then the literal rateWilson tree.
-  private def labelGoldOracleSql: String =
-    dawidSkenePanelSql +
-      """, goldx AS (
-        |  SELECT doc_id AS u, CAST(lang = 'en' AS VARCHAR) AS gold
-        |  FROM documents WHERE doc_id % 5 = 0
-        |), votesx AS (
-        |  SELECT doc_id AS u, 'r1' AS rater, CAST(r1 AS VARCHAR) AS vote FROM r
-        |  UNION ALL SELECT doc_id, 'r2', CAST(r2 AS VARCHAR) FROM r
-        |  UNION ALL SELECT doc_id, 'r3', CAST(r3 AS VARCHAR) FROM r
-        |), perx AS (
-        |  SELECT v.rater, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN v.vote = g.gold THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM votesx v JOIN goldx g ON g.u = v.u GROUP BY 1
-        |), cgx AS (
-        |  SELECT rater, n, k,
-        |         CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-        |         (1.96 * 1.96) / CAST(n AS DOUBLE) AS z2n
-        |  FROM perx
-        |), wgx AS (
-        |  SELECT rater, n, k, p, z2n,
-        |         (p + z2n / 2.0) / (1.0 + z2n) AS center,
-        |         (1.96 * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE)
-        |                      + z2n / (4.0 * CAST(n AS DOUBLE)))) / (1.0 + z2n) AS half
-        |  FROM cgx
-        |)
-        |SELECT rater, n AS n_gold, k AS n_correct, round(p, 6) AS accuracy,
-        |       round(center - half, 6) + 0.0e0 AS wilson_lo,
-        |       round(center + half, 6) + 0.0e0 AS wilson_hi
-        |FROM wgx ORDER BY rater""".stripMargin
-
-  // Position-drift replay (r18): the pref comparison CTE re-derived
-  // with the anchor doc's batch id, then the per-slice position
-  // census and chi-square assembly (biased gates on the UNROUNDED
-  // chi2, matching positionFromState).
-  private def positionDriftOracleSql: String =
-    prefCmpCteSql +
-      """, cmpb AS MATERIALIZED (
-        |  SELECT CAST(CAST(floor(a.doc_id / 125) AS BIGINT) AS VARCHAR) AS slice,
-        |         CASE WHEN a.q > b.q THEN a.source
-        |              WHEN a.q < b.q THEN b.source
-        |              ELSE least(a.source, b.source) END AS w,
-        |         a.source AS f
-        |  FROM q a JOIN q b ON b.doc_id = a.doc_id + 1
-        |  WHERE a.source <> b.source
-        |), stx AS (
-        |  SELECT slice, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN w = f THEN 1 ELSE 0 END) AS BIGINT) AS n_first_wins
-        |  FROM cmpb GROUP BY 1
-        |)
-        |SELECT slice, n, n_first_wins,
-        |  round(CAST(n_first_wins AS DOUBLE) / CAST(n AS DOUBLE), 6) AS first_win_rate,
-        |  round(CAST((2 * n_first_wins - n) * (2 * n_first_wins - n) AS DOUBLE)
-        |        / CAST(n AS DOUBLE), 6) AS chi2,
-        |  (CAST((2 * n_first_wins - n) * (2 * n_first_wins - n) AS DOUBLE)
-        |   / CAST(n AS DOUBLE) > 3.841) AS biased
-        |FROM stx ORDER BY slice""".stripMargin
-
-  // Routing replay (r18): the same unrolled EM chain, then the margin
-  // CTE — top-vs-runner-up posterior gap with the below-threshold
-  // filter (ties break to 'false', matching the engine's p-desc /
-  // label-asc rank). The panel never abstains, so n_votes is the
-  // literal 3.
-  private def dawidSkeneRouteOracleSql(iters: Int, marginBelow: String): String =
-    dawidSkenePanelSql +
-      (1 to iters).map(dawidSkeneSweepSql).mkString +
-      s"""
-         |SELECT u AS doc_id,
-         |  CASE WHEN pt > pf THEN 'true' ELSE 'false' END AS label,
-         |  CASE WHEN pt > pf THEN pt ELSE pf END AS p_posterior,
-         |  round((CASE WHEN pt > pf THEN pt ELSE pf END)
-         |        - (CASE WHEN pt > pf THEN pf ELSE pt END), 6) AS margin,
-         |  CAST(3 AS BIGINT) AS n_votes
-         |FROM p$iters
-         |WHERE round((CASE WHEN pt > pf THEN pt ELSE pf END)
-         |            - (CASE WHEN pt > pf THEN pf ELSE pt END), 6) < $marginBelow
-         |ORDER BY doc_id""".stripMargin
-
-  // Confusion readout: one more M-step past the final posterior (the
-  // engine emits the fit's confusion the same way), unpivoted to the
-  // complete (rater, true_label, observed_label) grid.
-  private def dawidSkeneConfusionOracleSql(iters: Int): String = {
-    val f = iters + 1
-    val rows = (for {
-      r <- 1 to 3; j <- Seq("f", "t"); l <- Seq("f", "t")
-    } yield {
-      val (jn, ln) = (if (j == "f") "false" else "true",
-        if (l == "f") "false" else "true")
-      s"SELECT 'r$r' AS rater, '$jn' AS true_label, '$ln' AS observed_label, pi$r$j$l AS pi FROM c$f"
-    }).mkString("\n|  UNION ALL ")
-    dawidSkenePanelSql +
-      (1 to iters).map(dawidSkeneSweepSql).mkString +
-      dawidSkeneSweepSql(f) +
-      s"""
-         |SELECT rater, true_label, observed_label, pi FROM (
-         |  $rows
-         |)
-         |ORDER BY rater, true_label, observed_label""".stripMargin
-  }
-
-  private def bradleyTerryOracleSql(iters: Int): String = {
-    def iterCte(prev: String, cur: String): String =
-      s""", ${cur}s AS (
-         |  SELECT a.i AS item,
-         |         CAST(coalesce(sum(CAST(round(CAST(a.n AS DOUBLE)
-         |           / (gi.gamma + gj.gamma), 6) AS DECIMAL(28,6))), 0) AS DOUBLE) AS s
-         |  FROM adj a
-         |  JOIN $prev gi ON gi.item = a.i
-         |  JOIN $prev gj ON gj.item = a.j
-         |  GROUP BY 1
-         |), ${cur}u AS MATERIALIZED (
-         |  SELECT it.item, round(CAST(it.n_wins AS DOUBLE) / ${cur}s.s, 6) AS gu
-         |  FROM items it JOIN ${cur}s ON ${cur}s.item = it.item
-         |), $cur AS MATERIALIZED (
-         |  SELECT u.item,
-         |         round(u.gu * (SELECT k FROM kk)
-         |               / (SELECT CAST(sum(CAST(gu AS DECIMAL(28,6))) AS DOUBLE)
-         |                  FROM ${cur}u), 6) AS gamma
-         |  FROM ${cur}u u
-         |)""".stripMargin
-    val head =
-      prefCmpCteSql +
-      """, pairs AS MATERIALIZED (
-        |  SELECT least(w, l) AS a, greatest(w, l) AS b,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM cmpx GROUP BY 1, 2
-        |), winsx AS (
-        |  SELECT w AS item, CAST(count(*) AS BIGINT) AS n_wins FROM cmpx GROUP BY 1
-        |), items AS MATERIALIZED (
-        |  SELECT it.item, CAST(coalesce(winsx.n_wins, 0) AS BIGINT) AS n_wins
-        |  FROM (SELECT DISTINCT item FROM
-        |          (SELECT w AS item FROM cmpx UNION ALL SELECT l FROM cmpx)) it
-        |  LEFT JOIN winsx ON winsx.item = it.item
-        |), adj AS MATERIALIZED (
-        |  SELECT a AS i, b AS j, n FROM pairs
-        |  UNION ALL SELECT b AS i, a AS j, n FROM pairs
-        |), ncmp AS (
-        |  SELECT i AS item, CAST(sum(n) AS BIGINT) AS n_comparisons
-        |  FROM adj GROUP BY 1
-        |), kk AS MATERIALIZED (
-        |  SELECT CAST(count(*) AS DOUBLE) AS k FROM items
-        |), g0 AS MATERIALIZED (
-        |  SELECT item, 1.0 AS gamma FROM items
-        |)""".stripMargin
-    val body = (1 to iters).map(i => iterCte(s"g${i - 1}", s"g$i")).mkString
-    val tail =
-      s"""
-         |SELECT it.item, g$iters.gamma AS strength, it.n_wins, nc.n_comparisons,
-         |       round(g$iters.gamma / (g$iters.gamma + 1.0), 6) AS p_beat_avg
-         |FROM items it
-         |JOIN g$iters ON g$iters.item = it.item
-         |JOIN ncmp nc ON nc.item = it.item
-         |ORDER BY it.item""".stripMargin
-    head + body + tail
-  }
-
-  /** Shared listwise-fixture CTE head: the quality grid, 4-doc ranking
-    * sessions (per-source best slot, q-desc order with source-asc
-    * ties), and the canonical (grp, item, pos, m) positions.
-    */
-  private def listwisePosCteSql: String =
-    prefCmpCteSql +
-      """, rkx AS (
-        |  SELECT doc_id // 4 AS grp, source, max(q) AS q
-        |  FROM q GROUP BY 1, 2
-        |), posx AS (
-        |  SELECT grp, source AS item,
-        |         row_number() OVER (PARTITION BY grp
-        |                            ORDER BY q DESC, source ASC) AS pos,
-        |         count(*) OVER (PARTITION BY grp) AS m
-        |  FROM rkx
-        |)""".stripMargin
-
-  // Plackett-Luce replay (r18): quality-per-doc, 4-doc ranking
-  // sessions ranked by q (source-asc ties, per-source best slot), the
-  // distinct-orderings census, then `iters` UNROLLED MM sweeps — each
-  // a decimal window SUFFIX sum of 6dp gammas (the remaining-set
-  // totals S_t), one IEEE division per stage term landed back on the
-  // grid, a decimal window PREFIX sum folding each item's stage
-  // contributions, and the mean-1 renormalization — byte-identical
-  // arithmetic to Preferences.plackettLuce.
-  private def plackettLuceOracleSql(iters: Int): String = {
-    def iterCte(prev: String, cur: String): String =
-      s""", ${cur}s AS (
-         |  SELECT st.okey, st.n, st.m, st.item, st.pos,
-         |         sum(CAST(g.gamma AS DECIMAL(28,6)))
-         |           OVER (PARTITION BY st.okey ORDER BY st.pos DESC
-         |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sfx
-         |  FROM st JOIN $prev g ON g.item = st.item
-         |), ${cur}p AS (
-         |  SELECT item,
-         |         sum(CASE WHEN pos < m AND CAST(sfx AS DOUBLE) > 0
-         |                  THEN CAST(round(CAST(n AS DOUBLE)
-         |                       / CAST(sfx AS DOUBLE), 6) AS DECIMAL(28,6))
-         |                  ELSE CAST(0 AS DECIMAL(28,6)) END)
-         |           OVER (PARTITION BY okey ORDER BY pos ASC
-         |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-         |  FROM ${cur}s
-         |), ${cur}d AS (
-         |  SELECT item, CAST(sum(pre) AS DOUBLE) AS d FROM ${cur}p GROUP BY 1
-         |), ${cur}u AS MATERIALIZED (
-         |  SELECT it.item,
-         |         CASE WHEN d.d > 0
-         |              THEN round(CAST(it.n_chosen AS DOUBLE) / d.d, 6)
-         |              ELSE 0.0 END AS gu
-         |  FROM items it JOIN ${cur}d d ON d.item = it.item
-         |), $cur AS MATERIALIZED (
-         |  SELECT u.item,
-         |         round(u.gu * (SELECT k FROM kk)
-         |               / (SELECT CAST(sum(CAST(gu AS DECIMAL(28,6))) AS DOUBLE)
-         |                  FROM ${cur}u), 6) AS gamma
-         |  FROM ${cur}u u
-         |)""".stripMargin
-    val head =
-      listwisePosCteSql +
-      """, ords AS (
-        |  SELECT grp, list(item ORDER BY pos) AS ord
-        |  FROM posx WHERE m >= 2 GROUP BY grp
-        |), census AS MATERIALIZED (
-        |  SELECT ord, CAST(count(*) AS BIGINT) AS n FROM ords GROUP BY ord
-        |), st AS MATERIALIZED (
-        |  SELECT array_to_string(ord, '|') AS okey, n,
-        |         CAST(len(ord) AS BIGINT) AS m,
-        |         unnest(ord) AS item,
-        |         unnest(range(1, len(ord) + 1)) AS pos
-        |  FROM census
-        |), items AS MATERIALIZED (
-        |  SELECT item,
-        |         CAST(sum(CASE WHEN pos <= m - 1 THEN n ELSE 0 END) AS BIGINT)
-        |           AS n_chosen,
-        |         CAST(sum(n) AS BIGINT) AS n_rankings
-        |  FROM st GROUP BY 1
-        |), kk AS MATERIALIZED (
-        |  SELECT CAST(count(*) AS DOUBLE) AS k FROM items
-        |), g0 AS MATERIALIZED (
-        |  SELECT item, 1.0 AS gamma FROM items
-        |)""".stripMargin
-    val body = (1 to iters).map(i => iterCte(s"g${i - 1}", s"g$i")).mkString
-    val tail =
-      s"""
-         |SELECT it.item, g$iters.gamma AS strength, it.n_chosen, it.n_rankings,
-         |       round(g$iters.gamma / (g$iters.gamma + 1.0), 6) AS p_beat_avg
-         |FROM items it
-         |JOIN g$iters ON g$iters.item = it.item
-         |ORDER BY it.item""".stripMargin
-    head + body + tail
-  }
-
-  // Listwise-connectivity replay (r18): lang-stratified ranking
-  // sessions (per-(lang, 4-doc-block) groups, q-desc order), the
-  // rank-broken pairs, then the SAME recursive-closure connectivity
-  // chain as q_pref_connectivity — the bridge feeding the gate.
-  private def listConnectivityOracleSql: String =
-    """WITH RECURSIVE q AS MATERIALIZED (
-      |  SELECT doc_id, source, lang,
-      |    round((
-      |      (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-      |      (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-      |            THEN 1.0 ELSE 0.0 END) +
-      |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-      |            THEN 1.0 ELSE 0.0 END) +
-      |      least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-      |    ) / 4.0, 4) AS q
-      |  FROM (SELECT doc_id, source, lang,
-      |          length(text) AS n_chars,
-      |          len(regexp_extract_all(text, '\S+')) AS n_tok,
-      |          len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-      |            ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-      |          len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct
-      |        FROM documents)
-      |), rkx AS (
-      |  SELECT lang, doc_id // 4 AS blk, source, max(q) AS q
-      |  FROM q GROUP BY 1, 2, 3
-      |), posx AS (
-      |  SELECT lang || '/' || CAST(blk AS VARCHAR) AS grp,
-      |         lang || '/' || source AS item,
-      |         row_number() OVER (PARTITION BY lang, blk
-      |                            ORDER BY q DESC, source ASC) AS pos,
-      |         count(*) OVER (PARTITION BY lang, blk) AS m
-      |  FROM rkx
-      |), lb AS MATERIALIZED (
-      |  SELECT a.item AS w, b.item AS l
-      |  FROM posx a JOIN posx b ON b.grp = a.grp AND b.pos > a.pos
-      |  WHERE a.m >= 2
-      |)""".stripMargin + connectivityChainSql("lb")
-
-  // Stratified-BT replay (r18): the lang-carrying quality grid,
-  // within-language comparisons keyed by slice, then `iters` unrolled
-  // MM sweeps with EVERY fold slice-keyed — per-slice k and mean-1
-  // totals join back by slice, so one chain replays all slices' fits
-  // with arithmetic byte-identical to the per-slice engine loop.
-  private def btBySliceOracleSql(iters: Int): String = {
-    def iterCte(prev: String, cur: String): String =
-      s""", ${cur}s AS (
-         |  SELECT a.s, a.i AS item,
-         |         CAST(coalesce(sum(CAST(round(CAST(a.n AS DOUBLE)
-         |           / (gi.gamma + gj.gamma), 6) AS DECIMAL(28,6))), 0) AS DOUBLE) AS sx
-         |  FROM adj a
-         |  JOIN $prev gi ON gi.s = a.s AND gi.item = a.i
-         |  JOIN $prev gj ON gj.s = a.s AND gj.item = a.j
-         |  GROUP BY 1, 2
-         |), ${cur}u AS MATERIALIZED (
-         |  SELECT it.s, it.item,
-         |         round(CAST(it.n_wins AS DOUBLE) / gs.sx, 6) AS gu
-         |  FROM items it JOIN ${cur}s gs ON gs.s = it.s AND gs.item = it.item
-         |), ${cur}t AS (
-         |  SELECT s, CAST(sum(CAST(gu AS DECIMAL(28,6))) AS DOUBLE) AS tot
-         |  FROM ${cur}u GROUP BY 1
-         |), $cur AS MATERIALIZED (
-         |  SELECT u.s, u.item, round(u.gu * kk.k / t.tot, 6) AS gamma
-         |  FROM ${cur}u u
-         |  JOIN kk ON kk.s = u.s
-         |  JOIN ${cur}t t ON t.s = u.s
-         |)""".stripMargin
-    val head =
-      """WITH q AS MATERIALIZED (
-        |  SELECT doc_id, source, lang,
-        |    round((
-        |      (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) AS q
-        |  FROM (SELECT doc_id, source, lang,
-        |          length(text) AS n_chars,
-        |          len(regexp_extract_all(text, '\S+')) AS n_tok,
-        |          len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-        |            ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |          len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct
-        |        FROM documents)
-        |), cmps AS MATERIALIZED (
-        |  SELECT a.lang AS s,
-        |         CASE WHEN a.q > b.q THEN a.source
-        |              WHEN a.q < b.q THEN b.source
-        |              ELSE least(a.source, b.source) END AS w,
-        |         CASE WHEN a.q > b.q THEN b.source
-        |              WHEN a.q < b.q THEN a.source
-        |              ELSE greatest(a.source, b.source) END AS l
-        |  FROM q a JOIN q b ON b.doc_id = a.doc_id + 1
-        |  WHERE a.lang = b.lang AND a.source <> b.source
-        |), pairs AS MATERIALIZED (
-        |  SELECT s, least(w, l) AS a, greatest(w, l) AS b,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM cmps GROUP BY 1, 2, 3
-        |), winsx AS (
-        |  SELECT s, w AS item, CAST(count(*) AS BIGINT) AS n_wins
-        |  FROM cmps GROUP BY 1, 2
-        |), items AS MATERIALIZED (
-        |  SELECT it.s, it.item, CAST(coalesce(winsx.n_wins, 0) AS BIGINT) AS n_wins
-        |  FROM (SELECT DISTINCT s, item FROM
-        |          (SELECT s, w AS item FROM cmps
-        |           UNION ALL SELECT s, l FROM cmps)) it
-        |  LEFT JOIN winsx ON winsx.s = it.s AND winsx.item = it.item
-        |), adj AS MATERIALIZED (
-        |  SELECT s, a AS i, b AS j, n FROM pairs
-        |  UNION ALL SELECT s, b, a, n FROM pairs
-        |), ncmp AS (
-        |  SELECT s, i AS item, CAST(sum(n) AS BIGINT) AS n_comparisons
-        |  FROM adj GROUP BY 1, 2
-        |), kk AS MATERIALIZED (
-        |  SELECT s, CAST(count(*) AS DOUBLE) AS k FROM items GROUP BY 1
-        |), g0 AS MATERIALIZED (
-        |  SELECT s, item, 1.0 AS gamma FROM items
-        |)""".stripMargin
-    val body = (1 to iters).map(i => iterCte(s"g${i - 1}", s"g$i")).mkString
-    val tail =
-      s"""
-         |SELECT it.s AS slice, it.item, g$iters.gamma AS strength,
-         |       it.n_wins, nc.n_comparisons,
-         |       round(g$iters.gamma / (g$iters.gamma + 1.0), 6) AS p_beat_avg
-         |FROM items it
-         |JOIN g$iters ON g$iters.s = it.s AND g$iters.item = it.item
-         |JOIN ncmp nc ON nc.s = it.s AND nc.item = it.item
-         |ORDER BY slice, it.item""".stripMargin
-    head + body + tail
-  }
-
-  // Rank Centrality replay (r18): the directed pair census, max
-  // opponent degree, 6dp transition grid fixed once, then `iters`
-  // UNROLLED power-iteration sweeps — per sweep one 6dp multiply per
-  // directed edge, exact-decimal in/outflow folds (narrowed back to
-  // (28,6) before the +/- chain, matching the engine), and the sum-1
-  // renormalization — byte-identical to Preferences.rankCentrality.
-  private def rankCentralityOracleSql(iters: Int): String = {
-    def iterCte(prev: String, cur: String): String =
-      s""", ${cur}f AS (
-         |  SELECT adj.i, adj.j,
-         |         CAST(round(p.pi * adj.t, 6) AS DECIMAL(28,6)) AS f
-         |  FROM adj JOIN $prev p ON p.item = adj.i
-         |), ${cur}o AS (
-         |  SELECT i AS item, sum(f) AS outfl FROM ${cur}f GROUP BY 1
-         |), ${cur}n AS (
-         |  SELECT j AS item, sum(f) AS infl FROM ${cur}f GROUP BY 1
-         |), ${cur}m AS MATERIALIZED (
-         |  SELECT p.item,
-         |         CAST(p.pi AS DECIMAL(28,6))
-         |           - coalesce(CAST(o.outfl AS DECIMAL(28,6)),
-         |                      CAST(0 AS DECIMAL(28,6)))
-         |           + coalesce(CAST(n.infl AS DECIMAL(28,6)),
-         |                      CAST(0 AS DECIMAL(28,6))) AS pp
-         |  FROM $prev p
-         |  LEFT JOIN ${cur}o o ON o.item = p.item
-         |  LEFT JOIN ${cur}n n ON n.item = p.item
-         |), $cur AS MATERIALIZED (
-         |  SELECT item,
-         |         round(CAST(pp AS DOUBLE)
-         |               / (SELECT CAST(sum(pp) AS DOUBLE) FROM ${cur}m), 6) AS pi
-         |  FROM ${cur}m
-         |)""".stripMargin
-    val head =
-      prefCmpCteSql +
-      """, pv AS MATERIALIZED (
-        |  SELECT least(w, l) AS a, greatest(w, l) AS b,
-        |         CAST(sum(CASE WHEN w < l THEN 1 ELSE 0 END) AS BIGINT) AS wa,
-        |         CAST(sum(CASE WHEN w > l THEN 1 ELSE 0 END) AS BIGINT) AS wb
-        |  FROM cmpx GROUP BY 1, 2
-        |), winsx AS (
-        |  SELECT w AS item, CAST(count(*) AS BIGINT) AS n_wins FROM cmpx GROUP BY 1
-        |), items AS MATERIALIZED (
-        |  SELECT it.item, CAST(coalesce(winsx.n_wins, 0) AS BIGINT) AS n_wins
-        |  FROM (SELECT DISTINCT item FROM
-        |          (SELECT w AS item FROM cmpx UNION ALL SELECT l FROM cmpx)) it
-        |  LEFT JOIN winsx ON winsx.item = it.item
-        |), degx AS (
-        |  SELECT item, CAST(count(*) AS BIGINT) AS deg
-        |  FROM (SELECT a AS item FROM pv UNION ALL SELECT b FROM pv) GROUP BY 1
-        |), dmx AS MATERIALIZED (
-        |  SELECT CAST(max(deg) AS DOUBLE) AS dmax FROM degx
-        |), ncmp AS (
-        |  SELECT item, CAST(sum(n) AS BIGINT) AS n_comparisons
-        |  FROM (SELECT a AS item, wa + wb AS n FROM pv
-        |        UNION ALL SELECT b, wa + wb FROM pv) GROUP BY 1
-        |), adj AS MATERIALIZED (
-        |  SELECT a AS i, b AS j,
-        |         round(CAST(wb AS DOUBLE)
-        |               / (CAST(wa + wb AS DOUBLE) * (SELECT dmax FROM dmx)), 6) AS t
-        |  FROM pv
-        |  UNION ALL
-        |  SELECT b, a,
-        |         round(CAST(wa AS DOUBLE)
-        |               / (CAST(wa + wb AS DOUBLE) * (SELECT dmax FROM dmx)), 6)
-        |  FROM pv
-        |), kk AS (
-        |  SELECT count(*) AS k FROM items
-        |), p0 AS MATERIALIZED (
-        |  SELECT item, round(1.0 / (SELECT k FROM kk), 6) AS pi FROM items
-        |)""".stripMargin
-    val body = (1 to iters).map(i => iterCte(s"p${i - 1}", s"p$i")).mkString
-    val tail =
-      s"""
-         |SELECT it.item, p$iters.pi AS score, it.n_wins, nc.n_comparisons
-         |FROM items it
-         |JOIN p$iters ON p$iters.item = it.item
-         |JOIN ncmp nc ON nc.item = it.item
-         |ORDER BY it.item""".stripMargin
-    head + body + tail
-  }
-
-  // Rao-Kupper replay (r16): outcome records with the tie band, the
-  // (wa, wb, t) pair census, items' win+tie credit, the directed table,
-  // then `iters` unrolled sweeps with the two-denominator terms.
-  private def bradleyTerryTiesOracleSql(iters: Int, theta: String): String = {
-    def iterCte(prev: String, cur: String): String =
-      s""", ${cur}s AS (
-         |  SELECT d.i AS item,
-         |         CAST(coalesce(sum(CAST(round(CAST(d.wij + d.t AS DOUBLE)
-         |             / (gi.gamma + $theta * gj.gamma), 6) AS DECIMAL(28,6))), 0)
-         |           + coalesce(sum(CAST(round(CAST(d.wji + d.t AS DOUBLE) * $theta
-         |             / (gj.gamma + $theta * gi.gamma), 6) AS DECIMAL(28,6))), 0)
-         |          AS DOUBLE) AS s
-         |  FROM dir d
-         |  JOIN $prev gi ON gi.item = d.i
-         |  JOIN $prev gj ON gj.item = d.j
-         |  GROUP BY 1
-         |), ${cur}u AS MATERIALIZED (
-         |  SELECT it.item, round(CAST(it.n_credit AS DOUBLE) / ${cur}s.s, 6) AS gu
-         |  FROM items it JOIN ${cur}s ON ${cur}s.item = it.item
-         |), $cur AS MATERIALIZED (
-         |  SELECT u.item,
-         |         round(u.gu * (SELECT k FROM kk)
-         |               / (SELECT CAST(sum(CAST(gu AS DECIMAL(28,6))) AS DOUBLE)
-         |                  FROM ${cur}u), 6) AS gamma
-         |  FROM ${cur}u u
-         |)""".stripMargin
-    val head =
-      s"""WITH q AS MATERIALIZED (
-         |  SELECT doc_id, source,
-         |    round((
-         |      (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-         |      (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-         |            THEN 1.0 ELSE 0.0 END) +
-         |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-         |            THEN 1.0 ELSE 0.0 END) +
-         |      least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-         |    ) / 4.0, 4) AS q
-         |  FROM (SELECT doc_id, source,
-         |          length(text) AS n_chars,
-         |          len(regexp_extract_all(text, '\\S+')) AS n_tok,
-         |          len(list_filter(regexp_extract_all(text, '\\S+'), x -> lower(x) IN
-         |            ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-         |          len(regexp_extract_all(text, $$$$[.,;:!?'"()\\[\\]{}-]$$$$)) AS n_punct
-         |        FROM documents)
-         |), cm AS MATERIALIZED (
-         |  SELECT a.source AS ia, b.source AS ib,
-         |         CASE WHEN abs(a.q - b.q) < 0.05 THEN 'tie'
-         |              WHEN a.q > b.q THEN 'a' ELSE 'b' END AS o
-         |  FROM q a JOIN q b ON b.doc_id = a.doc_id + 1
-         |  WHERE a.source <> b.source
-         |), pairs AS MATERIALIZED (
-         |  SELECT least(ia, ib) AS a, greatest(ia, ib) AS b,
-         |    CAST(sum(CASE WHEN o <> 'tie' AND ((o = 'a') = (ia < ib))
-         |             THEN 1 ELSE 0 END) AS BIGINT) AS wa,
-         |    CAST(sum(CASE WHEN o <> 'tie' AND ((o = 'a') <> (ia < ib))
-         |             THEN 1 ELSE 0 END) AS BIGINT) AS wb,
-         |    CAST(sum(CASE WHEN o = 'tie' THEN 1 ELSE 0 END) AS BIGINT) AS t
-         |  FROM cm GROUP BY 1, 2
-         |), items AS MATERIALIZED (
-         |  SELECT it.item, CAST(coalesce(cr.n_credit, 0) AS BIGINT) AS n_credit
-         |  FROM (SELECT DISTINCT item FROM
-         |          (SELECT ia AS item FROM cm UNION ALL SELECT ib FROM cm)) it
-         |  LEFT JOIN (
-         |    SELECT item, CAST(sum(c) AS BIGINT) AS n_credit FROM (
-         |      SELECT a AS item, wa + t AS c FROM pairs
-         |      UNION ALL SELECT b AS item, wb + t AS c FROM pairs)
-         |    GROUP BY 1) cr ON cr.item = it.item
-         |), dir AS MATERIALIZED (
-         |  SELECT a AS i, b AS j, wa AS wij, wb AS wji, t FROM pairs
-         |  UNION ALL SELECT b AS i, a AS j, wb AS wij, wa AS wji, t FROM pairs
-         |), census AS MATERIALIZED (
-         |  SELECT item, CAST(sum(w) AS BIGINT) AS n_wins,
-         |         CAST(sum(t) AS BIGINT) AS n_ties FROM (
-         |    SELECT a AS item, wa AS w, t FROM pairs
-         |    UNION ALL SELECT b AS item, wb AS w, t FROM pairs)
-         |  GROUP BY 1
-         |), kk AS MATERIALIZED (
-         |  SELECT CAST(count(*) AS DOUBLE) AS k FROM items
-         |), g0 AS MATERIALIZED (
-         |  SELECT item, 1.0 AS gamma FROM items
-         |)""".stripMargin
-    val body = (1 to iters).map(i => iterCte(s"g${i - 1}", s"g$i")).mkString
-    val tail =
-      s"""
-         |SELECT it.item, g$iters.gamma AS strength, c.n_wins, c.n_ties,
-         |       round(g$iters.gamma / (g$iters.gamma + $theta), 6) AS p_beat_avg
-         |FROM items it
-         |JOIN g$iters ON g$iters.item = it.item
-         |JOIN census c ON c.item = it.item
-         |ORDER BY it.item""".stripMargin
-    head + body + tail
-  }
-
-  // Calibration replay (r16): the same fit chain, then per-pair model
-  // vs empirical win rates with the absolute gap.
-  private def bradleyTerryCalibrationOracleSql(iters: Int): String = {
-    val fit = bradleyTerryOracleSql(iters)
-    val fitCtes = fit.substring(0, fit.indexOf("\nSELECT it.item"))
-    fitCtes +
-      s""", pv AS (
-         |  SELECT least(w, l) AS item_a, greatest(w, l) AS item_b,
-         |         CAST(sum(CASE WHEN w < l THEN 1 ELSE 0 END) AS BIGINT) AS wins_a,
-         |         CAST(count(*) AS BIGINT) AS n
-         |  FROM cmpx GROUP BY 1, 2
-         |)
-         |SELECT pv.item_a, pv.item_b, pv.n, pv.wins_a,
-         |  round(ga.gamma / (ga.gamma + gb.gamma), 6) AS p_model,
-         |  round(CAST(pv.wins_a AS DOUBLE) / CAST(pv.n AS DOUBLE), 6) AS p_empirical,
-         |  round(abs(ga.gamma / (ga.gamma + gb.gamma)
-         |            - CAST(pv.wins_a AS DOUBLE) / CAST(pv.n AS DOUBLE)), 6) AS abs_gap
-         |FROM pv
-         |JOIN g$iters ga ON ga.item = pv.item_a
-         |JOIN g$iters gb ON gb.item = pv.item_b
-         |ORDER BY pv.item_a, pv.item_b""".stripMargin
-  }
-
-  // Order-effect BT replay (r17): the ordered-pair census, then
-  // `iters` unrolled ALTERNATING sweeps — γ denominators from the
-  // previous (γ, θ), mean-1 normalize, θ from the NEW γ and previous
-  // θ (Hunter's alternation, matching the engine exactly).
-  private def bradleyTerryOrderOracleSql(iters: Int): String = {
-    def iterCte(gPrev: String, tPrev: String, i: Int): String =
-      s""", g${i}s AS (
-         |  SELECT item, CAST(coalesce(sum(t), 0) AS DOUBLE) AS s FROM (
-         |    SELECT p.f AS item,
-         |      CAST(round(CAST(p.n AS DOUBLE) * (SELECT theta FROM $tPrev)
-         |        / ((SELECT theta FROM $tPrev) * gf.gamma + gs.gamma), 6)
-         |        AS DECIMAL(28,6)) AS t
-         |    FROM op p
-         |    JOIN $gPrev gf ON gf.item = p.f
-         |    JOIN $gPrev gs ON gs.item = p.s
-         |    UNION ALL
-         |    SELECT p.s,
-         |      CAST(round(CAST(p.n AS DOUBLE)
-         |        / ((SELECT theta FROM $tPrev) * gf.gamma + gs.gamma), 6)
-         |        AS DECIMAL(28,6))
-         |    FROM op p
-         |    JOIN $gPrev gf ON gf.item = p.f
-         |    JOIN $gPrev gs ON gs.item = p.s
-         |  ) GROUP BY 1
-         |), g${i}u AS MATERIALIZED (
-         |  SELECT it.item, round(CAST(it.n_wins AS DOUBLE) / g${i}s.s, 6) AS gu
-         |  FROM items it JOIN g${i}s ON g${i}s.item = it.item
-         |), g$i AS MATERIALIZED (
-         |  SELECT u.item,
-         |         round(u.gu * (SELECT k FROM kk)
-         |               / (SELECT CAST(sum(CAST(gu AS DECIMAL(28,6))) AS DOUBLE)
-         |                  FROM g${i}u), 6) AS gamma
-         |  FROM g${i}u u
-         |), th$i AS MATERIALIZED (
-         |  SELECT round((SELECT CAST(wf AS DOUBLE) FROM wf1)
-         |    / (SELECT CAST(coalesce(sum(CAST(round(CAST(p.n AS DOUBLE) * gf.gamma
-         |         / ((SELECT theta FROM $tPrev) * gf.gamma + gs.gamma), 6)
-         |         AS DECIMAL(28,6))), 0) AS DOUBLE)
-         |       FROM op p
-         |       JOIN g$i gf ON gf.item = p.f
-         |       JOIN g$i gs ON gs.item = p.s), 6) AS theta
-         |)""".stripMargin
-    val head =
-      prefCmpCteSql +
-      """, op AS MATERIALIZED (
-        |  SELECT f, CASE WHEN f = w THEN l ELSE w END AS s,
-        |         CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN f = w THEN 1 ELSE 0 END) AS BIGINT) AS wf
-        |  FROM cmpx GROUP BY 1, 2
-        |), winsx AS (
-        |  SELECT w AS item, CAST(count(*) AS BIGINT) AS n_wins FROM cmpx GROUP BY 1
-        |), items AS MATERIALIZED (
-        |  SELECT it.item, CAST(coalesce(winsx.n_wins, 0) AS BIGINT) AS n_wins
-        |  FROM (SELECT DISTINCT item FROM
-        |          (SELECT w AS item FROM cmpx UNION ALL SELECT l FROM cmpx)) it
-        |  LEFT JOIN winsx ON winsx.item = it.item
-        |), ncmp AS (
-        |  SELECT item, CAST(sum(n) AS BIGINT) AS n_comparisons FROM (
-        |    SELECT f AS item, n FROM op UNION ALL SELECT s, n FROM op)
-        |  GROUP BY 1
-        |), wf1 AS (
-        |  SELECT CAST(coalesce(sum(wf), 0) AS BIGINT) AS wf FROM op
-        |), kk AS MATERIALIZED (
-        |  SELECT CAST(count(*) AS DOUBLE) AS k FROM items
-        |), g0 AS MATERIALIZED (
-        |  SELECT item, 1.0 AS gamma FROM items
-        |), th0 AS MATERIALIZED (
-        |  SELECT 1.0 AS theta
-        |)""".stripMargin
-    val body = (1 to iters)
-      .map(i => iterCte(s"g${i - 1}", s"th${i - 1}", i)).mkString
-    val tail =
-      s"""
-         |SELECT it.item, g$iters.gamma AS strength, it.n_wins,
-         |       nc.n_comparisons, (SELECT theta FROM th$iters) AS theta
-         |FROM items it
-         |JOIN g$iters ON g$iters.item = it.item
-         |JOIN ncmp nc ON nc.item = it.item
-         |ORDER BY it.item""".stripMargin
-    head + body + tail
-  }
-
-  // Fisher-information SE replay (r17): the same fit chain, then the
-  // per-item information fold (6dp terms, exact decimal sum) and the
-  // IEEE 1/sqrt assembly.
-  private def bradleyTerrySeOracleSql(iters: Int): String = {
-    val fit = bradleyTerryOracleSql(iters)
-    val fitCtes = fit.substring(0, fit.indexOf("\nSELECT it.item"))
-    fitCtes +
-      s""", info AS (
-         |  SELECT a.i AS item,
-         |    CAST(coalesce(sum(CAST(round(CAST(a.n AS DOUBLE)
-         |      * (gi.gamma / (gi.gamma + gj.gamma))
-         |      * (gj.gamma / (gi.gamma + gj.gamma)), 6) AS DECIMAL(28,6))), 0)
-         |      AS DOUBLE) AS fisher_info
-         |  FROM adj a
-         |  JOIN g$iters gi ON gi.item = a.i
-         |  JOIN g$iters gj ON gj.item = a.j
-         |  GROUP BY 1
-         |)
-         |SELECT it.item, g$iters.gamma AS strength, it.n_wins,
-         |       nc.n_comparisons, info.fisher_info,
-         |       CASE WHEN info.fisher_info > 0
-         |            THEN round(1.0 / sqrt(info.fisher_info), 6)
-         |       END AS se_log_strength
-         |FROM items it
-         |JOIN g$iters ON g$iters.item = it.item
-         |JOIN ncmp nc ON nc.item = it.item
-         |JOIN info ON info.item = it.item
-         |ORDER BY it.item""".stripMargin
-  }
-
-  // Per-judge QC replay (r17): the fit chain, then the three per-judge
-  // blocks — position census + chi-square, record-weighted calibration
-  // gap vs the pooled fit, Cohen's kappa vs the pooled pair majority.
-  private def judgeQcOracleSql(iters: Int): String = {
-    val fit = bradleyTerryOracleSql(iters)
-    val fitCtes = fit.substring(0, fit.indexOf("\nSELECT it.item"))
-    fitCtes +
-      s""", pos AS (
-         |  SELECT g, CAST(count(*) AS BIGINT) AS n,
-         |         CAST(sum(CASE WHEN w = f THEN 1 ELSE 0 END) AS BIGINT) AS fw
-         |  FROM cmpx GROUP BY 1
-         |), jp AS (
-         |  SELECT g, least(w, l) AS a, greatest(w, l) AS b,
-         |         CAST(sum(CASE WHEN w < l THEN 1 ELSE 0 END) AS BIGINT) AS wa,
-         |         CAST(count(*) AS BIGINT) AS jn
-         |  FROM cmpx GROUP BY 1, 2, 3
-         |), calib AS (
-         |  SELECT g,
-         |    round(CAST(sum(CAST(round(abs(ga.gamma / (ga.gamma + gb.gamma)
-         |        - CAST(wa AS DOUBLE) / CAST(jn AS DOUBLE)), 6)
-         |        AS DECIMAL(28,6)) * jn) AS DOUBLE)
-         |      / CAST(sum(jn) AS DOUBLE), 6) AS calib_gap
-         |  FROM jp
-         |  JOIN g$iters ga ON ga.item = jp.a
-         |  JOIN g$iters gb ON gb.item = jp.b
-         |  GROUP BY 1
-         |), maj AS (
-         |  SELECT a, b, (2 * pwa > pn) AS maj_a FROM (
-         |    SELECT least(w, l) AS a, greatest(w, l) AS b,
-         |           CAST(sum(CASE WHEN w < l THEN 1 ELSE 0 END) AS BIGINT) AS pwa,
-         |           CAST(count(*) AS BIGINT) AS pn
-         |    FROM cmpx GROUP BY 1, 2)
-         |  WHERE 2 * pwa <> pn
-         |), rec AS (
-         |  SELECT cmpx.g, (w < l) AS x, maj.maj_a
-         |  FROM cmpx
-         |  JOIN maj ON maj.a = least(w, l) AND maj.b = greatest(w, l)
-         |), kap AS (
-         |  SELECT g, CAST(count(*) AS BIGINT) AS n2,
-         |         CAST(sum(CASE WHEN x = maj_a THEN 1 ELSE 0 END) AS BIGINT) AS agree,
-         |         CAST(sum(CASE WHEN x THEN 1 ELSE 0 END) AS BIGINT) AS xa,
-         |         CAST(sum(CASE WHEN maj_a THEN 1 ELSE 0 END) AS BIGINT) AS ya
-         |  FROM rec GROUP BY 1
-         |)
-         |SELECT pos.g AS judge, pos.n,
-         |  round(CAST(fw AS DOUBLE) / CAST(n AS DOUBLE), 6) AS first_win_rate,
-         |  round(CAST((2 * fw - n) * (2 * fw - n) AS DOUBLE)
-         |        / CAST(n AS DOUBLE), 6) AS chi2,
-         |  (round(CAST((2 * fw - n) * (2 * fw - n) AS DOUBLE)
-         |         / CAST(n AS DOUBLE), 6) > 3.841) AS position_biased,
-         |  calib.calib_gap,
-         |  CASE WHEN CAST(xa * ya + (n2 - xa) * (n2 - ya) AS DOUBLE)
-         |            / (CAST(n2 AS DOUBLE) * CAST(n2 AS DOUBLE)) < 1.0
-         |       THEN round((CAST(agree AS DOUBLE) / CAST(n2 AS DOUBLE)
-         |                   - CAST(xa * ya + (n2 - xa) * (n2 - ya) AS DOUBLE)
-         |                     / (CAST(n2 AS DOUBLE) * CAST(n2 AS DOUBLE)))
-         |                  / (1.0 - CAST(xa * ya + (n2 - xa) * (n2 - ya) AS DOUBLE)
-         |                           / (CAST(n2 AS DOUBLE) * CAST(n2 AS DOUBLE))), 6)
-         |            + 0.0e0
-         |  END AS kappa_vs_pool
-         |FROM pos
-         |LEFT JOIN calib ON calib.g = pos.g
-         |LEFT JOIN kap ON kap.g = pos.g
-         |ORDER BY judge""".stripMargin
-  }
-
-  private def portableHllOverlapOracleSql: String = {
-    val aM2 = graft.operators.PortableHll.alphaM2(8)
-    s"""WITH h AS (
-       |  SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS hx
-       |  FROM events WHERE user_id IS NOT NULL
-       |), rr AS (
-       |  SELECT event_type,
-       |    CAST((strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-       |       + (strpos('0123456789abcdef', substr(hx, 2, 1)) - 1) AS BIGINT) AS reg,
-       |    CAST(list_sum(list_transform(range(13), i ->
-       |      (CAST(strpos('0123456789abcdef', substr(hx, CAST(i+3 AS INT), 1)) AS BIGINT) - 1)
-       |      * (CAST(1 AS BIGINT) << CAST(4*(12-i) AS INT)))) AS BIGINT) AS w
-       |  FROM h
-       |), regs AS (
-       |  SELECT event_type, reg,
-       |         max(CASE WHEN w = 0 THEN 53 ELSE 53 - length(bin(w)) END) AS rho
-       |  FROM rr GROUP BY 1, 2
-       |), singles AS (
-       |  SELECT event_type,
-       |         round($aM2 /
-       |               (CAST(np + (256 - present) * (CAST(1 AS BIGINT) << 53) AS DOUBLE)
-       |                / 9007199254740992.0), 4) AS e
-       |  FROM (SELECT event_type, CAST(count(*) AS BIGINT) AS present,
-       |               CAST(sum(CAST(1 AS BIGINT) << CAST(53 - rho AS INT)) AS BIGINT) AS np
-       |        FROM regs GROUP BY 1)
-       |), gp AS (
-       |  SELECT a.event_type AS ga, b.event_type AS gb
-       |  FROM (SELECT DISTINCT event_type FROM regs) a,
-       |       (SELECT DISTINCT event_type FROM regs) b
-       |  WHERE a.event_type < b.event_type
-       |), uregs AS (
-       |  SELECT ga, gb, reg, max(rho) AS rho FROM (
-       |    SELECT gp.ga, gp.gb, r.reg, r.rho
-       |    FROM gp JOIN regs r ON r.event_type = gp.ga
-       |    UNION ALL
-       |    SELECT gp.ga, gp.gb, r.reg, r.rho
-       |    FROM gp JOIN regs r ON r.event_type = gp.gb)
-       |  GROUP BY 1, 2, 3
-       |), uest AS (
-       |  SELECT ga, gb,
-       |         round($aM2 /
-       |               (CAST(np + (256 - present) * (CAST(1 AS BIGINT) << 53) AS DOUBLE)
-       |                / 9007199254740992.0), 4) AS union_distinct
-       |  FROM (SELECT ga, gb, CAST(count(*) AS BIGINT) AS present,
-       |               CAST(sum(CAST(1 AS BIGINT) << CAST(53 - rho AS INT)) AS BIGINT) AS np
-       |        FROM uregs GROUP BY 1, 2)
-       |)
-       |SELECT ga, gb, sa.e AS distinct_a, sb.e AS distinct_b, union_distinct,
-       |       greatest(0.0, round(sa.e + sb.e - union_distinct, 4)) + 0.0e0
-       |         AS intersect_distinct,
-       |       CASE WHEN union_distinct > 0
-       |            THEN least(1.0, round(greatest(0.0, round(sa.e + sb.e - union_distinct, 4))
-       |                       / union_distinct, 6))
-       |       END AS est_jaccard
-       |FROM uest
-       |JOIN singles sa ON sa.event_type = uest.ga
-       |JOIN singles sb ON sb.event_type = uest.gb
-       |ORDER BY ga, gb""".stripMargin
-  }
-
-  // The portable-MinHash signature CTE chain (shared by q_minhash_sig
-  // and q_minhash_pairs): distinct word 3-grams, ONE 52-bit md5 parse
-  // per gram (the base point), permutation i = the affine multiply-shift
-  // (A_i·x + B_i) mod 2^52 in 26-bit limbs — identical integer ops to
-  // Dedup.minHashSignaturesPortable, overflow-free in DuckDB's checked
-  // BIGINT lane (r15: was one md5 per (gram, perm), 16× the digests).
-  private def minhashSigCte: String =
-    """WITH toks AS (
-      |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-      |), grams AS (
-      |  SELECT DISTINCT doc_id, g FROM (
-      |    SELECT doc_id,
-      |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-      |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-      |    FROM toks)
-      |), h0 AS (
-      |  SELECT doc_id,
-      |         CAST(list_sum(list_transform(range(13), j ->
-      |           (CAST(strpos('0123456789abcdef',
-      |               substr(hh, CAST(j+1 AS INT), 1)) AS BIGINT) - 1)
-      |           * (CAST(1 AS BIGINT) << CAST(4*(12-j) AS INT)))) AS BIGINT) AS h
-      |  FROM (SELECT doc_id, md5(g) AS hh FROM grams) mg
-      |), hv AS (
-      |  SELECT doc_id, CAST(p.i AS INT) AS perm,
-      |         ((((h & 67108863) * (((2 * p.i + 1) * 25214903917) & 137438953471))
-      |             & 4503599627370495)
-      |          + (((h >> 26) * (((2 * p.i + 1) * 25214903917) & 137438953471))
-      |             & 67108863) * 67108864
-      |          + p.i * 2654435769) & 4503599627370495 AS hp
-      |  FROM h0, range(16) p(i)
-      |), sig AS (
-      |  SELECT doc_id AS id, perm, min(hp) AS sig FROM hv GROUP BY 1, 2
-      |)""".stripMargin
-
-  // The q_text_quality score replay (shared by the r14 ML-eval oracle
-  // family): per doc, the 4-gate heuristic score on the 4dp grid plus
-  // the (lang = 'en') label and the source group.
-  private def qualityScoredCte: String =
-    """WITH s AS (
-      |  SELECT doc_id, source, (lang = 'en') AS y,
-      |         length(text) AS n_chars,
-      |         len(regexp_extract_all(text, '\S+')) AS n_tok,
-      |         len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-      |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-      |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct
-      |  FROM documents
-      |), sc AS (
-      |  SELECT source, y,
-      |         round((
-      |           (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-      |           (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-      |                 THEN 1.0 ELSE 0.0 END) +
-      |           (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-      |                 THEN 1.0 ELSE 0.0 END) +
-      |           least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-      |         ) / 4.0, 4) AS score
-      |  FROM s
-      |)""".stripMargin
-
-  private def oracleSqlBase: Map[String, String] = Map(
-    "q_scan_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice,
-        |       CAST(l_shipdate AS DATE) AS ship_date
-        |FROM lineitem
-        |WHERE l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_null_predicate" ->
-      """SELECT event_id, user_id
-        |FROM (SELECT *, nullif(event_type, 'click') AS et FROM events)
-        |WHERE et IS NULL
-        |ORDER BY event_id""".stripMargin,
-
-    "q_fillna" ->
-      """SELECT coalesce(nullif(event_type, 'click'), 'unknown') AS et,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY et ORDER BY et""".stripMargin,
-
-    "q_temporal_derive" ->
-      """SELECT event_id,
-        |       CAST(year(ts) AS INT) AS y,
-        |       CAST(month(ts) AS INT) AS m,
-        |       CAST(hour(ts) AS INT) AS h,
-        |       CAST(dayofweek(ts) + 1 AS INT) AS dow,
-        |       CAST(CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END AS INT) AS is_weekend,
-        |       CAST(ts AS DATE) AS event_date
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_cast_conditional" ->
-      """SELECT event_id,
-        |       CAST(value > 100 AS INT) AS is_large,
-        |       CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END AS purchase_value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_agg_daily" ->
-      """SELECT CAST(o_orderdate AS DATE) AS order_date,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_value,
-        |       CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS DOUBLE)
-        |         / count(*) AS urgent_rate
-        |FROM orders GROUP BY order_date ORDER BY order_date""".stripMargin,
-
-    "q_agg_hourly" ->
-      """SELECT CAST(hour(ts) AS INT) AS event_hour,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(value) AS avg_value,
-        |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events GROUP BY event_hour ORDER BY event_hour""".stripMargin,
-
-    "q_window_velocity" ->
-      """SELECT event_id, user_id,
-        |       CAST(count(*) OVER w AS BIGINT) AS velocity_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |             ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_window_avg_dev" ->
-      """SELECT event_id, user_id,
-        |       value - CAST(sum(CAST(value AS DECIMAL(38,12))) OVER w AS DOUBLE)
-        |               / (count(value) OVER w) AS value_dev_24h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |             ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |             RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_window_distinct" ->
-      """SELECT event_id, user_id,
-        |       CAST(count(DISTINCT event_type) OVER w AS INT) AS type_diversity_6h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |             ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |             RANGE BETWEEN 21600 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsu FROM events
-        |), f AS (
-        |  SELECT event_id, user_id, tsu,
-        |         CASE WHEN tsu - lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu) > 1800
-        |              THEN 1 ELSE 0 END AS new_sess
-        |  FROM e
-        |)
-        |SELECT event_id, user_id,
-        |       CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY tsu
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-        |FROM f ORDER BY event_id""".stripMargin,
-
-    "q_session_stats" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsu FROM events
-        |), f AS (
-        |  SELECT user_id, tsu,
-        |         CASE WHEN tsu - lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu) > 1800
-        |              THEN 1 ELSE 0 END AS new_sess
-        |  FROM e
-        |), s AS (
-        |  SELECT user_id, tsu,
-        |         sum(new_sess) OVER (PARTITION BY user_id ORDER BY tsu
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-        |  FROM f
-        |)
-        |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(min(tsu) AS BIGINT) AS session_start,
-        |       CAST(max(tsu) AS BIGINT) AS session_end,
-        |       CAST(max(tsu) - min(tsu) AS BIGINT) AS duration_s
-        |FROM s GROUP BY 1, 2 ORDER BY user_id, session_idx""".stripMargin,
-
-    // The blocked windows' whole contract is plain-window identity: the
-    // oracles are the SAME SQL as their unblocked counterparts.
-    "q_window_blocked" ->
-      """SELECT event_id, user_id,
-        |       CAST(count(*) OVER w AS BIGINT) AS velocity_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |             ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_window_blocked_avg" ->
-      """SELECT event_id, user_id,
-        |       value - CAST(sum(CAST(value AS DECIMAL(38,12))) OVER w AS DOUBLE)
-        |               / (count(value) OVER w) AS value_dev_24h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |             ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |             RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_window_blocked_distinct" ->
-      """SELECT event_id, user_id,
-        |       CAST(count(DISTINCT event_type) OVER w AS INT) AS type_diversity_6h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |             ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |             RANGE BETWEEN 21600 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_features_blocked" ->
-      """SELECT event_id, user_id,
-        |       CAST(count(*) OVER w1 AS BIGINT) AS velocity_1h,
-        |       value - CAST(sum(CAST(value AS DECIMAL(38,12))) OVER w24 AS DOUBLE)
-        |               / (count(value) OVER w24) AS avg_diff_24h,
-        |       CAST(count(DISTINCT event_type) OVER w6 AS INT) AS merchant_diversity
-        |FROM events
-        |WINDOW w1 AS (PARTITION BY user_id
-        |              ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |              RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW),
-        |       w24 AS (PARTITION BY user_id
-        |              ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |              RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW),
-        |       w6 AS (PARTITION BY user_id
-        |              ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |              RANGE BETWEEN 21600 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_sort_global" ->
-      """SELECT event_id, event_type, value
-        |FROM events ORDER BY value DESC, event_id""".stripMargin,
-
-    "q_topk_limit" ->
-      """SELECT event_id, user_id, value
-        |FROM events ORDER BY value DESC, event_id LIMIT 100""".stripMargin,
-
-    "q_group_topk" ->
-      """SELECT o_custkey, CAST(rn AS INT) AS rnk, o_orderkey, o_totalprice AS totalprice
-        |FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY o_custkey
-        |                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders)
-        |WHERE rn <= 3 ORDER BY o_custkey, rnk""".stripMargin,
-
-    "q_quality_fused" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_quantity,
-        |       CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS BIGINT) AS quantity_range_violations,
-        |       CAST(sum(CASE WHEN l_returnflag NOT IN ('A', 'N', 'R') THEN 1 ELSE 0 END) AS BIGINT) AS returnflag_domain_violations,
-        |       CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS discount_range_violations
-        |FROM lineitem""".stripMargin,
-
-    "q_join_revenue" ->
-      """SELECT n_name,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |                (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |            AS DOUBLE) AS revenue,
-        |       CAST(count(*) AS BIGINT) AS n_items
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_join_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_distinct_agg" ->
-      """SELECT l_returnflag,
-        |       CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-        |       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_set_union" ->
-      """SELECT DISTINCT l_returnflag AS flag FROM lineitem
-        |UNION
-        |SELECT DISTINCT l_linestatus FROM lineitem
-        |ORDER BY flag""".stripMargin,
-
-    "q_set_except" ->
-      """SELECT l_returnflag AS flag FROM lineitem
-        |EXCEPT
-        |SELECT l_linestatus FROM lineitem
-        |ORDER BY flag""".stripMargin,
-
-    "q_set_intersect" ->
-      """SELECT c_custkey AS k FROM customer
-        |INTERSECT
-        |SELECT o_custkey FROM orders
-        |ORDER BY k""".stripMargin,
-
-    "q_date_arith" ->
-      """SELECT o_orderkey,
-        |       CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2000-01-01') AS INT) AS days_to_y2k,
-        |       CAST(o_orderdate AS DATE) + INTERVAL 30 DAY AS due_date,
-        |       CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS order_month,
-        |       last_day(CAST(o_orderdate AS DATE)) AS month_end
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_asof_join" ->
-      """SELECT event_id, user_id, o_orderkey, o_totalprice FROM (
-        |  SELECT e.event_id, e.user_id, o.o_orderkey, o.o_totalprice,
-        |         row_number() OVER (PARTITION BY e.event_id
-        |                            ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-        |  FROM events e
-        |  JOIN orders o ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts
-        |) WHERE rn = 1 ORDER BY event_id""".stripMargin,
-
-    "q_asof_forward" ->
-      """SELECT o_orderkey, o_custkey, event_id, value FROM (
-        |  SELECT o.o_orderkey, o.o_custkey, e.event_id, e.value,
-        |         row_number() OVER (PARTITION BY o.o_orderkey
-        |                            ORDER BY e.ts ASC, e.event_id ASC) AS rn
-        |  FROM orders o
-        |  JOIN events e ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        |) WHERE rn = 1 ORDER BY o_orderkey""".stripMargin,
-
-    // Full-recompute SQL: the incremental state merge must be
-    // bit-identical to aggregating all of history in one pass.
-    "q_agg_incremental" ->
-      """SELECT CAST(o_orderdate AS DATE) AS order_date,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_value,
-        |       CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS DOUBLE)
-        |         / count(*) AS urgent_rate
-        |FROM orders GROUP BY 1 ORDER BY order_date""".stripMargin,
-
-    "q_join_skewed" ->
-      """SELECT c_mktsegment,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_range_join" ->
-      """SELECT o.o_orderkey, l.l_orderkey, l.l_linenumber,
-        |       CAST(l.l_shipdate AS DATE) AS ship_date,
-        |       CAST(o.o_orderdate AS DATE) AS order_date
-        |FROM lineitem l JOIN orders o
-        |  ON l.l_shipdate >= o.o_orderdate
-        | AND l.l_shipdate <  o.o_orderdate + INTERVAL 7 DAY
-        |WHERE l.l_quantity = 50 AND o.o_totalprice > 490000
-        |ORDER BY o_orderkey, l_orderkey, l_linenumber""".stripMargin,
-
-    "q_range_overlap" ->
-      """WITH a AS (SELECT o_orderkey AS a_key, o_orderdate AS a_start,
-        |                  o_orderdate + INTERVAL 7 DAY AS a_end
-        |           FROM orders
-        |           WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 440000),
-        |     b AS (SELECT o_orderkey AS b_key, o_orderdate AS b_start,
-        |                  o_orderdate + INTERVAL 7 DAY AS b_end
-        |           FROM orders
-        |           WHERE o_orderstatus = 'F' AND o_totalprice > 470000)
-        |SELECT a_key, b_key,
-        |       CAST(a_start AS DATE) AS a_date, CAST(b_start AS DATE) AS b_date
-        |FROM a JOIN b ON a_start < b_end AND b_start < a_end
-        |ORDER BY a_key, b_key""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    "q_csv_roundtrip" ->
-      """SELECT event_type,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       epoch_us(CAST(min(ts) AS TIMESTAMP)) AS min_ts_us,
-        |       epoch_us(CAST(max(ts) AS TIMESTAMP)) AS max_ts_us,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_orc_roundtrip" ->
-      """SELECT c_mktsegment,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal,
-        |       CAST(count(DISTINCT c_nationkey) AS BIGINT) AS n_nations
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_json_roundtrip" ->
-      """SELECT event_type,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       epoch_us(CAST(min(ts) AS TIMESTAMP)) AS min_ts_us,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_jdbc_roundtrip" ->
-      """SELECT s_nationkey,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal,
-        |       CAST(min(s_suppkey) AS BIGINT) AS min_suppkey
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-
-    "q_dedup_exact_aggressive" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |         trim(regexp_replace(regexp_replace(regexp_replace(
-        |           translate(lower(text),
-        |             chr(8217)||chr(8216)||chr(8220)||chr(8221)||chr(8211)||
-        |             chr(8212)||chr(160)||chr(8203)||chr(8204)||chr(8205)||chr(65279),
-        |             chr(39)||chr(39)||chr(34)||chr(34)||'-'||'-'||' '),
-        |           '[\\x00-\\x08\\x0e-\\x1f\\x7f]', '', 'g'),
-        |           '[0-9]', '0', 'g'),
-        |           '\\s+', ' ', 'g')) AS t
-        |  FROM documents
-        |)
-        |SELECT md5(t) AS content_hash,
-        |       CAST(min(doc_id) AS BIGINT) AS keeper_id,
-        |       CAST(count(*) AS BIGINT) AS n_copies
-        |FROM n GROUP BY content_hash ORDER BY content_hash""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS content_hash,
-        |       CAST(min(doc_id) AS BIGINT) AS keeper_id,
-        |       CAST(count(*) AS BIGINT) AS n_copies
-        |FROM documents GROUP BY content_hash ORDER BY content_hash""".stripMargin,
-
-    "q_dedup_exact_typed" ->
-      """SELECT md5(text) AS content_hash,
-        |       CAST(min(doc_id) AS BIGINT) AS keeper_id,
-        |       CAST(count(*) AS BIGINT) AS n_copies
-        |FROM documents GROUP BY content_hash ORDER BY content_hash""".stripMargin,
-
-    "q_dedup_jaccard" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), grams AS (
-        |  SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT id_a, id_b, CAST(n_common AS BIGINT) AS n_common,
-        |       n_common / (sa.sz + sb.sz - n_common) AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE n_common / (sa.sz + sb.sz - n_common) >= 0.2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // LSH-quality replay: the shared minhash CTE plus the exhaustive
-    // jaccard truth (both at 0.5), FULL JOIN, precision/recall counts.
-    // Operating-curve replay: the q_lsh_quality truth and estimate
-    // arithmetic, swept over every banding config via a config cross
-    // join; band index = perm // (perms/bands).
-    "q_lsh_curve" -> (minhashSigCte +
-      """, sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), exactp AS (
-        |  SELECT id_a, id_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE n_common / (sa.sz + sb.sz - n_common) >= 0.5
-        |), cfg AS (
-        |  SELECT unnest([1, 2, 4, 8, 16]) AS cfg_bands
-        |), bk AS (
-        |  SELECT s.id, c.cfg_bands,
-        |         CAST(s.perm // (16 // c.cfg_bands) AS INT) AS band,
-        |         md5(string_agg(CAST(s.sig AS VARCHAR), ',' ORDER BY s.perm)) AS bkey
-        |  FROM sig s, cfg c
-        |  GROUP BY 1, 2, 3
-        |), cand AS (
-        |  SELECT DISTINCT a.cfg_bands, a.id AS id_a, b.id AS id_b
-        |  FROM bk a JOIN bk b
-        |    ON a.cfg_bands = b.cfg_bands AND a.band = b.band
-        |   AND a.bkey = b.bkey AND a.id < b.id
-        |), cp AS (
-        |  SELECT DISTINCT id_a, id_b FROM cand
-        |), est AS (
-        |  SELECT c.id_a, c.id_b,
-        |         CAST(sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_match
-        |  FROM cp c
-        |  JOIN sig sa ON sa.id = c.id_a
-        |  JOIN sig sb ON sb.id = c.id_b AND sb.perm = sa.perm
-        |  GROUP BY 1, 2
-        |), lsh AS (
-        |  SELECT cand.cfg_bands, cand.id_a, cand.id_b
-        |  FROM cand JOIN est ON est.id_a = cand.id_a AND est.id_b = cand.id_b
-        |  WHERE round(CAST(n_match AS DOUBLE) / 16, 6) >= 0.5
-        |), ex AS (
-        |  SELECT c.cfg_bands, e.id_a, e.id_b FROM exactp e, cfg c
-        |), j AS (
-        |  SELECT coalesce(ex.cfg_bands, lsh.cfg_bands) AS bands,
-        |         (ex.id_a IS NOT NULL) AS e,
-        |         (lsh.id_a IS NOT NULL) AS l
-        |  FROM ex FULL OUTER JOIN lsh
-        |    ON ex.cfg_bands = lsh.cfg_bands
-        |   AND ex.id_a = lsh.id_a AND ex.id_b = lsh.id_b
-        |)
-        |SELECT bands, CAST(16 AS INT) AS perms,
-        |       CAST(16 // bands AS INT) AS rows_per_band,
-        |       CAST(sum(CASE WHEN e THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
-        |       CAST(sum(CASE WHEN l THEN 1 ELSE 0 END) AS BIGINT) AS n_lsh,
-        |       CAST(sum(CASE WHEN e AND l THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
-        |       CASE WHEN sum(CASE WHEN l THEN 1 ELSE 0 END) > 0
-        |            THEN round(
-        |              CAST(sum(CASE WHEN e AND l THEN 1 ELSE 0 END) AS DOUBLE)
-        |              / CAST(sum(CASE WHEN l THEN 1 ELSE 0 END) AS DOUBLE), 6)
-        |       END AS lsh_precision,
-        |       CASE WHEN sum(CASE WHEN e THEN 1 ELSE 0 END) > 0
-        |            THEN round(
-        |              CAST(sum(CASE WHEN e AND l THEN 1 ELSE 0 END) AS DOUBLE)
-        |              / CAST(sum(CASE WHEN e THEN 1 ELSE 0 END) AS DOUBLE), 6)
-        |       END AS lsh_recall
-        |FROM j GROUP BY 1 ORDER BY bands""".stripMargin),
-
-    "q_lsh_quality" -> (minhashSigCte +
-      """, sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), exactp AS (
-        |  SELECT id_a, id_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE n_common / (sa.sz + sb.sz - n_common) >= 0.5
-        |), bk AS (
-        |  SELECT id, CAST(perm // 4 AS INT) AS band,
-        |         md5(string_agg(CAST(sig AS VARCHAR), ',' ORDER BY perm)) AS bkey
-        |  FROM sig GROUP BY 1, 2
-        |), cand AS (
-        |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM bk a JOIN bk b
-        |    ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id
-        |), est AS (
-        |  SELECT c.id_a, c.id_b,
-        |         CAST(sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_match
-        |  FROM cand c
-        |  JOIN sig sa ON sa.id = c.id_a
-        |  JOIN sig sb ON sb.id = c.id_b AND sb.perm = sa.perm
-        |  GROUP BY 1, 2
-        |), lshp AS (
-        |  SELECT id_a, id_b FROM est
-        |  WHERE round(CAST(n_match AS DOUBLE) / 16, 6) >= 0.5
-        |), f AS (
-        |  SELECT e.id_a AS ea, l.id_a AS la
-        |  FROM exactp e FULL JOIN lshp l
-        |    ON e.id_a = l.id_a AND e.id_b = l.id_b
-        |)
-        |SELECT CAST(count(ea) AS BIGINT) AS n_exact,
-        |       CAST(count(la) AS BIGINT) AS n_lsh,
-        |       CAST(count(CASE WHEN ea IS NOT NULL AND la IS NOT NULL
-        |                       THEN 1 END) AS BIGINT) AS n_both,
-        |       CASE WHEN count(la) > 0 THEN
-        |         round(CAST(count(CASE WHEN ea IS NOT NULL AND la IS NOT NULL
-        |                              THEN 1 END) AS DOUBLE)
-        |               / CAST(count(la) AS DOUBLE), 6) END AS lsh_precision,
-        |       CASE WHEN count(ea) > 0 THEN
-        |         round(CAST(count(CASE WHEN ea IS NOT NULL AND la IS NOT NULL
-        |                              THEN 1 END) AS DOUBLE)
-        |               / CAST(count(ea) AS DOUBLE), 6) END AS lsh_recall
-        |FROM f""".stripMargin),
-
-    // Portable-MinHash signature replay: the shared sig CTE, long form.
-    "q_minhash_sig" -> (minhashSigCte +
-      """
-        |SELECT id, perm, sig FROM sig ORDER BY id, perm""".stripMargin),
-
-    // Portable-MinHash LSH pairs replay: band keys (md5 over the
-    // perm-ordered sig tuple), exact band-tuple candidacy, matching-perm
-    // estimate — the full LSH pipeline in SQL.
-    "q_minhash_pairs" -> (minhashSigCte +
-      """, bk AS (
-        |  SELECT id, CAST(perm // 4 AS INT) AS band,
-        |         md5(string_agg(CAST(sig AS VARCHAR), ',' ORDER BY perm)) AS bkey
-        |  FROM sig GROUP BY 1, 2
-        |), cand AS (
-        |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM bk a JOIN bk b
-        |    ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id
-        |), est AS (
-        |  SELECT c.id_a, c.id_b,
-        |         CAST(sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_match
-        |  FROM cand c
-        |  JOIN sig sa ON sa.id = c.id_a
-        |  JOIN sig sb ON sb.id = c.id_b AND sb.perm = sa.perm
-        |  GROUP BY 1, 2
-        |)
-        |SELECT id_a, id_b, n_match,
-        |       round(CAST(n_match AS DOUBLE) / 16, 6) AS est_jaccard
-        |FROM est
-        |WHERE round(CAST(n_match AS DOUBLE) / 16, 6) >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin),
-
-    // Containment replay: the pairs scaffold at the loose 0.2 gate,
-    // exact distinct-gram counts, and the j → intersection → one-sided
-    // ratio assembly in the engine's operation order.
-    "q_minhash_containment" -> (minhashSigCte +
-      """, bk AS (
-        |  SELECT id, CAST(perm // 4 AS INT) AS band,
-        |         md5(string_agg(CAST(sig AS VARCHAR), ',' ORDER BY perm)) AS bkey
-        |  FROM sig GROUP BY 1, 2
-        |), cand AS (
-        |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM bk a JOIN bk b
-        |    ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id
-        |), est AS (
-        |  SELECT c.id_a, c.id_b,
-        |         CAST(sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_match
-        |  FROM cand c
-        |  JOIN sig sa ON sa.id = c.id_a
-        |  JOIN sig sb ON sb.id = c.id_b AND sb.perm = sa.perm
-        |  GROUP BY 1, 2
-        |), szs AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS sz FROM grams GROUP BY 1
-        |), kept AS (
-        |  SELECT e.id_a, e.id_b, sa.sz AS sz_a, sb.sz AS sz_b, e.n_match,
-        |         round(CAST(e.n_match AS DOUBLE) / 16, 6) AS est_jaccard
-        |  FROM est e
-        |  JOIN szs sa ON sa.doc_id = e.id_a
-        |  JOIN szs sb ON sb.doc_id = e.id_b
-        |  WHERE round(CAST(e.n_match AS DOUBLE) / 16, 6) >= 0.2
-        |)
-        |SELECT id_a, id_b, sz_a, sz_b, n_match, est_jaccard,
-        |       round(est_jaccard * CAST(sz_a + sz_b AS DOUBLE)
-        |             / (1.0 + est_jaccard) / CAST(sz_a AS DOUBLE), 6)
-        |         AS containment_a,
-        |       round(est_jaccard * CAST(sz_a + sz_b AS DOUBLE)
-        |             / (1.0 + est_jaccard) / CAST(sz_b AS DOUBLE), 6)
-        |         AS containment_b
-        |FROM kept ORDER BY id_a, id_b""".stripMargin),
-
-    // Collection-level portable MinHash replay: the affine chain at
-    // SOURCE grain (min over the source's distinct grams per perm = the
-    // engine's element-wise-min aggregate over per-doc signatures),
-    // then pairwise matching-perm estimates between sources.
-    "q_source_minhash" ->
-      """WITH toks AS (
-        |  SELECT source, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), grams AS (
-        |  SELECT DISTINCT source, g FROM (
-        |    SELECT source,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), h0 AS (
-        |  SELECT source,
-        |         CAST(list_sum(list_transform(range(13), j ->
-        |           (CAST(strpos('0123456789abcdef',
-        |               substr(hh, CAST(j+1 AS INT), 1)) AS BIGINT) - 1)
-        |           * (CAST(1 AS BIGINT) << CAST(4*(12-j) AS INT)))) AS BIGINT) AS h
-        |  FROM (SELECT source, md5(g) AS hh FROM grams) mg
-        |), hv AS (
-        |  SELECT source, CAST(p.i AS INT) AS perm,
-        |         ((((h & 67108863) * (((2 * p.i + 1) * 25214903917) & 137438953471))
-        |             & 4503599627370495)
-        |          + (((h >> 26) * (((2 * p.i + 1) * 25214903917) & 137438953471))
-        |             & 67108863) * 67108864
-        |          + p.i * 2654435769) & 4503599627370495 AS hp
-        |  FROM h0, range(16) p(i)
-        |), sig AS (
-        |  SELECT source, perm, min(hp) AS sig FROM hv GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT a.source AS group_a, b.source AS group_b,
-        |         CAST(sum(CASE WHEN a.sig = b.sig THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_match
-        |  FROM sig a JOIN sig b ON a.perm = b.perm AND a.source < b.source
-        |  GROUP BY 1, 2
-        |)
-        |SELECT group_a, group_b, n_match,
-        |       round(CAST(n_match AS DOUBLE) / 16, 6) AS est_jaccard
-        |FROM pairs ORDER BY group_a, group_b""".stripMargin,
-
-    "q_dedup_clusters" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), grams AS (
-        |  SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT id_a, id_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE n_common / (sa.sz + sb.sz - n_common) >= 0.2
-        |), edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM pairs
-        |  UNION SELECT id_b, id_a FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.id = e.b
-        |)
-        |SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-
-    // Replays duplicatedSpans exactly: every 30-char window start, grams
-    // occurring at >1 corpus site, per-doc gaps-and-islands merge
-    // (break when the gap between site starts exceeds 30).
-    "q_dedup_substring" ->
-      """WITH pos AS (
-        |  SELECT doc_id, text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |  FROM documents WHERE len(text) >= 30
-        |), grams AS (
-        |  SELECT doc_id, p, substr(text, CAST(p AS INT), 30) AS g FROM pos
-        |), dup AS (
-        |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p FROM grams gr JOIN dup USING (g)
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 30 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |)
-        |SELECT doc_id,
-        |       CAST(min(p) AS BIGINT) AS span_start,
-        |       CAST(max(p) + 29 AS BIGINT) AS span_end,
-        |       CAST(max(p) + 29 - min(p) + 1 AS BIGINT) AS span_len
-        |FROM isl GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-
-    "q_dedup_substring_stats" ->
-      """WITH pos AS (
-        |  SELECT doc_id, text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |  FROM documents WHERE len(text) >= 30
-        |), grams AS (
-        |  SELECT doc_id, p, substr(text, CAST(p AS INT), 30) AS g FROM pos
-        |), dup AS (
-        |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p FROM grams gr JOIN dup USING (g)
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 30 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |), spans AS (
-        |  SELECT doc_id, min(p) AS s, max(p) + 29 AS e
-        |  FROM isl GROUP BY doc_id, island
-        |), perdoc AS (
-        |  SELECT doc_id, count(*) AS n_spans, sum(e - s + 1) AS dup_chars
-        |  FROM spans GROUP BY doc_id
-        |)
-        |SELECT d.source,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(count(pd.n_spans) AS BIGINT) AS docs_with_dups,
-        |       CAST(coalesce(sum(pd.n_spans), 0) AS BIGINT) AS n_spans,
-        |       CAST(coalesce(sum(pd.dup_chars), 0) AS BIGINT) AS dup_chars,
-        |       CAST(sum(len(d.text)) AS BIGINT) AS total_chars,
-        |       round(CAST(coalesce(sum(pd.dup_chars), 0) AS DOUBLE)
-        |             / sum(len(d.text)), 6) AS dup_frac
-        |FROM documents d LEFT JOIN perdoc pd USING (doc_id)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-
-    "q_dedup_substring_tokens" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), pos AS (
-        |  SELECT doc_id, t, unnest(range(1, greatest(len(t) - 5, 0) + 1)) AS p
-        |  FROM toks
-        |), grams AS (
-        |  SELECT doc_id, p,
-        |         array_to_string(t[CAST(p AS INT):CAST(p + 5 AS INT)], ' ') AS g
-        |  FROM pos
-        |), dup AS (
-        |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p FROM grams gr JOIN dup USING (g)
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 6 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |)
-        |SELECT doc_id,
-        |       CAST(min(p) AS BIGINT) AS span_start,
-        |       CAST(max(p) + 5 AS BIGINT) AS span_end,
-        |       CAST(max(p) + 5 - min(p) + 1 AS BIGINT) AS span_len
-        |FROM isl GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-
-    // Token restriction law replayed directly: dup counts over the WHOLE
-    // corpus in token space, island merge over odd-doc sites only.
-    "q_dedup_substring_tokens_incr" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), pos AS (
-        |  SELECT doc_id, t, unnest(range(1, greatest(len(t) - 5, 0) + 1)) AS p
-        |  FROM toks
-        |), grams AS (
-        |  SELECT doc_id, p,
-        |         array_to_string(t[CAST(p AS INT):CAST(p + 5 AS INT)], ' ') AS g
-        |  FROM pos
-        |), dup AS (
-        |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p FROM grams gr JOIN dup USING (g)
-        |  WHERE gr.doc_id % 2 = 1
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 6 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |)
-        |SELECT doc_id,
-        |       CAST(min(p) AS BIGINT) AS span_start,
-        |       CAST(max(p) + 5 AS BIGINT) AS span_end,
-        |       CAST(max(p) + 5 - min(p) + 1 AS BIGINT) AS span_len
-        |FROM isl GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-
-    // Token strip: kept tokens = those outside every duplicated span
-    // (span union == dup-window union by the merge rule); span-bearing
-    // docs rebuild space-joined, clean docs stay byte-identical.
-    "q_dedup_substring_tokens_strip" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), pos AS (
-        |  SELECT doc_id, t, unnest(range(1, greatest(len(t) - 5, 0) + 1)) AS p
-        |  FROM toks
-        |), grams AS (
-        |  SELECT doc_id, p,
-        |         array_to_string(t[CAST(p AS INT):CAST(p + 5 AS INT)], ' ') AS g
-        |  FROM pos
-        |), dup AS (
-        |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p FROM grams gr JOIN dup USING (g)
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 6 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |), spans AS (
-        |  SELECT doc_id, min(p) AS s, max(p) + 5 AS e
-        |  FROM isl GROUP BY doc_id, island
-        |), allpos AS (
-        |  SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM toks
-        |), kept AS (
-        |  SELECT a.doc_id, a.t[CAST(a.i AS INT)] AS tok, a.i
-        |  FROM allpos a
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM spans sp
-        |    WHERE sp.doc_id = a.doc_id AND a.i BETWEEN sp.s AND sp.e)
-        |), clean AS (
-        |  SELECT doc_id, coalesce(string_agg(tok, ' ' ORDER BY i), '') AS tc
-        |  FROM kept GROUP BY doc_id
-        |), spanned AS (
-        |  SELECT DISTINCT doc_id FROM spans
-        |)
-        |SELECT d.doc_id,
-        |       CAST(len(CASE WHEN sp.doc_id IS NOT NULL
-        |                     THEN coalesce(c.tc, '') ELSE d.text END) AS BIGINT)
-        |         AS clean_len,
-        |       md5(CASE WHEN sp.doc_id IS NOT NULL
-        |                THEN coalesce(c.tc, '') ELSE d.text END) AS clean_hash
-        |FROM documents d
-        |LEFT JOIN spanned sp USING (doc_id)
-        |LEFT JOIN clean c USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // The incremental form's restriction law, replayed directly: dup
-    // counts over the WHOLE corpus, island merge over odd-doc sites only.
-    "q_dedup_substring_incr" ->
-      """WITH pos AS (
-        |  SELECT doc_id, text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |  FROM documents WHERE len(text) >= 30
-        |), grams AS (
-        |  SELECT doc_id, p, substr(text, CAST(p AS INT), 30) AS g FROM pos
-        |), dup AS (
-        |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p FROM grams gr JOIN dup USING (g)
-        |  WHERE gr.doc_id % 2 = 1
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 30 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |)
-        |SELECT doc_id,
-        |       CAST(min(p) AS BIGINT) AS span_start,
-        |       CAST(max(p) + 29 AS BIGINT) AS span_end,
-        |       CAST(max(p) + 29 - min(p) + 1 AS BIGINT) AS span_len
-        |FROM isl GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-
-    // Rebuilds the stripped text in SQL (kept gaps between spans,
-    // string_agg in offset order) and pins md5(clean_text) — the oracle
-    // checks the reconstruction, not just the removed-char count.
-    "q_dedup_substring_strip" ->
-      """WITH pos AS (
-        |  SELECT doc_id, text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |  FROM documents WHERE len(text) >= 30
-        |), grams AS (
-        |  SELECT doc_id, p, substr(text, CAST(p AS INT), 30) AS g FROM pos
-        |), dup AS (
-        |  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p FROM grams gr JOIN dup USING (g)
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 30 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |), spans AS (
-        |  SELECT doc_id, min(p) AS s, max(p) + 29 AS e
-        |  FROM isl GROUP BY doc_id, island
-        |), seg AS (
-        |  SELECT doc_id,
-        |         coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0) + 1 AS ks,
-        |         s - 1 AS ke
-        |  FROM spans
-        |  UNION ALL
-        |  SELECT sp.doc_id, max(sp.e) + 1 AS ks,
-        |         CAST(max(len(d.text)) AS BIGINT) AS ke
-        |  FROM spans sp JOIN documents d USING (doc_id) GROUP BY sp.doc_id
-        |), clean AS (
-        |  SELECT s.doc_id,
-        |         coalesce(string_agg(
-        |           CASE WHEN s.ke >= s.ks
-        |                THEN substr(d.text, CAST(s.ks AS INT),
-        |                            CAST(s.ke - s.ks + 1 AS INT)) END,
-        |           '' ORDER BY s.ks), '') AS tc
-        |  FROM seg s JOIN documents d USING (doc_id)
-        |  GROUP BY s.doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(len(coalesce(c.tc, d.text)) AS BIGINT) AS clean_len,
-        |       md5(coalesce(c.tc, d.text)) AS clean_hash
-        |FROM documents d LEFT JOIN clean c USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_dedup_keep" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), grams AS (
-        |  SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT id_a, id_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE n_common / (sa.sz + sb.sz - n_common) >= 0.2
-        |), edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM pairs
-        |  UNION SELECT id_b, id_a FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.id = e.b
-        |)
-        |SELECT d.doc_id, d.source
-        |FROM documents d
-        |JOIN (SELECT id, min(r) AS cl FROM reach GROUP BY id) c ON c.id = d.doc_id
-        |WHERE c.cl = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Keep-best exact: synthesized variants + rank by (len DESC, id).
-    "q_dedup_keep_best" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, upper(text) || '  ' FROM documents
-        |  WHERE doc_id % 3 = 0
-        |), h AS (
-        |  SELECT doc_id,
-        |         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-        |         length(text) AS sc
-        |  FROM all_docs
-        |), r AS (
-        |  SELECT doc_id, sc,
-        |         row_number() OVER (PARTITION BY fp ORDER BY sc DESC, doc_id) AS rn
-        |  FROM h
-        |)
-        |SELECT doc_id, CAST(sc AS BIGINT) AS len FROM r WHERE rn = 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // Keep-best over near-dup clusters: q_dedup_keep's recursive-CTE
-    // clusters, keeper re-ranked by (length DESC, id).
-    "q_dedup_keep_best_cluster" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), grams AS (
-        |  SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT id_a, id_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE n_common / (sa.sz + sb.sz - n_common) >= 0.2
-        |), edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM pairs
-        |  UNION SELECT id_b, id_a FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.id = e.b
-        |), members AS (
-        |  SELECT c.cl, d.doc_id, length(d.text) AS sc
-        |  FROM documents d
-        |  JOIN (SELECT id, min(r) AS cl FROM reach GROUP BY id) c ON c.id = d.doc_id
-        |), keepers AS (
-        |  SELECT cl, doc_id, sc,
-        |         row_number() OVER (PARTITION BY cl ORDER BY sc DESC, doc_id) AS rn
-        |  FROM members
-        |)
-        |SELECT doc_id, CAST(sc AS BIGINT) AS len FROM keepers WHERE rn = 1
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_text_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id, length(text) AS n_chars, regexp_extract_all(text, '\S+') AS t
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       CAST(n_chars AS INT) AS n_chars,
-        |       CAST(len(t) AS INT) AS n_tokens,
-        |       CAST(len(list_filter(t, x -> lower(x) IN
-        |         ('the','a','of','and','to','in','is','it','that','for'))) AS INT) AS n_stopwords,
-        |       CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t) AS avg_token_len,
-        |       CAST(len(list_filter(t, x -> lower(x) IN
-        |         ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE) / len(t) AS stopword_ratio
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "q_text_bpe_tokens" ->
-      """SELECT doc_id,
-        |       CAST(len(regexp_extract_all(text, '\S+')) AS INT) AS n_ws_tokens,
-        |       CAST(len(regexp_extract_all(text,
-        |         '''(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+')) AS INT) AS n_bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_text_repetition" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), g AS (
-        |  SELECT doc_id,
-        |         list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                        i -> array_to_string(t[i:i+2], ' ')) AS gs
-        |  FROM toks
-        |)
-        |SELECT doc_id,
-        |       CAST(len(gs) AS INT) AS n_grams,
-        |       CAST(len(list_distinct(gs)) AS INT) AS n_distinct_grams,
-        |       round(CASE WHEN len(gs) > 0
-        |                  THEN 1.0 - CAST(len(list_distinct(gs)) AS DOUBLE) / len(gs)
-        |                  ELSE 0.0 END, 6) AS rep_ratio
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "q_pack_shards" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(regexp_extract_all(text, '\S+')) AS INT) AS n_tokens
-        |  FROM documents
-        |)
-        |SELECT doc_id, source, n_tokens,
-        |       CAST(floor((sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens)
-        |             / 2048.0) AS INT) AS shard_idx
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    // Full sketch replay: identical md5 buckets, identical counters,
-    // identical min-over-rows estimates.
-    "q_cms_topk" ->
-      """WITH dims AS (SELECT unnest(range(4)) AS i),
-        |hx AS (
-        |  SELECT e.user_id, dims.i,
-        |         CAST(list_sum(list_transform(range(15),
-        |           j -> (CAST(strpos('0123456789abcdef',
-        |                  substr(md5(CAST(dims.i AS VARCHAR) || ':' || CAST(e.user_id AS VARCHAR)),
-        |                         CAST(j+1 AS INT), 1)) AS BIGINT) - 1)
-        |                * (CAST(1 AS BIGINT) << CAST(4*(14-j) AS INT)))) AS BIGINT) % 512 AS bucket
-        |  FROM events e, dims
-        |), counters AS (
-        |  SELECT i, bucket, count(*) AS c FROM hx GROUP BY i, bucket
-        |), exact AS (
-        |  SELECT user_id, count(*) AS exact_n FROM events GROUP BY user_id
-        |  ORDER BY exact_n DESC, user_id LIMIT 20
-        |), keyh AS (
-        |  SELECT k.user_id, k.exact_n, dims.i,
-        |         CAST(list_sum(list_transform(range(15),
-        |           j -> (CAST(strpos('0123456789abcdef',
-        |                  substr(md5(CAST(dims.i AS VARCHAR) || ':' || CAST(k.user_id AS VARCHAR)),
-        |                         CAST(j+1 AS INT), 1)) AS BIGINT) - 1)
-        |                * (CAST(1 AS BIGINT) << CAST(4*(14-j) AS INT)))) AS BIGINT) % 512 AS bucket
-        |  FROM exact k, dims
-        |)
-        |SELECT k.user_id, CAST(k.exact_n AS BIGINT) AS exact_n,
-        |       CAST(min(coalesce(c.c, 0)) AS BIGINT) AS cms_count
-        |FROM keyh k LEFT JOIN counters c ON k.i = c.i AND k.bucket = c.bucket
-        |GROUP BY k.user_id, k.exact_n
-        |ORDER BY exact_n DESC, user_id""".stripMargin,
-
-    "q_pack_offsets" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(regexp_extract_all(text, '\S+')) AS INT) AS n_tokens
-        |  FROM documents
-        |), p AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS prior
-        |  FROM t
-        |)
-        |SELECT doc_id, source, n_tokens,
-        |       CAST(floor(prior / 2048.0) AS INT) AS shard_idx,
-        |       CAST(prior - CAST(floor(prior / 2048.0) AS BIGINT) * 2048 AS INT) AS start_offset
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    // BFD replay, step for step: per deterministic part, docs in
-    // (-n, id) order drive a recursive CTE whose state is the bins
-    // list (index, remaining, last-touch step). Each step picks the
-    // smallest remaining >= n (ties -> max last-touch, which IS the
-    // engine's TreeMap LIFO order: every create/update re-pushes the
-    // bin), new bins open when nothing fits, oversize docs take
-    // dedicated overflow bins. Offsets fall out as capacity - remaining.
-    "q_pack_bins_det" ->
-      """WITH RECURSIVE docs AS (
-        |  SELECT ((doc_id % 4) + 4) % 4 AS part, doc_id AS id, n_chars AS n,
-        |         row_number() OVER (PARTITION BY ((doc_id % 4) + 4) % 4
-        |                            ORDER BY n_chars DESC, doc_id) AS rk
-        |  FROM documents WHERE n_chars > 0
-        |), pack AS (
-        |  SELECT part, CAST(0 AS BIGINT) AS rk,
-        |         CAST(NULL AS BIGINT) AS id, CAST(NULL AS BIGINT) AS n,
-        |         CAST(NULL AS BIGINT) AS bin_idx, CAST(NULL AS BIGINT) AS bin_off,
-        |         CAST(NULL AS BOOLEAN) AS is_overflow,
-        |         CAST([] AS STRUCT(i BIGINT, rem BIGINT, seq BIGINT)[]) AS bins
-        |  FROM (SELECT DISTINCT part FROM docs)
-        |  UNION ALL
-        |  SELECT d.part, d.rk, d.id, d.n, st.bi, st.bo, st.ov, st.nb
-        |  FROM pack p
-        |  JOIN docs d ON d.part = p.part AND d.rk = p.rk + 1,
-        |  LATERAL (
-        |    SELECT
-        |      CASE WHEN d.n > 2048 OR x.brem IS NULL
-        |           THEN CAST(len(p.bins) AS BIGINT) ELSE y.cidx END AS bi,
-        |      CASE WHEN d.n > 2048 OR x.brem IS NULL
-        |           THEN CAST(0 AS BIGINT) ELSE 2048 - x.brem END AS bo,
-        |      (d.n > 2048) AS ov,
-        |      CASE WHEN d.n > 2048 THEN list_append(p.bins,
-        |             {'i': CAST(len(p.bins) AS BIGINT), 'rem': CAST(-1 AS BIGINT),
-        |              'seq': CAST(d.rk AS BIGINT)})
-        |           WHEN x.brem IS NULL THEN list_append(p.bins,
-        |             {'i': CAST(len(p.bins) AS BIGINT), 'rem': CAST(2048 - d.n AS BIGINT),
-        |              'seq': CAST(d.rk AS BIGINT)})
-        |           ELSE list_transform(p.bins, b -> CASE WHEN b.i = y.cidx
-        |                  THEN {'i': b.i, 'rem': x.brem - d.n, 'seq': CAST(d.rk AS BIGINT)}
-        |                  ELSE b END)
-        |      END AS nb
-        |    FROM (
-        |      SELECT brem, list_max(list_transform(
-        |               list_filter(p.bins, b -> b.rem >= d.n AND b.rem = brem),
-        |               b -> b.seq)) AS bseq
-        |      FROM (SELECT list_min(list_transform(
-        |              list_filter(p.bins, b -> b.rem >= d.n), b -> b.rem)) AS brem)
-        |    ) x, LATERAL (
-        |      SELECT list_filter(p.bins, b -> b.rem = x.brem AND b.seq = x.bseq)[1].i AS cidx
-        |    ) y
-        |  ) st
-        |)
-        |SELECT id, n AS n_tokens,
-        |       CAST(part * 4294967296 + bin_idx AS BIGINT) AS bin_id,
-        |       CAST(bin_off AS BIGINT) AS bin_off, is_overflow
-        |FROM pack WHERE rk > 0 ORDER BY id""".stripMargin,
-
-    // Per-pair covariance replay, decimal-exact: explode with
-    // ordinality (DuckDB has no WITH ORDINALITY — zip unnest with
-    // generate_subscripts in one SELECT list instead), components
-    // quantized to the 6dp grid as DECIMAL(18,6), self-join on vec_id
-    // (upper triangle), exact decimal moment sums cast to double once,
-    // cov in the same fixed scalar parenthesization as the engine.
-    "q_emb_covariance" ->
-      """WITH x AS (
-        |  SELECT vec_id,
-        |         CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS i,
-        |         CAST(round(CAST(unnest(embedding) AS DOUBLE), 6) AS DECIMAL(18,6)) AS x
-        |  FROM embeddings
-        |), p AS (
-        |  SELECT a.i AS i, b.i AS j,
-        |         CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(a.x) AS DOUBLE) AS sx,
-        |         CAST(sum(b.x) AS DOUBLE) AS sy,
-        |         CAST(sum(a.x * b.x) AS DOUBLE) AS sxy
-        |  FROM x a JOIN x b USING (vec_id)
-        |  WHERE a.i <= b.i
-        |  GROUP BY a.i, b.i
-        |)
-        |SELECT i, j, round(sxy / n - (sx / n) * (sy / n), 6) + 0.0e0 AS cov
-        |FROM p ORDER BY i, j""".stripMargin,
-
-    // URL synthesis (2-hex md5 pick), host regex, registered-domain
-    // label heuristic, then the 13-hex sample-key rank window capped
-    // at 30 per domain — all replayed.
-    // Canonical-URL replay: the md5-variant messy-URL synthesis, then
-    // the normalization chain step for step in RE2 syntax ('g' where
-    // Spark's regexp_replace is global by default, \1 replacement refs).
-    "q_url_canonical" ->
-      """WITH v AS (
-        |  SELECT doc_id,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(doc_id AS VARCHAR) || 'cu'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(doc_id AS VARCHAR) || 'cu'), 2, 1)) - 1)) % 6 AS var
-        |  FROM documents
-        |), u AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN var < 3 THEN 'HTTPS://' ELSE 'https://' END)
-        |    || (['EN.Wikipedia.ORG','news.bbc.co.uk','Blogs.Example.COM'])[
-        |         CAST(var % 3 + 1 AS INT)]
-        |    || (CASE WHEN var = 0 THEN ':443' ELSE '' END)
-        |    || '/Path/' || CAST(doc_id AS VARCHAR)
-        |    || (CASE WHEN var = 1 THEN '/' ELSE '' END)
-        |    || (CASE WHEN var <= 1 THEN '?utm_source=feed&id=' ELSE '?id=' END)
-        |    || CAST(doc_id AS VARCHAR)
-        |    || (CASE WHEN var = 2 THEN '&utm_campaign=x&ref=home' ELSE '' END)
-        |    || (CASE WHEN var >= 4 THEN '#section-2' ELSE '' END) AS url
-        |  FROM v
-        |), c1 AS (
-        |  SELECT doc_id, url, regexp_replace(url, '#.*', '', 'g') AS x FROM u
-        |), c2 AS (
-        |  SELECT doc_id, url,
-        |         CASE WHEN regexp_extract(x,
-        |                '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1) = '' THEN x
-        |         ELSE
-        |           lower(regexp_extract(x, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1))
-        |           || regexp_extract(x, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(.*)', 1)
-        |         END AS x
-        |  FROM c1
-        |), c3 AS (
-        |  SELECT doc_id, url,
-        |         regexp_replace(regexp_replace(x,
-        |           '^(https://[^/:?#]+):443(/|\?|$)', '\1\2'),
-        |           '^(http://[^/:?#]+):80(/|\?|$)', '\1\2') AS x
-        |  FROM c2
-        |), c4 AS (
-        |  SELECT doc_id, url,
-        |         regexp_replace(x,
-        |           '&(utm_[a-zA-Z]+|fbclid|gclid|ref)=[^&#]*', '', 'g') AS x
-        |  FROM c3
-        |), c5 AS (
-        |  SELECT doc_id, url,
-        |         regexp_replace(regexp_replace(x,
-        |           '\?(utm_[a-zA-Z]+|fbclid|gclid|ref)=[^&#]*&', '?', 'g'),
-        |           '\?(utm_[a-zA-Z]+|fbclid|gclid|ref)=[^&#]*$', '', 'g') AS x
-        |  FROM c4
-        |)
-        |SELECT doc_id, url, rtrim(x, '/') AS canon
-        |FROM c5 ORDER BY doc_id""".stripMargin,
-
-    // CCNet web-dedup replay (r16): messy-URL synthesis keyed on the
-    // doc_id % 400 fetch target, the full canonicalization chain, exact
-    // collapse to the min-id keeper per canonical URL, the registered-
-    // domain label heuristic, then the portable-MinHash sig/band/
-    // estimate chain (the q_minhash_pairs arithmetic) with the domain
-    // folded into the band join — dropping the higher id of every pair
-    // at est >= 0.5.
-    "q_dedup_url" ->
-      """WITH v AS (
-        |  SELECT doc_id, text, doc_id % 400 AS u,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(doc_id AS VARCHAR) || 'du'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(doc_id AS VARCHAR) || 'du'), 2, 1)) - 1)) % 6 AS var
-        |  FROM documents
-        |), uu AS (
-        |  SELECT doc_id, text,
-        |    (CASE WHEN var < 3 THEN 'HTTPS://' ELSE 'https://' END)
-        |    || (['EN.Wikipedia.ORG','news.bbc.co.uk','Blogs.Example.COM'])[
-        |         CAST(u % 3 + 1 AS INT)]
-        |    || (CASE WHEN var = 0 THEN ':443' ELSE '' END)
-        |    || '/p/' || CAST(u AS VARCHAR)
-        |    || (CASE WHEN var = 1 THEN '/' ELSE '' END)
-        |    || (CASE WHEN var <= 1 THEN '?utm_source=feed&ref=home' ELSE '' END)
-        |    || (CASE WHEN var >= 4 THEN '#sec' ELSE '' END) AS url
-        |  FROM v
-        |), c1 AS (
-        |  SELECT doc_id, text, regexp_replace(url, '#.*', '', 'g') AS x FROM uu
-        |), c2 AS (
-        |  SELECT doc_id, text,
-        |         CASE WHEN regexp_extract(x,
-        |                '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1) = '' THEN x
-        |         ELSE
-        |           lower(regexp_extract(x, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1))
-        |           || regexp_extract(x, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(.*)', 1)
-        |         END AS x
-        |  FROM c1
-        |), c3 AS (
-        |  SELECT doc_id, text,
-        |         regexp_replace(regexp_replace(x,
-        |           '^(https://[^/:?#]+):443(/|\?|$)', '\1\2'),
-        |           '^(http://[^/:?#]+):80(/|\?|$)', '\1\2') AS x
-        |  FROM c2
-        |), c4 AS (
-        |  SELECT doc_id, text,
-        |         regexp_replace(x,
-        |           '&(utm_[a-zA-Z]+|fbclid|gclid|ref)=[^&#]*', '', 'g') AS x
-        |  FROM c3
-        |), c5 AS (
-        |  SELECT doc_id, text,
-        |         regexp_replace(regexp_replace(x,
-        |           '\?(utm_[a-zA-Z]+|fbclid|gclid|ref)=[^&#]*&', '?', 'g'),
-        |           '\?(utm_[a-zA-Z]+|fbclid|gclid|ref)=[^&#]*$', '', 'g') AS x
-        |  FROM c4
-        |), ca AS (
-        |  SELECT doc_id, text, rtrim(x, '/') AS canon FROM c5
-        |), grp AS (
-        |  SELECT canon, min(doc_id) AS kid,
-        |         CAST(count(*) AS BIGINT) AS n_url_dupes
-        |  FROM ca GROUP BY 1
-        |), dm AS (
-        |  SELECT k.doc_id, k.text, k.canon, k.n_url_dupes,
-        |    CASE WHEN len(string_split(k.host, '.')) <= 2 THEN k.host
-        |         WHEN string_split(k.host, '.')[len(string_split(k.host, '.')) - 1]
-        |                IN ('co','com','net','org','gov','ac','edu')
-        |              AND length(string_split(k.host, '.')[len(string_split(k.host, '.'))]) = 2
-        |           THEN array_to_string(string_split(k.host, '.')[
-        |                  len(string_split(k.host, '.')) - 2
-        |                  : len(string_split(k.host, '.'))], '.')
-        |         ELSE array_to_string(string_split(k.host, '.')[
-        |                  len(string_split(k.host, '.')) - 1
-        |                  : len(string_split(k.host, '.'))], '.')
-        |    END AS domain
-        |  FROM (
-        |    SELECT ca.doc_id, ca.text, ca.canon, g.n_url_dupes,
-        |           lower(regexp_extract(ca.canon,
-        |             '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1)) AS host
-        |    FROM ca JOIN grp g ON g.kid = ca.doc_id AND g.canon = ca.canon) k
-        |), toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM dm
-        |), grams AS (
-        |  SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), h0 AS (
-        |  SELECT doc_id,
-        |         CAST(list_sum(list_transform(range(13), j ->
-        |           (CAST(strpos('0123456789abcdef',
-        |               substr(hh, CAST(j+1 AS INT), 1)) AS BIGINT) - 1)
-        |           * (CAST(1 AS BIGINT) << CAST(4*(12-j) AS INT)))) AS BIGINT) AS h
-        |  FROM (SELECT doc_id, md5(g) AS hh FROM grams) mg
-        |), hv AS (
-        |  SELECT doc_id, CAST(p.i AS INT) AS perm,
-        |         ((((h & 67108863) * (((2 * p.i + 1) * 25214903917) & 137438953471))
-        |             & 4503599627370495)
-        |          + (((h >> 26) * (((2 * p.i + 1) * 25214903917) & 137438953471))
-        |             & 67108863) * 67108864
-        |          + p.i * 2654435769) & 4503599627370495 AS hp
-        |  FROM h0, range(16) p(i)
-        |), sig AS (
-        |  SELECT doc_id AS id, perm, min(hp) AS sig FROM hv GROUP BY 1, 2
-        |), bk AS (
-        |  SELECT id, CAST(perm // 4 AS INT) AS band,
-        |         md5(string_agg(CAST(sig AS VARCHAR), ',' ORDER BY perm)) AS bkey
-        |  FROM sig GROUP BY 1, 2
-        |), bkd AS (
-        |  SELECT bk.id, bk.band, bk.bkey, dm.domain
-        |  FROM bk JOIN dm ON dm.doc_id = bk.id
-        |), cand AS (
-        |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM bkd a JOIN bkd b
-        |    ON a.domain = b.domain AND a.band = b.band AND a.bkey = b.bkey
-        |   AND a.id < b.id
-        |), est AS (
-        |  SELECT c.id_a, c.id_b,
-        |         CAST(sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_match
-        |  FROM cand c
-        |  JOIN sig sa ON sa.id = c.id_a
-        |  JOIN sig sb ON sb.id = c.id_b AND sb.perm = sa.perm
-        |  GROUP BY 1, 2
-        |), dropb AS (
-        |  SELECT DISTINCT id_b FROM est
-        |  WHERE round(CAST(n_match AS DOUBLE) / 16, 6) >= 0.5
-        |)
-        |SELECT dm.doc_id, dm.canon, dm.domain, dm.n_url_dupes
-        |FROM dm LEFT JOIN dropb ON dropb.id_b = dm.doc_id
-        |WHERE dropb.id_b IS NULL
-        |ORDER BY dm.doc_id""".stripMargin,
-
-    "q_url_domain_cap" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    'https://' ||
-        |    (['en.wikipedia.org','news.bbc.co.uk','blogs.example.com',
-        |      'www.gov.uk','cdn.a.co.jp','example.net'])[
-        |      CAST(((strpos('0123456789abcdef',
-        |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 1, 1)) - 1) * 16
-        |          + (strpos('0123456789abcdef',
-        |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 2, 1)) - 1)) % 6 + 1 AS INT)
-        |    ] || '/p/' || CAST(doc_id AS VARCHAR) AS url
-        |  FROM documents
-        |), h AS (
-        |  SELECT doc_id,
-        |         lower(regexp_extract(url,
-        |           '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1)) AS host
-        |  FROM u
-        |), dm AS (
-        |  SELECT doc_id, host,
-        |    CASE WHEN len(string_split(host, '.')) <= 2 THEN host
-        |         WHEN string_split(host, '.')[len(string_split(host, '.')) - 1]
-        |                IN ('co','com','net','org','gov','ac','edu')
-        |              AND length(string_split(host, '.')[len(string_split(host, '.'))]) = 2
-        |           THEN array_to_string(string_split(host, '.')[
-        |                  len(string_split(host, '.')) - 2 : len(string_split(host, '.'))], '.')
-        |         ELSE array_to_string(string_split(host, '.')[
-        |                  len(string_split(host, '.')) - 1 : len(string_split(host, '.'))], '.')
-        |    END AS domain
-        |  FROM h
-        |), keyed AS (
-        |  SELECT doc_id, host, domain,
-        |    CAST(list_sum(list_transform(range(13), i ->
-        |      (CAST(strpos('0123456789abcdef',
-        |          substr(md5(CAST(doc_id AS VARCHAR) || 'dc'), CAST(i+1 AS INT), 1)) AS BIGINT) - 1)
-        |      * (CAST(1 AS BIGINT) << CAST(4*(12-i) AS INT)))) AS BIGINT) AS h52
-        |  FROM dm
-        |), ranked AS (
-        |  SELECT doc_id, host, domain,
-        |         row_number() OVER (PARTITION BY domain ORDER BY h52, doc_id) AS rn
-        |  FROM keyed
-        |)
-        |SELECT doc_id, host, domain FROM ranked WHERE rn <= 30
-        |ORDER BY doc_id""".stripMargin,
-
-    // PSL registered-domain replay: the md5 host pick, then a
-    // hand-derived host -> domain mapping worked independently from
-    // the public-suffix rules (exception beats wildcard beats longest
-    // match beats the implicit TLD default).
-    "q_url_domain_psl" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    (['news.bbc.co.uk','www.school.pvt.k12.ma.us',
-        |      'sub.city.kawasaki.jp','bar.foo.kawasaki.jp',
-        |      'shop.www.ck','alice.github.io',
-        |      'deep.sub.example.com','district.k12.ca.us'])[
-        |      CAST(((strpos('0123456789abcdef',
-        |               substr(md5(CAST(doc_id AS VARCHAR) || 'p'), 1, 1)) - 1) * 16
-        |          + (strpos('0123456789abcdef',
-        |               substr(md5(CAST(doc_id AS VARCHAR) || 'p'), 2, 1)) - 1)) % 8 + 1 AS INT)
-        |    ] AS host
-        |  FROM documents
-        |)
-        |SELECT h.doc_id, h.host, m.domain
-        |FROM h
-        |JOIN (VALUES
-        |  ('news.bbc.co.uk',           'bbc.co.uk'),
-        |  ('www.school.pvt.k12.ma.us', 'school.pvt.k12.ma.us'),
-        |  ('sub.city.kawasaki.jp',     'city.kawasaki.jp'),
-        |  ('bar.foo.kawasaki.jp',      'bar.foo.kawasaki.jp'),
-        |  ('shop.www.ck',              'www.ck'),
-        |  ('alice.github.io',          'alice.github.io'),
-        |  ('deep.sub.example.com',     'example.com'),
-        |  ('district.k12.ca.us',       'district.k12.ca.us')
-        |) m(host, domain) ON m.host = h.host
-        |ORDER BY h.doc_id""".stripMargin,
-
-    // Concat-and-chunk replay: global ordered cumsum window, spans via
-    // range() over the crossed sequence indices, integer division.
-    "q_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, n,
-        |         CAST(sum(n) OVER (ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cend
-        |  FROM t WHERE n > 0
-        |), s AS (
-        |  SELECT doc_id, n, cend, cend - n AS cstart FROM c
-        |)
-        |SELECT doc_id,
-        |       CAST(u.s AS BIGINT) AS seq_idx,
-        |       CAST(greatest(0, u.s * 64 - cstart) AS BIGINT) AS start_tok,
-        |       CAST(least(n, (u.s + 1) * 64 - cstart) AS BIGINT) AS end_tok,
-        |       CAST(greatest(0, cstart - u.s * 64) AS BIGINT) AS seq_off
-        |FROM s, unnest(range(cstart // 64, (cend - 1) // 64 + 1)) AS u(s)
-        |ORDER BY doc_id, seq_idx""".stripMargin,
-
-    // Quality replay (q_text_quality's expression) + md5-prefix draw
-    // expanded to an integer, compared against floor(quality * 2^32).
-    "q_quality_sample" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         length(text) AS n_chars,
-        |         len(regexp_extract_all(text, '\S+')) AS n_tok,
-        |         len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct
-        |  FROM documents
-        |), q AS (
-        |  SELECT doc_id,
-        |         round((
-        |           (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |           (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-        |                 THEN 1.0 ELSE 0.0 END) +
-        |           (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |                 THEN 1.0 ELSE 0.0 END) +
-        |           least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-        |         ) / 4.0, 4) AS quality
-        |  FROM s
-        |), h AS (
-        |  SELECT doc_id, quality,
-        |         CAST(list_sum(list_transform(range(8),
-        |           j -> (CAST(strpos('0123456789abcdef',
-        |                  substr(md5(CAST(doc_id AS VARCHAR) || 'qw'), CAST(j+1 AS INT), 1)) AS BIGINT) - 1)
-        |                * (CAST(1 AS BIGINT) << CAST(4*(7-j) AS INT)))) AS BIGINT) AS draw
-        |  FROM q
-        |)
-        |SELECT doc_id, quality FROM h
-        |WHERE draw < CAST(floor(quality * 4294967296.0) AS BIGINT)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_mix_sample" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE substring(md5(CAST(doc_id AS VARCHAR) || 'mix'), 1, 8) <
-        |      CASE source WHEN 'src0' THEN 'g'
-        |                  WHEN 'src1' THEN '80000000'
-        |                  WHEN 'src2' THEN '80000000'
-        |                  ELSE '40000000' END
-        |ORDER BY doc_id""".stripMargin,
-
-    // Replays epochMixSample exactly: same per-source sums, same
-    // f = least(cap, budget/t), same %08x fractional threshold against
-    // the md5 prefix, same 0-based epoch expansion via generate_series.
-    "q_mix_temperature" ->
-      """WITH per AS (
-        |  SELECT source, CAST(sum(n_chars) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY source
-        |), norm AS (
-        |  SELECT sum(pow(CAST(n_tokens AS DOUBLE), 0.5)) AS z FROM per
-        |)
-        |SELECT source, n_tokens,
-        |       CAST(floor(1000000.0 * pow(CAST(n_tokens AS DOUBLE), 0.5)
-        |                  / (SELECT z FROM norm)) AS BIGINT) AS budget_tokens
-        |FROM per ORDER BY source""".stripMargin,
-
-    "q_mix_epochs" ->
-      """WITH stats AS (
-        |  SELECT source, CAST(sum(n_chars) AS DOUBLE) AS t
-        |  FROM documents GROUP BY source
-        |), fac AS (
-        |  SELECT source,
-        |         CAST(floor(f) AS INT) AS whole,
-        |         printf('%08x', CAST(floor((f - floor(f)) * 4294967296.0) AS BIGINT)) AS thresh
-        |  FROM (
-        |    -- source list pinned in WHERE, not via a NULL-able CASE:
-        |    -- DuckDB's least() IGNORES nulls (least(3.0, NULL) = 3.0),
-        |    -- which would hand every absent source the full epoch cap.
-        |    SELECT source,
-        |           least(3.0, CAST(CASE source WHEN 'src0' THEN 20000
-        |                                       WHEN 'src1' THEN 1000000
-        |                                       WHEN 'src2' THEN 4000 END AS DOUBLE) / t) AS f
-        |    FROM stats
-        |    WHERE t > 0 AND source IN ('src0', 'src1', 'src2')
-        |  )
-        |), expanded AS (
-        |  SELECT d.doc_id, d.source,
-        |         whole + CASE WHEN substring(md5(CAST(d.doc_id AS VARCHAR) || 'ep'), 1, 8)
-        |                           < thresh THEN 1 ELSE 0 END AS n
-        |  FROM documents d JOIN fac USING (source)
-        |)
-        |SELECT doc_id, source, epoch FROM (
-        |  SELECT doc_id, source,
-        |         CAST(unnest(generate_series(0, n - 1)) AS INT) AS epoch
-        |  FROM expanded WHERE n >= 1
-        |)
-        |ORDER BY doc_id, epoch""".stripMargin,
-
-    "q_sample_quotas" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY substr(md5(CAST(doc_id AS VARCHAR) || 'qt'), 1, 13),
-        |                    doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= CASE source WHEN 'src0' THEN 15
-        |                        WHEN 'src1' THEN 5
-        |                        WHEN 'src2' THEN 40
-        |                        ELSE 0 END
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_sample_exact_stratified" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY substr(md5(CAST(doc_id AS VARCHAR) || 'st'), 1, 13),
-        |                    doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 10 ORDER BY doc_id""".stripMargin,
-
-    "q_exact_sample" ->
-      """SELECT doc_id, text, lang, source, n_chars FROM (
-        |  SELECT doc_id, text, lang, source, n_chars
-        |  FROM documents
-        |  ORDER BY substr(md5(CAST(doc_id AS VARCHAR) || 'xs'), 1, 13), doc_id
-        |  LIMIT 150
-        |) ORDER BY doc_id""".stripMargin,
-
-    // Replays the Efraimidis-Spirakis key exactly: h52 = numeric parse
-    // of the first 13 md5 hex chars (the engine-portable 52-bit
-    // uniform), key = -ln((h52+1)/2^52)/weight, k smallest win, id
-    // breaks boundary ties.
-    "q_sample_weighted" ->
-      """WITH keyed AS (
-        |  SELECT *,
-        |    CAST(list_sum(list_transform(range(13), i ->
-        |      (CAST(strpos('0123456789abcdef',
-        |          substr(md5(CAST(doc_id AS VARCHAR) || 'ws'), CAST(i+1 AS INT), 1)) AS BIGINT) - 1)
-        |      * (CAST(1 AS BIGINT) << CAST(4*(12-i) AS INT)))) AS BIGINT) AS h52
-        |  FROM documents WHERE n_chars > 0
-        |)
-        |SELECT doc_id, text, lang, source, n_chars FROM (
-        |  SELECT doc_id, text, lang, source, n_chars
-        |  FROM keyed
-        |  ORDER BY -ln((CAST(h52 AS DOUBLE) + 1) / 4503599627370496.0) / n_chars, doc_id
-        |  LIMIT 150
-        |) ORDER BY doc_id""".stripMargin,
-
-    "q_sample_weighted_stratified" ->
-      """WITH keyed AS (
-        |  SELECT *,
-        |    CAST(list_sum(list_transform(range(13), i ->
-        |      (CAST(strpos('0123456789abcdef',
-        |          substr(md5(CAST(doc_id AS VARCHAR) || 'wst'), CAST(i+1 AS INT), 1)) AS BIGINT) - 1)
-        |      * (CAST(1 AS BIGINT) << CAST(4*(12-i) AS INT)))) AS BIGINT) AS h52
-        |  FROM documents WHERE n_chars > 0
-        |), ranked AS (
-        |  SELECT doc_id, source,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY -ln((CAST(h52 AS DOUBLE) + 1) / 4503599627370496.0) / n_chars,
-        |                    doc_id) AS rn
-        |  FROM keyed
-        |)
-        |SELECT doc_id, source FROM ranked WHERE rn <= 10
-        |ORDER BY doc_id""".stripMargin,
-
-    // DSIR: rebuild both hashed-gram censuses (uni+bi grams, 60-bit md5
-    // parse % 1024), the dense add-one-smoothed log-ratio table, and
-    // fold each doc's occurrences in ascending bucket order (list ORDER
-    // BY b -> sequential list_sum matches Spark's sorted-array fold).
-    "q_dsir_weights" ->
-      """WITH tk AS (
-        |  SELECT doc_id, lang, regexp_extract_all(text, '\S+') AS ts FROM documents
-        |), th AS (
-        |  SELECT doc_id, lang,
-        |    list_transform(ts, t ->
-        |      CAST(list_sum(list_transform(range(15), i ->
-        |        (CAST(strpos('0123456789abcdef',
-        |            substr(md5(t), CAST(i+1 AS INT), 1)) AS BIGINT) - 1)
-        |        * (CAST(1 AS BIGINT) << CAST(4*(14-i) AS INT)))) AS BIGINT)) AS hs
-        |  FROM tk
-        |), occ AS (
-        |  SELECT th.doc_id, th.lang, CAST(g.h % 1024 AS INT) AS b
-        |  FROM th, unnest(list_concat(
-        |         th.hs,
-        |         list_transform(range(greatest(len(th.hs) - 1, 0)), i ->
-        |           xor(((th.hs[CAST(i+1 AS INT)] & 8796093022207) << 17)
-        |               | (th.hs[CAST(i+1 AS INT)] >> 43),
-        |               th.hs[CAST(i+2 AS INT)])))) AS g(h)
-        |), tcnt AS (
-        |  SELECT b, count(*) AS c FROM occ WHERE lang = 'en' GROUP BY b
-        |), rcnt AS (
-        |  SELECT b, count(*) AS c FROM occ GROUP BY b
-        |), tot AS (
-        |  SELECT (SELECT count(*) FROM occ WHERE lang = 'en') AS tt,
-        |         (SELECT count(*) FROM occ) AS rt
-        |), lr AS (
-        |  SELECT CAST(u.b AS INT) AS b,
-        |         (ln(coalesce(t.c, 0) + 1.0) - ln(CAST(tot.tt AS DOUBLE) + 1024.0))
-        |         - (ln(coalesce(r.c, 0) + 1.0) - ln(CAST(tot.rt AS DOUBLE) + 1024.0)) AS v
-        |  FROM range(1024) u(b)
-        |  LEFT JOIN tcnt t ON t.b = u.b
-        |  LEFT JOIN rcnt r ON r.b = u.b
-        |  CROSS JOIN tot
-        |), scored AS (
-        |  SELECT o.doc_id, list_sum(list(lr.v ORDER BY o.b)) AS lw
-        |  FROM occ o JOIN lr ON lr.b = o.b
-        |  GROUP BY o.doc_id
-        |)
-        |SELECT d.doc_id, round(coalesce(s.lw, 0.0), 6) + 0.0e0 AS log_weight
-        |FROM documents d LEFT JOIN scored s USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // DSIR resample: the same weight computation feeding the log-space
-    // ES race — ORDER BY ln(-ln((h52+1)/2^52)) - log_weight, id LIMIT k.
-    "q_dsir_sample" ->
-      """WITH tk AS (
-        |  SELECT doc_id, lang, regexp_extract_all(text, '\S+') AS ts FROM documents
-        |), th AS (
-        |  SELECT doc_id, lang,
-        |    list_transform(ts, t ->
-        |      CAST(list_sum(list_transform(range(15), i ->
-        |        (CAST(strpos('0123456789abcdef',
-        |            substr(md5(t), CAST(i+1 AS INT), 1)) AS BIGINT) - 1)
-        |        * (CAST(1 AS BIGINT) << CAST(4*(14-i) AS INT)))) AS BIGINT)) AS hs
-        |  FROM tk
-        |), occ AS (
-        |  SELECT th.doc_id, th.lang, CAST(g.h % 1024 AS INT) AS b
-        |  FROM th, unnest(list_concat(
-        |         th.hs,
-        |         list_transform(range(greatest(len(th.hs) - 1, 0)), i ->
-        |           xor(((th.hs[CAST(i+1 AS INT)] & 8796093022207) << 17)
-        |               | (th.hs[CAST(i+1 AS INT)] >> 43),
-        |               th.hs[CAST(i+2 AS INT)])))) AS g(h)
-        |), tcnt AS (
-        |  SELECT b, count(*) AS c FROM occ WHERE lang = 'en' GROUP BY b
-        |), rcnt AS (
-        |  SELECT b, count(*) AS c FROM occ GROUP BY b
-        |), tot AS (
-        |  SELECT (SELECT count(*) FROM occ WHERE lang = 'en') AS tt,
-        |         (SELECT count(*) FROM occ) AS rt
-        |), lr AS (
-        |  SELECT CAST(u.b AS INT) AS b,
-        |         (ln(coalesce(t.c, 0) + 1.0) - ln(CAST(tot.tt AS DOUBLE) + 1024.0))
-        |         - (ln(coalesce(r.c, 0) + 1.0) - ln(CAST(tot.rt AS DOUBLE) + 1024.0)) AS v
-        |  FROM range(1024) u(b)
-        |  LEFT JOIN tcnt t ON t.b = u.b
-        |  LEFT JOIN rcnt r ON r.b = u.b
-        |  CROSS JOIN tot
-        |), scored AS (
-        |  SELECT o.doc_id, list_sum(list(lr.v ORDER BY o.b)) AS lw
-        |  FROM occ o JOIN lr ON lr.b = o.b
-        |  GROUP BY o.doc_id
-        |), keyed AS (
-        |  SELECT d.doc_id, d.lang, d.source, coalesce(s.lw, 0.0) AS lw,
-        |    CAST(list_sum(list_transform(range(13), i ->
-        |      (CAST(strpos('0123456789abcdef',
-        |          substr(md5(CAST(d.doc_id AS VARCHAR) || 'dsir'), CAST(i+1 AS INT), 1)) AS BIGINT) - 1)
-        |      * (CAST(1 AS BIGINT) << CAST(4*(12-i) AS INT)))) AS BIGINT) AS h52
-        |  FROM documents d LEFT JOIN scored s USING (doc_id)
-        |)
-        |SELECT doc_id, lang, source FROM (
-        |  SELECT doc_id, lang, source
-        |  FROM keyed
-        |  ORDER BY ln(-ln((CAST(h52 AS DOUBLE) + 1) / 4503599627370496.0)) - lw, doc_id
-        |  LIMIT 120
-        |) ORDER BY doc_id""".stripMargin,
-
-    "q_pack_manifest" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(regexp_extract_all(text, '\S+')) AS INT) AS n_tokens
-        |  FROM documents
-        |), p AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         CAST(floor((sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens)
-        |               / 2048.0) AS INT) AS shard_idx
-        |  FROM t
-        |)
-        |SELECT source, shard_idx,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-        |       min(doc_id) AS first_id, max(doc_id) AS last_id
-        |FROM p GROUP BY source, shard_idx
-        |ORDER BY source, shard_idx""".stripMargin,
-
-    "q_anomaly_robust_z" ->
-      """WITH med AS (
-        |  SELECT event_type, median(value) AS m FROM events GROUP BY 1
-        |), mad AS (
-        |  SELECT e.event_type, median(abs(e.value - md.m)) AS d
-        |  FROM events e JOIN med md USING (event_type) GROUP BY 1
-        |)
-        |SELECT e.event_id, e.event_type, e.value,
-        |       round(md.m, 6) + 0.0e0 AS med, round(dd.d, 6) AS mad,
-        |       CASE WHEN dd.d > 0
-        |            THEN round((e.value - md.m) / (1.4826 * dd.d), 6) + 0.0e0 END AS robust_z,
-        |       coalesce(CASE WHEN dd.d > 0
-        |            THEN abs(round((e.value - md.m) / (1.4826 * dd.d), 6)) > 3.5 END,
-        |          false) AS is_outlier
-        |FROM events e
-        |JOIN med md USING (event_type)
-        |JOIN mad dd USING (event_type)
-        |ORDER BY e.event_id""".stripMargin,
-
-    // Frozen-baseline replay: med/MAD over the even-id slice only,
-    // every row scored against it.
-    "q_anomaly_frozen" ->
-      """WITH base AS (
-        |  SELECT event_type, value FROM events WHERE event_id % 2 = 0
-        |), med AS (
-        |  SELECT event_type, median(value) AS m FROM base GROUP BY 1
-        |), mad AS (
-        |  SELECT b.event_type, median(abs(b.value - md.m)) AS d
-        |  FROM base b JOIN med md USING (event_type) GROUP BY 1
-        |)
-        |SELECT e.event_id, e.event_type, e.value,
-        |       round(md.m, 6) + 0.0e0 AS med, round(dd.d, 6) AS mad,
-        |       CASE WHEN dd.d > 0
-        |            THEN round((e.value - md.m) / (1.4826 * dd.d), 6) + 0.0e0 END AS robust_z,
-        |       coalesce(CASE WHEN dd.d > 0
-        |            THEN abs(round((e.value - md.m) / (1.4826 * dd.d), 6)) > 3.5 END,
-        |          false) AS is_outlier
-        |FROM events e
-        |LEFT JOIN med md USING (event_type)
-        |LEFT JOIN mad dd USING (event_type)
-        |ORDER BY e.event_id""".stripMargin,
-
-    // Seasonal replay: the robust-z SQL with the (event_type, hour)
-    // composite baseline.
-    "q_anomaly_seasonal" ->
-      """WITH e AS (
-        |  SELECT event_id, event_type, CAST(hour(ts) AS INT) AS season_bucket, value
-        |  FROM events
-        |), med AS (
-        |  SELECT event_type, season_bucket, median(value) AS m
-        |  FROM e GROUP BY 1, 2
-        |), mad AS (
-        |  SELECT e.event_type, e.season_bucket, median(abs(e.value - md.m)) AS d
-        |  FROM e JOIN med md USING (event_type, season_bucket) GROUP BY 1, 2
-        |)
-        |SELECT e.event_id, e.event_type, e.season_bucket, e.value,
-        |       round(md.m, 6) + 0.0e0 AS med, round(dd.d, 6) AS mad,
-        |       CASE WHEN dd.d > 0
-        |            THEN round((e.value - md.m) / (1.4826 * dd.d), 6) + 0.0e0 END AS robust_z,
-        |       coalesce(CASE WHEN dd.d > 0
-        |            THEN abs(round((e.value - md.m) / (1.4826 * dd.d), 6)) > 3.5 END,
-        |          false) AS is_outlier
-        |FROM e
-        |JOIN med md USING (event_type, season_bucket)
-        |JOIN mad dd USING (event_type, season_bucket)
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q_anomaly_iqr" ->
-      """WITH f AS (
-        |  SELECT event_type,
-        |         quantile_cont(value, 0.25) AS q1,
-        |         quantile_cont(value, 0.75) AS q3
-        |  FROM events GROUP BY 1
-        |), b AS (
-        |  SELECT event_type,
-        |         round(q1 - 1.5 * (q3 - q1), 6) + 0.0e0 AS lo,
-        |         round(q3 + 1.5 * (q3 - q1), 6) + 0.0e0 AS hi
-        |  FROM f
-        |)
-        |SELECT e.event_id, e.event_type, e.value, b.lo, b.hi,
-        |       (e.value < b.lo OR e.value > b.hi) AS is_outlier
-        |FROM events e JOIN b USING (event_type)
-        |ORDER BY e.event_id""".stripMargin,
-
-    // EWMA replay: the daily roll-up plus a depth-=-days recursive CTE
-    // computing z_k = round(0.3 m_k + 0.7 z_{k-1}, 6) — each step
-    // rounded exactly as the engine rounds its fold.
-    "q_anomaly_ewma" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), ord AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM daily
-        |), sg0 AS (
-        |  SELECT event_type, CAST(count(m) AS BIGINT) AS nm,
-        |         CAST(sum(CAST(m AS DECIMAL(18,6))) AS DOUBLE) AS sm,
-        |         CAST(sum(CAST(m AS DECIMAL(18,6)) * CAST(m AS DECIMAL(18,6))) AS DOUBLE) AS smm
-        |  FROM daily GROUP BY 1
-        |), sig AS (
-        |  SELECT event_type,
-        |         CASE WHEN nm >= 2 THEN round(sqrt(greatest(
-        |           (nm * smm - sm * sm) / (nm * (nm - 1)), 0.0)), 6) END AS sigma
-        |  FROM sg0
-        |), ew AS (
-        |  SELECT event_type, day, m, rn, m AS ewma FROM ord WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         round(0.3 * o.m + 0.7 * e.ewma, 6)
-        |  FROM ord o JOIN ew e ON o.event_type = e.event_type AND o.rn = e.rn + 1
-        |)
-        |SELECT e.event_type, e.day, e.m + 0.0e0 AS m, e.ewma + 0.0e0 AS ewma,
-        |       CASE WHEN z.ewma IS NOT NULL THEN round(e.m - z.ewma, 6) + 0.0e0 END AS innovation,
-        |       round(3.0 * s.sigma * sqrt(0.3 / 1.7), 6) + 0.0e0 AS ucl,
-        |       coalesce(abs(CASE WHEN z.ewma IS NOT NULL
-        |                         THEN round(e.m - z.ewma, 6) END)
-        |                  > round(3.0 * s.sigma * sqrt(0.3 / 1.7), 6),
-        |                false) AS is_alarm
-        |FROM ew e
-        |JOIN sig s ON s.event_type = e.event_type
-        |LEFT JOIN ew z ON z.event_type = e.event_type AND z.rn = e.rn - 1
-        |ORDER BY e.event_type, e.day""".stripMargin,
-
-    // CUSUM replay: prefix sums over the rounded daily means, argmax of
-    // |S_k - k*S_n/n| with the earliest-day tiebreak.
-    "q_changepoint" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), scanned AS (
-        |  SELECT event_type, day,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY day) AS k,
-        |         CAST(sum(CAST(m AS DECIMAL(18,6)))
-        |              OVER (PARTITION BY event_type ORDER BY day
-        |                    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS s_k,
-        |         count(*) OVER (PARTITION BY event_type) AS n,
-        |         CAST(sum(CAST(m AS DECIMAL(18,6)))
-        |              OVER (PARTITION BY event_type) AS DOUBLE) AS s_n
-        |  FROM daily
-        |), st AS (
-        |  SELECT *, round(abs(s_k - k * s_n / n), 6) AS stat
-        |  FROM scanned WHERE k < n
-        |), best AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type
-        |                               ORDER BY stat DESC, day) AS rk
-        |  FROM st
-        |)
-        |SELECT event_type, day AS change_day, stat,
-        |       round(s_k / k, 6) + 0.0e0 AS mean_before,
-        |       round((s_n - s_k) / (n - k), 6) + 0.0e0 AS mean_after
-        |FROM best WHERE rk = 1
-        |ORDER BY event_type""".stripMargin,
-
-    // PSI replay: baseline decile edges rounded to 6 in BOTH engines
-    // before the bucket comparison; shares eps-clamped at 0.0001.
-    "q_drift_psi" ->
-      """WITH src AS (
-        |  SELECT event_type, value, (day(ts) <= 15) AS is_base FROM events
-        |), edges AS (
-        |  SELECT event_type,
-        |         list_transform(
-        |           quantile_cont(value, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]),
-        |           e -> round(e, 6)) AS ed
-        |  FROM src WHERE is_base GROUP BY 1
-        |), bk AS (
-        |  SELECT s.event_type, s.is_base,
-        |         1 + len(list_filter(e.ed, x -> s.value > x)) AS bucket
-        |  FROM src s JOIN edges e USING (event_type)
-        |), cnt AS (
-        |  SELECT event_type, bucket,
-        |         CAST(sum(CASE WHEN is_base THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
-        |         CAST(sum(CASE WHEN NOT is_base THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
-        |  FROM bk GROUP BY 1, 2
-        |), dense AS (
-        |  SELECT g.event_type, d.bucket,
-        |         coalesce(c.n_base, 0) AS n_base, coalesce(c.n_cur, 0) AS n_cur
-        |  FROM (SELECT event_type FROM edges) g
-        |  CROSS JOIN (SELECT unnest(range(1, 11)) AS bucket) d
-        |  LEFT JOIN cnt c ON c.event_type = g.event_type AND c.bucket = d.bucket
-        |), sh AS (
-        |  SELECT *,
-        |         greatest(n_base / sum(n_base) OVER (PARTITION BY event_type), 0.0001) AS p,
-        |         greatest(n_cur / sum(n_cur) OVER (PARTITION BY event_type), 0.0001) AS q
-        |  FROM dense
-        |), ct AS (
-        |  SELECT *, (p - q) * ln(p / q) AS contrib FROM sh
-        |)
-        |SELECT event_type, bucket, n_base, n_cur,
-        |       round(p, 6) AS p, round(q, 6) AS q,
-        |       round(contrib, 6) AS contrib,
-        |       round(sum(contrib) OVER (PARTITION BY event_type), 6) AS psi
-        |FROM ct
-        |ORDER BY event_type, bucket""".stripMargin,
-
-    // Benford replay: the leading digit off the integer-cents string
-    // (never float log10); absent digits densified so the chi-square
-    // carries their full (0-exp)^2/exp mass.
-    "q_fraud_benford" ->
-      """WITH v AS (
-        |  SELECT event_type,
-        |         CAST(substr(CAST(CAST(abs(round(value * 100)) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit
-        |  FROM events
-        |  WHERE value IS NOT NULL AND CAST(abs(round(value * 100)) AS BIGINT) > 0
-        |), cnt AS (
-        |  SELECT event_type, digit, CAST(count(*) AS BIGINT) AS n_d
-        |  FROM v GROUP BY 1, 2
-        |), dense AS (
-        |  SELECT g.event_type, d.digit, coalesce(c.n_d, 0) AS n_d
-        |  FROM (SELECT DISTINCT event_type FROM events) g
-        |  CROSS JOIN (SELECT unnest(range(1, 10)) AS digit) d
-        |  LEFT JOIN cnt c ON c.event_type = g.event_type AND c.digit = d.digit
-        |), sh AS (
-        |  SELECT *,
-        |         sum(n_d) OVER (PARTITION BY event_type) AS n,
-        |         n_d / sum(n_d) OVER (PARTITION BY event_type) AS obs_frac,
-        |         log10(1.0 + 1.0 / digit) AS exp_frac
-        |  FROM dense
-        |)
-        |SELECT event_type, digit, n_d,
-        |       round(obs_frac, 6) AS obs_frac,
-        |       round(exp_frac, 6) AS exp_frac,
-        |       round(sum(n * (obs_frac - exp_frac) * (obs_frac - exp_frac) / exp_frac)
-        |               OVER (PARTITION BY event_type), 6) AS chi2
-        |FROM sh
-        |ORDER BY event_type, digit""".stripMargin,
-
-    // Funnel replay: min-ts chain — each step's first completion
-    // strictly after the previous milestone.
-    "q_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS step1_ts FROM events
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS step2_ts
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.step1_ts GROUP BY 1
-        |), s3 AS (
-        |  SELECT e.user_id, min(e.ts) AS step3_ts
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.step2_ts GROUP BY 1
-        |)
-        |SELECT s1.user_id,
-        |       epoch_us(CAST(s1.step1_ts AS TIMESTAMP)) AS step1_ts_us,
-        |       epoch_us(CAST(s2.step2_ts AS TIMESTAMP)) AS step2_ts_us,
-        |       epoch_us(CAST(s3.step3_ts AS TIMESTAMP)) AS step3_ts_us,
-        |       1 + CASE WHEN s2.step2_ts IS NOT NULL THEN 1 ELSE 0 END
-        |         + CASE WHEN s3.step3_ts IS NOT NULL THEN 1 ELSE 0 END AS steps_completed
-        |FROM s1
-        |LEFT JOIN s2 USING (user_id)
-        |LEFT JOIN s3 USING (user_id)
-        |ORDER BY s1.user_id""".stripMargin,
-
-    // Windowed-funnel replay: the same chained min-ts CTEs with the
-    // 48h (172800000000 us) milestone deadline in each step's filter.
-    "q_funnel_windowed" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS step1_ts FROM events
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS step2_ts
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.step1_ts
-        |    AND epoch_us(CAST(e.ts AS TIMESTAMP))
-        |        - epoch_us(CAST(s1.step1_ts AS TIMESTAMP)) <= 172800000000
-        |  GROUP BY 1
-        |), s3 AS (
-        |  SELECT e.user_id, min(e.ts) AS step3_ts
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.step2_ts
-        |    AND epoch_us(CAST(e.ts AS TIMESTAMP))
-        |        - epoch_us(CAST(s2.step2_ts AS TIMESTAMP)) <= 172800000000
-        |  GROUP BY 1
-        |)
-        |SELECT s1.user_id,
-        |       epoch_us(CAST(s1.step1_ts AS TIMESTAMP)) AS step1_us,
-        |       epoch_us(CAST(s2.step2_ts AS TIMESTAMP)) AS step2_us,
-        |       epoch_us(CAST(s3.step3_ts AS TIMESTAMP)) AS step3_us,
-        |       1 + CASE WHEN s2.step2_ts IS NOT NULL THEN 1 ELSE 0 END
-        |         + CASE WHEN s3.step3_ts IS NOT NULL THEN 1 ELSE 0 END AS steps_completed
-        |FROM s1
-        |LEFT JOIN s2 USING (user_id)
-        |LEFT JOIN s3 USING (user_id)
-        |ORDER BY s1.user_id""".stripMargin,
-
-    // Script-mix replay: identical explicit code-point ranges (RE2 and
-    // Java both read \x{....} literally), integer counts, one ratio,
-    // fixed tie precedence.
-    "q_text_script" ->
-      """WITH s AS (
-        |  SELECT doc_id, length(text) AS n_chars,
-        |         len(regexp_extract_all(text, '[A-Za-z]')) AS la,
-        |         len(regexp_extract_all(text, '[\x{0400}-\x{04FF}]')) AS cy,
-        |         len(regexp_extract_all(text, '[\x{4E00}-\x{9FFF}]')) AS cj,
-        |         len(regexp_extract_all(text, '[0-9]')) AS dg
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       CAST(n_chars AS INT) AS n_chars,
-        |       CAST(la AS INT) AS n_latin,
-        |       CAST(cy AS INT) AS n_cyrillic,
-        |       CAST(cj AS INT) AS n_cjk,
-        |       CAST(dg AS INT) AS n_digit,
-        |       CASE WHEN n_chars > 0
-        |            THEN round(CAST(la AS DOUBLE) / n_chars, 6) END AS latin_ratio,
-        |       CASE WHEN la >= cy AND la >= cj AND la > 0 THEN 'latin'
-        |            WHEN cy >= cj AND cy > 0 THEN 'cyrillic'
-        |            WHEN cj > 0 THEN 'cjk'
-        |            ELSE 'none' END AS main_script
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Funnel roll-up replay: reach per step + conversion vs step 1.
-    "q_funnel_summary" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS step1_ts FROM events
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS step2_ts
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.step1_ts GROUP BY 1
-        |), s3 AS (
-        |  SELECT e.user_id, min(e.ts) AS step3_ts
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.step2_ts GROUP BY 1
-        |), u AS (
-        |  SELECT CAST((SELECT count(*) FROM s1) AS BIGINT) AS u1,
-        |         CAST((SELECT count(*) FROM s2) AS BIGINT) AS u2,
-        |         CAST((SELECT count(*) FROM s3) AS BIGINT) AS u3
-        |)
-        |SELECT 1 AS step, 'view' AS step_type, u1 AS users,
-        |       round(u1 / u1, 6) AS conversion FROM u
-        |UNION ALL
-        |SELECT 2, 'click', u2, round(u2 / u1, 6) FROM u
-        |UNION ALL
-        |SELECT 3, 'purchase', u3, round(u3 / u1, 6) FROM u
-        |ORDER BY step""".stripMargin,
-
-    // Cohort replay: (user, week) distinct -> per-user min week ->
-    // offset counts; anchor-fixed week index.
-    "q_cohort_retention" ->
-      """WITH weekly AS (
-        |  SELECT DISTINCT user_id,
-        |         CAST(floor(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) / 7.0) AS INT) AS week
-        |  FROM events
-        |), cohorts AS (
-        |  SELECT user_id, min(week) AS cohort_week FROM weekly GROUP BY 1
-        |), sizes AS (
-        |  SELECT cohort_week, CAST(count(*) AS BIGINT) AS cohort_size
-        |  FROM cohorts GROUP BY 1
-        |), act AS (
-        |  SELECT c.cohort_week, w.week - c.cohort_week AS week_offset,
-        |         CAST(count(DISTINCT w.user_id) AS BIGINT) AS active_users
-        |  FROM weekly w JOIN cohorts c USING (user_id)
-        |  GROUP BY 1, 2
-        |)
-        |SELECT a.cohort_week, a.week_offset, a.active_users, s.cohort_size,
-        |       round(a.active_users / s.cohort_size, 6) AS retention
-        |FROM act a JOIN sizes s USING (cohort_week)
-        |ORDER BY a.cohort_week, a.week_offset""".stripMargin,
-
-    // Holt replay: the two-state recursion (level, trend) as one
-    // recursive CTE, each state rounded 6dp per step exactly as the
-    // engine's fold rounds; forecast/error/sigma derived from the
-    // replayed series.
-    "q_anomaly_holt" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), ord AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM daily
-        |), seed2 AS (
-        |  SELECT event_type, m AS m2 FROM ord WHERE rn = 2
-        |), h AS (
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         o.m AS l, coalesce(s.m2 - o.m, 0.0) AS b
-        |  FROM ord o LEFT JOIN seed2 s USING (event_type) WHERE o.rn = 1
-        |  UNION ALL
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         round(0.3 * o.m + 0.7 * (h.l + h.b), 6),
-        |         round(0.1 * (round(0.3 * o.m + 0.7 * (h.l + h.b), 6) - h.l)
-        |               + 0.9 * h.b, 6)
-        |  FROM ord o JOIN h ON o.event_type = h.event_type AND o.rn = h.rn + 1
-        |), err AS (
-        |  SELECT c.event_type, c.day, c.m, c.l AS level, c.b AS trend,
-        |         round(p.l + p.b, 6) AS forecast,
-        |         CASE WHEN p.l IS NOT NULL
-        |              THEN round(c.m - round(p.l + p.b, 6), 6) END AS error
-        |  FROM h c
-        |  LEFT JOIN h p ON p.event_type = c.event_type AND p.rn = c.rn - 1
-        |), sg0 AS (
-        |  SELECT *,
-        |         CAST(count(error) OVER (PARTITION BY event_type) AS BIGINT) AS ne,
-        |         CAST(sum(CAST(error AS DECIMAL(18,6))) OVER (PARTITION BY event_type) AS DOUBLE) AS se,
-        |         CAST(sum(CAST(error AS DECIMAL(18,6)) * CAST(error AS DECIMAL(18,6)))
-        |              OVER (PARTITION BY event_type) AS DOUBLE) AS sse
-        |  FROM err
-        |), sig AS (
-        |  SELECT *, CASE WHEN ne >= 2 THEN round(sqrt(greatest(
-        |              (ne * sse - se * se) / (ne * (ne - 1)), 0.0)), 6) END AS sigma_e
-        |  FROM sg0
-        |)
-        |SELECT event_type, day, m + 0.0e0 AS m, level + 0.0e0 AS level,
-        |       trend + 0.0e0 AS trend, forecast + 0.0e0 AS forecast,
-        |       error + 0.0e0 AS error, sigma_e + 0.0e0 AS sigma_e,
-        |       coalesce(abs(error) > 3.0 * sigma_e, false) AS is_alarm
-        |FROM sig
-        |ORDER BY event_type, day""".stripMargin,
-
-    // RFM replay: user-grain aggregates, scalar anchor, frozen
-    // 6dp-rounded quintile edges, list_filter bucketing (recency
-    // reversed).
-    "q_rfm" ->
-      """WITH u AS (
-        |  SELECT user_id, max(CAST(ts AS DATE)) AS last_day,
-        |         CAST(count(*) AS BIGINT) AS frequency,
-        |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS monetary
-        |  FROM events GROUP BY 1
-        |), a AS (
-        |  SELECT max(last_day) AS anchor FROM u
-        |), r AS (
-        |  SELECT u.user_id, u.frequency, u.monetary,
-        |         CAST(date_diff('day', u.last_day, a.anchor) AS INT) AS recency_days
-        |  FROM u CROSS JOIN a
-        |), e AS (
-        |  SELECT
-        |    list_transform(quantile_cont(recency_days, [0.2, 0.4, 0.6, 0.8]), x -> round(x, 6)) AS r_e,
-        |    list_transform(quantile_cont(frequency, [0.2, 0.4, 0.6, 0.8]), x -> round(x, 6)) AS f_e,
-        |    list_transform(quantile_cont(monetary, [0.2, 0.4, 0.6, 0.8]), x -> round(x, 6)) AS m_e
-        |  FROM r
-        |), sc AS (
-        |  SELECT r.user_id, r.recency_days, r.frequency,
-        |         round(r.monetary, 2) + 0.0e0 AS monetary,
-        |         CAST(6 - (1 + len(list_filter(e.r_e, x -> r.recency_days > x))) AS INT) AS r_score,
-        |         CAST(1 + len(list_filter(e.f_e, x -> r.frequency > x)) AS INT) AS f_score,
-        |         CAST(1 + len(list_filter(e.m_e, x -> r.monetary > x)) AS INT) AS m_score
-        |  FROM r CROSS JOIN e
-        |)
-        |SELECT *, concat(CAST(r_score AS VARCHAR), CAST(f_score AS VARCHAR),
-        |                 CAST(m_score AS VARCHAR)) AS rfm
-        |FROM sc
-        |ORDER BY user_id""".stripMargin,
-
-    // Attribution replay: last (ts, touch_id)-max touch at or before
-    // each conversion within the window; LEFT JOIN keeps unattributed.
-    "q_attribution" ->
-      """WITH conv AS (
-        |  SELECT event_id AS conversion_id, user_id, ts FROM events
-        |  WHERE event_type = 'purchase'
-        |), touch AS (
-        |  SELECT user_id, ts, event_id AS touch_id, event_type AS touch_type
-        |  FROM events WHERE event_type IN ('view', 'click')
-        |), j AS (
-        |  SELECT c.conversion_id, t.touch_id, t.touch_type,
-        |         row_number() OVER (PARTITION BY c.conversion_id
-        |                            ORDER BY t.ts DESC, t.touch_id DESC) AS rk
-        |  FROM conv c JOIN touch t ON t.user_id = c.user_id
-        |   AND t.ts <= c.ts
-        |   AND epoch_us(CAST(c.ts AS TIMESTAMP)) - epoch_us(CAST(t.ts AS TIMESTAMP))
-        |       <= 604800 * 1000000::BIGINT
-        |)
-        |SELECT c.conversion_id, c.user_id,
-        |       epoch_us(CAST(c.ts AS TIMESTAMP)) AS conv_ts_us,
-        |       j.touch_id, j.touch_type
-        |FROM conv c
-        |LEFT JOIN (SELECT * FROM j WHERE rk = 1) j USING (conversion_id)
-        |ORDER BY c.conversion_id""".stripMargin,
-
-    // Survival replay: lifetime roll-up, at-risk counts from exits
-    // strictly before t, KM product as exp(sum(ln)) with the zero
-    // factor short-circuited exactly like the engine.
-    "q_survival" ->
-      """WITH u AS (
-        |  SELECT user_id, min(CAST(ts AS DATE)) AS fd, max(CAST(ts AS DATE)) AS ld
-        |  FROM events GROUP BY 1
-        |), a AS (
-        |  SELECT max(ld) AS ce FROM u
-        |), l AS (
-        |  SELECT CAST(date_diff('day', fd, ld) AS INT) AS lifetime,
-        |         (date_diff('day', ld, ce) > 7) AS churned
-        |  FROM u CROSS JOIN a
-        |), byt AS (
-        |  SELECT lifetime AS t,
-        |         CAST(sum(CASE WHEN churned THEN 1 ELSE 0 END) AS BIGINT) AS d,
-        |         CAST(count(*) AS BIGINT) AS exits
-        |  FROM l GROUP BY 1
-        |), cum AS (
-        |  SELECT *,
-        |         CAST(coalesce(sum(exits) OVER (ORDER BY t
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS eb,
-        |         CAST(sum(exits) OVER () AS BIGINT) AS tot
-        |  FROM byt
-        |), f AS (
-        |  SELECT t, tot - eb AS n_risk, d, exits,
-        |         1.0 - d / (tot - eb) AS factor
-        |  FROM cum
-        |), z AS (
-        |  SELECT *, max(CASE WHEN factor <= 0 THEN 1 ELSE 0 END)
-        |              OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS zero
-        |  FROM f
-        |)
-        |SELECT t, CAST(n_risk AS BIGINT) AS n_risk, d AS n_churn, exits,
-        |       CASE WHEN zero = 1 THEN 0.0
-        |            ELSE round(exp(sum(ln(factor))
-        |                           OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)), 6) END AS survival
-        |FROM z
-        |ORDER BY t""".stripMargin,
-
-    // Nelson-Aalen replay: the q_survival risk-set scaffold, 12dp
-    // hazard increments, exact decimal cumulative sum, exp(-H).
-    "q_hazard" ->
-      """WITH u AS (
-        |  SELECT user_id, min(CAST(ts AS DATE)) AS fd, max(CAST(ts AS DATE)) AS ld
-        |  FROM events GROUP BY 1
-        |), a AS (
-        |  SELECT max(ld) AS ce FROM u
-        |), l AS (
-        |  SELECT CAST(date_diff('day', fd, ld) AS INT) AS lifetime,
-        |         (date_diff('day', ld, ce) > 7) AS churned
-        |  FROM u CROSS JOIN a
-        |), byt AS (
-        |  SELECT lifetime AS t,
-        |         CAST(sum(CASE WHEN churned THEN 1 ELSE 0 END) AS BIGINT) AS d,
-        |         CAST(count(*) AS BIGINT) AS exits
-        |  FROM l GROUP BY 1
-        |), cum AS (
-        |  SELECT *,
-        |         CAST(coalesce(sum(exits) OVER (ORDER BY t
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS eb,
-        |         CAST(sum(exits) OVER () AS BIGINT) AS tot
-        |  FROM byt
-        |), f AS (
-        |  SELECT t, tot - eb AS n_risk, d, exits,
-        |         round(CAST(d AS DOUBLE) / (tot - eb), 12) AS inc
-        |  FROM cum
-        |), h AS (
-        |  SELECT *, round(CAST(sum(CAST(inc AS DECIMAL(38,12)))
-        |                        OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS DOUBLE),
-        |                  6) AS hazard
-        |  FROM f
-        |)
-        |SELECT t, CAST(n_risk AS BIGINT) AS n_risk, d AS n_churn, exits,
-        |       hazard, round(exp(0.0 - hazard), 6) AS survival_fh
-        |FROM h
-        |ORDER BY t""".stripMargin,
-
-    // Seasonal decomposition replay: centered moving average guarded
-    // by window row count (null at partial edges), day-of-week shifted
-    // +1 (DuckDB is 0=Sunday, Spark is 1=Sunday).
-    "q_seasonal_decompose" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), tr AS (
-        |  SELECT event_type, day, m,
-        |         CAST(dayofweek(day) + 1 AS INT) AS dow,
-        |         CASE WHEN count(*) OVER w = 7
-        |              THEN round(CAST(sum(CAST(m AS DECIMAL(18,6))) OVER w AS DOUBLE)
-        |                         / count(*) OVER w, 6) END AS trend
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |), de AS (
-        |  SELECT *, round(m - trend, 6) AS detr FROM tr
-        |), se AS (
-        |  SELECT *, round(CAST(sum(CAST(detr AS DECIMAL(18,6)))
-        |                        OVER (PARTITION BY event_type, dow) AS DOUBLE)
-        |                  / count(detr) OVER (PARTITION BY event_type, dow), 6) AS seasonal
-        |  FROM de
-        |)
-        |SELECT event_type, day, dow, m + 0.0e0 AS m, trend + 0.0e0 AS trend,
-        |       seasonal + 0.0e0 AS seasonal,
-        |       CASE WHEN trend IS NOT NULL
-        |            THEN round(m - trend - seasonal, 6) + 0.0e0 END AS residual
-        |FROM se
-        |ORDER BY event_type, day""".stripMargin,
-
-    // ACF replay: per-lag self-join pairs, Pearson r from exact
-    // DECIMAL(18,6) moment sums cast to double once each.
-    "q_acf" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), ord AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM daily
-        |), pairs AS (
-        |  SELECT a.event_type, l.lag,
-        |         CAST(a.m AS DECIMAL(18,6)) AS x, CAST(b.m AS DECIMAL(18,6)) AS y
-        |  FROM ord a
-        |  CROSS JOIN (SELECT unnest(range(1, 8)) AS lag) l
-        |  JOIN ord b ON b.event_type = a.event_type AND b.rn = a.rn - l.lag
-        |), mo AS (
-        |  SELECT event_type, CAST(lag AS INT) AS lag,
-        |         CAST(count(*) AS BIGINT) AS n_pairs,
-        |         CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-        |         CAST(sum(x * y) AS DOUBLE) AS sxy,
-        |         CAST(sum(x * x) AS DOUBLE) AS sxx,
-        |         CAST(sum(y * y) AS DOUBLE) AS syy
-        |  FROM pairs GROUP BY 1, 2
-        |)
-        |SELECT event_type, lag, n_pairs,
-        |       CASE WHEN n_pairs * sxx - sx * sx > 0
-        |             AND n_pairs * syy - sy * sy > 0
-        |            THEN round((n_pairs * sxy - sx * sy)
-        |                       / sqrt((n_pairs * sxx - sx * sx)
-        |                              * (n_pairs * syy - sy * sy)), 6) + 0.0e0 END AS acf
-        |FROM mo
-        |ORDER BY event_type, lag""".stripMargin,
-
-    // KS replay: per-distinct-value slice counts, cumulative CDF gap,
-    // max per group + the scaled statistic.
-    "q_drift_ks" ->
-      """WITH src AS (
-        |  SELECT event_type, value, (day(ts) <= 15) AS is_base FROM events
-        |  WHERE value IS NOT NULL
-        |), cnt AS (
-        |  SELECT event_type, value AS v,
-        |         CAST(sum(CASE WHEN is_base THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |         CAST(sum(CASE WHEN NOT is_base THEN 1 ELSE 0 END) AS BIGINT) AS c2
-        |  FROM src GROUP BY 1, 2
-        |), cum AS (
-        |  SELECT event_type,
-        |         sum(c1) OVER (PARTITION BY event_type) AS n1,
-        |         sum(c2) OVER (PARTITION BY event_type) AS n2,
-        |         abs(sum(c1) OVER w / sum(c1) OVER (PARTITION BY event_type)
-        |           - sum(c2) OVER w / sum(c2) OVER (PARTITION BY event_type)) AS d
-        |  FROM cnt
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY v
-        |               ROWS UNBOUNDED PRECEDING)
-        |)
-        |SELECT event_type, round(max(d), 6) AS ks_d,
-        |       CAST(max(n1) AS BIGINT) AS n_base, CAST(max(n2) AS BIGINT) AS n_cur,
-        |       round(sqrt(max(n1) * max(n2) / (max(n1) + max(n2))) * round(max(d), 6), 6) AS ks_scaled
-        |FROM cum GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    // Gini replay: row_number rank over ascending value (tie-invariant
-    // by the rank-sum identity), decimal-exact rank-weighted sums.
-    "q_value_gini" ->
-      """WITH r AS (
-        |  SELECT event_type, value,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY value) AS i
-        |  FROM events WHERE value IS NOT NULL AND value >= 0
-        |), s AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |         sum(CAST(value AS DECIMAL(18,2))) AS vsum,
-        |         sum(CAST(i AS DECIMAL(18,0)) * CAST(value AS DECIMAL(18,2))) AS isum
-        |  FROM r GROUP BY 1
-        |)
-        |SELECT event_type, n, CAST(vsum AS DOUBLE) AS total_value,
-        |       round(2 * CAST(isum AS DOUBLE) / (n * CAST(vsum AS DOUBLE))
-        |             - (n + 1) / CAST(n AS DOUBLE), 6) + 0.0e0 AS gini
-        |FROM s WHERE vsum > 0
-        |ORDER BY event_type""".stripMargin,
-
-    // PMI replay: the dedup-oracle token machinery (regexp '\S+',
-    // within-doc adjacent pairs), censuses joined, log2 ratio.
-    "q_pmi" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), uni AS (
-        |  SELECT tok, CAST(count(*) AS BIGINT) AS n FROM (
-        |    SELECT unnest(t) AS tok FROM toks) GROUP BY 1
-        |), bi AS (
-        |  SELECT g, CAST(count(*) AS BIGINT) AS n FROM (
-        |    SELECT unnest(list_transform(range(1, greatest(len(t) - 1, 0) + 1),
-        |                                 i -> t[i] || ' ' || t[i + 1])) AS g
-        |    FROM toks) GROUP BY 1
-        |), tot AS (
-        |  SELECT (SELECT sum(n) FROM uni) AS n_tok, (SELECT sum(n) FROM bi) AS n_bi
-        |)
-        |SELECT split_part(b.g, ' ', 1) AS w1, split_part(b.g, ' ', 2) AS w2,
-        |       b.n AS n_pair, u1.n AS n_w1, u2.n AS n_w2,
-        |       round(log2((b.n / t.n_bi)
-        |                  / ((u1.n / t.n_tok) * (u2.n / t.n_tok))), 6) + 0.0e0 AS pmi
-        |FROM bi b
-        |JOIN uni u1 ON u1.tok = split_part(b.g, ' ', 1)
-        |JOIN uni u2 ON u2.tok = split_part(b.g, ' ', 2)
-        |CROSS JOIN tot t
-        |WHERE b.n >= 3
-        |ORDER BY w1, w2""".stripMargin,
-
-    // Transition replay: lead within the session assignment, counts +
-    // row-normalized probabilities.
-    "q_transitions" ->
-      """WITH s AS (
-        |  SELECT event_id, user_id, ts, event_type,
-        |         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events
-        |), f AS (
-        |  SELECT *, CASE WHEN prev IS NULL
-        |                   OR date_diff('second', prev, ts) > 1800
-        |                 THEN 1 ELSE 0 END AS is_new
-        |  FROM s
-        |), sess AS (
-        |  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                              ROWS UNBOUNDED PRECEDING) AS session_idx
-        |  FROM f
-        |), nxt AS (
-        |  SELECT event_type AS from_type,
-        |         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type,
-        |         lead(session_idx) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_sess,
-        |         session_idx
-        |  FROM sess
-        |)
-        |SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n,
-        |       round(count(*) / sum(count(*)) OVER (PARTITION BY from_type), 6) AS p
-        |FROM nxt
-        |WHERE to_type IS NOT NULL AND next_sess = session_idx
-        |GROUP BY from_type, to_type
-        |ORDER BY from_type, to_type""".stripMargin,
-
-    // Path replay: the q_transitions sessionize CTE, then the first-3
-    // rows per session string_agg'd in rank order, counted with a
-    // global share.
-    "q_session_paths" ->
-      """WITH s AS (
-        |  SELECT event_id, user_id, ts, event_type,
-        |         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events
-        |), f AS (
-        |  SELECT *, CASE WHEN prev IS NULL
-        |                   OR date_diff('second', prev, ts) > 1800
-        |                 THEN 1 ELSE 0 END AS is_new
-        |  FROM s
-        |), sess AS (
-        |  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                              ROWS UNBOUNDED PRECEDING) AS session_idx
-        |  FROM f
-        |), fr AS (
-        |  SELECT user_id, session_idx, event_type,
-        |         row_number() OVER (PARTITION BY user_id, session_idx
-        |                            ORDER BY ts, event_id) AS rn
-        |  FROM sess
-        |), p AS (
-        |  SELECT user_id, session_idx,
-        |         string_agg(event_type, '>' ORDER BY rn) AS path
-        |  FROM fr WHERE rn <= 3 GROUP BY 1, 2
-        |)
-        |SELECT path, CAST(count(*) AS BIGINT) AS n,
-        |       round(count(*) / sum(count(*)) OVER (), 6) AS share
-        |FROM p GROUP BY path
-        |ORDER BY path""".stripMargin,
-
-    // Backtest replay: the q_anomaly_holt recursive CTE through the
-    // error stage, a naive lag-forecast error beside it, then exact
-    // decimal |error| sums -> double MAEs and the skill ratio.
-    "q_forecast_backtest" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), ord AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM daily
-        |), seed2 AS (
-        |  SELECT event_type, m AS m2 FROM ord WHERE rn = 2
-        |), h AS (
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         o.m AS l, coalesce(s.m2 - o.m, 0.0) AS b
-        |  FROM ord o LEFT JOIN seed2 s USING (event_type) WHERE o.rn = 1
-        |  UNION ALL
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         round(0.3 * o.m + 0.7 * (h.l + h.b), 6),
-        |         round(0.1 * (round(0.3 * o.m + 0.7 * (h.l + h.b), 6) - h.l)
-        |               + 0.9 * h.b, 6)
-        |  FROM ord o JOIN h ON o.event_type = h.event_type AND o.rn = h.rn + 1
-        |), err AS (
-        |  SELECT c.event_type, c.day, c.m,
-        |         CASE WHEN p.l IS NOT NULL
-        |              THEN round(c.m - round(p.l + p.b, 6), 6) END AS error
-        |  FROM h c
-        |  LEFT JOIN h p ON p.event_type = c.event_type AND p.rn = c.rn - 1
-        |), nv AS (
-        |  SELECT event_type, error,
-        |         CASE WHEN lag(m) OVER (PARTITION BY event_type ORDER BY day)
-        |                IS NOT NULL
-        |              THEN round(m - lag(m) OVER (PARTITION BY event_type
-        |                                          ORDER BY day), 6) END AS naive_err
-        |  FROM err
-        |), agg AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-        |         CAST(sum(CAST(abs(error) AS DECIMAL(18,6))) AS DOUBLE)
-        |           / count(*) AS mh,
-        |         CAST(sum(CAST(abs(naive_err) AS DECIMAL(18,6))) AS DOUBLE)
-        |           / count(*) AS mn
-        |  FROM nv WHERE error IS NOT NULL AND naive_err IS NOT NULL
-        |  GROUP BY 1
-        |)
-        |SELECT event_type, n_days, round(mh, 6) AS mae_holt,
-        |       round(mn, 6) AS mae_naive,
-        |       CASE WHEN mn > 0 THEN round(1.0 - mh / mn, 6) + 0.0e0 END AS skill
-        |FROM agg
-        |ORDER BY event_type""".stripMargin,
-
-    // PageRank replay: md5 host assignment for both endpoints, then the
-    // generated 10-stage unrolled fixed-point (Graph.pageRankOracleSql).
-    "q_pagerank_domains" -> graft.operators.Graph.pageRankOracleSql(
-      edgesCte =
-        """SELECT
-          |    (['en.wikipedia.org','news.bbc.co.uk','blogs.example.com',
-          |      'www.gov.uk','cdn.a.co.jp','example.net'])[
-          |      CAST(((strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 1, 1)) - 1) * 16
-          |          + (strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 2, 1)) - 1)) % 6 + 1 AS INT)
-          |    ] AS src,
-          |    (['en.wikipedia.org','news.bbc.co.uk','blogs.example.com',
-          |      'www.gov.uk','cdn.a.co.jp','example.net'])[
-          |      CAST(((strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'v'), 1, 1)) - 1) * 16
-          |          + (strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'v'), 2, 1)) - 1)) % 6 + 1 AS INT)
-          |    ] AS dst,
-          |    1.0 AS w
-          |  FROM documents
-          |  WHERE src != dst""".stripMargin,
-      iterations = 10, damping = 0.85,
-      select = "SELECT node, r AS rank FROM r10 ORDER BY node"),
-
-    // Personalized replay: same host graph, teleport vector uniform on
-    // the two seed hosts, 10 unrolled personalized stages.
-    "q_pagerank_personalized" ->
-      graft.operators.Graph.personalizedPageRankOracleSql(
-        edgesCte =
-          """SELECT
-            |    (['en.wikipedia.org','news.bbc.co.uk','blogs.example.com',
-            |      'www.gov.uk','cdn.a.co.jp','example.net'])[
-            |      CAST(((strpos('0123456789abcdef',
-            |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 1, 1)) - 1) * 16
-            |          + (strpos('0123456789abcdef',
-            |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 2, 1)) - 1)) % 6 + 1 AS INT)
-            |    ] AS src,
-            |    (['en.wikipedia.org','news.bbc.co.uk','blogs.example.com',
-            |      'www.gov.uk','cdn.a.co.jp','example.net'])[
-            |      CAST(((strpos('0123456789abcdef',
-            |               substr(md5(CAST(doc_id AS VARCHAR) || 'v'), 1, 1)) - 1) * 16
-            |          + (strpos('0123456789abcdef',
-            |               substr(md5(CAST(doc_id AS VARCHAR) || 'v'), 2, 1)) - 1)) % 6 + 1 AS INT)
-            |    ] AS dst,
-            |    1.0 AS w
-            |  FROM documents
-            |  WHERE src != dst""".stripMargin,
-        seedsCte =
-          """SELECT 'en.wikipedia.org' AS node
-            |  UNION ALL SELECT 'www.gov.uk'""".stripMargin,
-        iterations = 10, damping = 0.85,
-        select = "SELECT node, r AS rank FROM r10 ORDER BY node"),
-
-    // Warm-start replay: the COLD 12-stage unroll — the warm
-    // continuation must land on it exactly.
-    "q_pagerank_warm" -> graft.operators.Graph.pageRankOracleSql(
-      edgesCte =
-        """SELECT
-          |    (['en.wikipedia.org','news.bbc.co.uk','blogs.example.com',
-          |      'www.gov.uk','cdn.a.co.jp','example.net'])[
-          |      CAST(((strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 1, 1)) - 1) * 16
-          |          + (strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 2, 1)) - 1)) % 6 + 1 AS INT)
-          |    ] AS src,
-          |    (['en.wikipedia.org','news.bbc.co.uk','blogs.example.com',
-          |      'www.gov.uk','cdn.a.co.jp','example.net'])[
-          |      CAST(((strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'v'), 1, 1)) - 1) * 16
-          |          + (strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'v'), 2, 1)) - 1)) % 6 + 1 AS INT)
-          |    ] AS dst,
-          |    1.0 AS w
-          |  FROM documents
-          |  WHERE src != dst""".stripMargin,
-      iterations = 12, damping = 0.85,
-      select = "SELECT node, r AS rank FROM r12 ORDER BY node"),
-
-    // TextRank replay: consecutive-token pairs in both directions feed
-    // the same generated fixed-point; output the full vocabulary.
-    "q_textrank" -> graft.operators.Graph.pageRankOracleSql(
-      edgesCte =
-        """WITH toks AS (
-          |    SELECT regexp_extract_all(trim(text), '\S+') AS t
-          |    FROM documents WHERE length(trim(text)) > 0
-          |  ), pr AS (
-          |    SELECT unnest(list_transform(range(1, greatest(len(t) - 1, 0) + 1),
-          |      i -> {'w1': t[i], 'w2': t[i+1]})) AS p
-          |    FROM toks
-          |  )
-          |  SELECT p.w1 AS src, p.w2 AS dst, 1.0 AS w FROM pr
-          |  UNION ALL
-          |  SELECT p.w2, p.w1, 1.0 FROM pr""".stripMargin,
-      iterations = 10, damping = 0.85,
-      select = "SELECT node AS word, r AS rank FROM r10 ORDER BY word"),
-
-    // HITS replay: doc->host bipartite edges (the md5 pick, doc side
-    // kept as 'doc:<id>' nodes), then the generated 5-iteration
-    // unrolled half-step fixed-point (Graph.hitsOracleSql).
-    "q_hits" -> graft.operators.Graph.hitsOracleSql(
-      edgesCte =
-        """SELECT 'doc:' || CAST(doc_id AS VARCHAR) AS src,
-          |    (['en.wikipedia.org','news.bbc.co.uk','blogs.example.com',
-          |      'www.gov.uk','cdn.a.co.jp','example.net'])[
-          |      CAST(((strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 1, 1)) - 1) * 16
-          |          + (strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'u'), 2, 1)) - 1)) % 6 + 1 AS INT)
-          |    ] AS dst
-          |  FROM documents
-          |  UNION ALL
-          |  SELECT 'doc:' || CAST(doc_id AS VARCHAR) AS src,
-          |    (['en.wikipedia.org','news.bbc.co.uk','blogs.example.com',
-          |      'www.gov.uk','cdn.a.co.jp','example.net'])[
-          |      CAST(((strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'v'), 1, 1)) - 1) * 16
-          |          + (strpos('0123456789abcdef',
-          |               substr(md5(CAST(doc_id AS VARCHAR) || 'v'), 2, 1)) - 1)) % 6 + 1 AS INT)
-          |    ] AS dst
-          |  FROM documents""".stripMargin,
-      iterations = 5,
-      select = "SELECT node, h5.h AS hub, a5.a AS authority " +
-        "FROM h5 JOIN a5 USING (node) ORDER BY node"),
-
-    // Basket replay: the self-join form IS the oracle (DuckDB's
-    // single-node hash join is fine at sf0.01; the engine avoids it).
-    "q_basket_pairs" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
-        |), n AS (
-        |  SELECT CAST(count(DISTINCT b) AS DOUBLE) AS nb FROM items
-        |), ic AS (
-        |  SELECT i, CAST(count(*) AS BIGINT) AS n_i FROM items GROUP BY 1
-        |), pairs AS (
-        |  SELECT a.i AS item_a, bb.i AS item_b, CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM items a JOIN items bb ON a.b = bb.b AND a.i < bb.i
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |)
-        |SELECT p.item_a, p.item_b, p.n_ab, ia.n_i AS n_a, ib.n_i AS n_b,
-        |  round(CAST(p.n_ab AS DOUBLE)
-        |        / sqrt(CAST(ia.n_i AS DOUBLE) * CAST(ib.n_i AS DOUBLE)), 6) AS cosine,
-        |  round(CAST(p.n_ab AS DOUBLE) * (SELECT nb FROM n)
-        |        / (CAST(ia.n_i AS DOUBLE) * CAST(ib.n_i AS DOUBLE)), 6) AS lift,
-        |  round(CAST(p.n_ab AS DOUBLE) / ia.n_i, 6) AS conf_a_b,
-        |  round(CAST(p.n_ab AS DOUBLE) / ib.n_i, 6) AS conf_b_a
-        |FROM pairs p
-        |JOIN ic ia ON p.item_a = ia.i
-        |JOIN ic ib ON p.item_b = ib.i
-        |ORDER BY item_a, item_b""".stripMargin,
-
-    // Capped replay: identical machinery over the item table with
-    // oversized baskets excluded by one HAVING gate — they vanish from
-    // pairs, the item census, and the basket count alike.
-    "q_basket_capped" ->
-      """WITH items0 AS (
-        |  SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
-        |), keep AS (
-        |  SELECT b FROM items0 GROUP BY b HAVING count(*) <= 5
-        |), items AS (
-        |  SELECT items0.b, items0.i FROM items0 JOIN keep ON keep.b = items0.b
-        |), n AS (
-        |  SELECT CAST(count(DISTINCT b) AS DOUBLE) AS nb FROM items
-        |), ic AS (
-        |  SELECT i, CAST(count(*) AS BIGINT) AS n_i FROM items GROUP BY 1
-        |), pairs AS (
-        |  SELECT a.i AS item_a, bb.i AS item_b, CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM items a JOIN items bb ON a.b = bb.b AND a.i < bb.i
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |)
-        |SELECT p.item_a, p.item_b, p.n_ab, ia.n_i AS n_a, ib.n_i AS n_b,
-        |  round(CAST(p.n_ab AS DOUBLE)
-        |        / sqrt(CAST(ia.n_i AS DOUBLE) * CAST(ib.n_i AS DOUBLE)), 6) AS cosine,
-        |  round(CAST(p.n_ab AS DOUBLE) * (SELECT nb FROM n)
-        |        / (CAST(ia.n_i AS DOUBLE) * CAST(ib.n_i AS DOUBLE)), 6) AS lift,
-        |  round(CAST(p.n_ab AS DOUBLE) / ia.n_i, 6) AS conf_a_b,
-        |  round(CAST(p.n_ab AS DOUBLE) / ib.n_i, 6) AS conf_b_a
-        |FROM pairs p
-        |JOIN ic ia ON p.item_a = ia.i
-        |JOIN ic ib ON p.item_b = ib.i
-        |ORDER BY item_a, item_b""".stripMargin,
-
-    // Resample replay: floored-epoch per-instant means, the epoch-
-    // aligned grid from per-group bounds, then the same union + window
-    // neighbor recovery (IGNORE NULLS frames).
-    "q_resample_locf" ->
-      """WITH obs AS (
-        |  SELECT event_type AS g,
-        |         CAST(floor(date_part('epoch', ts)) AS BIGINT) AS tsu,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS v
-        |  FROM events GROUP BY 1, 2
-        |), bounds AS (
-        |  SELECT g,
-        |         CAST(floor(CAST(mn + 3599 AS DOUBLE) / 3600) AS BIGINT) * 3600 AS s,
-        |         CAST(floor(CAST(mx AS DOUBLE) / 3600) AS BIGINT) * 3600 AS e
-        |  FROM (SELECT g, min(tsu) AS mn, max(tsu) AS mx FROM obs GROUP BY 1)
-        |  WHERE e >= s
-        |), grid AS (
-        |  SELECT g, unnest(generate_series(s, e, 3600)) AS tsu FROM bounds
-        |), u AS (
-        |  SELECT g, tsu, CAST(NULL AS DOUBLE) AS v, 1 AS is_grid FROM grid
-        |  UNION ALL SELECT g, tsu, v, 0 FROM obs
-        |), f AS (
-        |  SELECT g, tsu, is_grid,
-        |    last_value(v IGNORE NULLS) OVER (
-        |      PARTITION BY g ORDER BY tsu, is_grid
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prev_v
-        |  FROM u
-        |)
-        |SELECT g AS event_type, tsu AS grid_ts_sec, prev_v AS value
-        |FROM f WHERE is_grid = 1
-        |ORDER BY event_type, grid_ts_sec""".stripMargin,
-
-    "q_resample_interp" ->
-      """WITH obs AS (
-        |  SELECT event_type AS g,
-        |         CAST(floor(date_part('epoch', ts)) AS BIGINT) AS tsu,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS v
-        |  FROM events GROUP BY 1, 2
-        |), bounds AS (
-        |  SELECT g,
-        |         CAST(floor(CAST(mn + 3599 AS DOUBLE) / 3600) AS BIGINT) * 3600 AS s,
-        |         CAST(floor(CAST(mx AS DOUBLE) / 3600) AS BIGINT) * 3600 AS e
-        |  FROM (SELECT g, min(tsu) AS mn, max(tsu) AS mx FROM obs GROUP BY 1)
-        |  WHERE e >= s
-        |), grid AS (
-        |  SELECT g, unnest(generate_series(s, e, 3600)) AS tsu FROM bounds
-        |), u AS (
-        |  SELECT g, tsu, CAST(NULL AS DOUBLE) AS v, 1 AS is_grid FROM grid
-        |  UNION ALL SELECT g, tsu, v, 0 FROM obs
-        |), f AS (
-        |  SELECT g, tsu, is_grid,
-        |    last_value(v IGNORE NULLS) OVER (
-        |      PARTITION BY g ORDER BY tsu, is_grid
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prev_v,
-        |    last_value(CASE WHEN v IS NOT NULL THEN tsu END IGNORE NULLS) OVER (
-        |      PARTITION BY g ORDER BY tsu, is_grid
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prev_ts,
-        |    first_value(v IGNORE NULLS) OVER (
-        |      PARTITION BY g ORDER BY tsu, is_grid
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_v,
-        |    first_value(CASE WHEN v IS NOT NULL THEN tsu END IGNORE NULLS) OVER (
-        |      PARTITION BY g ORDER BY tsu, is_grid
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_ts
-        |  FROM u
-        |)
-        |SELECT g AS event_type, tsu AS grid_ts_sec,
-        |  CASE WHEN next_ts IS NOT NULL AND next_ts != prev_ts
-        |       THEN round(prev_v + (next_v - prev_v)
-        |                  * (CAST(tsu - prev_ts AS DOUBLE)
-        |                     / CAST(next_ts - prev_ts AS DOUBLE)), 6) + 0.0e0
-        |       ELSE prev_v END AS value
-        |FROM f WHERE is_grid = 1
-        |ORDER BY event_type, grid_ts_sec""".stripMargin,
-
-    // Wilson replay: identical literals and parenthesization as the
-    // Column tree (z entered as 1.96 * 1.96, halves and centers built
-    // in the same order) so the 6dp bounds hash-match.
-    "q_rate_wilson" ->
-      """WITH d AS (
-        |  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS k
-        |  FROM events GROUP BY 1
-        |), c AS (
-        |  SELECT day, n, k,
-        |         CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-        |         (1.96 * 1.96) / CAST(n AS DOUBLE) AS z2n
-        |  FROM d
-        |), w AS (
-        |  SELECT day, n, k, p, z2n,
-        |         (p + z2n / 2.0) / (1.0 + z2n) AS center,
-        |         (1.96 * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE)
-        |                      + z2n / (4.0 * CAST(n AS DOUBLE)))) / (1.0 + z2n) AS half
-        |  FROM c
-        |)
-        |SELECT day, n, k, round(p, 6) AS rate,
-        |       round(center - half, 6) + 0.0e0 AS wilson_lo,
-        |       round(center + half, 6) + 0.0e0 AS wilson_hi
-        |FROM w
-        |ORDER BY day""".stripMargin,
-
-    // Holt-Winters replay: the holt recursion plus a rolling 7-slot
-    // seasonal list in the recursive state (the recursive term only
-    // sees the previous step, so the p-lag travels with it). The level
-    // expression repeats textually where later states need it — same
-    // duplication the engine's expression tree has.
-    "q_anomaly_hw" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), ord AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM daily
-        |), seed2 AS (
-        |  SELECT event_type, m AS m2 FROM ord WHERE rn = 2
-        |), h AS (
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         o.m AS l, coalesce(s.m2 - o.m, 0.0) AS b,
-        |         CAST(0.0 AS DOUBLE) AS sv,
-        |         [CAST(0.0 AS DOUBLE)] AS sh
-        |  FROM ord o LEFT JOIN seed2 s USING (event_type) WHERE o.rn = 1
-        |  UNION ALL
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         round(0.3 * (o.m - (CASE WHEN o.rn > 7 THEN h.sh[1] ELSE 0.0 END))
-        |               + 0.7 * (h.l + h.b), 6),
-        |         round(0.1 * (round(0.3 * (o.m - (CASE WHEN o.rn > 7 THEN h.sh[1] ELSE 0.0 END))
-        |                            + 0.7 * (h.l + h.b), 6) - h.l)
-        |               + 0.9 * h.b, 6),
-        |         round(0.3 * (o.m - round(0.3 * (o.m - (CASE WHEN o.rn > 7 THEN h.sh[1] ELSE 0.0 END))
-        |                                  + 0.7 * (h.l + h.b), 6))
-        |               + 0.7 * (CASE WHEN o.rn > 7 THEN h.sh[1] ELSE 0.0 END), 6),
-        |         list_append(
-        |           CASE WHEN len(h.sh) = 7 THEN h.sh[2:7] ELSE h.sh END,
-        |           round(0.3 * (o.m - round(0.3 * (o.m - (CASE WHEN o.rn > 7 THEN h.sh[1] ELSE 0.0 END))
-        |                                    + 0.7 * (h.l + h.b), 6))
-        |                 + 0.7 * (CASE WHEN o.rn > 7 THEN h.sh[1] ELSE 0.0 END), 6))
-        |  FROM ord o JOIN h ON o.event_type = h.event_type AND o.rn = h.rn + 1
-        |), err AS (
-        |  SELECT c.event_type, c.day, c.m, c.l AS level, c.b AS trend,
-        |         c.sv AS seasonal,
-        |         CASE WHEN p1.l IS NOT NULL
-        |              THEN round(p1.l + p1.b + coalesce(p7.sv, 0.0), 6) END AS forecast
-        |  FROM h c
-        |  LEFT JOIN h p1 ON p1.event_type = c.event_type AND p1.rn = c.rn - 1
-        |  LEFT JOIN h p7 ON p7.event_type = c.event_type AND p7.rn = c.rn - 7
-        |), sig AS (
-        |  SELECT *,
-        |         CASE WHEN forecast IS NOT NULL
-        |              THEN round(m - forecast, 6) END AS error
-        |  FROM err
-        |), sg0 AS (
-        |  SELECT *,
-        |         CAST(count(error) OVER (PARTITION BY event_type) AS BIGINT) AS ne,
-        |         CAST(sum(CAST(error AS DECIMAL(18,6))) OVER (PARTITION BY event_type) AS DOUBLE) AS se,
-        |         CAST(sum(CAST(error AS DECIMAL(18,6)) * CAST(error AS DECIMAL(18,6)))
-        |              OVER (PARTITION BY event_type) AS DOUBLE) AS sse
-        |  FROM sig
-        |), sig2 AS (
-        |  SELECT *, CASE WHEN ne >= 2 THEN round(sqrt(greatest(
-        |              (ne * sse - se * se) / (ne * (ne - 1)), 0.0)), 6) END AS sigma_e
-        |  FROM sg0
-        |)
-        |SELECT event_type, day, m + 0.0e0 AS m, level + 0.0e0 AS level,
-        |       trend + 0.0e0 AS trend, seasonal + 0.0e0 AS seasonal,
-        |       forecast + 0.0e0 AS forecast, error + 0.0e0 AS error,
-        |       sigma_e + 0.0e0 AS sigma_e,
-        |       coalesce(abs(error) > 3.0 * sigma_e, false) AS is_alarm
-        |FROM sig2
-        |ORDER BY event_type, day""".stripMargin,
-
-    // Period replay: the q_acf machinery over the FIRST-DIFFERENCED
-    // daily series (trend kills raw ACF detection), maxLag 14, ranked.
-    "q_detect_period" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), diffd0 AS (
-        |  SELECT event_type, day,
-        |         round(m - lag(m) OVER (PARTITION BY event_type ORDER BY day),
-        |               6) AS m
-        |  FROM daily
-        |), diffd AS (
-        |  SELECT event_type, day, m,
-        |         min(m) OVER (PARTITION BY event_type) AS dmin,
-        |         max(m) OVER (PARTITION BY event_type) AS dmax
-        |  FROM diffd0 WHERE m IS NOT NULL
-        |), ord AS (
-        |  SELECT event_type, day,
-        |         CAST(m AS DECIMAL(18,6)) AS m,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM diffd WHERE dmin != dmax
-        |), pairs AS (
-        |  SELECT a.event_type, l.lag, a.m AS x, b.m AS y
-        |  FROM ord a
-        |  CROSS JOIN (SELECT unnest(range(1, 15)) AS lag) l
-        |  JOIN ord b ON b.event_type = a.event_type AND b.rn = a.rn - l.lag
-        |), mo AS (
-        |  SELECT event_type, CAST(lag AS INT) AS lag,
-        |         CAST(count(*) AS BIGINT) AS n_pairs,
-        |         CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-        |         CAST(sum(x * y) AS DOUBLE) AS sxy,
-        |         CAST(sum(x * x) AS DOUBLE) AS sxx,
-        |         CAST(sum(y * y) AS DOUBLE) AS syy
-        |  FROM pairs GROUP BY 1, 2
-        |), acf AS (
-        |  SELECT event_type, lag, n_pairs,
-        |         CASE WHEN n_pairs * sxx - sx * sx > 0
-        |               AND n_pairs * syy - sy * sy > 0
-        |              THEN round((n_pairs * sxy - sx * sy)
-        |                         / sqrt((n_pairs * sxx - sx * sx)
-        |                                * (n_pairs * syy - sy * sy)), 6) END AS acf
-        |  FROM mo
-        |), ranked AS (
-        |  SELECT event_type, lag, acf,
-        |         row_number() OVER (PARTITION BY event_type
-        |                            ORDER BY acf DESC, lag) AS rk
-        |  FROM acf WHERE lag >= 2 AND acf IS NOT NULL
-        |)
-        |SELECT event_type, lag AS period, acf AS period_acf,
-        |       acf >= 0.3 AS is_seasonal
-        |FROM ranked WHERE rk = 1
-        |ORDER BY event_type""".stripMargin,
-
-    // Skew replay: key census, scalar stats, TakeOrdered top-10.
-    "q_skew_report" ->
-      """WITH counts AS (
-        |  SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
-        |         CAST(count(*) AS BIGINT) AS n_keys,
-        |         CAST(max(cnt) AS BIGINT) AS max_cnt
-        |  FROM counts
-        |), top AS (
-        |  SELECT user_id, cnt,
-        |         row_number() OVER (ORDER BY cnt DESC, user_id) AS rank
-        |  FROM counts
-        |)
-        |SELECT CAST(t.rank AS INT) AS rank, t.user_id, t.cnt,
-        |       round(CAST(t.cnt AS DOUBLE) / CAST(x.n_rows AS DOUBLE), 6)
-        |         AS share,
-        |       round(CAST(x.max_cnt AS DOUBLE)
-        |             / (CAST(x.n_rows AS DOUBLE) / CAST(x.n_keys AS DOUBLE)), 6)
-        |         AS skew_ratio
-        |FROM top t CROSS JOIN tot x
-        |WHERE t.rank <= 10
-        |ORDER BY rank""".stripMargin,
-
-    // Two-step replay: the q_transitions CTE squared through a 12dp
-    // decimal mid-state sum.
-    "q_transitions_2step" ->
-      """WITH s AS (
-        |  SELECT event_id, user_id, ts, event_type,
-        |         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events
-        |), f AS (
-        |  SELECT *, CASE WHEN prev IS NULL
-        |                   OR date_diff('second', prev, ts) > 1800
-        |                 THEN 1 ELSE 0 END AS is_new
-        |  FROM s
-        |), sess AS (
-        |  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                              ROWS UNBOUNDED PRECEDING) AS session_idx
-        |  FROM f
-        |), nxt AS (
-        |  SELECT event_type AS from_type,
-        |         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type,
-        |         lead(session_idx) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_sess,
-        |         session_idx
-        |  FROM sess
-        |), tm AS (
-        |  SELECT from_type, to_type,
-        |         round(count(*) / sum(count(*)) OVER (PARTITION BY from_type), 6) AS p
-        |  FROM nxt
-        |  WHERE to_type IS NOT NULL AND next_sess = session_idx
-        |  GROUP BY from_type, to_type
-        |)
-        |SELECT t1.from_type AS from_type, t2.to_type AS to_type,
-        |       round(CAST(sum(CAST(round(t1.p * t2.p, 12) AS DECIMAL(30,12)))
-        |                  AS DOUBLE), 6) AS p2step
-        |FROM tm t1 JOIN tm t2 ON t1.to_type = t2.from_type
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    // Recs replay: the q_basket_pairs machinery symmetrized and ranked.
-    "q_basket_recs" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
-        |), ic AS (
-        |  SELECT i, CAST(count(*) AS BIGINT) AS n_i FROM items GROUP BY 1
-        |), pairs AS (
-        |  SELECT a.i AS item_a, bb.i AS item_b, CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM items a JOIN items bb ON a.b = bb.b AND a.i < bb.i
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), scored AS (
-        |  SELECT p.item_a, p.item_b, p.n_ab,
-        |    round(CAST(p.n_ab AS DOUBLE)
-        |          / sqrt(CAST(ia.n_i AS DOUBLE) * CAST(ib.n_i AS DOUBLE)), 6)
-        |      AS cosine
-        |  FROM pairs p
-        |  JOIN ic ia ON p.item_a = ia.i
-        |  JOIN ic ib ON p.item_b = ib.i
-        |), sym AS (
-        |  SELECT item_a AS item, item_b AS rec, cosine, n_ab FROM scored
-        |  UNION ALL
-        |  SELECT item_b, item_a, cosine, n_ab FROM scored
-        |), ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY item
-        |                               ORDER BY cosine DESC, rec) AS rank
-        |  FROM sym
-        |)
-        |SELECT item, CAST(rank AS INT) AS rank, rec, cosine, n_ab
-        |FROM ranked WHERE rank <= 3
-        |ORDER BY item, rank""".stripMargin,
-
-    // Rolling-correlation replay: integer window sums, same fixed float
-    // order, full windows only.
-    "q_corr_rolling" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day,
-        |         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS x,
-        |         CAST(count(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS y
-        |  FROM events GROUP BY 1
-        |), s AS (
-        |  SELECT day, x, y,
-        |    count(*) OVER w AS n,
-        |    sum(x) OVER w AS sx, sum(y) OVER w AS sy,
-        |    sum(x * y) OVER w AS sxy,
-        |    sum(x * x) OVER w AS sxx, sum(y * y) OVER w AS syy
-        |  FROM daily
-        |  WINDOW w AS (ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |), c AS (
-        |  SELECT day, x, y, n,
-        |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS num,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS vx,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS vy
-        |  FROM s
-        |)
-        |SELECT day, x, y,
-        |       CASE WHEN n = 14 AND vx > 0 AND vy > 0
-        |            THEN round(num / sqrt(vx * vy), 6) + 0.0e0 END AS r
-        |FROM c
-        |ORDER BY day""".stripMargin,
-
-    // Chi2 replay: full grid with zero cells, margin windows, exact
-    // 12dp contribution sum, scalar-table stats cross-joined back.
-    "q_chi2_independence" ->
-      """WITH cells AS (
-        |  SELECT event_type, CAST(isodow(ts) - 1 AS INT) AS dow,
-        |         CAST(count(*) AS BIGINT) AS o
-        |  FROM events GROUP BY 1, 2
-        |), grid AS (
-        |  SELECT a.event_type, b.dow, coalesce(c.o, 0) AS o
-        |  FROM (SELECT DISTINCT event_type FROM cells) a
-        |  CROSS JOIN (SELECT DISTINCT dow FROM cells) b
-        |  LEFT JOIN cells c USING (event_type, dow)
-        |), m AS (
-        |  SELECT *, sum(o) OVER (PARTITION BY event_type) AS rt,
-        |         sum(o) OVER (PARTITION BY dow) AS ct
-        |  FROM grid
-        |), t AS (
-        |  SELECT CAST(sum(o) AS BIGINT) AS nn,
-        |         CAST(count(DISTINCT event_type) AS BIGINT) AS na,
-        |         CAST(count(DISTINCT dow) AS BIGINT) AS nb
-        |  FROM m
-        |), cc AS (
-        |  SELECT m.*, t.nn, t.na, t.nb,
-        |    (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE)) / CAST(nn AS DOUBLE) AS e
-        |  FROM m CROSS JOIN t
-        |), cd AS (
-        |  SELECT *, round((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e,
-        |                  12) AS contrib
-        |  FROM cc
-        |), x AS (
-        |  SELECT CAST(sum(CAST(contrib AS DECIMAL(30,12))) AS DOUBLE) AS chi2
-        |  FROM cd
-        |)
-        |SELECT event_type, dow, o, round(e, 6) AS e,
-        |  round(contrib, 6) AS contrib, round(x.chi2, 6) AS chi2,
-        |  CAST((na - 1) * (nb - 1) AS BIGINT) AS dof,
-        |  CASE WHEN least(na - 1, nb - 1) > 0 AND nn > 0
-        |       THEN round(sqrt(x.chi2 / (CAST(nn AS DOUBLE)
-        |                                 * CAST(least(na - 1, nb - 1) AS DOUBLE))),
-        |                  6) END AS cramers_v
-        |FROM cd CROSS JOIN x
-        |ORDER BY event_type, dow""".stripMargin,
-
-    // A/B replay: same md5 coin, same pooled-variance expression order.
-    "q_ab_test" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |           AS converted
-        |  FROM events GROUP BY 1
-        |), a AS (
-        |  SELECT converted,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM u
-        |), s AS (
-        |  SELECT CAST(count(*) FILTER (WHERE arm = 0) AS BIGINT) AS n_a,
-        |         CAST(count(*) FILTER (WHERE arm = 1) AS BIGINT) AS n_b,
-        |         CAST(sum(CASE WHEN arm = 0 THEN converted ELSE 0 END) AS BIGINT) AS k_a,
-        |         CAST(sum(CASE WHEN arm = 1 THEN converted ELSE 0 END) AS BIGINT) AS k_b
-        |  FROM a
-        |), c AS (
-        |  SELECT *, CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS pa,
-        |         CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS pb,
-        |         CAST(k_a + k_b AS DOUBLE)
-        |           / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) AS pp
-        |  FROM s
-        |), zc AS (
-        |  SELECT *, sqrt(pp * (1.0 - pp)
-        |                 * (1.0 / CAST(n_a AS DOUBLE)
-        |                    + 1.0 / CAST(n_b AS DOUBLE))) AS se
-        |  FROM c
-        |)
-        |SELECT n_a, k_a, round(pa, 6) AS rate_a,
-        |       n_b, k_b, round(pb, 6) AS rate_b,
-        |       CASE WHEN n_a > 0 AND n_b > 0 AND se > 0
-        |            THEN round((pa - pb) / se, 6) + 0.0e0 END AS z,
-        |       coalesce(CASE WHEN n_a > 0 AND n_b > 0 AND se > 0
-        |                     THEN abs((pa - pb) / se) > 1.96 END,
-        |                false) AS significant
-        |FROM zc""".stripMargin,
-
-    // CUPED replay: the md5 coin, per-user pre/post grid sums, theta
-    // from the n·Σxy − Σx·Σy decimal moments, 6dp-regridded adjustment,
-    // per-arm decimal moments, Welch z — the engine's exact operation
-    // order throughout.
-    "q_ab_cuped" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    round(coalesce(CAST(sum(CASE WHEN day(ts) <= 15
-        |        THEN CAST(round(value, 6) AS DECIMAL(18,6)) END) AS DOUBLE),
-        |      0.0), 6) AS x,
-        |    round(coalesce(CAST(sum(CASE WHEN NOT (day(ts) <= 15)
-        |        THEN CAST(round(value, 6) AS DECIMAL(18,6)) END) AS DOUBLE),
-        |      0.0), 6) AS y
-        |  FROM events GROUP BY 1
-        |), ua AS (
-        |  SELECT *,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM u
-        |), mom AS (
-        |  -- DECIMAL(19,6) on the product operands: DuckDB keeps a
-        |  -- multiply in INT64 while both widths are <= 18, and per-user
-        |  -- value sums overflow that lane; width 19 forces INT128
-        |  -- (DECIMAL(38,12)) — same exact values as Spark's (37,12).
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-        |         CAST(sum(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-        |         CAST(sum(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS DOUBLE) AS sxy,
-        |         CAST(sum(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))) AS DOUBLE) AS sxx,
-        |         CAST(sum(CAST(y AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS DOUBLE) AS syy
-        |  FROM ua
-        |), th AS (
-        |  SELECT n, sx,
-        |         CAST(n AS DOUBLE) * syy - sy * sy AS varyn,
-        |         CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx > 0
-        |              THEN round((CAST(n AS DOUBLE) * sxy - sx * sy)
-        |                         / (CAST(n AS DOUBLE) * sxx - sx * sx), 6)
-        |              ELSE 0.0 END AS theta
-        |  FROM mom
-        |), adj AS (
-        |  SELECT ua.arm,
-        |         round(ua.y - th.theta * (ua.x - th.sx / CAST(th.n AS DOUBLE)), 6) AS adj,
-        |         th.theta, th.varyn, th.n AS n_all
-        |  FROM ua CROSS JOIN th
-        |), byarm AS (
-        |  SELECT arm, CAST(count(*) AS BIGINT) AS n_arm,
-        |         CAST(sum(CAST(adj AS DECIMAL(18,6))) AS DOUBLE) AS sa,
-        |         CAST(sum(CAST(adj AS DECIMAL(19,6)) * CAST(adj AS DECIMAL(19,6))) AS DOUBLE) AS saa,
-        |         max(theta) AS theta, max(varyn) AS varyn, max(n_all) AS n_all
-        |  FROM adj GROUP BY arm
-        |), piv AS (
-        |  SELECT max(CASE WHEN arm = 0 THEN n_arm END) AS n_a,
-        |         max(CASE WHEN arm = 1 THEN n_arm END) AS n_b,
-        |         max(CASE WHEN arm = 0 THEN sa END) AS sa_a,
-        |         max(CASE WHEN arm = 1 THEN sa END) AS sa_b,
-        |         max(CASE WHEN arm = 0 THEN saa END) AS saa_a,
-        |         max(CASE WHEN arm = 1 THEN saa END) AS saa_b,
-        |         max(theta) AS theta, max(varyn) AS varyn, max(n_all) AS n_all
-        |  FROM byarm
-        |), f AS (
-        |  SELECT *,
-        |         CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-        |         CAST(n_all AS DOUBLE) AS nall
-        |  FROM piv
-        |), g AS (
-        |  SELECT *,
-        |         sa_a / na AS ma, sa_b / nb AS mb,
-        |         sqrt((na * saa_a - sa_a * sa_a) / (na * (na - 1.0)) / na
-        |              + (nb * saa_b - sa_b * sa_b) / (nb * (nb - 1.0)) / nb) AS se
-        |  FROM f
-        |)
-        |SELECT n_a, n_b,
-        |       round(ma, 6) + 0.0e0 AS mean_adj_a,
-        |       round(mb, 6) + 0.0e0 AS mean_adj_b,
-        |       theta + 0.0e0 AS theta,
-        |       CASE WHEN varyn > 0 THEN
-        |         round(1.0 - (nall * (saa_a + saa_b)
-        |                      - (sa_a + sa_b) * (sa_a + sa_b))
-        |                     / (nall * (nall - 1.0)) / (varyn / (nall * (nall - 1.0))),
-        |               6) + 0.0e0 END AS var_reduction,
-        |       CASE WHEN n_a > 1 AND n_b > 1 AND se > 0
-        |            THEN round((ma - mb) / se, 6) + 0.0e0 END AS z,
-        |       coalesce(CASE WHEN n_a > 1 AND n_b > 1 AND se > 0
-        |                     THEN abs((ma - mb) / se) > 1.96 END,
-        |                false) AS significant
-        |FROM g""".stripMargin,
-
-    // Mann-Whitney replay: per-user grid sums, md5 coin, distinct-value
-    // arm counts, doubled midranks 2r + c - 1 as integer folds, the
-    // tie-corrected sigma and one double assembly — the engine's exact
-    // operation order.
-    "q_ab_mannwhitney" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    round(coalesce(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6)))
-        |                        AS DOUBLE), 0.0), 6) AS m
-        |  FROM events GROUP BY 1
-        |), ua AS (
-        |  SELECT m,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM u
-        |), byval AS (
-        |  SELECT m,
-        |         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |         CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |  FROM ua GROUP BY m
-        |), rk AS (
-        |  SELECT *, ca + cb AS c,
-        |         CAST(coalesce(sum(ca + cb) OVER (ORDER BY m
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS BIGINT) + 1 AS r
-        |  FROM byval
-        |), agg AS (
-        |  SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |         CAST(sum(cb) AS BIGINT) AS n_b,
-        |         CAST(sum(ca * (2 * r + c - 1)) AS BIGINT) AS r2_a,
-        |         CAST(sum(c * c * c - c) AS BIGINT) AS tie_sum
-        |  FROM rk
-        |), f AS (
-        |  SELECT *,
-        |         r2_a - n_a * (n_a + 1) AS u2,
-        |         CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-        |         CAST(n_a + n_b AS DOUBLE) AS nd
-        |  FROM agg
-        |), g AS (
-        |  SELECT *,
-        |         na * nb / 12.0 * ((nd + 1.0)
-        |           - CAST(tie_sum AS DOUBLE) / (nd * (nd - 1.0))) AS sigma2
-        |  FROM f
-        |)
-        |SELECT n_a, n_b,
-        |       CAST(u2 AS DOUBLE) / 2.0 AS u_a,
-        |       CASE WHEN n_a > 0 AND n_b > 0 AND sigma2 > 0
-        |            THEN round((CAST(u2 AS DOUBLE) - na * nb)
-        |                       / (2.0 * sqrt(sigma2)), 6) + 0.0e0 END AS z,
-        |       CASE WHEN n_a > 0 AND n_b > 0
-        |            THEN round(CAST(u2 AS DOUBLE) / (na * nb) - 1.0, 6) + 0.0e0
-        |       END AS effect,
-        |       coalesce(CASE WHEN n_a > 0 AND n_b > 0 AND sigma2 > 0
-        |                     THEN abs((CAST(u2 AS DOUBLE) - na * nb)
-        |                              / (2.0 * sqrt(sigma2))) > 1.96 END,
-        |                false) AS significant
-        |FROM g""".stripMargin,
-
-    // Quantile-effects replay: the md5 coin, per-arm rank windows, the
-    // funnelLatency integer-rank order statistics, B−A differences.
-    "q_ab_quantiles" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    round(coalesce(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6)))
-        |                        AS DOUBLE), 0.0), 6) + 0.0e0 AS m
-        |  FROM events GROUP BY 1
-        |), ua AS (
-        |  SELECT m,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM u
-        |), rk AS (
-        |  SELECT arm, m,
-        |         row_number() OVER (PARTITION BY arm ORDER BY m) AS rn,
-        |         count(*) OVER (PARTITION BY arm) AS n
-        |  FROM ua
-        |), q AS (
-        |  SELECT arm, CAST(max(n) AS BIGINT) AS n_arm,
-        |         max(CASE WHEN rn = CAST(floor((CAST(n AS DOUBLE) + 1.0) / 2.0)
-        |                                 AS BIGINT) THEN m END) AS med,
-        |         max(CASE WHEN rn = CAST(floor((9.0 * CAST(n AS DOUBLE) + 9.0)
-        |                                       / 10.0) AS BIGINT) THEN m END) AS p90
-        |  FROM rk GROUP BY arm
-        |), piv AS (
-        |  SELECT max(CASE WHEN arm = 0 THEN n_arm END) AS n_a,
-        |         max(CASE WHEN arm = 1 THEN n_arm END) AS n_b,
-        |         max(CASE WHEN arm = 0 THEN med END) AS median_a,
-        |         max(CASE WHEN arm = 1 THEN med END) AS median_b,
-        |         max(CASE WHEN arm = 0 THEN p90 END) AS p90_a,
-        |         max(CASE WHEN arm = 1 THEN p90 END) AS p90_b
-        |  FROM q
-        |)
-        |SELECT n_a, n_b, median_a, median_b, p90_a, p90_b,
-        |       round(median_b - median_a, 6) + 0.0e0 AS median_diff,
-        |       round(p90_b - p90_a, 6) + 0.0e0 AS p90_diff
-        |FROM piv""".stripMargin,
-
-    // SRM replay: distinct users, md5 coin, (n_a−n_b)²/(n_a+n_b) with
-    // the integer numerator, 1-df 5% critical value 3.841.
-    "q_ab_srm" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events
-        |), a AS (
-        |  SELECT ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM u
-        |), s AS (
-        |  SELECT CAST(count(*) FILTER (WHERE arm = 0) AS BIGINT) AS n_a,
-        |         CAST(count(*) FILTER (WHERE arm = 1) AS BIGINT) AS n_b
-        |  FROM a
-        |)
-        |SELECT n_a, n_b,
-        |       CASE WHEN n_a + n_b > 0 THEN
-        |         round(CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
-        |               / CAST(n_a + n_b AS DOUBLE), 6) END AS chi2,
-        |       coalesce(CASE WHEN n_a + n_b > 0 THEN
-        |         CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
-        |           / CAST(n_a + n_b AS DOUBLE) > 3.841 END, false) AS srm
-        |FROM s""".stripMargin,
-
-    // Daily-SRM replay: first-seen day per user, md5 coin, day-grain
-    // chi-square with the integer numerator.
-    "q_ab_srm_daily" ->
-      """WITH u AS (
-        |  SELECT user_id, min(CAST(ts AS DATE)) AS day FROM events GROUP BY 1
-        |), a AS (
-        |  SELECT day,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM u
-        |), s AS (
-        |  SELECT day,
-        |         CAST(count(*) FILTER (WHERE arm = 0) AS BIGINT) AS n_a,
-        |         CAST(count(*) FILTER (WHERE arm = 1) AS BIGINT) AS n_b
-        |  FROM a GROUP BY day
-        |)
-        |SELECT day, n_a, n_b,
-        |       CASE WHEN n_a + n_b > 0 THEN
-        |         round(CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
-        |               / CAST(n_a + n_b AS DOUBLE), 6) END AS chi2,
-        |       coalesce(CASE WHEN n_a + n_b > 0 THEN
-        |         CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
-        |           / CAST(n_a + n_b AS DOUBLE) > 3.841 END, false) AS srm
-        |FROM s ORDER BY day""".stripMargin,
-
-    // Balance replay: one user-grain pass for the covariate trio, md5
-    // coin, melted long, per-(covariate, arm) decimal moments, pooled-sd
-    // SMD in the engine's operation order.
-    "q_ab_balance" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    round(coalesce(CAST(sum(CASE WHEN day(ts) <= 15
-        |        THEN CAST(round(value, 6) AS DECIMAL(18,6)) END) AS DOUBLE),
-        |      0.0), 6) AS pre_value,
-        |    CAST(sum(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END) AS DOUBLE)
-        |      AS pre_events,
-        |    CAST(count(DISTINCT CASE WHEN day(ts) <= 15
-        |        THEN CAST(ts AS DATE) END) AS DOUBLE) AS pre_days
-        |  FROM events GROUP BY 1
-        |), ua AS (
-        |  SELECT *,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM u
-        |), m AS (
-        |  SELECT 'pre_value' AS covariate, arm, pre_value AS x FROM ua
-        |  UNION ALL SELECT 'pre_events', arm, pre_events FROM ua
-        |  UNION ALL SELECT 'pre_days', arm, pre_days FROM ua
-        |), byarm AS (
-        |  SELECT covariate, arm, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS s,
-        |         CAST(sum(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6)))
-        |              AS DOUBLE) AS ss
-        |  FROM m GROUP BY 1, 2
-        |), piv AS (
-        |  SELECT covariate,
-        |         max(CASE WHEN arm = 0 THEN n END) AS n_a,
-        |         max(CASE WHEN arm = 1 THEN n END) AS n_b,
-        |         max(CASE WHEN arm = 0 THEN s END) AS s_a,
-        |         max(CASE WHEN arm = 1 THEN s END) AS s_b,
-        |         max(CASE WHEN arm = 0 THEN ss END) AS ss_a,
-        |         max(CASE WHEN arm = 1 THEN ss END) AS ss_b
-        |  FROM byarm GROUP BY covariate
-        |), f AS (
-        |  SELECT *, CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb
-        |  FROM piv
-        |), g AS (
-        |  SELECT *, s_a / na AS ma, s_b / nb AS mb,
-        |         sqrt(((na * ss_a - s_a * s_a) / (na * (na - 1.0))
-        |               + (nb * ss_b - s_b * s_b) / (nb * (nb - 1.0))) / 2.0)
-        |           AS pooled
-        |  FROM f
-        |)
-        |SELECT covariate,
-        |       round(ma, 6) + 0.0e0 AS mean_a,
-        |       round(mb, 6) + 0.0e0 AS mean_b,
-        |       CASE WHEN n_a > 1 AND n_b > 1 AND pooled > 0
-        |            THEN round((mb - ma) / pooled, 6) + 0.0e0 END AS smd,
-        |       coalesce(CASE WHEN n_a > 1 AND n_b > 1 AND pooled > 0
-        |                     THEN abs((mb - ma) / pooled) > 0.1 END,
-        |                false) AS imbalanced
-        |FROM g ORDER BY covariate""".stripMargin,
-
-    // DiD replay: per-user pre/post grid sums, md5 coin, change scores
-    // re-gridded at 6dp, per-arm decimal moments, Welch z on the change
-    // scores — the engine's exact operation order.
-    "q_ab_did" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    round(coalesce(CAST(sum(CASE WHEN day(ts) <= 15
-        |        THEN CAST(round(value, 6) AS DECIMAL(18,6)) END) AS DOUBLE),
-        |      0.0), 6) AS x,
-        |    round(coalesce(CAST(sum(CASE WHEN NOT (day(ts) <= 15)
-        |        THEN CAST(round(value, 6) AS DECIMAL(18,6)) END) AS DOUBLE),
-        |      0.0), 6) AS y
-        |  FROM events GROUP BY 1
-        |), ua AS (
-        |  SELECT *,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm,
-        |    round(y - x, 6) AS dd
-        |  FROM u
-        |), byarm AS (
-        |  SELECT arm, CAST(count(*) AS BIGINT) AS n_arm,
-        |         CAST(sum(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-        |         CAST(sum(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-        |         CAST(sum(CAST(dd AS DECIMAL(18,6))) AS DOUBLE) AS sd,
-        |         CAST(sum(CAST(dd AS DECIMAL(19,6)) * CAST(dd AS DECIMAL(19,6)))
-        |              AS DOUBLE) AS sdd
-        |  FROM ua GROUP BY arm
-        |), piv AS (
-        |  SELECT max(CASE WHEN arm = 0 THEN n_arm END) AS n_a,
-        |         max(CASE WHEN arm = 1 THEN n_arm END) AS n_b,
-        |         max(CASE WHEN arm = 0 THEN sx END) AS sx_a,
-        |         max(CASE WHEN arm = 1 THEN sx END) AS sx_b,
-        |         max(CASE WHEN arm = 0 THEN sy END) AS sy_a,
-        |         max(CASE WHEN arm = 1 THEN sy END) AS sy_b,
-        |         max(CASE WHEN arm = 0 THEN sd END) AS sd_a,
-        |         max(CASE WHEN arm = 1 THEN sd END) AS sd_b,
-        |         max(CASE WHEN arm = 0 THEN sdd END) AS sdd_a,
-        |         max(CASE WHEN arm = 1 THEN sdd END) AS sdd_b
-        |  FROM byarm
-        |), f AS (
-        |  SELECT *, CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb
-        |  FROM piv
-        |), g AS (
-        |  SELECT *, sd_a / na AS ma, sd_b / nb AS mb,
-        |         sqrt((na * sdd_a - sd_a * sd_a) / (na * (na - 1.0)) / na
-        |              + (nb * sdd_b - sd_b * sd_b) / (nb * (nb - 1.0)) / nb) AS se
-        |  FROM f
-        |)
-        |SELECT n_a, n_b,
-        |       round(sx_a / na, 6) + 0.0e0 AS pre_a,
-        |       round(sy_a / na, 6) + 0.0e0 AS post_a,
-        |       round(sx_b / nb, 6) + 0.0e0 AS pre_b,
-        |       round(sy_b / nb, 6) + 0.0e0 AS post_b,
-        |       CASE WHEN n_a > 0 AND n_b > 0
-        |            THEN round(mb - ma, 6) + 0.0e0 END AS did,
-        |       CASE WHEN n_a > 1 AND n_b > 1 AND se > 0
-        |            THEN round((mb - ma) / se, 6) + 0.0e0 END AS z,
-        |       coalesce(CASE WHEN n_a > 1 AND n_b > 1 AND se > 0
-        |                     THEN abs((mb - ma) / se) > 1.96 END,
-        |                false) AS significant
-        |FROM g""".stripMargin,
-
-    // BH-FDR replay: distinct-(user, type) conversions, per-metric
-    // pooled z on the 6dp grid, the A-S 26.2.17 tail polynomial
-    // (identical literals and parenthesization to the engine), step-up
-    // adjustment as a running window min over (p, metric) order.
-    "q_ab_fdr" ->
-      """WITH au AS (SELECT DISTINCT user_id FROM events
-        |), ua AS (
-        |  SELECT user_id,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM au
-        |), tot AS (
-        |  SELECT CAST(count(*) FILTER (WHERE arm = 0) AS BIGINT) AS n_a,
-        |         CAST(count(*) FILTER (WHERE arm = 1) AS BIGINT) AS n_b
-        |  FROM ua
-        |), uc AS (
-        |  SELECT DISTINCT user_id, event_type AS metric FROM events
-        |), km AS (
-        |  SELECT metric,
-        |         CAST(count(*) FILTER (WHERE arm = 0) AS BIGINT) AS k_a,
-        |         CAST(count(*) FILTER (WHERE arm = 1) AS BIGINT) AS k_b
-        |  FROM uc JOIN ua USING (user_id) GROUP BY metric
-        |), zt AS (
-        |  SELECT metric, k_a, k_b, n_a, n_b,
-        |         CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS pa,
-        |         CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS pb,
-        |         CAST(k_a + k_b AS DOUBLE)
-        |           / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) AS pp
-        |  FROM km CROSS JOIN tot
-        |), z6 AS (
-        |  SELECT metric, k_a, k_b,
-        |         CASE WHEN n_a > 0 AND n_b > 0 AND
-        |                   sqrt(pp * (1.0 - pp)
-        |                        * (1.0 / CAST(n_a AS DOUBLE)
-        |                           + 1.0 / CAST(n_b AS DOUBLE))) > 0
-        |              THEN round((pa - pb)
-        |                     / sqrt(pp * (1.0 - pp)
-        |                            * (1.0 / CAST(n_a AS DOUBLE)
-        |                               + 1.0 / CAST(n_b AS DOUBLE))), 6)
-        |              ELSE 0.0 END AS z
-        |  FROM zt
-        |), pv AS (
-        |  SELECT metric, k_a, k_b, z,
-        |         round(least(2.0 * (0.3989422804014327
-        |             * exp(-0.5 * abs(z) * abs(z))
-        |             * (t * (0.319381530 + t * (-0.356563782
-        |                + t * (1.781477937 + t * (-1.821255978
-        |                + t * 1.330274429)))))), 1.0), 6) AS p
-        |  FROM (SELECT *, 1.0 / (1.0 + 0.2316419 * abs(z)) AS t FROM z6)
-        |), bh AS (
-        |  SELECT *, row_number() OVER (ORDER BY p, metric) AS i,
-        |         count(*) OVER () AS m
-        |  FROM pv
-        |), adj AS (
-        |  SELECT *,
-        |         round(least(min(p * CAST(m AS DOUBLE) / CAST(i AS DOUBLE))
-        |             OVER (ORDER BY p, metric
-        |                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING),
-        |           1.0), 6) AS p_adj
-        |  FROM bh
-        |)
-        |SELECT metric, k_a, k_b, z + 0.0e0 AS z, p, p_adj,
-        |       p_adj <= 0.05 AS rejected
-        |FROM adj ORDER BY metric""".stripMargin,
-
-    // Funnel-A/B replay: the q_funnel min-ts step chain, md5 coin over
-    // the step-1 cohort, one conditional-count row, melted per step
-    // with the pooled two-proportion z on step-over-step conversion.
-    "q_ab_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS t2
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1
-        |), s3 AS (
-        |  SELECT e.user_id, min(e.ts) AS t3
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1
-        |), ua AS (
-        |  SELECT s1.user_id,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(s1.user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(s1.user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm,
-        |    s2.user_id IS NOT NULL AS r2,
-        |    s3.user_id IS NOT NULL AS r3
-        |  FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-        |), c AS (
-        |  SELECT
-        |    CAST(count(*) FILTER (WHERE arm = 0) AS BIGINT) AS a1,
-        |    CAST(count(*) FILTER (WHERE arm = 1) AS BIGINT) AS b1,
-        |    CAST(count(*) FILTER (WHERE arm = 0 AND r2) AS BIGINT) AS a2,
-        |    CAST(count(*) FILTER (WHERE arm = 1 AND r2) AS BIGINT) AS b2,
-        |    CAST(count(*) FILTER (WHERE arm = 0 AND r3) AS BIGINT) AS a3,
-        |    CAST(count(*) FILTER (WHERE arm = 1 AND r3) AS BIGINT) AS b3
-        |  FROM ua
-        |), m AS (
-        |  SELECT 1 AS step_idx, 'view' AS step, a1 AS reach_a, b1 AS reach_b,
-        |         CAST(NULL AS DOUBLE) AS rate_a, CAST(NULL AS DOUBLE) AS rate_b,
-        |         CAST(NULL AS DOUBLE) AS z, false AS significant
-        |  FROM c
-        |  UNION ALL
-        |  SELECT 2, 'click', a2, b2,
-        |         CASE WHEN a1 > 0 THEN round(CAST(a2 AS DOUBLE) / CAST(a1 AS DOUBLE), 6) END,
-        |         CASE WHEN b1 > 0 THEN round(CAST(b2 AS DOUBLE) / CAST(b1 AS DOUBLE), 6) END,
-        |         CASE WHEN a1 > 0 AND b1 > 0 AND
-        |                   sqrt((CAST(a2 + b2 AS DOUBLE) / (CAST(a1 AS DOUBLE) + CAST(b1 AS DOUBLE)))
-        |                        * (1.0 - CAST(a2 + b2 AS DOUBLE) / (CAST(a1 AS DOUBLE) + CAST(b1 AS DOUBLE)))
-        |                        * (1.0 / CAST(a1 AS DOUBLE) + 1.0 / CAST(b1 AS DOUBLE))) > 0
-        |              THEN round((CAST(a2 AS DOUBLE) / CAST(a1 AS DOUBLE)
-        |                          - CAST(b2 AS DOUBLE) / CAST(b1 AS DOUBLE))
-        |                   / sqrt((CAST(a2 + b2 AS DOUBLE) / (CAST(a1 AS DOUBLE) + CAST(b1 AS DOUBLE)))
-        |                          * (1.0 - CAST(a2 + b2 AS DOUBLE) / (CAST(a1 AS DOUBLE) + CAST(b1 AS DOUBLE)))
-        |                          * (1.0 / CAST(a1 AS DOUBLE) + 1.0 / CAST(b1 AS DOUBLE))), 6) + 0.0e0
-        |         END,
-        |         coalesce(CASE WHEN a1 > 0 AND b1 > 0 AND
-        |                   sqrt((CAST(a2 + b2 AS DOUBLE) / (CAST(a1 AS DOUBLE) + CAST(b1 AS DOUBLE)))
-        |                        * (1.0 - CAST(a2 + b2 AS DOUBLE) / (CAST(a1 AS DOUBLE) + CAST(b1 AS DOUBLE)))
-        |                        * (1.0 / CAST(a1 AS DOUBLE) + 1.0 / CAST(b1 AS DOUBLE))) > 0
-        |              THEN abs(CAST(a2 AS DOUBLE) / CAST(a1 AS DOUBLE)
-        |                       - CAST(b2 AS DOUBLE) / CAST(b1 AS DOUBLE))
-        |                   / sqrt((CAST(a2 + b2 AS DOUBLE) / (CAST(a1 AS DOUBLE) + CAST(b1 AS DOUBLE)))
-        |                          * (1.0 - CAST(a2 + b2 AS DOUBLE) / (CAST(a1 AS DOUBLE) + CAST(b1 AS DOUBLE)))
-        |                          * (1.0 / CAST(a1 AS DOUBLE) + 1.0 / CAST(b1 AS DOUBLE))) > 1.96
-        |         END, false)
-        |  FROM c
-        |  UNION ALL
-        |  SELECT 3, 'purchase', a3, b3,
-        |         CASE WHEN a2 > 0 THEN round(CAST(a3 AS DOUBLE) / CAST(a2 AS DOUBLE), 6) END,
-        |         CASE WHEN b2 > 0 THEN round(CAST(b3 AS DOUBLE) / CAST(b2 AS DOUBLE), 6) END,
-        |         CASE WHEN a2 > 0 AND b2 > 0 AND
-        |                   sqrt((CAST(a3 + b3 AS DOUBLE) / (CAST(a2 AS DOUBLE) + CAST(b2 AS DOUBLE)))
-        |                        * (1.0 - CAST(a3 + b3 AS DOUBLE) / (CAST(a2 AS DOUBLE) + CAST(b2 AS DOUBLE)))
-        |                        * (1.0 / CAST(a2 AS DOUBLE) + 1.0 / CAST(b2 AS DOUBLE))) > 0
-        |              THEN round((CAST(a3 AS DOUBLE) / CAST(a2 AS DOUBLE)
-        |                          - CAST(b3 AS DOUBLE) / CAST(b2 AS DOUBLE))
-        |                   / sqrt((CAST(a3 + b3 AS DOUBLE) / (CAST(a2 AS DOUBLE) + CAST(b2 AS DOUBLE)))
-        |                          * (1.0 - CAST(a3 + b3 AS DOUBLE) / (CAST(a2 AS DOUBLE) + CAST(b2 AS DOUBLE)))
-        |                          * (1.0 / CAST(a2 AS DOUBLE) + 1.0 / CAST(b2 AS DOUBLE))), 6) + 0.0e0
-        |         END,
-        |         coalesce(CASE WHEN a2 > 0 AND b2 > 0 AND
-        |                   sqrt((CAST(a3 + b3 AS DOUBLE) / (CAST(a2 AS DOUBLE) + CAST(b2 AS DOUBLE)))
-        |                        * (1.0 - CAST(a3 + b3 AS DOUBLE) / (CAST(a2 AS DOUBLE) + CAST(b2 AS DOUBLE)))
-        |                        * (1.0 / CAST(a2 AS DOUBLE) + 1.0 / CAST(b2 AS DOUBLE))) > 0
-        |              THEN abs(CAST(a3 AS DOUBLE) / CAST(a2 AS DOUBLE)
-        |                       - CAST(b3 AS DOUBLE) / CAST(b2 AS DOUBLE))
-        |                   / sqrt((CAST(a3 + b3 AS DOUBLE) / (CAST(a2 AS DOUBLE) + CAST(b2 AS DOUBLE)))
-        |                          * (1.0 - CAST(a3 + b3 AS DOUBLE) / (CAST(a2 AS DOUBLE) + CAST(b2 AS DOUBLE)))
-        |                          * (1.0 / CAST(a2 AS DOUBLE) + 1.0 / CAST(b2 AS DOUBLE))) > 1.96
-        |         END, false)
-        |  FROM c
-        |)
-        |SELECT * FROM m ORDER BY step_idx""".stripMargin,
-
-    // mSPRT replay: user-day grid sums, md5 coin, per-(arm, day)
-    // decimal moments, prefix-window cumsums over the day table, the
-    // closed-form mixture log-likelihood on the 6dp grid, and the
-    // running-min always-valid p — the engine's exact operation order.
-    "q_ab_sequential" ->
-      """WITH ud AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |    round(coalesce(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6)))
-        |                        AS DOUBLE), 0.0), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), ua AS (
-        |  SELECT *,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM ud
-        |), byday AS (
-        |  SELECT arm, day, CAST(count(*) AS BIGINT) AS n,
-        |         sum(CAST(m AS DECIMAL(18,6))) AS s,
-        |         sum(CAST(m AS DECIMAL(19,6)) * CAST(m AS DECIMAL(19,6))) AS ss
-        |  FROM ua GROUP BY 1, 2
-        |), piv AS (
-        |  SELECT day,
-        |         coalesce(max(CASE WHEN arm = 0 THEN n END), 0) AS dn_a,
-        |         coalesce(max(CASE WHEN arm = 1 THEN n END), 0) AS dn_b,
-        |         coalesce(max(CASE WHEN arm = 0 THEN s END), 0) AS ds_a,
-        |         coalesce(max(CASE WHEN arm = 1 THEN s END), 0) AS ds_b,
-        |         coalesce(max(CASE WHEN arm = 0 THEN ss END), 0) AS dss_a,
-        |         coalesce(max(CASE WHEN arm = 1 THEN ss END), 0) AS dss_b
-        |  FROM byday GROUP BY day
-        |), cum AS (
-        |  SELECT day,
-        |         CAST(sum(dn_a) OVER w AS BIGINT) AS n_a,
-        |         CAST(sum(dn_b) OVER w AS BIGINT) AS n_b,
-        |         CAST(sum(ds_a) OVER w AS DOUBLE) AS s_a,
-        |         CAST(sum(ds_b) OVER w AS DOUBLE) AS s_b,
-        |         CAST(sum(dss_a) OVER w AS DOUBLE) AS ss_a,
-        |         CAST(sum(dss_b) OVER w AS DOUBLE) AS ss_b
-        |  FROM piv
-        |  WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-        |               AND CURRENT ROW)
-        |), f AS (
-        |  SELECT *, CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb
-        |  FROM cum
-        |), g AS (
-        |  SELECT *, s_a / na AS ma, s_b / nb AS mb,
-        |         (na * ss_a - s_a * s_a) / (na * (na - 1.0)) / na
-        |           + (nb * ss_b - s_b * s_b) / (nb * (nb - 1.0)) / nb AS vt
-        |  FROM f
-        |), h AS (
-        |  SELECT *,
-        |         CASE WHEN n_a > 1 AND n_b > 1 AND vt > 0
-        |              THEN round(0.5 * ln(vt / (vt + 1.0))
-        |                         + (mb - ma) * (mb - ma) * 1.0
-        |                           / (2.0 * vt * (vt + 1.0)), 6)
-        |         END AS log_lambda
-        |  FROM g
-        |), k AS (
-        |  SELECT day, n_a, n_b,
-        |         CASE WHEN n_a > 0 AND n_b > 0
-        |              THEN round(mb - ma, 6) + 0.0e0 END AS diff,
-        |         log_lambda + 0.0e0 AS log_lambda,
-        |         round(min(CASE WHEN log_lambda IS NULL THEN 1.0
-        |                        WHEN log_lambda > 0 THEN exp(-log_lambda)
-        |                        ELSE 1.0 END)
-        |               OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-        |                     AND CURRENT ROW), 6) AS p_always
-        |  FROM h
-        |)
-        |SELECT day, n_a, n_b, diff, log_lambda, p_always,
-        |       p_always <= 0.05 AS significant
-        |FROM k ORDER BY day""".stripMargin,
-
-    // Power replay: per-user grid metric, md5 coin, pooled variance
-    // from exact decimal moments, MDE with the fixed 2.801585 constant.
-    "q_ab_power" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    round(coalesce(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6)))
-        |                        AS DOUBLE), 0.0), 6) AS m
-        |  FROM events GROUP BY 1
-        |), ua AS (
-        |  SELECT *,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM u
-        |), a AS (
-        |  SELECT CAST(count(*) FILTER (WHERE arm = 0) AS BIGINT) AS n_a,
-        |         CAST(count(*) FILTER (WHERE arm = 1) AS BIGINT) AS n_b,
-        |         CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CAST(m AS DECIMAL(18,6))) AS DOUBLE) AS s,
-        |         CAST(sum(CAST(m AS DECIMAL(19,6)) * CAST(m AS DECIMAL(19,6)))
-        |              AS DOUBLE) AS ss
-        |  FROM ua
-        |), f AS (
-        |  SELECT *, CAST(n AS DOUBLE) AS nd,
-        |         CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-        |         (CAST(n AS DOUBLE) * ss - s * s)
-        |           / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS varp
-        |  FROM a
-        |)
-        |SELECT n_a, n_b,
-        |       round(s / nd, 6) + 0.0e0 AS mean_metric,
-        |       CASE WHEN varp > 0 THEN round(sqrt(varp), 6) END AS sd,
-        |       CASE WHEN n_a > 0 AND n_b > 0 AND varp > 0
-        |            THEN round(2.801585 * sqrt(varp * (1.0 / na + 1.0 / nb)), 6)
-        |       END AS mde_abs,
-        |       CASE WHEN n_a > 0 AND n_b > 0 AND varp > 0 AND abs(s / nd) > 0
-        |            THEN round(2.801585 * sqrt(varp * (1.0 / na + 1.0 / nb))
-        |                       / abs(s / nd), 6)
-        |       END AS mde_rel
-        |FROM f""".stripMargin,
-
-    // Bayesian-bootstrap replay: per-user grid metric, md5 coin, 40
-    // hash-derived exponential weights per user (−ln of the 52-bit md5
-    // uniform, 6dp grid), weighted arm means through exact decimal
-    // folds, paired replicate diffs, order statistics at ranks 2/39.
-    "q_ab_bootstrap" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    round(coalesce(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6)))
-        |                        AS DOUBLE), 0.0), 6) AS m
-        |  FROM events GROUP BY 1
-        |), ua AS (
-        |  SELECT *,
-        |    ((strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 1, 1)) - 1) * 16
-        |     + (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR) || 'ab'), 2, 1)) - 1)) % 2 AS arm
-        |  FROM u
-        |), reps AS (
-        |  SELECT ua.user_id, ua.m, ua.arm, CAST(p.i AS INT) AS r
-        |  FROM ua, range(40) p(i)
-        |), h AS (
-        |  SELECT arm, r, m,
-        |         CAST(list_sum(list_transform(range(13), j ->
-        |           (CAST(strpos('0123456789abcdef',
-        |               substr(md5(CAST(user_id AS VARCHAR) || '#'
-        |                          || CAST(r AS VARCHAR)),
-        |                      CAST(j+1 AS INT), 1)) AS BIGINT) - 1)
-        |           * (CAST(1 AS BIGINT) << CAST(4*(12-j) AS INT)))) AS BIGINT)
-        |           AS h52
-        |  FROM reps
-        |), w AS (
-        |  SELECT arm, r, m,
-        |         round(-ln((CAST(h52 AS DOUBLE) + 0.5)
-        |                   / 4503599627370496.0), 6) AS w
-        |  FROM h
-        |), rm AS (
-        |  SELECT arm, r,
-        |         round(CAST(sum(CAST(w AS DECIMAL(19,6)) * CAST(m AS DECIMAL(19,6)))
-        |                    AS DOUBLE)
-        |               / CAST(sum(CAST(w AS DECIMAL(18,6))) AS DOUBLE), 6) AS mean_r
-        |  FROM w GROUP BY 1, 2
-        |), df AS (
-        |  SELECT r,
-        |         round(max(CASE WHEN arm = 1 THEN mean_r END)
-        |               - max(CASE WHEN arm = 0 THEN mean_r END), 6) + 0.0e0 AS d
-        |  FROM rm GROUP BY r
-        |), ci AS (
-        |  SELECT max(CASE WHEN rn = 2 THEN d END) AS diff_lo,
-        |         max(CASE WHEN rn = 39 THEN d END) AS diff_hi
-        |  FROM (SELECT d, row_number() OVER (ORDER BY d, r) AS rn FROM df)
-        |), pt AS (
-        |  SELECT CAST(count(*) FILTER (WHERE arm = 0) AS BIGINT) AS n_a,
-        |         CAST(count(*) FILTER (WHERE arm = 1) AS BIGINT) AS n_b,
-        |         CAST(sum(CAST(m AS DECIMAL(18,6))) FILTER (WHERE arm = 0)
-        |              AS DOUBLE) AS sm_a,
-        |         CAST(sum(CAST(m AS DECIMAL(18,6))) FILTER (WHERE arm = 1)
-        |              AS DOUBLE) AS sm_b
-        |  FROM ua
-        |)
-        |SELECT n_a, n_b,
-        |       round(sm_a / CAST(n_a AS DOUBLE), 6) + 0.0e0 AS mean_a,
-        |       round(sm_b / CAST(n_b AS DOUBLE), 6) + 0.0e0 AS mean_b,
-        |       round(sm_b / CAST(n_b AS DOUBLE)
-        |             - sm_a / CAST(n_a AS DOUBLE), 6) + 0.0e0 AS diff,
-        |       diff_lo, diff_hi,
-        |       (diff_lo > 0 OR diff_hi < 0) AS significant
-        |FROM pt CROSS JOIN ci""".stripMargin,
-
-    // Latency replay: the q_funnel chain, floored-epoch deltas per
-    // transition, rank windows, conditional max at the integer ranks.
-    "q_funnel_latency" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS step1_ts FROM events
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS step2_ts
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.step1_ts GROUP BY 1
-        |), s3 AS (
-        |  SELECT e.user_id, min(e.ts) AS step3_ts
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.step2_ts GROUP BY 1
-        |), p AS (
-        |  SELECT 'view' AS step_from, 'click' AS step_to, 1 AS step_idx,
-        |         CAST(floor(date_part('epoch', s2.step2_ts)) AS BIGINT)
-        |           - CAST(floor(date_part('epoch', s1.step1_ts)) AS BIGINT)
-        |           AS delta_sec
-        |  FROM s1 JOIN s2 USING (user_id)
-        |  UNION ALL
-        |  SELECT 'click', 'purchase', 2,
-        |         CAST(floor(date_part('epoch', s3.step3_ts)) AS BIGINT)
-        |           - CAST(floor(date_part('epoch', s2.step2_ts)) AS BIGINT)
-        |  FROM s2 JOIN s3 USING (user_id)
-        |), r AS (
-        |  SELECT *,
-        |         row_number() OVER (PARTITION BY step_idx ORDER BY delta_sec) AS rn,
-        |         count(*) OVER (PARTITION BY step_idx) AS n
-        |  FROM p
-        |)
-        |SELECT step_from, step_to, step_idx, CAST(max(n) AS BIGINT) AS n,
-        |  max(CASE WHEN rn = CAST(floor((CAST(n AS DOUBLE) + 1.0) / 2.0) AS BIGINT)
-        |           THEN delta_sec END) AS median_sec,
-        |  max(CASE WHEN rn = CAST(floor((9.0 * CAST(n AS DOUBLE) + 9.0) / 10.0)
-        |                          AS BIGINT)
-        |           THEN delta_sec END) AS p90_sec
-        |FROM r GROUP BY 1, 2, 3
-        |ORDER BY step_idx""".stripMargin,
-
-    // Correlation replay: generated per-pair UNION ALL arms mirroring
-    // the one-scan sufficient statistics literally.
-    "q_corr_matrix" -> graft.operators.Profile.correlationOracleSql(
-      "lineitem", Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")),
-
-    // Model-select replay: the ewma/holt/holt-winters recursions side
-    // by side over ONE shared daily CTE, one-step errors joined on
-    // (group, day), exact decimal MAE sums, and the same fixed-priority
-    // winner CASE on the rounded MAEs.
-    "q_forecast_model_select" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), ord AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM daily
-        |), ew AS (
-        |  SELECT event_type, day, m, rn, m AS ewma FROM ord WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         round(0.3 * o.m + 0.7 * e.ewma, 6)
-        |  FROM ord o JOIN ew e ON o.event_type = e.event_type AND o.rn = e.rn + 1
-        |), seed2 AS (
-        |  SELECT event_type, m AS m2 FROM ord WHERE rn = 2
-        |), h AS (
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         o.m AS l, coalesce(s.m2 - o.m, 0.0) AS b
-        |  FROM ord o LEFT JOIN seed2 s USING (event_type) WHERE o.rn = 1
-        |  UNION ALL
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         round(0.3 * o.m + 0.7 * (h.l + h.b), 6),
-        |         round(0.1 * (round(0.3 * o.m + 0.7 * (h.l + h.b), 6) - h.l)
-        |               + 0.9 * h.b, 6)
-        |  FROM ord o JOIN h ON o.event_type = h.event_type AND o.rn = h.rn + 1
-        |), hw AS (
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         o.m AS l, coalesce(s.m2 - o.m, 0.0) AS b,
-        |         CAST(0.0 AS DOUBLE) AS sv,
-        |         [CAST(0.0 AS DOUBLE)] AS sh
-        |  FROM ord o LEFT JOIN seed2 s USING (event_type) WHERE o.rn = 1
-        |  UNION ALL
-        |  SELECT o.event_type, o.day, o.m, o.rn,
-        |         round(0.3 * (o.m - (CASE WHEN o.rn > 7 THEN hw.sh[1] ELSE 0.0 END))
-        |               + 0.7 * (hw.l + hw.b), 6),
-        |         round(0.1 * (round(0.3 * (o.m - (CASE WHEN o.rn > 7 THEN hw.sh[1] ELSE 0.0 END))
-        |                            + 0.7 * (hw.l + hw.b), 6) - hw.l)
-        |               + 0.9 * hw.b, 6),
-        |         round(0.3 * (o.m - round(0.3 * (o.m - (CASE WHEN o.rn > 7 THEN hw.sh[1] ELSE 0.0 END))
-        |                                  + 0.7 * (hw.l + hw.b), 6))
-        |               + 0.7 * (CASE WHEN o.rn > 7 THEN hw.sh[1] ELSE 0.0 END), 6),
-        |         list_append(
-        |           CASE WHEN len(hw.sh) = 7 THEN hw.sh[2:7] ELSE hw.sh END,
-        |           round(0.3 * (o.m - round(0.3 * (o.m - (CASE WHEN o.rn > 7 THEN hw.sh[1] ELSE 0.0 END))
-        |                                    + 0.7 * (hw.l + hw.b), 6))
-        |                 + 0.7 * (CASE WHEN o.rn > 7 THEN hw.sh[1] ELSE 0.0 END), 6))
-        |  FROM ord o JOIN hw ON o.event_type = hw.event_type AND o.rn = hw.rn + 1
-        |), base AS (
-        |  SELECT event_type, day, rn,
-        |         CASE WHEN lag(m) OVER (PARTITION BY event_type ORDER BY day)
-        |                IS NOT NULL
-        |              THEN round(m - lag(m) OVER (PARTITION BY event_type
-        |                                          ORDER BY day), 6) END AS e_naive
-        |  FROM ord
-        |), ee AS (
-        |  SELECT e.event_type, e.day,
-        |         CASE WHEN z.ewma IS NOT NULL
-        |              THEN round(e.m - z.ewma, 6) END AS e_ewma
-        |  FROM ew e
-        |  LEFT JOIN ew z ON z.event_type = e.event_type AND z.rn = e.rn - 1
-        |), he AS (
-        |  SELECT c.event_type, c.day,
-        |         CASE WHEN p.l IS NOT NULL
-        |              THEN round(c.m - round(p.l + p.b, 6), 6) END AS e_holt
-        |  FROM h c
-        |  LEFT JOIN h p ON p.event_type = c.event_type AND p.rn = c.rn - 1
-        |), hwe AS (
-        |  SELECT c.event_type, c.day,
-        |         CASE WHEN p1.l IS NOT NULL
-        |              THEN round(c.m - round(p1.l + p1.b + coalesce(p7.sv, 0.0), 6), 6)
-        |              END AS e_hw
-        |  FROM hw c
-        |  LEFT JOIN hw p1 ON p1.event_type = c.event_type AND p1.rn = c.rn - 1
-        |  LEFT JOIN hw p7 ON p7.event_type = c.event_type AND p7.rn = c.rn - 7
-        |), j AS (
-        |  SELECT b.event_type, b.e_naive, ee.e_ewma, he.e_holt, hwe.e_hw
-        |  FROM base b
-        |  JOIN ee USING (event_type, day)
-        |  JOIN he USING (event_type, day)
-        |  JOIN hwe USING (event_type, day)
-        |  WHERE b.e_naive IS NOT NULL AND ee.e_ewma IS NOT NULL
-        |    AND he.e_holt IS NOT NULL AND hwe.e_hw IS NOT NULL
-        |), a AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-        |    round(CAST(sum(CAST(abs(e_naive) AS DECIMAL(18,6))) AS DOUBLE)
-        |          / count(*), 6) AS mae_naive,
-        |    round(CAST(sum(CAST(abs(e_ewma) AS DECIMAL(18,6))) AS DOUBLE)
-        |          / count(*), 6) AS mae_ewma,
-        |    round(CAST(sum(CAST(abs(e_holt) AS DECIMAL(18,6))) AS DOUBLE)
-        |          / count(*), 6) AS mae_holt,
-        |    round(CAST(sum(CAST(abs(e_hw) AS DECIMAL(18,6))) AS DOUBLE)
-        |          / count(*), 6) AS mae_hw
-        |  FROM j GROUP BY 1
-        |)
-        |SELECT *,
-        |  CASE WHEN mae_naive <= mae_ewma AND mae_naive <= mae_holt
-        |            AND mae_naive <= mae_hw THEN 'naive'
-        |       WHEN mae_ewma <= mae_holt AND mae_ewma <= mae_hw THEN 'ewma'
-        |       WHEN mae_holt <= mae_hw THEN 'holt'
-        |       ELSE 'hw' END AS best
-        |FROM a
-        |ORDER BY event_type""".stripMargin,
-
-    // Trend replay: identical sufficient statistics (exact integer and
-    // decimal sums), identical double arithmetic order.
-    "q_trend_ols" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), x AS (
-        |  SELECT event_type, m,
-        |         CAST(row_number() OVER (PARTITION BY event_type ORDER BY day)
-        |              AS BIGINT) AS i
-        |  FROM daily
-        |), s AS (
-        |  SELECT event_type,
-        |         CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(i) AS BIGINT) AS sx,
-        |         CAST(sum(i * i) AS BIGINT) AS sxx,
-        |         CAST(sum(CAST(m AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-        |         CAST(sum(CAST(i AS DECIMAL(9,0)) * CAST(m AS DECIMAL(18,6)))
-        |              AS DOUBLE) AS sxy,
-        |         CAST(sum(CAST(m AS DECIMAL(18,6)) * CAST(m AS DECIMAL(18,6)))
-        |              AS DOUBLE) AS syy
-        |  FROM x GROUP BY 1
-        |), f AS (
-        |  SELECT event_type, n,
-        |         CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy AS num,
-        |         CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |           - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS den,
-        |         CAST(n AS DOUBLE) * syy - sy * sy AS deny,
-        |         CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd, sy
-        |  FROM s
-        |)
-        |SELECT event_type, n AS n_days,
-        |       CASE WHEN den > 0 THEN round(num / den, 6) + 0.0e0 END AS slope,
-        |       CASE WHEN den > 0
-        |            THEN round((sy - (num / den) * sxd) / nd, 6) + 0.0e0 END AS intercept,
-        |       CASE WHEN den > 0 AND deny > 0
-        |            THEN round((num * num) / (den * deny), 6) END AS r2
-        |FROM f
-        |ORDER BY event_type""".stripMargin,
-
-    // Spearman replay: average ranks (rank + (t-1)/2 on the 0.5 grid,
-    // DECIMAL(12,1)), exact decimal moments, fixed Pearson assembly.
-    "q_corr_spearman" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day,
-        |         CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS x,
-        |         CAST(count(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS y
-        |  FROM events GROUP BY 1
-        |), r AS (
-        |  SELECT 'purchase_vs_view' AS pair,
-        |         CAST(rank() OVER (ORDER BY x)
-        |              + CAST(count(*) OVER (PARTITION BY x) - 1 AS DOUBLE) / 2.0
-        |              AS DECIMAL(12,1)) AS rx,
-        |         CAST(rank() OVER (ORDER BY y)
-        |              + CAST(count(*) OVER (PARTITION BY y) - 1 AS DOUBLE) / 2.0
-        |              AS DECIMAL(12,1)) AS ry
-        |  FROM daily
-        |), s AS (
-        |  SELECT pair, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(rx) AS DOUBLE) AS sx, CAST(sum(ry) AS DOUBLE) AS sy,
-        |         CAST(sum(rx * ry) AS DOUBLE) AS sxy,
-        |         CAST(sum(rx * rx) AS DOUBLE) AS sxx,
-        |         CAST(sum(ry * ry) AS DOUBLE) AS syy
-        |  FROM r GROUP BY 1
-        |), f AS (
-        |  SELECT pair, n,
-        |         CAST(n AS DOUBLE) * sxy - sx * sy AS num,
-        |         CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-        |         CAST(n AS DOUBLE) * syy - sy * sy AS vy
-        |  FROM s
-        |)
-        |SELECT pair, n,
-        |       CASE WHEN vx > 0 AND vy > 0
-        |            THEN round(num / sqrt(vx * vy), 6) + 0.0e0 END AS rho
-        |FROM f ORDER BY pair""".stripMargin,
-
-    // Kendall replay: arbitrary-total-order pair split (sign products
-    // are symmetric), integer sign-product sum, tie-pair corrections,
-    // (C-D)/sqrt((n0-n1)(n0-n2)).
-    "q_corr_kendall" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day,
-        |         CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS x,
-        |         CAST(count(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS y
-        |  FROM events GROUP BY 1
-        |), b AS (
-        |  SELECT 'purchase_vs_view' AS pair,
-        |         CAST(row_number() OVER (ORDER BY x, y) AS BIGINT) AS rid, x, y
-        |  FROM daily
-        |), st AS (
-        |  SELECT a.pair,
-        |         CAST(sum(CAST(sign(p.x - a.x) AS BIGINT)
-        |                  * CAST(sign(p.y - a.y) AS BIGINT)) AS BIGINT) AS s
-        |  FROM b a JOIN b p ON a.pair = p.pair AND a.rid < p.rid
-        |  GROUP BY 1
-        |), t1 AS (
-        |  SELECT pair, CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n1,
-        |         CAST(sum(t) AS BIGINT) AS n
-        |  FROM (SELECT pair, x, CAST(count(*) AS BIGINT) AS t FROM b GROUP BY 1, 2)
-        |  GROUP BY 1
-        |), t2 AS (
-        |  SELECT pair, CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n2
-        |  FROM (SELECT pair, y, CAST(count(*) AS BIGINT) AS t FROM b GROUP BY 1, 2)
-        |  GROUP BY 1
-        |), f AS (
-        |  SELECT t1.pair, t1.n, coalesce(st.s, 0) AS s_stat, t1.n1, t2.n2,
-        |         t1.n * (t1.n - 1) // 2 AS n0
-        |  FROM t1 JOIN t2 USING (pair) LEFT JOIN st USING (pair)
-        |)
-        |SELECT pair, n, s_stat, n1, n2,
-        |       CASE WHEN (n0 - n1) > 0 AND (n0 - n2) > 0
-        |            THEN round(CAST(s_stat AS DOUBLE)
-        |                       / sqrt(CAST((n0 - n1) * (n0 - n2) AS DOUBLE)), 6)
-        |                 + 0.0e0
-        |       END AS tau
-        |FROM f ORDER BY pair""".stripMargin,
-
-    // Histogram replay: the same frozen [0, 500)/50 edges (width 10.0
-    // exact), clamped floor bins, window-share division.
-    "q_histogram" ->
-      """WITH b AS (
-        |  SELECT event_type,
-        |         least(greatest(CAST(floor((value - 0.0) / 10.0) AS BIGINT), 0), 49)
-        |           AS bin
-        |  FROM events WHERE value IS NOT NULL
-        |), c AS (
-        |  SELECT event_type, bin, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY 1, 2
-        |)
-        |SELECT event_type, bin,
-        |       round(0.0 + bin * 10.0, 6) AS bin_lo,
-        |       round(0.0 + (bin + 1) * 10.0, 6) AS bin_hi,
-        |       n,
-        |       round(CAST(n AS DOUBLE)
-        |             / CAST(sum(n) OVER (PARTITION BY event_type) AS DOUBLE), 6)
-        |         AS share
-        |FROM c ORDER BY event_type, bin""".stripMargin,
-
-    // Dow-envelope replay: staged daily CTE + Spark's dayofweek
-    // (1=Sunday — DuckDB dayofweek is 0=Sunday, shifted +1), integer
-    // floor-division ranks, max-of-first-k selection.
-    "q_dow_envelope" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT event_type, CAST(dayofweek(day) + 1 AS INT) AS dow, m,
-        |         CAST(row_number() OVER (PARTITION BY event_type, dayofweek(day)
-        |                                 ORDER BY m) AS BIGINT) AS rn,
-        |         CAST(count(*) OVER (PARTITION BY event_type, dayofweek(day))
-        |              AS BIGINT) AS n
-        |  FROM daily
-        |)
-        |SELECT event_type, dow,
-        |       CAST(max(n) AS BIGINT) AS n_days,
-        |       max(CASE WHEN rn <= (n + 9) // 10 THEN m END) AS p10,
-        |       max(CASE WHEN rn <= (n + 1) // 2 THEN m END) AS median,
-        |       max(CASE WHEN rn <= (9 * n + 9) // 10 THEN m END) AS p90
-        |FROM r GROUP BY 1, 2 ORDER BY event_type, dow""".stripMargin,
-
-    // Inter-arrival replay: per-type lead gaps in integer micros,
-    // rank-exact quantiles, exact-integer mean with one division chain.
-    "q_interarrival" ->
-      """WITH g0 AS (
-        |  SELECT event_type, epoch_us(ts) AS tsu FROM events
-        |  WHERE ts IS NOT NULL
-        |), g AS (
-        |  SELECT event_type,
-        |         lead(tsu) OVER (PARTITION BY event_type ORDER BY tsu) - tsu AS gap
-        |  FROM g0
-        |), r AS (
-        |  SELECT event_type, gap,
-        |         CAST(row_number() OVER (PARTITION BY event_type ORDER BY gap)
-        |              AS BIGINT) AS rn,
-        |         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        |  FROM g WHERE gap IS NOT NULL
-        |)
-        |SELECT event_type,
-        |       CAST(max(n) AS BIGINT) AS n_gaps,
-        |       round(CAST(sum(gap) AS DOUBLE) / max(n) / 1000000.0, 6)
-        |         AS mean_gap_sec,
-        |       round(CAST(max(CASE WHEN rn <= (n + 1) // 2 THEN gap END)
-        |                  AS DOUBLE) / 1000000.0, 6) AS p50_gap_sec,
-        |       round(CAST(max(CASE WHEN rn <= (9 * n + 9) // 10 THEN gap END)
-        |                  AS DOUBLE) / 1000000.0, 6) AS p90_gap_sec
-        |FROM r GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // Day-N retention replay: distinct activity, min-day cohorts,
-    // conditional distinct counts at each offset, horizon-guarded
-    // ratios.
-    "q_retention_days" ->
-      """WITH a AS (
-        |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |), mx AS (
-        |  SELECT max(day) AS max_day FROM a
-        |), f AS (
-        |  SELECT u, day,
-        |         min(day) OVER (PARTITION BY u) AS cohort,
-        |         day - min(day) OVER (PARTITION BY u) AS off
-        |  FROM a
-        |), g AS (
-        |  SELECT cohort,
-        |         CAST(count(DISTINCT CASE WHEN off = 0 THEN u END) AS BIGINT) AS n_users,
-        |         CAST(count(DISTINCT CASE WHEN off = 1 THEN u END) AS BIGINT) AS d1,
-        |         CAST(count(DISTINCT CASE WHEN off = 7 THEN u END) AS BIGINT) AS d7,
-        |         CAST(count(DISTINCT CASE WHEN off = 14 THEN u END) AS BIGINT) AS d14,
-        |         CAST(count(DISTINCT CASE WHEN off = 28 THEN u END) AS BIGINT) AS d28
-        |  FROM f GROUP BY 1
-        |)
-        |SELECT cohort, n_users,
-        |       d1, CASE WHEN (SELECT max_day FROM mx) - cohort >= 1
-        |                THEN round(CAST(d1 AS DOUBLE) / n_users, 6) END AS r1,
-        |       d7, CASE WHEN (SELECT max_day FROM mx) - cohort >= 7
-        |                THEN round(CAST(d7 AS DOUBLE) / n_users, 6) END AS r7,
-        |       d14, CASE WHEN (SELECT max_day FROM mx) - cohort >= 14
-        |                 THEN round(CAST(d14 AS DOUBLE) / n_users, 6) END AS r14,
-        |       d28, CASE WHEN (SELECT max_day FROM mx) - cohort >= 28
-        |                 THEN round(CAST(d28 AS DOUBLE) / n_users, 6) END AS r28
-        |FROM g ORDER BY cohort""".stripMargin,
-
-    // Return-rate replay: distinct (user, day), per-user lead, gap vs
-    // horizon, integer-ratio rate nulled on partial-horizon days.
-    "q_return_rate" ->
-      """WITH a AS (
-        |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |), mx AS (
-        |  SELECT max(day) AS max_day FROM a
-        |), l AS (
-        |  SELECT u, day,
-        |         lead(day) OVER (PARTITION BY u ORDER BY day) AS nxt
-        |  FROM a
-        |), g AS (
-        |  SELECT day,
-        |         CAST(count(*) AS BIGINT) AS n_active,
-        |         CAST(sum(CASE WHEN nxt IS NOT NULL AND nxt - day <= 7
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_returned
-        |  FROM l GROUP BY 1
-        |)
-        |SELECT day, n_active, n_returned,
-        |       CASE WHEN (SELECT max_day FROM mx) - day >= 7
-        |            THEN round(CAST(n_returned AS DOUBLE) / n_active, 6)
-        |       END AS return_rate
-        |FROM g ORDER BY day""".stripMargin,
-
-    // Type-diversity replay: per-(day, type) counts, single-division
-    // shares, 12dp-grid entropy/HHI terms, exact decimal folds.
-    "q_type_entropy" ->
-      """WITH c AS (
-        |  SELECT CAST(ts AS DATE) AS day, event_type AS t,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2
-        |), w AS (
-        |  SELECT day, t, c,
-        |         CAST(sum(c) OVER (PARTITION BY day) AS BIGINT) AS n
-        |  FROM c
-        |), terms AS (
-        |  SELECT day, n,
-        |         CAST(round((CAST(c AS DOUBLE) / n) * log2(CAST(c AS DOUBLE) / n), 12)
-        |              AS DECIMAL(28,12)) AS h,
-        |         CAST(round((CAST(c AS DOUBLE) / n) * (CAST(c AS DOUBLE) / n), 12)
-        |              AS DECIMAL(28,12)) AS hhi
-        |  FROM w
-        |)
-        |SELECT day,
-        |       CAST(max(n) AS BIGINT) AS n_events,
-        |       CAST(count(*) AS BIGINT) AS n_types,
-        |       round(0.0 - CAST(sum(h) AS DOUBLE), 6) AS entropy,
-        |       round(CAST(sum(hhi) AS DOUBLE), 6) AS herfindahl
-        |FROM terms GROUP BY 1 ORDER BY day""".stripMargin,
-
-    // TWAP replay: instant-collapse staged mean, lead duration in
-    // integer micros, exact decimal value x duration integral, one
-    // division by the span.
-    "q_twap" ->
-      """WITH byinst AS (
-        |  SELECT event_type, epoch_us(ts) AS tsu,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS v
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |  GROUP BY 1, 2
-        |), d AS (
-        |  SELECT event_type, v,
-        |         lead(tsu) OVER (PARTITION BY event_type ORDER BY tsu) - tsu AS dur
-        |  FROM byinst
-        |), a AS (
-        |  SELECT event_type,
-        |         CAST(count(*) AS BIGINT) AS n_obs,
-        |         CAST(sum(dur) AS BIGINT) AS span,
-        |         sum(CAST(v AS DECIMAL(18,6)) * dur) AS integral
-        |  FROM d GROUP BY 1
-        |)
-        |SELECT event_type, n_obs,
-        |       CASE WHEN span > 0
-        |            THEN round(CAST(integral AS DOUBLE) / span, 6) + 0.0e0 END AS twap
-        |FROM a ORDER BY event_type""".stripMargin,
-
-    // Trimmed/winsorized replay: value-order ranks, floor(double
-    // alpha*n) trim width (CAST AS DOUBLE — decimal alpha*n floors
-    // differently), decimal folds, winsorized = tsum + k*lo + k*hi.
-    "q_trimmed_mean" ->
-      """WITH r AS (
-        |  SELECT event_type, round(value, 6) AS v,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-        |         count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events WHERE value IS NOT NULL
-        |), kk AS (
-        |  SELECT *, CAST(floor(CAST(0.1 AS DOUBLE) * n) AS BIGINT) AS k FROM r
-        |), a AS (
-        |  SELECT event_type,
-        |         CAST(max(n) AS BIGINT) AS n, CAST(max(k) AS BIGINT) AS k,
-        |         sum(CASE WHEN rn > k AND rn <= n - k
-        |                  THEN CAST(v AS DECIMAL(18,6)) END) AS tsum,
-        |         min(CASE WHEN rn > k THEN v END) AS lo,
-        |         max(CASE WHEN rn <= n - k THEN v END) AS hi
-        |  FROM kk GROUP BY 1
-        |)
-        |SELECT event_type, n, k,
-        |       round(CAST(tsum AS DOUBLE) / (n - 2 * k), 6) + 0.0e0 AS trimmed_mean,
-        |       round(CAST(tsum + k * CAST(lo AS DECIMAL(18,6))
-        |                  + k * CAST(hi AS DECIMAL(18,6)) AS DOUBLE) / n, 6) + 0.0e0
-        |         AS winsorized_mean
-        |FROM a ORDER BY event_type""".stripMargin,
-
-    // Active-users replay: distinct (user, day), offset fan-out via
-    // range(28), clip at the observed max day, three conditional
-    // distinct counts, one ratio division.
-    "q_active_users" ->
-      """WITH a AS (
-        |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |), mx AS (
-        |  SELECT max(day) AS max_day FROM a
-        |), e AS (
-        |  SELECT u, CAST(i AS INT) AS off, day + CAST(i AS INT) AS g_day
-        |  FROM a, range(28) t(i)
-        |)
-        |SELECT g_day AS day,
-        |       CAST(count(DISTINCT CASE WHEN off = 0 THEN u END) AS BIGINT) AS dau,
-        |       CAST(count(DISTINCT CASE WHEN off < 7 THEN u END) AS BIGINT) AS wau,
-        |       CAST(count(DISTINCT u) AS BIGINT) AS mau,
-        |       round(CAST(count(DISTINCT CASE WHEN off = 0 THEN u END) AS DOUBLE)
-        |             / count(DISTINCT CASE WHEN off < 7 THEN u END), 6) AS stickiness
-        |FROM e
-        |WHERE g_day <= (SELECT max_day FROM mx)
-        |GROUP BY 1
-        |HAVING count(DISTINCT CASE WHEN off = 0 THEN u END) > 0
-        |ORDER BY day""".stripMargin,
-
-    // Mann-Kendall replay: staged daily CTE, sign-pair integer sum,
-    // tie-group integer correction, (S∓1)/sqrt(var) fixed ops.
-    "q_trend_mannkendall" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), x AS (
-        |  SELECT event_type, m,
-        |         CAST(row_number() OVER (PARTITION BY event_type ORDER BY day)
-        |              AS BIGINT) AS i
-        |  FROM daily
-        |), st AS (
-        |  SELECT a.event_type,
-        |         CAST(sum(CAST(sign(b.m - a.m) AS BIGINT)) AS BIGINT) AS s_stat
-        |  FROM x a JOIN x b ON a.event_type = b.event_type AND a.i < b.i
-        |  GROUP BY 1
-        |), tg AS (
-        |  SELECT event_type, m, CAST(count(*) AS BIGINT) AS t
-        |  FROM x GROUP BY 1, 2
-        |), ties AS (
-        |  SELECT event_type,
-        |         CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_sum,
-        |         CAST(sum(t) AS BIGINT) AS n_days
-        |  FROM tg GROUP BY 1
-        |), v AS (
-        |  SELECT ties.event_type, ties.n_days,
-        |         coalesce(st.s_stat, 0) AS s_stat,
-        |         CAST(ties.n_days * (ties.n_days - 1) * (2 * ties.n_days + 5)
-        |              - ties.tie_sum AS DOUBLE) / 18.0 AS var_raw
-        |  FROM ties LEFT JOIN st USING (event_type)
-        |)
-        |SELECT event_type, n_days, s_stat,
-        |       round(var_raw, 6) AS var_s,
-        |       CASE WHEN var_raw > 0 THEN
-        |         round(CASE WHEN s_stat > 0
-        |                    THEN CAST(s_stat - 1 AS DOUBLE) / sqrt(var_raw)
-        |                    WHEN s_stat < 0
-        |                    THEN CAST(s_stat + 1 AS DOUBLE) / sqrt(var_raw)
-        |                    ELSE 0.0 END, 6) + 0.0e0 END AS z,
-        |       CASE WHEN var_raw <= 0 THEN 'none'
-        |            WHEN CASE WHEN s_stat > 0
-        |                      THEN round(CAST(s_stat - 1 AS DOUBLE) / sqrt(var_raw), 6)
-        |                      WHEN s_stat < 0
-        |                      THEN round(CAST(s_stat + 1 AS DOUBLE) / sqrt(var_raw), 6)
-        |                      ELSE 0.0 END > 1.96 THEN 'increasing'
-        |            WHEN CASE WHEN s_stat > 0
-        |                      THEN round(CAST(s_stat - 1 AS DOUBLE) / sqrt(var_raw), 6)
-        |                      WHEN s_stat < 0
-        |                      THEN round(CAST(s_stat + 1 AS DOUBLE) / sqrt(var_raw), 6)
-        |                      ELSE 0.0 END < -1.96 THEN 'decreasing'
-        |            ELSE 'none' END AS trend
-        |FROM v ORDER BY event_type""".stripMargin,
-
-    // Theil-Sen replay: the staged daily CTE, the honest pair
-    // self-join, lower-median rank selection for slope and residual
-    // intercept — value SELECTION at integer ranks, no float folds.
-    "q_trend_theilsen" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(value), 6) AS m
-        |  FROM events GROUP BY 1, 2
-        |), x AS (
-        |  SELECT event_type, m,
-        |         CAST(row_number() OVER (PARTITION BY event_type ORDER BY day)
-        |              AS BIGINT) AS i
-        |  FROM daily
-        |), n AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days FROM x GROUP BY 1
-        |), pairs AS (
-        |  SELECT a.event_type,
-        |         (b.m - a.m) / CAST(b.i - a.i AS DOUBLE) AS s
-        |  FROM x a JOIN x b ON a.event_type = b.event_type AND a.i < b.i
-        |), slope AS (
-        |  SELECT event_type, round(s, 6) + 0.0e0 AS slope
-        |  FROM (
-        |    SELECT event_type, s,
-        |           row_number() OVER (PARTITION BY event_type ORDER BY s) AS rn,
-        |           count(*) OVER (PARTITION BY event_type) AS np
-        |    FROM pairs)
-        |  WHERE rn = (np + 1) // 2
-        |), resid AS (
-        |  SELECT x.event_type, x.m - slope.slope * CAST(x.i AS DOUBLE) AS r
-        |  FROM x JOIN slope USING (event_type)
-        |), icept AS (
-        |  SELECT event_type, round(r, 6) + 0.0e0 AS intercept
-        |  FROM (
-        |    SELECT event_type, r,
-        |           row_number() OVER (PARTITION BY event_type ORDER BY r) AS rn,
-        |           count(*) OVER (PARTITION BY event_type) AS nr
-        |    FROM resid)
-        |  WHERE rn = (nr + 1) // 2
-        |)
-        |SELECT n.event_type, n.n_days, slope.slope, icept.intercept
-        |FROM n LEFT JOIN slope USING (event_type)
-        |       LEFT JOIN icept USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-
-    // Fuzzy-join replay: the same md5 deletion corruption, then honest
-    // all-pairs levenshtein (length prefilter only — implied by
-    // distance <= 1, so it cannot change the result set).
-    "q_fuzzy_join" ->
-      """WITH names AS (
-        |  SELECT p_name, min(p_partkey) AS name_key FROM part GROUP BY 1
-        |), dirty AS (
-        |  SELECT name_key AS dirty_key,
-        |         substr(p_name, 1, pos - 1) || substr(p_name, pos + 1) AS dirty_name
-        |  FROM (
-        |    SELECT name_key, p_name,
-        |      CAST(((strpos('0123456789abcdef',
-        |               substr(md5(CAST(name_key AS VARCHAR) || 'fz'), 1, 1)) - 1) * 16
-        |          + (strpos('0123456789abcdef',
-        |               substr(md5(CAST(name_key AS VARCHAR) || 'fz'), 2, 1)) - 1))
-        |          % length(p_name) + 1 AS INT) AS pos
-        |    FROM names)
-        |)
-        |SELECT n.name_key, d.dirty_key,
-        |       CAST(levenshtein(n.p_name, d.dirty_name) AS INT) AS distance
-        |FROM names n JOIN dirty d
-        |  ON abs(length(n.p_name) - length(d.dirty_name)) <= 1
-        | AND levenshtein(n.p_name, d.dirty_name) <= 1
-        |ORDER BY name_key, dirty_key""".stripMargin,
-
-    // Containment replay: the q_dedup_jaccard gram machinery with the
-    // asymmetric |A∩B|/|A| measure, both directions.
-    "q_dedup_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), grams AS (
-        |  SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT id_a, id_b, CAST(n_common AS BIGINT) AS n_common,
-        |       n_common / sa.sz AS containment
-        |FROM inter
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |WHERE n_common / sa.sz >= 0.4
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // One SELECT per profiled column, unioned: the melted single-scan
-    // Spark profile and this N-scan SQL agree row-for-row (type names
-    // are Spark simpleString literals; timestamps render as unix micros,
-    // doubles via double->varchar — DuckDB and Java shortest-roundtrip
-    // formatting agree on these magnitudes).
-    "q_profile" ->
-      """WITH src AS (SELECT * FROM events)
-        |SELECT * FROM (
-        |  SELECT 'event_id' AS "column", 'bigint' AS data_type,
-        |         CAST(count(*) AS BIGINT) AS n_rows,
-        |         CAST(count(*) - count(event_id) AS BIGINT) AS n_nulls,
-        |         CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct,
-        |         CAST(min(event_id) AS VARCHAR) AS min_value,
-        |         CAST(max(event_id) AS VARCHAR) AS max_value FROM src
-        |  UNION ALL
-        |  SELECT 'ts', 'timestamp', CAST(count(*) AS BIGINT),
-        |         CAST(count(*) - count(ts) AS BIGINT),
-        |         CAST(count(DISTINCT ts) AS BIGINT),
-        |         CAST(epoch_us(min(ts)) AS VARCHAR),
-        |         CAST(epoch_us(max(ts)) AS VARCHAR) FROM src
-        |  UNION ALL
-        |  SELECT 'user_id', 'bigint', CAST(count(*) AS BIGINT),
-        |         CAST(count(*) - count(user_id) AS BIGINT),
-        |         CAST(count(DISTINCT user_id) AS BIGINT),
-        |         CAST(min(user_id) AS VARCHAR), CAST(max(user_id) AS VARCHAR) FROM src
-        |  UNION ALL
-        |  SELECT 'event_type', 'string', CAST(count(*) AS BIGINT),
-        |         CAST(count(*) - count(event_type) AS BIGINT),
-        |         CAST(count(DISTINCT event_type) AS BIGINT),
-        |         min(event_type), max(event_type) FROM src
-        |  UNION ALL
-        |  SELECT 'value', 'double', CAST(count(*) AS BIGINT),
-        |         CAST(count(*) - count(value) AS BIGINT),
-        |         CAST(count(DISTINCT value) AS BIGINT),
-        |         CAST(min(value) AS VARCHAR), CAST(max(value) AS VARCHAR) FROM src
-        |  UNION ALL
-        |  SELECT 'props', 'string', CAST(count(*) AS BIGINT),
-        |         CAST(count(*) - count(props) AS BIGINT),
-        |         CAST(count(DISTINCT props) AS BIGINT),
-        |         min(props), max(props) FROM src
-        |) ORDER BY "column" """.stripMargin,
-
-    "q_tfidf_topk" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '\S+')) AS term
-        |  FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2
-        |), dft AS (
-        |  SELECT term, count(DISTINCT doc_id) AS dft FROM toks GROUP BY 1
-        |), n AS (
-        |  SELECT count(*) AS n_docs FROM documents
-        |), scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf,
-        |         round(tf.tf * (ln((n.n_docs + 1.0) / (d.dft + 1.0)) + 1.0), 6) AS score
-        |  FROM tf JOIN dft d USING (term) CROSS JOIN n
-        |), ranked AS (
-        |  SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, score,
-        |         CAST(row_number() OVER (PARTITION BY doc_id
-        |                ORDER BY score DESC, term) AS INT) AS rk
-        |  FROM scored
-        |)
-        |SELECT doc_id, term, tf, score, rk FROM ranked
-        |WHERE rk <= 5 ORDER BY doc_id, rk""".stripMargin,
-
-    // Mirrors bm25TopDocs' float expression ORDER exactly (idf*tf*(k1+1)
-    // first, then the length-normalized denominator; per-term scores
-    // summed left-to-right) so the 6dp rounding bites identically.
-    "q_bm25_topk" ->
-      """WITH per_doc AS (
-        |  SELECT doc_id,
-        |         len(regexp_extract_all(lower(trim(text)), '\S+')) AS dl,
-        |         CAST(len(list_filter(regexp_extract_all(lower(trim(text)), '\S+'), x -> x = 'hash'))   AS DOUBLE) AS tf_0,
-        |         CAST(len(list_filter(regexp_extract_all(lower(trim(text)), '\S+'), x -> x = 'join'))   AS DOUBLE) AS tf_1,
-        |         CAST(len(list_filter(regexp_extract_all(lower(trim(text)), '\S+'), x -> x = 'window')) AS DOUBLE) AS tf_2
-        |  FROM documents
-        |), stats AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, CAST(sum(dl) AS DOUBLE) AS sum_dl,
-        |         sum(CASE WHEN tf_0 > 0 THEN 1.0 ELSE 0.0 END) AS df_0,
-        |         sum(CASE WHEN tf_1 > 0 THEN 1.0 ELSE 0.0 END) AS df_1,
-        |         sum(CASE WHEN tf_2 > 0 THEN 1.0 ELSE 0.0 END) AS df_2
-        |  FROM per_doc
-        |), scored AS (
-        |  SELECT doc_id, CAST(dl AS BIGINT) AS dl,
-        |         round(
-        |           ln(1.0 + (n_docs - df_0 + 0.5) / (df_0 + 0.5)) * tf_0 * (1.2 + 1.0)
-        |             / (tf_0 + 1.2 * ((1.0 - 0.75) + (0.75 * dl) / (sum_dl / n_docs)))
-        |         + ln(1.0 + (n_docs - df_1 + 0.5) / (df_1 + 0.5)) * tf_1 * (1.2 + 1.0)
-        |             / (tf_1 + 1.2 * ((1.0 - 0.75) + (0.75 * dl) / (sum_dl / n_docs)))
-        |         + ln(1.0 + (n_docs - df_2 + 0.5) / (df_2 + 0.5)) * tf_2 * (1.2 + 1.0)
-        |             / (tf_2 + 1.2 * ((1.0 - 0.75) + (0.75 * dl) / (sum_dl / n_docs))), 6) AS score
-        |  FROM per_doc CROSS JOIN stats
-        |), ranked AS (
-        |  SELECT doc_id, dl, score,
-        |         CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rk
-        |  FROM scored WHERE score > 0.0
-        |)
-        |SELECT doc_id, dl, score, rk FROM ranked
-        |WHERE rk <= 10 ORDER BY rk""".stripMargin,
-
-    // Restriction law: the persisted-index probe must equal the
-    // one-shot corpus scan — same oracle SQL verbatim.
-    "q_bm25_index" ->
-      """WITH per_doc AS (
-        |  SELECT doc_id,
-        |         len(regexp_extract_all(lower(trim(text)), '\S+')) AS dl,
-        |         CAST(len(list_filter(regexp_extract_all(lower(trim(text)), '\S+'), x -> x = 'hash'))   AS DOUBLE) AS tf_0,
-        |         CAST(len(list_filter(regexp_extract_all(lower(trim(text)), '\S+'), x -> x = 'join'))   AS DOUBLE) AS tf_1,
-        |         CAST(len(list_filter(regexp_extract_all(lower(trim(text)), '\S+'), x -> x = 'window')) AS DOUBLE) AS tf_2
-        |  FROM documents
-        |), stats AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, CAST(sum(dl) AS DOUBLE) AS sum_dl,
-        |         sum(CASE WHEN tf_0 > 0 THEN 1.0 ELSE 0.0 END) AS df_0,
-        |         sum(CASE WHEN tf_1 > 0 THEN 1.0 ELSE 0.0 END) AS df_1,
-        |         sum(CASE WHEN tf_2 > 0 THEN 1.0 ELSE 0.0 END) AS df_2
-        |  FROM per_doc
-        |), scored AS (
-        |  SELECT doc_id, CAST(dl AS BIGINT) AS dl,
-        |         round(
-        |           ln(1.0 + (n_docs - df_0 + 0.5) / (df_0 + 0.5)) * tf_0 * (1.2 + 1.0)
-        |             / (tf_0 + 1.2 * ((1.0 - 0.75) + (0.75 * dl) / (sum_dl / n_docs)))
-        |         + ln(1.0 + (n_docs - df_1 + 0.5) / (df_1 + 0.5)) * tf_1 * (1.2 + 1.0)
-        |             / (tf_1 + 1.2 * ((1.0 - 0.75) + (0.75 * dl) / (sum_dl / n_docs)))
-        |         + ln(1.0 + (n_docs - df_2 + 0.5) / (df_2 + 0.5)) * tf_2 * (1.2 + 1.0)
-        |             / (tf_2 + 1.2 * ((1.0 - 0.75) + (0.75 * dl) / (sum_dl / n_docs))), 6) AS score
-        |  FROM per_doc CROSS JOIN stats
-        |), ranked AS (
-        |  SELECT doc_id, dl, score,
-        |         CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rk
-        |  FROM scored WHERE score > 0.0
-        |)
-        |SELECT doc_id, dl, score, rk FROM ranked
-        |WHERE rk <= 10 ORDER BY rk""".stripMargin,
-
-    // Same synthesized snapshot B; chr(1)/chr(0) reproduce the Spark
-    // side's u0001 separator and u0000 null-marker framing bytes.
-    "q_snapshot_diff" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text,
-        |         source
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 10000, text, source FROM documents WHERE doc_id < 5
-        |), ha AS (
-        |  SELECT doc_id, md5(concat_ws(chr(1), coalesce(text, chr(0)), coalesce(source, chr(0)))) AS h
-        |  FROM documents
-        |), hb AS (
-        |  SELECT doc_id, md5(concat_ws(chr(1), coalesce(text, chr(0)), coalesce(source, chr(0)))) AS h
-        |  FROM b
-        |)
-        |SELECT COALESCE(ha.doc_id, hb.doc_id) AS doc_id,
-        |       CASE WHEN ha.h IS NULL THEN 'added'
-        |            WHEN hb.h IS NULL THEN 'removed'
-        |            ELSE 'changed' END AS status
-        |FROM ha FULL OUTER JOIN hb ON ha.doc_id = hb.doc_id
-        |WHERE ha.h IS NULL OR hb.h IS NULL OR ha.h <> hb.h
-        |ORDER BY doc_id""".stripMargin,
-
-    // Fusion replay: the bm25 oracle's CTEs at k=50, the cosine ranking
-    // at k=50, full-outer joined with 0 sentinels, fixed two-term RRF
-    // sum (lex term first) rounded to 6dp before the final ordering.
-    "q_hybrid_rrf" ->
-      """WITH per_doc AS (
-        |  SELECT doc_id,
-        |         len(regexp_extract_all(lower(trim(text)), '\S+')) AS dl,
-        |         CAST(len(list_filter(regexp_extract_all(lower(trim(text)), '\S+'), x -> x = 'hash'))   AS DOUBLE) AS tf_0,
-        |         CAST(len(list_filter(regexp_extract_all(lower(trim(text)), '\S+'), x -> x = 'join'))   AS DOUBLE) AS tf_1,
-        |         CAST(len(list_filter(regexp_extract_all(lower(trim(text)), '\S+'), x -> x = 'window')) AS DOUBLE) AS tf_2
-        |  FROM documents
-        |), stats AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, CAST(sum(dl) AS DOUBLE) AS sum_dl,
-        |         sum(CASE WHEN tf_0 > 0 THEN 1.0 ELSE 0.0 END) AS df_0,
-        |         sum(CASE WHEN tf_1 > 0 THEN 1.0 ELSE 0.0 END) AS df_1,
-        |         sum(CASE WHEN tf_2 > 0 THEN 1.0 ELSE 0.0 END) AS df_2
-        |  FROM per_doc
-        |), bscored AS (
-        |  SELECT doc_id,
-        |         round(
-        |           ln(1.0 + (n_docs - df_0 + 0.5) / (df_0 + 0.5)) * tf_0 * (1.2 + 1.0)
-        |             / (tf_0 + 1.2 * ((1.0 - 0.75) + (0.75 * dl) / (sum_dl / n_docs)))
-        |         + ln(1.0 + (n_docs - df_1 + 0.5) / (df_1 + 0.5)) * tf_1 * (1.2 + 1.0)
-        |             / (tf_1 + 1.2 * ((1.0 - 0.75) + (0.75 * dl) / (sum_dl / n_docs)))
-        |         + ln(1.0 + (n_docs - df_2 + 0.5) / (df_2 + 0.5)) * tf_2 * (1.2 + 1.0)
-        |             / (tf_2 + 1.2 * ((1.0 - 0.75) + (0.75 * dl) / (sum_dl / n_docs))), 6) AS score
-        |  FROM per_doc CROSS JOIN stats
-        |), lex AS (
-        |  SELECT doc_id, lex_rk FROM (
-        |    SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS lex_rk
-        |    FROM bscored WHERE score > 0.0) WHERE lex_rk <= 50
-        |), vq AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0
-        |), vscore AS (
-        |  SELECT vec_id AS doc_id,
-        |         round(list_dot_product(CAST(embedding AS DOUBLE[]), qe) /
-        |               (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |                sqrt(list_dot_product(qe, qe))), 6) AS cs
-        |  FROM embeddings, vq WHERE vec_id <> 0
-        |), vec AS (
-        |  SELECT doc_id, vec_rk FROM (
-        |    SELECT doc_id, CAST(row_number() OVER (ORDER BY cs DESC, doc_id) AS INT) AS vec_rk
-        |    FROM vscore) WHERE vec_rk <= 50
-        |), fused AS (
-        |  SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id,
-        |         COALESCE(l.lex_rk, 0) AS lex_rk,
-        |         COALESCE(v.vec_rk, 0) AS vec_rk
-        |  FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.doc_id
-        |)
-        |SELECT doc_id, lex_rk, vec_rk,
-        |       round(CASE WHEN lex_rk > 0 THEN 1.0/(lex_rk + 60) ELSE 0.0 END +
-        |             CASE WHEN vec_rk > 0 THEN 1.0/(vec_rk + 60) ELSE 0.0 END, 6) AS rrf
-        |FROM fused ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    // NULL pin: Spark's bucketIndex sends NULL inputs to bucket 0, so the
-    // oracle leads each CASE with an IS NULL -> 0 arm (the bare ELSE 7
-    // would silently diverge if events ever gains nulls).
-    "q_zorder" ->
-      """WITH b AS (
-        |  SELECT event_id,
-        |         CASE WHEN value IS NULL THEN 0
-        |              WHEN value <= 64 THEN 0 WHEN value <= 128 THEN 1
-        |              WHEN value <= 192 THEN 2 WHEN value <= 256 THEN 3
-        |              WHEN value <= 320 THEN 4 WHEN value <= 384 THEN 5
-        |              WHEN value <= 448 THEN 6 ELSE 7 END AS bx,
-        |         CASE WHEN user_id IS NULL THEN 0
-        |              WHEN user_id <= 200 THEN 0 WHEN user_id <= 400 THEN 1
-        |              WHEN user_id <= 600 THEN 2 WHEN user_id <= 800 THEN 3
-        |              WHEN user_id <= 1000 THEN 4 WHEN user_id <= 1200 THEN 5
-        |              WHEN user_id <= 1400 THEN 6 ELSE 7 END AS by
-        |  FROM events
-        |)
-        |SELECT event_id, bx, by,
-        |       CAST(((bx >> 0) & 1) * 1  + ((by >> 0) & 1) * 2 +
-        |            ((bx >> 1) & 1) * 4  + ((by >> 1) & 1) * 8 +
-        |            ((bx >> 2) & 1) * 16 + ((by >> 2) & 1) * 32 AS BIGINT) AS z_value
-        |FROM b ORDER BY event_id""".stripMargin,
-
-    // The xy2d quadrant-rotation loop replayed as a recursive CTE: state
-    // (x, y, d) steps s = 4 -> 2 -> 1, rows finalize at s = 0. rx/ry are
-    // inlined as CASE on the OLD x/y (all SELECT expressions in one
-    // recursion step see the previous iteration's values).
-    "q_hilbert" ->
-      """WITH RECURSIVE b AS (
-        |  SELECT event_id,
-        |         CASE WHEN value IS NULL THEN 0
-        |              WHEN value <= 64 THEN 0 WHEN value <= 128 THEN 1
-        |              WHEN value <= 192 THEN 2 WHEN value <= 256 THEN 3
-        |              WHEN value <= 320 THEN 4 WHEN value <= 384 THEN 5
-        |              WHEN value <= 448 THEN 6 ELSE 7 END AS bx,
-        |         CASE WHEN user_id IS NULL THEN 0
-        |              WHEN user_id <= 200 THEN 0 WHEN user_id <= 400 THEN 1
-        |              WHEN user_id <= 600 THEN 2 WHEN user_id <= 800 THEN 3
-        |              WHEN user_id <= 1000 THEN 4 WHEN user_id <= 1200 THEN 5
-        |              WHEN user_id <= 1400 THEN 6 ELSE 7 END AS by
-        |  FROM events
-        |), h AS (
-        |  SELECT event_id, bx, by, bx AS x, by AS y, CAST(0 AS BIGINT) AS d, 4 AS s FROM b
-        |  UNION ALL
-        |  SELECT event_id, bx, by,
-        |    CASE WHEN (y & s) = 0 THEN CASE WHEN (x & s) > 0 THEN 7 - y ELSE y END ELSE x END,
-        |    CASE WHEN (y & s) = 0 THEN CASE WHEN (x & s) > 0 THEN 7 - x ELSE x END ELSE y END,
-        |    d + s * s * xor(CASE WHEN (x & s) > 0 THEN 3 ELSE 0 END,
-        |                    CASE WHEN (y & s) > 0 THEN 1 ELSE 0 END),
-        |    s // 2
-        |  FROM h WHERE s > 0
-        |)
-        |SELECT event_id, bx, by, CAST(d AS BIGINT) AS h_value
-        |FROM h WHERE s = 0 ORDER BY event_id""".stripMargin,
-
-    // Skilling's transpose algorithm replayed as a recursive CTE: state
-    // (a, b, c) = the three coordinates, q halves 4 -> 2 -> 1. Each
-    // iteration applies the dimension loop SEQUENTIALLY (dim i reads
-    // dim 0's value as updated by dims < i), so the three exchange
-    // steps nest as subqueries (s0 = after dim 0, s1a/s1b = after dim
-    // 1). The epilogue (Gray-encode, t-correction, MSB-first gather)
-    // is loop-free and inlined on the q = 1 rows.
-    "q_hilbert3" ->
-      """WITH RECURSIVE b AS (
-        |  SELECT event_id,
-        |         CASE WHEN value IS NULL THEN 0
-        |              WHEN value <= 64 THEN 0 WHEN value <= 128 THEN 1
-        |              WHEN value <= 192 THEN 2 WHEN value <= 256 THEN 3
-        |              WHEN value <= 320 THEN 4 WHEN value <= 384 THEN 5
-        |              WHEN value <= 448 THEN 6 ELSE 7 END AS bx,
-        |         CASE WHEN user_id IS NULL THEN 0
-        |              WHEN user_id <= 200 THEN 0 WHEN user_id <= 400 THEN 1
-        |              WHEN user_id <= 600 THEN 2 WHEN user_id <= 800 THEN 3
-        |              WHEN user_id <= 1000 THEN 4 WHEN user_id <= 1200 THEN 5
-        |              WHEN user_id <= 1400 THEN 6 ELSE 7 END AS by,
-        |         CASE WHEN hour(ts) IS NULL THEN 0
-        |              WHEN hour(ts) <= 3 THEN 0 WHEN hour(ts) <= 6 THEN 1
-        |              WHEN hour(ts) <= 9 THEN 2 WHEN hour(ts) <= 12 THEN 3
-        |              WHEN hour(ts) <= 15 THEN 4 WHEN hour(ts) <= 18 THEN 5
-        |              WHEN hour(ts) <= 21 THEN 6 ELSE 7 END AS bz
-        |  FROM events
-        |), h AS (
-        |  SELECT event_id, bx, by, bz,
-        |         CAST(bx AS BIGINT) AS a, CAST(by AS BIGINT) AS b2, CAST(bz AS BIGINT) AS c,
-        |         CAST(4 AS BIGINT) AS q
-        |  FROM b
-        |  UNION ALL
-        |  SELECT event_id, bx, by, bz,
-        |         CASE WHEN (c & q) != 0 THEN xor(s1a, q-1)
-        |              ELSE xor(s1a, xor(s1a, c) & (q-1)) END,
-        |         s1b,
-        |         CASE WHEN (c & q) != 0 THEN c
-        |              ELSE xor(c, xor(s1a, c) & (q-1)) END,
-        |         q // 2
-        |  FROM (
-        |    SELECT event_id, bx, by, bz, b2, c, q,
-        |           CASE WHEN (b2 & q) != 0 THEN xor(s0, q-1)
-        |                ELSE xor(s0, xor(s0, b2) & (q-1)) END AS s1a,
-        |           CASE WHEN (b2 & q) != 0 THEN b2
-        |                ELSE xor(b2, xor(s0, b2) & (q-1)) END AS s1b
-        |    FROM (
-        |      SELECT event_id, bx, by, bz, b2, c, q,
-        |             CASE WHEN (a & q) != 0 THEN xor(a, q-1) ELSE a END AS s0
-        |      FROM h WHERE q > 1
-        |    )
-        |  )
-        |)
-        |SELECT event_id, bx, by, bz,
-        |       CAST(((xor(g0, tt) >> 2) & 1) * 256 + ((xor(g1, tt) >> 2) & 1) * 128 +
-        |            ((xor(g2, tt) >> 2) & 1) * 64  + ((xor(g0, tt) >> 1) & 1) * 32 +
-        |            ((xor(g1, tt) >> 1) & 1) * 16  + ((xor(g2, tt) >> 1) & 1) * 8 +
-        |            (xor(g0, tt) & 1) * 4 + (xor(g1, tt) & 1) * 2 +
-        |            (xor(g2, tt) & 1) AS BIGINT) AS h3_value
-        |FROM (
-        |  SELECT event_id, bx, by, bz, g0, g1, g2,
-        |         xor(CASE WHEN (g2 & 4) != 0 THEN 3 ELSE 0 END,
-        |             CASE WHEN (g2 & 2) != 0 THEN 1 ELSE 0 END) AS tt
-        |  FROM (
-        |    SELECT event_id, bx, by, bz,
-        |           a AS g0, xor(b2, a) AS g1, xor(c, xor(b2, a)) AS g2
-        |    FROM h WHERE q = 1
-        |  )
-        |)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_split_hash" ->
-      """SELECT doc_id,
-        |       CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccc' THEN 'train'
-        |            WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val'
-        |            ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_split_leakage_safe" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), grams AS (
-        |  SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT id_a, id_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE n_common / (sa.sz + sb.sz - n_common) >= 0.2
-        |), edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM pairs
-        |  UNION SELECT id_b, id_a FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.id = e.b
-        |), clusters AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id
-        |)
-        |SELECT doc_id, cluster_id,
-        |       CASE WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 8) < 'cccccccc' THEN 'train'
-        |            WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val'
-        |            ELSE 'test' END AS split
-        |FROM clusters ORDER BY doc_id""".stripMargin,
-
-    // Same full-recompute replay as q_split_leakage_safe: the Spark side
-    // folded the pairs incrementally, so hash equality pins the
-    // store-fold == full-CC restriction law.
-    "q_split_leakage_incr" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), grams AS (
-        |  SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT id_a, id_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE n_common / (sa.sz + sb.sz - n_common) >= 0.2
-        |), edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM pairs
-        |  UNION SELECT id_b, id_a FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.id = e.b
-        |), clusters AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id
-        |)
-        |SELECT doc_id, cluster_id,
-        |       CASE WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 8) < 'cccccccc' THEN 'train'
-        |            WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val'
-        |            ELSE 'test' END AS split
-        |FROM clusters ORDER BY doc_id""".stripMargin,
-
-    "q_contamination" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), grams AS (
-        |  SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM toks)
-        |), eval_grams AS (
-        |  SELECT DISTINCT g FROM grams WHERE doc_id % 50 = 0
-        |), sizes AS (
-        |  SELECT d.doc_id, count(g.g) AS n_grams
-        |  FROM documents d LEFT JOIN grams g ON g.doc_id = d.doc_id
-        |  WHERE d.doc_id % 50 <> 0
-        |  GROUP BY 1
-        |), hits AS (
-        |  SELECT g.doc_id, count(*) AS n_shared
-        |  FROM grams g JOIN eval_grams e ON g.g = e.g
-        |  WHERE g.doc_id % 50 <> 0
-        |  GROUP BY 1
-        |)
-        |SELECT s.doc_id,
-        |       CAST(s.n_grams AS INT) AS n_grams,
-        |       CAST(coalesce(h.n_shared, 0) AS BIGINT) AS n_shared,
-        |       round(CASE WHEN s.n_grams > 0
-        |                  THEN CAST(coalesce(h.n_shared, 0) AS DOUBLE) / s.n_grams
-        |                  ELSE 0.0 END, 6) AS contamination,
-        |       (CASE WHEN s.n_grams > 0
-        |             THEN CAST(coalesce(h.n_shared, 0) AS DOUBLE) / s.n_grams
-        |             ELSE 0.0 END) >= 0.5 AS is_contaminated
-        |FROM sizes s LEFT JOIN hits h ON h.doc_id = s.doc_id
-        |ORDER BY s.doc_id""".stripMargin,
-
-    // Span decontamination: corpus sites whose 30-gram appears anywhere
-    // in the eval slice, merged gaps-and-islands into maximal spans.
-    "q_contamination_spans" ->
-      """WITH ev AS (
-        |  SELECT DISTINCT substr(text, CAST(p AS INT), 30) AS g
-        |  FROM (SELECT text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |        FROM documents WHERE doc_id % 50 = 0 AND len(text) >= 30)
-        |), pos AS (
-        |  SELECT doc_id, text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |  FROM documents WHERE doc_id % 50 <> 0 AND len(text) >= 30
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p
-        |  FROM (SELECT doc_id, p, substr(text, CAST(p AS INT), 30) AS g
-        |        FROM pos) gr
-        |  JOIN ev USING (g)
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 30 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |)
-        |SELECT doc_id,
-        |       CAST(min(p) AS BIGINT) AS span_start,
-        |       CAST(max(p) + 29 AS BIGINT) AS span_end,
-        |       CAST(max(p) + 29 - min(p) + 1 AS BIGINT) AS span_len
-        |FROM isl GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-
-    // Store-probed decon replays the DIRECT eval-slice detection: the
-    // Spark side built the gram store in two deltas, so hash equality
-    // pins store == direct.
-    "q_contamination_spans_incr" ->
-      """WITH ev AS (
-        |  SELECT DISTINCT substr(text, CAST(p AS INT), 30) AS g
-        |  FROM (SELECT text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |        FROM documents WHERE doc_id % 50 = 0 AND len(text) >= 30)
-        |), pos AS (
-        |  SELECT doc_id, text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |  FROM documents WHERE doc_id % 50 <> 0 AND len(text) >= 30
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p
-        |  FROM (SELECT doc_id, p, substr(text, CAST(p AS INT), 30) AS g
-        |        FROM pos) gr
-        |  JOIN ev USING (g)
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 30 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |)
-        |SELECT doc_id,
-        |       CAST(min(p) AS BIGINT) AS span_start,
-        |       CAST(max(p) + 29 AS BIGINT) AS span_end,
-        |       CAST(max(p) + 29 - min(p) + 1 AS BIGINT) AS span_len
-        |FROM isl GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-
-    // Strip replay: kept gaps between contaminated spans reassemble with
-    // string_agg; md5(clean_text) pins the reconstruction.
-    "q_contamination_strip" ->
-      """WITH ev AS (
-        |  SELECT DISTINCT substr(text, CAST(p AS INT), 30) AS g
-        |  FROM (SELECT text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |        FROM documents WHERE doc_id % 50 = 0 AND len(text) >= 30)
-        |), pos AS (
-        |  SELECT doc_id, text, unnest(range(1, len(text) - 30 + 2)) AS p
-        |  FROM documents WHERE doc_id % 50 <> 0 AND len(text) >= 30
-        |), sites AS (
-        |  SELECT gr.doc_id, gr.p
-        |  FROM (SELECT doc_id, p, substr(text, CAST(p AS INT), 30) AS g
-        |        FROM pos) gr
-        |  JOIN ev USING (g)
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         sum(CASE WHEN prev IS NULL OR p - prev > 30 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM (SELECT doc_id, p,
-        |               lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
-        |        FROM sites)
-        |), spans AS (
-        |  SELECT doc_id, min(p) AS s, max(p) + 29 AS e
-        |  FROM isl GROUP BY doc_id, island
-        |), seg AS (
-        |  SELECT doc_id,
-        |         coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0) + 1 AS ks,
-        |         s - 1 AS ke
-        |  FROM spans
-        |  UNION ALL
-        |  SELECT sp.doc_id, max(sp.e) + 1 AS ks,
-        |         CAST(max(len(d.text)) AS BIGINT) AS ke
-        |  FROM spans sp JOIN documents d USING (doc_id) GROUP BY sp.doc_id
-        |), clean AS (
-        |  SELECT s.doc_id,
-        |         coalesce(string_agg(
-        |           CASE WHEN s.ke >= s.ks
-        |                THEN substr(d.text, CAST(s.ks AS INT),
-        |                            CAST(s.ke - s.ks + 1 AS INT)) END,
-        |           '' ORDER BY s.ks), '') AS tc
-        |  FROM seg s JOIN documents d USING (doc_id)
-        |  GROUP BY s.doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(len(coalesce(c.tc, d.text)) AS BIGINT) AS clean_len,
-        |       md5(coalesce(c.tc, d.text)) AS clean_hash
-        |FROM documents d LEFT JOIN clean c USING (doc_id)
-        |WHERE d.doc_id % 50 <> 0
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_pack_length_buckets" ->
-      """WITH t AS (
-        |  SELECT source AS "group",
-        |         CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS l
-        |  FROM documents
-        |), b AS (
-        |  SELECT "group", l,
-        |         CAST(CASE WHEN l <= 16 THEN 16 WHEN l <= 32 THEN 32 WHEN l <= 64 THEN 64 WHEN l <= 128 THEN 128 WHEN l <= 256 THEN 256 WHEN l <= 512 THEN 512 WHEN l <= 1024 THEN 1024 WHEN l <= 2048 THEN 2048 WHEN l <= 4096 THEN 4096 WHEN l <= 8192 THEN 8192
-        |              ELSE 8192 END AS BIGINT) AS bucket_len
-        |  FROM t
-        |)
-        |SELECT "group", bucket_len,
-        |       CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(sum(l) AS BIGINT) AS n_tokens,
-        |       CAST(bucket_len * count(*) - sum(l) AS BIGINT) AS pad_tokens,
-        |       round((bucket_len * count(*) - sum(l))
-        |             / CAST(bucket_len * count(*) AS DOUBLE), 6) AS pad_frac
-        |FROM b GROUP BY "group", bucket_len
-        |ORDER BY "group", bucket_len""".stripMargin,
-
-    // Normalization replay: translate (chr-composed so the invisible
-    // chars stay visible in review), control strip excluding the
-    // whitespace controls, digit bucketing, collapse, trim.
-    "q_text_normalize" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |         trim(regexp_replace(regexp_replace(regexp_replace(
-        |           translate(lower(text),
-        |             chr(8217)||chr(8216)||chr(8220)||chr(8221)||chr(8211)||
-        |             chr(8212)||chr(160)||chr(8203)||chr(8204)||chr(8205)||chr(65279),
-        |             chr(39)||chr(39)||chr(34)||chr(34)||'-'||'-'||' '),
-        |           '[\x00-\x08\x0e-\x1f\x7f]', '', 'g'),
-        |           '[0-9]', '0', 'g'),
-        |           '\s+', ' ', 'g')) AS t
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       CAST(len(t) AS BIGINT) AS norm_len,
-        |       md5(t) AS norm_hash
-        |FROM n ORDER BY doc_id""".stripMargin,
-
-    "q_text_fingerprint" ->
-      """SELECT doc_id,
-        |       md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Novelty replay: per-doc trigrams (within-doc windows), census =
-    // distinct trigrams of the even-id half, exact membership fraction.
-    "q_text_novelty" ->
-      """WITH tk AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS ts FROM documents
-        |), tri AS (
-        |  SELECT tk.doc_id, u.g
-        |  FROM tk, unnest(list_transform(range(greatest(len(tk.ts) - 2, 0)), i ->
-        |    array_to_string(tk.ts[CAST(i+1 AS INT):CAST(i+3 AS INT)], ' '))) AS u(g)
-        |), census AS (
-        |  SELECT DISTINCT g FROM tri WHERE doc_id % 2 = 0
-        |), scored AS (
-        |  SELECT t.doc_id, count(*) AS n_grams,
-        |         round(avg(CASE WHEN c.g IS NULL THEN 1.0 ELSE 0.0 END), 6) AS novelty
-        |  FROM tri t LEFT JOIN census c ON c.g = t.g
-        |  GROUP BY t.doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(s.n_grams, 0) AS BIGINT) AS n_grams,
-        |       coalesce(s.novelty, 0.0) AS novelty
-        |FROM documents d LEFT JOIN scored s USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Replays SimHash64Expr's majority vote exactly: per-token 60-bit
-    // hash = hex-parse of md5 prefix, bit b of the output set iff the
-    // sum over tokens of +-1 (by bit b of the hash) is non-negative.
-    // Bits 60-63 of every token hash are 0, so for non-empty docs their
-    // vote is strictly negative and only bits 0-59 can be set; an empty
-    // token array sets all 64 bits (the kernel's identity) = -1.
-    "q_dedup_simhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS tk FROM documents
-        |), th AS (
-        |  SELECT doc_id,
-        |         CAST(list_sum(list_transform(range(15),
-        |           i -> (CAST(strpos('0123456789abcdef', substr(md5(tk), CAST(i+1 AS INT), 1)) AS BIGINT) - 1)
-        |                * (CAST(1 AS BIGINT) << CAST(4*(14-i) AS INT)))) AS BIGINT) AS h
-        |  FROM toks
-        |), bits AS (
-        |  SELECT doc_id, b,
-        |         CASE WHEN sum(2*((h >> CAST(b AS INT)) & 1) - 1) >= 0
-        |              THEN (CAST(1 AS BIGINT) << CAST(b AS INT)) ELSE CAST(0 AS BIGINT) END AS bitval
-        |  FROM th, (SELECT unnest(range(60)) AS b)
-        |  GROUP BY doc_id, b
-        |), sh AS (
-        |  SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS simhash64 FROM bits GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(sh.simhash64, -1) AS simhash64
-        |FROM documents d LEFT JOIN sh ON d.doc_id = sh.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Replays the winnowing kernel: word-3-gram md5 hashes in position
-    // order, window of 4, each window's min with the RIGHTMOST tie
-    // winning, consecutive same-INDEX picks deduplicated, short docs
-    // (1..w grams) yield the single global min. Checks the count and an
-    // order-insensitive xor digest of the selected fingerprints.
-    "q_text_winnow" ->
-      """WITH tk AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS ts FROM documents
-        |), gr AS (
-        |  SELECT tk.doc_id, CAST(u.i AS BIGINT) AS pos,
-        |         CAST(list_sum(list_transform(range(15),
-        |           j -> (CAST(strpos('0123456789abcdef',
-        |                  substr(md5(array_to_string(tk.ts[CAST(u.i+1 AS INT):CAST(u.i+3 AS INT)], ' ')), CAST(j+1 AS INT), 1)) AS BIGINT) - 1)
-        |                * (CAST(1 AS BIGINT) << CAST(4*(14-j) AS INT)))) AS BIGINT) AS h
-        |  FROM tk, unnest(range(greatest(len(tk.ts) - 2, 0))) AS u(i)
-        |), sz AS (
-        |  SELECT doc_id, count(*) AS m FROM gr GROUP BY doc_id
-        |), wins AS (
-        |  SELECT g1.doc_id, g1.pos AS start, min(g2.h) AS mh
-        |  FROM gr g1
-        |  JOIN sz ON sz.doc_id = g1.doc_id AND sz.m > 4 AND g1.pos <= sz.m - 4
-        |  JOIN gr g2 ON g2.doc_id = g1.doc_id AND g2.pos BETWEEN g1.pos AND g1.pos + 3
-        |  GROUP BY g1.doc_id, g1.pos
-        |), sel AS (
-        |  SELECT w.doc_id, w.start, w.mh, max(g2.pos) AS minidx
-        |  FROM wins w
-        |  JOIN gr g2 ON g2.doc_id = w.doc_id AND g2.pos BETWEEN w.start AND w.start + 3 AND g2.h = w.mh
-        |  GROUP BY w.doc_id, w.start, w.mh
-        |), emit AS (
-        |  SELECT doc_id, mh, minidx,
-        |         lag(minidx) OVER (PARTITION BY doc_id ORDER BY start) AS prev
-        |  FROM sel
-        |), fps AS (
-        |  SELECT doc_id, mh FROM emit WHERE prev IS NULL OR prev != minidx
-        |  UNION ALL
-        |  SELECT g.doc_id, min(g.h) AS mh
-        |  FROM gr g JOIN sz ON sz.doc_id = g.doc_id AND sz.m <= 4
-        |  GROUP BY g.doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(f.n, 0) AS INT) AS n_fingerprints,
-        |       CAST(coalesce(f.x, 0) AS BIGINT) AS fp_xor
-        |FROM documents d LEFT JOIN (
-        |  SELECT doc_id, count(*) AS n, bit_xor(mh) AS x FROM fps GROUP BY doc_id
-        |) f ON d.doc_id = f.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Replays the full language-ID decision procedure: script routing in
-    // ja,ko,zh,ru,ar,hi order, then stopword-count argmax over Latin
-    // text with ties resolving in en,es,de,fr order, else 'und'.
-    "q_text_langid" ->
-      """WITH sc AS (
-        |  SELECT doc_id, text,
-        |    len(list_filter(regexp_extract_all(lower(text), '\S+'),
-        |        x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS en,
-        |    len(list_filter(regexp_extract_all(lower(text), '\S+'),
-        |        x -> x IN ('el','la','de','que','y','en','un','una','los','es'))) AS es,
-        |    len(list_filter(regexp_extract_all(lower(text), '\S+'),
-        |        x -> x IN ('der','die','das','und','ist','ein','eine','zu','den','nicht'))) AS de,
-        |    len(list_filter(regexp_extract_all(lower(text), '\S+'),
-        |        x -> x IN ('le','la','les','de','et','un','une','est','que','pour'))) AS fr
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CASE
-        |    WHEN regexp_matches(text, '[ぁ-ゟ゠-ヿ]') THEN 'ja'
-        |    WHEN regexp_matches(text, '[가-힣]') THEN 'ko'
-        |    WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-        |    WHEN regexp_matches(text, '[А-яЁё]') THEN 'ru'
-        |    WHEN regexp_matches(text, '[؀-ۿ]') THEN 'ar'
-        |    WHEN regexp_matches(text, '[ऀ-ॿ]') THEN 'hi'
-        |    WHEN greatest(en, es, de, fr) > 0 THEN
-        |      CASE WHEN en = greatest(en, es, de, fr) THEN 'en'
-        |           WHEN es = greatest(en, es, de, fr) THEN 'es'
-        |           WHEN de = greatest(en, es, de, fr) THEN 'de'
-        |           ELSE 'fr' END
-        |    ELSE 'und'
-        |  END AS predicted_lang
-        |FROM sc ORDER BY doc_id""".stripMargin,
-
-    // Confusion replay: the langid decision procedure with the declared
-    // column carried, grouped, within-declared share via a window.
-    "q_langid_confusion" ->
-      """WITH sc AS (
-        |  SELECT lang, text,
-        |    len(list_filter(regexp_extract_all(lower(text), '\S+'),
-        |        x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS en,
-        |    len(list_filter(regexp_extract_all(lower(text), '\S+'),
-        |        x -> x IN ('el','la','de','que','y','en','un','una','los','es'))) AS es,
-        |    len(list_filter(regexp_extract_all(lower(text), '\S+'),
-        |        x -> x IN ('der','die','das','und','ist','ein','eine','zu','den','nicht'))) AS de,
-        |    len(list_filter(regexp_extract_all(lower(text), '\S+'),
-        |        x -> x IN ('le','la','les','de','et','un','une','est','que','pour'))) AS fr
-        |  FROM documents
-        |), p AS (
-        |  SELECT lang AS declared,
-        |    CASE
-        |      WHEN regexp_matches(text, '[ぁ-ゟ゠-ヿ]') THEN 'ja'
-        |      WHEN regexp_matches(text, '[가-힣]') THEN 'ko'
-        |      WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-        |      WHEN regexp_matches(text, '[А-яЁё]') THEN 'ru'
-        |      WHEN regexp_matches(text, '[؀-ۿ]') THEN 'ar'
-        |      WHEN regexp_matches(text, '[ऀ-ॿ]') THEN 'hi'
-        |      WHEN greatest(en, es, de, fr) > 0 THEN
-        |        CASE WHEN en = greatest(en, es, de, fr) THEN 'en'
-        |             WHEN es = greatest(en, es, de, fr) THEN 'es'
-        |             WHEN de = greatest(en, es, de, fr) THEN 'de'
-        |             ELSE 'fr' END
-        |      ELSE 'und'
-        |    END AS predicted
-        |  FROM sc
-        |), c AS (
-        |  SELECT declared, predicted, CAST(count(*) AS BIGINT) AS n
-        |  FROM p GROUP BY 1, 2
-        |)
-        |SELECT declared, predicted, n,
-        |       round(CAST(n AS DOUBLE)
-        |             / CAST(sum(n) OVER (PARTITION BY declared) AS DOUBLE), 6)
-        |         AS frac
-        |FROM c ORDER BY declared, predicted""".stripMargin,
-
-    // Replays the longest-equal-run fold: per-doc 2-gram counts, the
-    // max count over the total.
-    "q_text_topgram" ->
-      """WITH tk AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS ts FROM documents
-        |), gr AS (
-        |  SELECT tk.doc_id,
-        |         array_to_string(tk.ts[CAST(u.i+1 AS INT):CAST(u.i+2 AS INT)], ' ') AS g
-        |  FROM tk, unnest(range(greatest(len(tk.ts) - 1, 0))) AS u(i)
-        |), cnt AS (
-        |  SELECT doc_id, g, count(*) AS c FROM gr GROUP BY doc_id, g
-        |), agg AS (
-        |  SELECT doc_id, max(c) AS best, sum(c) AS m FROM cnt GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(a.m, 0) AS INT) AS n_grams,
-        |       round(coalesce(CAST(a.best AS DOUBLE) / a.m, 0), 6) AS top_gram_frac
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Document frequency over per-doc DISTINCT 3-grams, joined back:
-    // the exact corpus-boilerplate fraction, minDf = 3.
-    "q_text_boilerplate" ->
-      """WITH tk AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS ts FROM documents
-        |), gr0 AS (
-        |  SELECT tk.doc_id,
-        |         array_to_string(tk.ts[CAST(u.i+1 AS INT):CAST(u.i+3 AS INT)], ' ') AS g
-        |  FROM tk, unnest(range(greatest(len(tk.ts) - 2, 0))) AS u(i)
-        |), gr AS (
-        |  SELECT DISTINCT doc_id, g FROM gr0
-        |), fq AS (
-        |  SELECT g, count(*) AS dfreq FROM gr GROUP BY g
-        |), per AS (
-        |  SELECT gr.doc_id, count(*) AS n_grams,
-        |         sum(CASE WHEN fq.dfreq >= 3 THEN 1 ELSE 0 END) AS n_common
-        |  FROM gr JOIN fq USING (g) GROUP BY gr.doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(p.n_grams, 0) AS BIGINT) AS n_grams,
-        |       CAST(coalesce(p.n_common, 0) AS BIGINT) AS n_common,
-        |       round(coalesce(CAST(p.n_common AS DOUBLE) / p.n_grams, 0), 6) AS common_frac
-        |FROM documents d LEFT JOIN per p USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_frames_scenes" ->
-      """WITH fr AS (
-        |  SELECT doc_id AS video_id,
-        |         unnest(range(0, n_chars % 7 + 4)) AS frame_idx
-        |  FROM documents
-        |), feat AS (
-        |  SELECT video_id, frame_idx,
-        |         CAST((strpos('0123456789abcdef',
-        |                 substr(md5(CAST(video_id AS VARCHAR) || '_' ||
-        |                        CAST(frame_idx AS VARCHAR)), 1, 1)) - 1) * 16
-        |            + (strpos('0123456789abcdef',
-        |                 substr(md5(CAST(video_id AS VARCHAR) || '_' ||
-        |                        CAST(frame_idx AS VARCHAR)), 2, 1)) - 1)
-        |           AS DOUBLE) AS bright
-        |  FROM fr
-        |), brk AS (
-        |  SELECT video_id, frame_idx, bright,
-        |         lag(bright) OVER (PARTITION BY video_id ORDER BY frame_idx) AS prev
-        |  FROM feat
-        |), isl AS (
-        |  SELECT video_id, frame_idx,
-        |         sum(CASE WHEN prev IS NULL OR abs(bright - prev) > 90.0
-        |                  THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY video_id ORDER BY frame_idx) - 1 AS scene_idx
-        |  FROM brk
-        |)
-        |SELECT video_id,
-        |       CAST(scene_idx AS BIGINT) AS scene_idx,
-        |       CAST(min(frame_idx) AS BIGINT) AS start_frame,
-        |       CAST(max(frame_idx) AS BIGINT) AS end_frame,
-        |       CAST(count(*) AS BIGINT) AS n_frames,
-        |       CAST(min(frame_idx) AS BIGINT) AS keyframe_idx
-        |FROM isl GROUP BY video_id, scene_idx
-        |ORDER BY video_id, scene_idx""".stripMargin,
-
-    // Adaptive replay: per-video threshold = k-th smallest inter-frame
-    // |bright diff|, k = ceil(0.7 * n) — order statistic, no
-    // interpolation, so the double math is one IEEE multiply + ceil in
-    // both engines. sqrt((a-b)^2) == abs(a-b) exactly for these values.
-    "q_frames_scenes_adaptive" ->
-      """WITH fr AS (
-        |  SELECT doc_id AS video_id,
-        |         unnest(range(0, n_chars % 7 + 4)) AS frame_idx
-        |  FROM documents
-        |), feat AS (
-        |  SELECT video_id, frame_idx,
-        |         CAST((strpos('0123456789abcdef',
-        |                 substr(md5(CAST(video_id AS VARCHAR) || '_' ||
-        |                        CAST(frame_idx AS VARCHAR)), 1, 1)) - 1) * 16
-        |            + (strpos('0123456789abcdef',
-        |                 substr(md5(CAST(video_id AS VARCHAR) || '_' ||
-        |                        CAST(frame_idx AS VARCHAR)), 2, 1)) - 1)
-        |           AS DOUBLE) AS bright
-        |  FROM fr
-        |), d AS (
-        |  SELECT video_id, frame_idx, bright,
-        |         abs(bright - lag(bright)
-        |               OVER (PARTITION BY video_id ORDER BY frame_idx)) AS dst
-        |  FROM feat
-        |), ranked AS (
-        |  SELECT video_id, dst,
-        |         row_number() OVER (PARTITION BY video_id ORDER BY dst) AS rn,
-        |         count(*) OVER (PARTITION BY video_id) AS n
-        |  FROM d WHERE dst IS NOT NULL
-        |), thr AS (
-        |  SELECT video_id, dst AS th FROM ranked
-        |  WHERE rn = CAST(ceil(0.7 * n) AS BIGINT)
-        |), isl AS (
-        |  SELECT d.video_id, d.frame_idx,
-        |         sum(CASE WHEN d.dst IS NULL OR d.dst > t.th
-        |                  THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY d.video_id ORDER BY d.frame_idx) - 1
-        |           AS scene_idx
-        |  FROM d LEFT JOIN thr t USING (video_id)
-        |)
-        |SELECT video_id,
-        |       CAST(scene_idx AS BIGINT) AS scene_idx,
-        |       CAST(min(frame_idx) AS BIGINT) AS start_frame,
-        |       CAST(max(frame_idx) AS BIGINT) AS end_frame,
-        |       CAST(count(*) AS BIGINT) AS n_frames,
-        |       CAST(min(frame_idx) AS BIGINT) AS keyframe_idx
-        |FROM isl GROUP BY video_id, scene_idx
-        |ORDER BY video_id, scene_idx""".stripMargin,
-
-    // Gopher battery: every signal recomputed from scratch over the
-    // same \S+ tokenization and newline split; flags from the ROUNDED
-    // signals, gopher_pass as the flag product.
-    "q_quality_gopher" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         regexp_extract_all(text, '\S+') AS t,
-        |         string_split(text, chr(10)) AS ln
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id,
-        |         CAST(len(t) AS BIGINT) AS n_words,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS mean_word_len,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST((length(text) - length(replace(text, '#', '')))
-        |                + len(regexp_extract_all(text, '\.\.\.|…')) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS symbol_ratio,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '^\s*[-*•]'))) AS DOUBLE) / len(ln), 6) AS bullet_frac,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '(\.\.\.|…)\s*$'))) AS DOUBLE) / len(ln), 6) AS ellipsis_line_frac,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS alpha_frac,
-        |         CAST(list_contains(list_transform(t, x -> lower(x)), 'the') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'be') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'to') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'of') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'and') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'that') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'have') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'with') AS BIGINT)
-        |           AS stopword_hits
-        |  FROM s
-        |), f AS (
-        |  SELECT m.*,
-        |         CAST(n_words BETWEEN 50 AND 100000 AS BIGINT) AS words_ok,
-        |         CAST(mean_word_len BETWEEN 3.0 AND 10.0 AS BIGINT) AS word_len_ok,
-        |         CAST(symbol_ratio <= 0.1 AS BIGINT) AS symbol_ok,
-        |         CAST(bullet_frac <= 0.9 AS BIGINT) AS bullet_ok,
-        |         CAST(ellipsis_line_frac <= 0.3 AS BIGINT) AS ellipsis_ok,
-        |         CAST(alpha_frac >= 0.8 AS BIGINT) AS alpha_ok,
-        |         CAST(stopword_hits >= 2 AS BIGINT) AS stopword_ok
-        |  FROM m
-        |)
-        |SELECT f.*,
-        |       words_ok * word_len_ok * symbol_ok * bullet_ok * ellipsis_ok
-        |         * alpha_ok * stopword_ok AS gopher_pass
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // Markup strip: same regex cascade (RE2 intersection, 'g' flag is
-    // DuckDB's all-occurrences; Spark is always-global), literal
-    // entities via plain replace(), then the whitespace-normalize
-    // (lower + collapse + trim) replay.
-    "q_text_strip_markup" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |         '<html><head><style type="text/css">p {color: red}</style></head><body class="main"><h1>'
-        |           || substr(text, 1, 20) || '</h1><p>' || text
-        |           || ' &amp; more &lt;tags&gt;</p><script>var x = 1 < 2; if (x) { alert("hi"); }</script></body></html>'
-        |           AS html
-        |  FROM documents
-        |), s1 AS (
-        |  SELECT doc_id,
-        |         regexp_replace(
-        |           regexp_replace(html,
-        |             '(?is)<(script|style)[^>]*>.*?</(script|style)>', ' ', 'g'),
-        |           '<[^>]+>', ' ', 'g') AS x
-        |  FROM h
-        |), s2 AS (
-        |  SELECT doc_id,
-        |         replace(replace(replace(replace(replace(replace(replace(x,
-        |           '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |           '&#39;', chr(39)), '&apos;', chr(39)), '&nbsp;', ' '),
-        |           '&amp;', '&') AS x
-        |  FROM s1
-        |), clean AS (
-        |  SELECT doc_id,
-        |         trim(regexp_replace(lower(x), '\s+', ' ', 'g')) AS c
-        |  FROM s2
-        |)
-        |SELECT doc_id, md5(c) AS clean_hash,
-        |       CAST(length(c) AS BIGINT) AS clean_len
-        |FROM clean ORDER BY doc_id""".stripMargin,
-
-    // NFC: DuckDB's nfc_normalize over the same decomposed suffix.
-    "q_text_nfc" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         text || ' cafe' || chr(769) || ' nai' || chr(776) || 've' AS s
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       CAST(strlen(s) AS BIGINT) AS bytes_raw,
-        |       CAST(strlen(nfc_normalize(s)) AS BIGINT) AS bytes_nfc,
-        |       md5(nfc_normalize(s)) AS nfc_hash
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // KL(source || corpus): both censuses + the per-source fold.
-    "q_corpus_divergence" ->
-      """WITH toks AS (
-        |  SELECT d.source, unnest(regexp_extract_all(d.text, '\S+')) AS tok
-        |  FROM documents d
-        |), by_src AS (
-        |  SELECT source, tok, count(*) AS c_st FROM toks GROUP BY source, tok
-        |), src_tot AS (
-        |  SELECT source, sum(c_st) AS n_s FROM by_src GROUP BY source
-        |), corpus AS (
-        |  SELECT tok, count(*) AS c_t FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(c_t) AS DOUBLE) AS total FROM corpus
-        |)
-        |SELECT b.source,
-        |       CAST(max(t.n_s) AS BIGINT) AS n_tokens,
-        |       CAST(count(*) AS BIGINT) AS vocab_size,
-        |       round(sum(
-        |         (CAST(b.c_st AS DOUBLE) / t.n_s)
-        |           * log2((CAST(b.c_st AS DOUBLE) / t.n_s)
-        |                  / (CAST(c.c_t AS DOUBLE) / (SELECT total FROM tot)))), 6)
-        |         + 0.0e0 AS kl_bits
-        |FROM by_src b
-        |JOIN corpus c USING (tok)
-        |JOIN src_tot t USING (source)
-        |GROUP BY b.source
-        |ORDER BY b.source""".stripMargin,
-
-    // JS replay: same token censuses, per-token p/q/m terms rounded to
-    // 12dp into exact decimal folds, the off-support tail as the
-    // closed-form ½(1 − q_mass_in_source) scalar.
-    "q_corpus_js" ->
-      """WITH toks AS (
-        |  SELECT d.source, unnest(regexp_extract_all(d.text, '\S+')) AS tok
-        |  FROM documents d
-        |), by_src AS (
-        |  SELECT source, tok, count(*) AS c_st FROM toks GROUP BY source, tok
-        |), src_tot AS (
-        |  SELECT source, sum(c_st) AS n_s FROM by_src GROUP BY source
-        |), corpus AS (
-        |  SELECT tok, count(*) AS c_t FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(c_t) AS DOUBLE) AS total FROM corpus
-        |), pqm AS (
-        |  SELECT b.source,
-        |         t.n_s,
-        |         CAST(b.c_st AS DOUBLE) / t.n_s AS p,
-        |         CAST(c.c_t AS DOUBLE) / (SELECT total FROM tot) AS q
-        |  FROM by_src b
-        |  JOIN corpus c USING (tok)
-        |  JOIN src_tot t USING (source)
-        |), terms AS (
-        |  SELECT source,
-        |         CAST(max(n_s) AS BIGINT) AS n_tokens,
-        |         CAST(count(*) AS BIGINT) AS vocab_size,
-        |         CAST(sum(CAST(round(p * log2(p / ((p + q) / 2.0)), 12)
-        |                       AS DECIMAL(38,12))) AS DOUBLE) AS pterm,
-        |         CAST(sum(CAST(round(q * log2(q / ((p + q) / 2.0)), 12)
-        |                       AS DECIMAL(38,12))) AS DOUBLE) AS qterm,
-        |         CAST(sum(CAST(round(q, 12) AS DECIMAL(38,12))) AS DOUBLE) AS qmass
-        |  FROM pqm GROUP BY source
-        |)
-        |SELECT source, n_tokens, vocab_size,
-        |       round(0.5 * pterm + 0.5 * (qterm + (1.0 - qmass)), 6)
-        |         + 0.0e0 AS js_bits
-        |FROM terms ORDER BY source""".stripMargin,
-
-    // Fightin' Words replay: the same censuses, the Dirichlet-prior
-    // log-odds delta and variance-normalized z in the engine's exact
-    // operation order, rank window on the rounded z with token tiebreak.
-    "q_marked_tokens" ->
-      """WITH toks AS (
-        |  SELECT d.source, unnest(regexp_extract_all(d.text, '\S+')) AS tok
-        |  FROM documents d
-        |), by_src AS (
-        |  SELECT source, tok, CAST(count(*) AS BIGINT) AS y_s
-        |  FROM toks GROUP BY source, tok
-        |), src_tot AS (
-        |  SELECT source, CAST(sum(y_s) AS BIGINT) AS n_s FROM by_src GROUP BY source
-        |), corpus AS (
-        |  SELECT tok, CAST(count(*) AS BIGINT) AS c_t FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(c_t) AS BIGINT) AS total FROM corpus
-        |), sc AS (
-        |  SELECT b.source, b.tok, b.y_s, t.n_s,
-        |         CAST(c.c_t - b.y_s AS DOUBLE) AS yr,
-        |         CAST((SELECT total FROM tot) - t.n_s AS DOUBLE) AS nr,
-        |         100.0 * (CAST(c.c_t AS DOUBLE)
-        |                  / CAST((SELECT total FROM tot) AS DOUBLE)) AS aw
-        |  FROM by_src b JOIN corpus c USING (tok) JOIN src_tot t USING (source)
-        |), dz AS (
-        |  SELECT source, tok, y_s, yr, aw,
-        |         ln((CAST(y_s AS DOUBLE) + aw)
-        |            / (CAST(n_s AS DOUBLE) + 100.0 - CAST(y_s AS DOUBLE) - aw))
-        |         - ln((yr + aw) / (nr + 100.0 - yr - aw)) AS draw
-        |  FROM sc
-        |), rz AS (
-        |  SELECT source, tok, y_s, yr,
-        |         round(draw, 6) AS delta,
-        |         round(draw / sqrt(1.0 / (CAST(y_s AS DOUBLE) + aw)
-        |                           + 1.0 / (yr + aw)), 6) AS z
-        |  FROM dz
-        |), rk AS (
-        |  SELECT *, row_number() OVER (PARTITION BY source
-        |                               ORDER BY z DESC, tok) AS rank
-        |  FROM rz
-        |)
-        |SELECT source, CAST(rank AS INT) AS rank, tok AS token,
-        |       y_s AS n_source, CAST(yr AS BIGINT) AS n_rest,
-        |       delta + 0.0e0 AS delta, z + 0.0e0 AS z
-        |FROM rk WHERE rank <= 10
-        |ORDER BY source, rank""".stripMargin,
-
-    // Zipf replay: the census rank under the total (count desc, token)
-    // order, ln pairs rounded to 12dp into exact decimal folds, the
-    // trend-fit moment assembly.
-    "q_zipf_fit" ->
-      """WITH toks AS (
-        |  SELECT unnest(regexp_extract_all(text, '\S+')) AS tok FROM documents
-        |), census AS (
-        |  SELECT tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY tok
-        |), top AS (
-        |  SELECT ln(CAST(rank AS DOUBLE)) AS x, ln(CAST(c AS DOUBLE)) AS y
-        |  FROM (SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS rank
-        |        FROM census)
-        |  WHERE rank <= 100
-        |), mom AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CAST(round(x, 12) AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-        |         CAST(sum(CAST(round(y, 12) AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-        |         CAST(sum(CAST(round(x * y, 12) AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-        |         CAST(sum(CAST(round(x * x, 12) AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-        |         CAST(sum(CAST(round(y * y, 12) AS DECIMAL(38,12))) AS DOUBLE) AS syy
-        |  FROM top
-        |), f AS (
-        |  SELECT n,
-        |         CAST(n AS DOUBLE) * sxy - sx * sy AS num,
-        |         CAST(n AS DOUBLE) * sxx - sx * sx AS den,
-        |         CAST(n AS DOUBLE) * syy - sy * sy AS deny,
-        |         sx, sy, CAST(n AS DOUBLE) AS nd
-        |  FROM mom
-        |)
-        |SELECT n AS top_n,
-        |       CASE WHEN den > 0 THEN round(num / den, 6) + 0.0e0 END AS slope,
-        |       CASE WHEN den > 0
-        |            THEN round((sy - (num / den) * sx) / nd, 6) + 0.0e0
-        |       END AS intercept,
-        |       CASE WHEN den > 0 AND deny > 0
-        |            THEN round((num * num) / (den * deny), 6) END AS r2
-        |FROM f""".stripMargin,
-
-    // Heaps replay: integer-grid prefix buckets (double-floor formula
-    // mirrored literally), first-occurrence census, bounded cumsum,
-    // 12dp decimal moment staging — the zipf assembly on (lnT, lnV).
-    "q_heaps_fit" ->
-      """WITH ids AS (
-        |  SELECT CAST(min(doc_id) AS BIGINT) AS lo,
-        |         CAST(max(doc_id) AS BIGINT) AS hi
-        |  FROM documents
-        |), tb AS (
-        |  SELECT least(20, CAST(floor(CAST((doc_id - lo) * 20 AS DOUBLE)
-        |             / CAST(hi - lo + 1 AS DOUBLE)) AS BIGINT) + 1) AS b,
-        |         CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS toks
-        |  FROM documents, ids GROUP BY 1
-        |), fo AS (
-        |  SELECT tok, min(doc_id) AS first_id FROM (
-        |    SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS tok
-        |    FROM documents)
-        |  GROUP BY tok
-        |), vb AS (
-        |  SELECT least(20, CAST(floor(CAST((first_id - lo) * 20 AS DOUBLE)
-        |             / CAST(hi - lo + 1 AS DOUBLE)) AS BIGINT) + 1) AS b,
-        |         CAST(count(*) AS BIGINT) AS newv
-        |  FROM fo, ids GROUP BY 1
-        |), pts0 AS (
-        |  SELECT coalesce(tb.b, vb.b) AS b,
-        |         coalesce(toks, 0) AS toks, coalesce(newv, 0) AS newv
-        |  FROM tb FULL JOIN vb ON tb.b = vb.b
-        |), cum AS (
-        |  SELECT sum(toks) OVER (ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING
-        |                         AND CURRENT ROW) AS t_cum,
-        |         sum(newv) OVER (ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING
-        |                         AND CURRENT ROW) AS v_cum
-        |  FROM pts0
-        |), pts AS (
-        |  SELECT ln(CAST(t_cum AS DOUBLE)) AS x, ln(CAST(v_cum AS DOUBLE)) AS y
-        |  FROM cum WHERE t_cum > 0 AND v_cum > 0
-        |), mom AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CAST(round(x, 12) AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-        |         CAST(sum(CAST(round(y, 12) AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-        |         CAST(sum(CAST(round(x * y, 12) AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-        |         CAST(sum(CAST(round(x * x, 12) AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-        |         CAST(sum(CAST(round(y * y, 12) AS DECIMAL(38,12))) AS DOUBLE) AS syy
-        |  FROM pts
-        |), f AS (
-        |  SELECT n,
-        |         CAST(n AS DOUBLE) * sxy - sx * sy AS num,
-        |         CAST(n AS DOUBLE) * sxx - sx * sx AS den,
-        |         CAST(n AS DOUBLE) * syy - sy * sy AS deny,
-        |         sx, sy, CAST(n AS DOUBLE) AS nd
-        |  FROM mom
-        |)
-        |SELECT n AS n_points,
-        |       CASE WHEN den > 0 THEN round(num / den, 6) + 0.0e0 END AS beta,
-        |       CASE WHEN den > 0
-        |            THEN round((sy - (num / den) * sx) / nd, 6) + 0.0e0
-        |       END AS intercept,
-        |       CASE WHEN den > 0 AND deny > 0
-        |            THEN round((num * num) / (den * deny), 6) END AS r2
-        |FROM f""".stripMargin,
-
-    // Hapax replay: per-(source, token) census, integer folds, two
-    // exact count divisions.
-    "q_hapax" ->
-      """WITH census AS (
-        |  SELECT source, tok, CAST(count(*) AS BIGINT) AS c FROM (
-        |    SELECT source, unnest(regexp_extract_all(text, '\S+')) AS tok
-        |    FROM documents)
-        |  GROUP BY source, tok
-        |)
-        |SELECT source,
-        |       CAST(sum(c) AS BIGINT) AS n_tokens,
-        |       CAST(count(*) AS BIGINT) AS vocab,
-        |       CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-        |       round(CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / CAST(sum(c) AS DOUBLE), 6) AS unseen_mass,
-        |       round(CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / CAST(count(*) AS DOUBLE), 6) AS hapax_ratio
-        |FROM census GROUP BY source ORDER BY source""".stripMargin,
-
-    // Overlap replay: distinct string 3-grams per source (set counts ==
-    // the engine's hashed-gram sets), gram equi-join, size joins.
-    "q_source_overlap" ->
-      """WITH grams AS (
-        |  SELECT DISTINCT source, g FROM (
-        |    SELECT d.source,
-        |           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-        |                                 i -> array_to_string(t[i:i+2], ' '))) AS g
-        |    FROM (SELECT source, regexp_extract_all(text, '\S+') AS t
-        |          FROM documents) d)
-        |), sizes AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS sz FROM grams GROUP BY source
-        |), inter AS (
-        |  SELECT a.source AS source_a, b.source AS source_b,
-        |         CAST(count(*) AS BIGINT) AS n_common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.source <> b.source
-        |  GROUP BY 1, 2
-        |)
-        |SELECT i.source_a, i.source_b, sa.sz AS sz_a, sb.sz AS sz_b, i.n_common,
-        |       round(CAST(i.n_common AS DOUBLE) / sa.sz, 6) AS containment_a_in_b,
-        |       round(CAST(i.n_common AS DOUBLE)
-        |             / (sa.sz + sb.sz - i.n_common), 6) AS jaccard
-        |FROM inter i
-        |JOIN sizes sa ON sa.source = i.source_a
-        |JOIN sizes sb ON sb.source = i.source_b
-        |ORDER BY i.source_a, i.source_b""".stripMargin,
-
-    // Embedding dispersion: E||x||^2 - ||mu||^2 per label.
-    "q_emb_dispersion" ->
-      """WITH v AS (
-        |  SELECT label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        |), norms AS (
-        |  SELECT label, CAST(count(*) AS BIGINT) AS n,
-        |         avg(list_dot_product(e, e)) AS msq
-        |  FROM v GROUP BY label
-        |), dims AS (
-        |  SELECT label, i, avg(e[CAST(i AS INT)]) AS mu
-        |  FROM (SELECT label, e, unnest(range(1, len(e) + 1)) AS i FROM v)
-        |  GROUP BY label, i
-        |), cent AS (
-        |  SELECT label, sum(mu * mu) AS c2 FROM dims GROUP BY label
-        |)
-        |SELECT n.label, n.n,
-        |       round(sqrt(c.c2), 6) AS centroid_norm,
-        |       round(n.msq - c.c2, 6) + 0.0e0 AS dispersion
-        |FROM norms n JOIN cent c USING (label)
-        |ORDER BY n.label""".stripMargin,
-
-    // Byte entropy: fold -(p·log2 p) over SORTED distinct characters
-    // (ASCII text: char entropy == the engine's byte entropy; the fold
-    // order matches the kernel's ascending-byte-value sum).
-    "q_quality_entropy" ->
-      """WITH c AS (
-        |  SELECT doc_id, length(text) AS n,
-        |         list_sort(list_distinct(regexp_extract_all(text, '[\s\S]'))) AS cs,
-        |         regexp_extract_all(text, '[\s\S]') AS allc
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       CAST(n AS BIGINT) AS n_chars,
-        |       round(CASE WHEN n = 0 THEN 0.0 ELSE
-        |         list_sum(list_transform(cs, x ->
-        |           -(CAST(len(list_filter(allc, y -> y = x)) AS DOUBLE) / n)
-        |             * log2(CAST(len(list_filter(allc, y -> y = x)) AS DOUBLE) / n)))
-        |         END, 6) AS entropy_bits
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // Blocklist gate: lexicon membership over the \S+ tokenization.
-    "q_quality_blocklist" ->
-      """WITH s AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |)
-        |SELECT doc_id,
-        |       CAST(len(t) AS BIGINT) AS n_tokens,
-        |       CAST(len(list_filter(t, x -> lower(x) IN ('slow', 'corrupt'))) AS BIGINT) AS n_hits,
-        |       round(CASE WHEN len(t) > 0
-        |         THEN CAST(len(list_filter(t, x -> lower(x) IN ('slow', 'corrupt'))) AS DOUBLE) / len(t)
-        |         ELSE 0.0 END, 6) AS hit_frac,
-        |       len(list_filter(t, x -> lower(x) IN ('slow', 'corrupt'))) > 0 AS flagged
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Curriculum plan: global rank window + ceil phase boundaries +
-    // the 13-hex md5 key parse with '#2#cur' folded in.
-    "q_curriculum_plan" ->
-      """WITH base AS (
-        |  SELECT doc_id, len(regexp_extract_all(text, '\S+')) AS sc FROM documents
-        |), ranked AS (
-        |  SELECT doc_id, sc,
-        |         row_number() OVER (ORDER BY sc, doc_id) AS rn,
-        |         count(*) OVER () AS n
-        |  FROM base
-        |)
-        |SELECT doc_id,
-        |       CAST(sc AS BIGINT) AS score,
-        |       CAST(CASE WHEN rn <= ceil(n * 1 / 3.0) THEN 1
-        |                 WHEN rn <= ceil(n * 2 / 3.0) THEN 2
-        |                 ELSE 3 END AS BIGINT) AS phase,
-        |       CAST(2 AS BIGINT) AS epoch,
-        |       CAST(list_sum(list_transform(range(13), i ->
-        |         (CAST(strpos('0123456789abcdef',
-        |             substr(md5(CAST(doc_id AS VARCHAR) || '#2#cur'), CAST(i+1 AS INT), 1)) AS BIGINT) - 1)
-        |         * (CAST(1 AS BIGINT) << CAST(4*(12-i) AS INT)))) AS BIGINT) AS sort_key
-        |FROM ranked ORDER BY doc_id""".stripMargin,
-
-    // Length quantiles: k-th order statistic, rank windows per source.
-    "q_corpus_length_quantiles" ->
-      """WITH base AS (
-        |  SELECT source, doc_id, len(regexp_extract_all(text, '\S+')) AS nt
-        |  FROM documents
-        |), ranked AS (
-        |  SELECT source, nt,
-        |         row_number() OVER (PARTITION BY source ORDER BY nt, doc_id) AS rn,
-        |         count(*) OVER (PARTITION BY source) AS n
-        |  FROM base
-        |)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(max(CASE WHEN rn = ceil(n * 0.5) THEN nt END) AS BIGINT) AS p50,
-        |       CAST(max(CASE WHEN rn = ceil(n * 0.9) THEN nt END) AS BIGINT) AS p90,
-        |       CAST(max(CASE WHEN rn = ceil(n * 0.99) THEN nt END) AS BIGINT) AS p99
-        |FROM ranked GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    // Data card: each metric replayed, then melted via UNION ALL in
-    // the operator's fixed metric order (sort keys make order moot).
-    "q_corpus_report" ->
-      """WITH base AS (
-        |  SELECT doc_id, source,
-        |         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-        |         len(regexp_extract_all(text, '\S+')) AS nt,
-        |         length(text) AS nc
-        |  FROM documents
-        |), dupfp AS (
-        |  SELECT fp FROM base GROUP BY fp HAVING count(*) > 1
-        |), flagged AS (
-        |  SELECT b.*, CASE WHEN d.fp IS NOT NULL THEN 1 ELSE 0 END AS dup
-        |  FROM base b LEFT JOIN dupfp d ON b.fp = d.fp
-        |), toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS tok
-        |  FROM documents
-        |), census AS (
-        |  SELECT tok, count(*) AS tf FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(tf) AS DOUBLE) AS total FROM census
-        |), perdoc AS (
-        |  SELECT t.doc_id,
-        |         avg(-log2(CAST(c.tf AS DOUBLE) / (SELECT total FROM tot))) AS sup
-        |  FROM toks t JOIN census c USING (tok) GROUP BY t.doc_id
-        |), sdoc AS (
-        |  SELECT d.doc_id, round(coalesce(p.sup, 0.0), 6) AS avg_surprisal
-        |  FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        |), vocab AS (
-        |  SELECT d.source, count(DISTINCT t.tok) AS vocab_size
-        |  FROM toks t JOIN documents d USING (doc_id) GROUP BY d.source
-        |), agg AS (
-        |  SELECT f.source,
-        |         CAST(count(*) AS BIGINT) AS n_docs,
-        |         CAST(sum(f.nt) AS BIGINT) AS total_tokens,
-        |         CAST(sum(f.nc) AS BIGINT) AS total_chars,
-        |         round(CAST(sum(f.nt) AS DOUBLE) / count(*), 6) AS mean_doc_tokens,
-        |         round(CAST(sum(f.dup) AS DOUBLE) / count(*), 6) AS dup_doc_frac,
-        |         round(CAST(sum(CAST(s.avg_surprisal AS DECIMAL(18,6))) AS DOUBLE)
-        |               / count(s.avg_surprisal), 6) AS mean_surprisal
-        |  FROM flagged f JOIN sdoc s USING (doc_id)
-        |  GROUP BY f.source
-        |), wide AS (
-        |  SELECT a.*, v.vocab_size,
-        |         round(CAST(v.vocab_size AS DOUBLE) / a.total_tokens, 6) AS ttr
-        |  FROM agg a JOIN vocab v USING (source)
-        |)
-        |SELECT source, metric, value FROM (
-        |  SELECT source, 'n_docs' AS metric, CAST(n_docs AS DOUBLE) AS value FROM wide
-        |  UNION ALL SELECT source, 'total_tokens', CAST(total_tokens AS DOUBLE) FROM wide
-        |  UNION ALL SELECT source, 'total_chars', CAST(total_chars AS DOUBLE) FROM wide
-        |  UNION ALL SELECT source, 'mean_doc_tokens', mean_doc_tokens FROM wide
-        |  UNION ALL SELECT source, 'vocab_size', CAST(vocab_size AS DOUBLE) FROM wide
-        |  UNION ALL SELECT source, 'ttr', ttr FROM wide
-        |  UNION ALL SELECT source, 'dup_doc_frac', dup_doc_frac FROM wide
-        |  UNION ALL SELECT source, 'mean_surprisal', mean_surprisal FROM wide
-        |)
-        |ORDER BY source, metric""".stripMargin,
-
-    // Line dedup family: the synthesis (footer + prefix lines) and the
-    // census/anti-join (or rank window) replayed over string_split.
-    "q_dedup_lines" ->
-      """WITH d2 AS (
-        |  SELECT doc_id,
-        |         text || chr(10) || 'subscribe to our newsletter for updates'
-        |              || chr(10) || substr(text, 1, 40) AS text2
-        |  FROM documents
-        |), sp AS (
-        |  SELECT doc_id, string_split(text2, chr(10)) AS ln FROM d2
-        |), l AS (
-        |  SELECT doc_id, i - 1 AS line_idx, ln[CAST(i AS INT)] AS line
-        |  FROM (SELECT doc_id, ln, unnest(range(1, len(ln) + 1)) AS i FROM sp)
-        |), dups AS (
-        |  SELECT line FROM l GROUP BY line HAVING count(*) > 1
-        |), kept AS (
-        |  SELECT * FROM l WHERE NOT EXISTS (SELECT 1 FROM dups WHERE dups.line = l.line)
-        |), reb AS (
-        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY line_idx) AS clean_text
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |       md5(coalesce(r.clean_text, '')) AS clean_hash,
-        |       CAST(length(coalesce(r.clean_text, '')) AS BIGINT) AS clean_len
-        |FROM documents d LEFT JOIN reb r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_dedup_lines_keep" ->
-      """WITH d2 AS (
-        |  SELECT doc_id,
-        |         text || chr(10) || 'subscribe to our newsletter for updates'
-        |              || chr(10) || substr(text, 1, 40) AS text2
-        |  FROM documents
-        |), sp AS (
-        |  SELECT doc_id, string_split(text2, chr(10)) AS ln FROM d2
-        |), l AS (
-        |  SELECT doc_id, i - 1 AS line_idx, ln[CAST(i AS INT)] AS line
-        |  FROM (SELECT doc_id, ln, unnest(range(1, len(ln) + 1)) AS i FROM sp)
-        |), rk AS (
-        |  SELECT doc_id, line_idx, line,
-        |         row_number() OVER (PARTITION BY line
-        |                            ORDER BY doc_id, line_idx) AS rn
-        |  FROM l
-        |), reb AS (
-        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY line_idx) AS clean_text
-        |  FROM rk WHERE rn = 1 GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |       md5(coalesce(r.clean_text, '')) AS clean_hash,
-        |       CAST(length(coalesce(r.clean_text, '')) AS BIGINT) AS clean_len
-        |FROM documents d LEFT JOIN reb r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_dedup_lines_table" ->
-      """WITH d2 AS (
-        |  SELECT doc_id,
-        |         text || chr(10) || 'subscribe to our newsletter for updates'
-        |              || chr(10) || substr(text, 1, 40) AS text2
-        |  FROM documents
-        |), sp AS (
-        |  SELECT doc_id, string_split(text2, chr(10)) AS ln FROM d2
-        |), l AS (
-        |  SELECT doc_id, ln[CAST(i AS INT)] AS line
-        |  FROM (SELECT doc_id, ln, unnest(range(1, len(ln) + 1)) AS i FROM sp)
-        |)
-        |SELECT md5(line) AS line_hash,
-        |       CAST(count(*) AS BIGINT) AS n_sites,
-        |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-        |FROM l GROUP BY line HAVING count(*) > 1
-        |ORDER BY line_hash""".stripMargin,
-
-    "q_dedup_lines_indoc" ->
-      """WITH d3 AS (
-        |  SELECT doc_id,
-        |         substr(text, 1, 30) || chr(10) || text
-        |              || chr(10) || substr(text, 1, 30) AS t3
-        |  FROM documents
-        |), sp AS (
-        |  SELECT doc_id, string_split(t3, chr(10)) AS ln FROM d3
-        |), l AS (
-        |  SELECT doc_id, i, ln[CAST(i AS INT)] AS line
-        |  FROM (SELECT doc_id, ln, unnest(range(1, len(ln) + 1)) AS i FROM sp)
-        |), k AS (
-        |  SELECT doc_id, i, line,
-        |         min(i) OVER (PARTITION BY doc_id, line) AS fi
-        |  FROM l
-        |)
-        |SELECT doc_id, md5(string_agg(line, chr(10) ORDER BY i)) AS clean_hash
-        |FROM k WHERE i = fi GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // Gopher rollup: the q_quality_gopher signal CTEs aggregated per
-    // source (BIGINT casts on DuckDB integer sums).
-    "q_quality_gopher_rollup" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         regexp_extract_all(text, '\S+') AS t,
-        |         string_split(text, chr(10)) AS ln
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id,
-        |         CAST(len(t) AS BIGINT) AS n_words,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS mean_word_len,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST((length(text) - length(replace(text, '#', '')))
-        |                + len(regexp_extract_all(text, '\.\.\.|…')) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS symbol_ratio,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '^\s*[-*•]'))) AS DOUBLE) / len(ln), 6) AS bullet_frac,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '(\.\.\.|…)\s*$'))) AS DOUBLE) / len(ln), 6) AS ellipsis_line_frac,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS alpha_frac,
-        |         CAST(list_contains(list_transform(t, x -> lower(x)), 'the') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'be') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'to') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'of') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'and') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'that') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'have') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'with') AS BIGINT)
-        |           AS stopword_hits
-        |  FROM s
-        |), f AS (
-        |  SELECT doc_id,
-        |         CAST(n_words BETWEEN 50 AND 100000 AS BIGINT) AS words_ok,
-        |         CAST(mean_word_len BETWEEN 3.0 AND 10.0 AS BIGINT) AS word_len_ok,
-        |         CAST(symbol_ratio <= 0.1 AS BIGINT) AS symbol_ok,
-        |         CAST(bullet_frac <= 0.9 AS BIGINT) AS bullet_ok,
-        |         CAST(ellipsis_line_frac <= 0.3 AS BIGINT) AS ellipsis_ok,
-        |         CAST(alpha_frac >= 0.8 AS BIGINT) AS alpha_ok,
-        |         CAST(stopword_hits >= 2 AS BIGINT) AS stopword_ok
-        |  FROM m
-        |), g AS (
-        |  SELECT f.*,
-        |         words_ok * word_len_ok * symbol_ok * bullet_ok * ellipsis_ok
-        |           * alpha_ok * stopword_ok AS gopher_pass
-        |  FROM f
-        |)
-        |SELECT d.source,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(gopher_pass) AS BIGINT) AS n_pass,
-        |       round(CAST(sum(gopher_pass) AS DOUBLE) / count(*), 6) AS pass_frac,
-        |       round(CAST(sum(1 - words_ok) AS DOUBLE) / count(*), 6) AS fail_words,
-        |       round(CAST(sum(1 - word_len_ok) AS DOUBLE) / count(*), 6) AS fail_word_len,
-        |       round(CAST(sum(1 - symbol_ok) AS DOUBLE) / count(*), 6) AS fail_symbol,
-        |       round(CAST(sum(1 - bullet_ok) AS DOUBLE) / count(*), 6) AS fail_bullet,
-        |       round(CAST(sum(1 - ellipsis_ok) AS DOUBLE) / count(*), 6) AS fail_ellipsis,
-        |       round(CAST(sum(1 - alpha_ok) AS DOUBLE) / count(*), 6) AS fail_alpha,
-        |       round(CAST(sum(1 - stopword_ok) AS DOUBLE) / count(*), 6) AS fail_stopword
-        |FROM g JOIN documents d USING (doc_id)
-        |GROUP BY d.source
-        |ORDER BY d.source""".stripMargin,
-
-    // Epoch shuffle plan: the 13-hex-digit md5 parse (house 52-bit
-    // uniform), epoch and salt folded into the key string.
-    "q_shuffle_epoch" ->
-      """WITH keyed AS (
-        |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(range(13), i ->
-        |      (CAST(strpos('0123456789abcdef',
-        |          substr(md5(CAST(doc_id AS VARCHAR) || '#3#es'), CAST(i+1 AS INT), 1)) AS BIGINT) - 1)
-        |      * (CAST(1 AS BIGINT) << CAST(4*(12-i) AS INT)))) AS BIGINT) AS sort_key
-        |  FROM documents
-        |)
-        |SELECT doc_id, CAST(3 AS BIGINT) AS epoch, sort_key,
-        |       sort_key % 8 AS shard
-        |FROM keyed ORDER BY doc_id""".stripMargin,
-
-    // Perplexity buckets: the q_quality_surprisal pipeline + a
-    // per-source rank window with k-th order-statistic boundaries.
-    "q_quality_ppl_buckets" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS tok
-        |  FROM documents
-        |), census AS (
-        |  SELECT tok, count(*) AS tf FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(tf) AS DOUBLE) AS total FROM census
-        |), perdoc AS (
-        |  SELECT t.doc_id, count(*) AS n_tokens,
-        |         avg(-log2(CAST(c.tf AS DOUBLE) / (SELECT total FROM tot))) AS s
-        |  FROM toks t JOIN census c USING (tok) GROUP BY t.doc_id
-        |), scored AS (
-        |  SELECT d.doc_id, d.source,
-        |         CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |         round(coalesce(p.s, 0.0), 6) AS avg_surprisal
-        |  FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        |), ranked AS (
-        |  SELECT scored.*,
-        |         row_number() OVER (PARTITION BY source
-        |                            ORDER BY avg_surprisal, doc_id) AS rn,
-        |         count(*) OVER (PARTITION BY source) AS n
-        |  FROM scored
-        |)
-        |SELECT doc_id, source, n_tokens, avg_surprisal,
-        |       CAST(CASE WHEN rn <= ceil(n * 1 / 3.0) THEN 1
-        |                 WHEN rn <= ceil(n * 2 / 3.0) THEN 2
-        |                 ELSE 3 END AS BIGINT) AS bucket,
-        |       CASE WHEN rn <= ceil(n * 1 / 3.0) THEN 'head'
-        |            WHEN rn <= ceil(n * 2 / 3.0) THEN 'middle'
-        |            ELSE 'tail' END AS bucket_label
-        |FROM ranked ORDER BY doc_id""".stripMargin,
-
-    // Semantic decontamination: nearest-eval pick replayed as a rank
-    // window (cos DESC, eval id ASC == the engine's max-struct
-    // tie-break), flag from the rounded cosine.
-    "q_contamination_semantic" ->
-      """WITH ev AS (
-        |  SELECT vec_id AS eid, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings WHERE vec_id % 20 = 0
-        |), c AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id % 20 <> 0
-        |), s AS (
-        |  SELECT c.vec_id, ev.eid,
-        |         round(list_dot_product(v, e) /
-        |               (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(e, e))), 6) + 0.0e0 AS cos_sim
-        |  FROM c CROSS JOIN ev
-        |), r AS (
-        |  SELECT s.*,
-        |         row_number() OVER (PARTITION BY vec_id
-        |                            ORDER BY cos_sim DESC, eid) AS rn
-        |  FROM s
-        |)
-        |SELECT vec_id, CAST(eid AS BIGINT) AS nearest_eval_id, cos_sim,
-        |       cos_sim >= 0.3 AS is_contaminated
-        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-    "q_quality_surprisal" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS tok
-        |  FROM documents
-        |), census AS (
-        |  SELECT tok, count(*) AS tf FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(tf) AS DOUBLE) AS total FROM census
-        |), perdoc AS (
-        |  SELECT t.doc_id, count(*) AS n_tokens,
-        |         avg(-log2(CAST(c.tf AS DOUBLE) / (SELECT total FROM tot))) AS s
-        |  FROM toks t JOIN census c USING (tok) GROUP BY t.doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |       round(coalesce(p.s, 0.0), 6) AS avg_surprisal
-        |FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Bigram backoff replay: positions via range indexing, lag for the
-    // context, inner join unigram counts (self census: always present),
-    // left joins for context count and bigram count, CASE per the
-    // backoff ladder.
-    "q_quality_surprisal_bigram" ->
-      """WITH tl AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), tk AS (
-        |  SELECT doc_id, i, t[CAST(i AS INT)] AS tok
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM tl)
-        |), wp AS (
-        |  SELECT doc_id, i, tok,
-        |         lag(tok) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-        |  FROM tk
-        |), uni AS (
-        |  SELECT tok, count(*) AS cu FROM tk GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(cu) AS DOUBLE) AS total FROM uni
-        |), big AS (
-        |  SELECT prev, tok, count(*) AS cb FROM wp
-        |  WHERE prev IS NOT NULL GROUP BY prev, tok
-        |), sc AS (
-        |  SELECT w.doc_id,
-        |         CASE WHEN w.prev IS NULL
-        |                THEN -log2(CAST(u.cu AS DOUBLE) / (SELECT total FROM tot))
-        |              WHEN b.cb IS NOT NULL
-        |                THEN -log2(CAST(b.cb AS DOUBLE) / CAST(up.cu AS DOUBLE))
-        |              ELSE -log2(0.4 * CAST(u.cu AS DOUBLE) / (SELECT total FROM tot))
-        |         END AS s
-        |  FROM wp w
-        |  JOIN uni u USING (tok)
-        |  LEFT JOIN uni up ON up.tok = w.prev
-        |  LEFT JOIN big b ON b.prev = w.prev AND b.tok = w.tok
-        |), perdoc AS (
-        |  SELECT doc_id, count(*) AS n_tokens, avg(s) AS s FROM sc GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |       round(coalesce(p.s, 0.0), 6) AS avg_surprisal
-        |FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Trigram chain replay: two lags, three censuses, the CASE ladder
-    // entered at each token's history depth; c2ctx is the bigram count
-    // of (p2, p1) reused as the trigram denominator.
-    "q_quality_surprisal_trigram" ->
-      """WITH tl AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), tk AS (
-        |  SELECT doc_id, i, t[CAST(i AS INT)] AS tok
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM tl)
-        |), wp AS (
-        |  SELECT doc_id, i, tok,
-        |         lag(tok, 1) OVER (PARTITION BY doc_id ORDER BY i) AS p1,
-        |         lag(tok, 2) OVER (PARTITION BY doc_id ORDER BY i) AS p2
-        |  FROM tk
-        |), uni AS (
-        |  SELECT tok, count(*) AS cu FROM tk GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(cu) AS DOUBLE) AS total FROM uni
-        |), big AS (
-        |  SELECT p1, tok, count(*) AS cb FROM wp
-        |  WHERE p1 IS NOT NULL GROUP BY p1, tok
-        |), tri AS (
-        |  SELECT p2, p1, tok, count(*) AS ct FROM wp
-        |  WHERE p2 IS NOT NULL GROUP BY p2, p1, tok
-        |), sc AS (
-        |  SELECT w.doc_id,
-        |         CASE
-        |           WHEN w.p1 IS NULL
-        |             THEN -log2(CAST(u.cu AS DOUBLE) / (SELECT total FROM tot))
-        |           WHEN w.p2 IS NULL THEN
-        |             CASE WHEN b.cb IS NOT NULL
-        |                    THEN -log2(CAST(b.cb AS DOUBLE) / CAST(u1.cu AS DOUBLE))
-        |                  ELSE -log2(0.4 * CAST(u.cu AS DOUBLE)
-        |                             / (SELECT total FROM tot)) END
-        |           WHEN tr.ct IS NOT NULL
-        |             THEN -log2(CAST(tr.ct AS DOUBLE) / CAST(b2.cb AS DOUBLE))
-        |           WHEN b.cb IS NOT NULL
-        |             THEN -log2(0.4 * CAST(b.cb AS DOUBLE) / CAST(u1.cu AS DOUBLE))
-        |           ELSE -log2(0.16 * CAST(u.cu AS DOUBLE)
-        |                      / (SELECT total FROM tot))
-        |         END AS s
-        |  FROM wp w
-        |  JOIN uni u USING (tok)
-        |  LEFT JOIN uni u1 ON u1.tok = w.p1
-        |  LEFT JOIN big b ON b.p1 = w.p1 AND b.tok = w.tok
-        |  LEFT JOIN big b2 ON b2.p1 = w.p2 AND b2.tok = w.p1
-        |  LEFT JOIN tri tr ON tr.p2 = w.p2 AND tr.p1 = w.p1 AND tr.tok = w.tok
-        |), perdoc AS (
-        |  SELECT doc_id, count(*) AS n_tokens, avg(s) AS s FROM sc GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |       round(coalesce(p.s, 0.0), 6) AS avg_surprisal
-        |FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Frozen trigram replay: evens-only censuses, add-one unigram floor
-    // (denom T + V + 1), the chain's CASE ladder over the odds.
-    "q_quality_surprisal_trigram_incr" ->
-      """WITH tl AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), tk AS (
-        |  SELECT doc_id, i, t[CAST(i AS INT)] AS tok
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM tl)
-        |), wp AS (
-        |  SELECT doc_id, i, tok,
-        |         lag(tok, 1) OVER (PARTITION BY doc_id ORDER BY i) AS p1,
-        |         lag(tok, 2) OVER (PARTITION BY doc_id ORDER BY i) AS p2
-        |  FROM tk
-        |), uni AS (
-        |  SELECT tok, count(*) AS cu FROM tk WHERE doc_id % 2 = 0 GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(cu) AS DOUBLE) + CAST(count(*) AS DOUBLE) + 1.0 AS denom
-        |  FROM uni
-        |), big AS (
-        |  SELECT p1, tok, count(*) AS cb FROM wp
-        |  WHERE p1 IS NOT NULL AND doc_id % 2 = 0 GROUP BY p1, tok
-        |), tri AS (
-        |  SELECT p2, p1, tok, count(*) AS ct FROM wp
-        |  WHERE p2 IS NOT NULL AND doc_id % 2 = 0 GROUP BY p2, p1, tok
-        |), sc AS (
-        |  SELECT w.doc_id,
-        |         CASE
-        |           WHEN w.p1 IS NULL OR u1.cu IS NULL
-        |             THEN -log2(CAST(coalesce(u.cu, 0) + 1 AS DOUBLE)
-        |                        / (SELECT denom FROM tot))
-        |           WHEN w.p2 IS NULL THEN
-        |             CASE WHEN b.cb IS NOT NULL
-        |                    THEN -log2(CAST(b.cb AS DOUBLE) / CAST(u1.cu AS DOUBLE))
-        |                  ELSE -log2(0.4 * CAST(coalesce(u.cu, 0) + 1 AS DOUBLE)
-        |                             / (SELECT denom FROM tot)) END
-        |           WHEN tr.ct IS NOT NULL AND b2.cb IS NOT NULL
-        |             THEN -log2(CAST(tr.ct AS DOUBLE) / CAST(b2.cb AS DOUBLE))
-        |           WHEN b.cb IS NOT NULL
-        |             THEN -log2(0.4 * CAST(b.cb AS DOUBLE) / CAST(u1.cu AS DOUBLE))
-        |           ELSE -log2(0.16 * CAST(coalesce(u.cu, 0) + 1 AS DOUBLE)
-        |                      / (SELECT denom FROM tot))
-        |         END AS s
-        |  FROM wp w
-        |  LEFT JOIN uni u USING (tok)
-        |  LEFT JOIN uni u1 ON u1.tok = w.p1
-        |  LEFT JOIN big b ON b.p1 = w.p1 AND b.tok = w.tok
-        |  LEFT JOIN big b2 ON b2.p1 = w.p2 AND b2.tok = w.p1
-        |  LEFT JOIN tri tr ON tr.p2 = w.p2 AND tr.p1 = w.p1 AND tr.tok = w.tok
-        |  WHERE w.doc_id % 2 = 1
-        |), perdoc AS (
-        |  SELECT doc_id, count(*) AS n_tokens, avg(s) AS s FROM sc GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |       round(coalesce(p.s, 0.0), 6) AS avg_surprisal
-        |FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        |WHERE d.doc_id % 2 = 1
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Frozen twin: censuses over the evens only, add-one unigrams with
-    // denom T + V + 1, backoff ladder over the odds.
-    // Pruned frozen bigram LM: same replay as the _incr oracle with a
-    // HAVING count cutoff on the bigram census CTE.
-    "q_quality_surprisal_bigram_pruned" ->
-      """WITH tl AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), tk AS (
-        |  SELECT doc_id, i, t[CAST(i AS INT)] AS tok
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM tl)
-        |), wp AS (
-        |  SELECT doc_id, i, tok,
-        |         lag(tok) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-        |  FROM tk
-        |), uni AS (
-        |  SELECT tok, count(*) AS cu FROM tk WHERE doc_id % 2 = 0 GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(cu) AS DOUBLE) + CAST(count(*) AS DOUBLE) + 1.0 AS denom
-        |  FROM uni
-        |), big AS (
-        |  SELECT prev, tok, count(*) AS cb FROM wp
-        |  WHERE prev IS NOT NULL AND doc_id % 2 = 0 GROUP BY prev, tok
-        |  HAVING count(*) >= 15
-        |), sc AS (
-        |  SELECT w.doc_id,
-        |         CASE WHEN w.prev IS NULL OR up.cu IS NULL
-        |                THEN -log2(CAST(coalesce(u.cu, 0) + 1 AS DOUBLE)
-        |                           / (SELECT denom FROM tot))
-        |              WHEN b.cb IS NOT NULL
-        |                THEN -log2(CAST(b.cb AS DOUBLE) / CAST(up.cu AS DOUBLE))
-        |              ELSE -log2(0.4 * CAST(coalesce(u.cu, 0) + 1 AS DOUBLE)
-        |                         / (SELECT denom FROM tot))
-        |         END AS s
-        |  FROM wp w
-        |  LEFT JOIN uni u USING (tok)
-        |  LEFT JOIN uni up ON up.tok = w.prev
-        |  LEFT JOIN big b ON b.prev = w.prev AND b.tok = w.tok
-        |  WHERE w.doc_id % 2 = 1
-        |), perdoc AS (
-        |  SELECT doc_id, count(*) AS n_tokens, avg(s) AS s FROM sc GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |       round(coalesce(p.s, 0.0), 6) AS avg_surprisal
-        |FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        |WHERE d.doc_id % 2 = 1
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_quality_surprisal_bigram_incr" ->
-      """WITH tl AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), tk AS (
-        |  SELECT doc_id, i, t[CAST(i AS INT)] AS tok
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM tl)
-        |), wp AS (
-        |  SELECT doc_id, i, tok,
-        |         lag(tok) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-        |  FROM tk
-        |), uni AS (
-        |  SELECT tok, count(*) AS cu FROM tk WHERE doc_id % 2 = 0 GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(cu) AS DOUBLE) + CAST(count(*) AS DOUBLE) + 1.0 AS denom
-        |  FROM uni
-        |), big AS (
-        |  SELECT prev, tok, count(*) AS cb FROM wp
-        |  WHERE prev IS NOT NULL AND doc_id % 2 = 0 GROUP BY prev, tok
-        |), sc AS (
-        |  SELECT w.doc_id,
-        |         CASE WHEN w.prev IS NULL OR up.cu IS NULL
-        |                THEN -log2(CAST(coalesce(u.cu, 0) + 1 AS DOUBLE)
-        |                           / (SELECT denom FROM tot))
-        |              WHEN b.cb IS NOT NULL
-        |                THEN -log2(CAST(b.cb AS DOUBLE) / CAST(up.cu AS DOUBLE))
-        |              ELSE -log2(0.4 * CAST(coalesce(u.cu, 0) + 1 AS DOUBLE)
-        |                         / (SELECT denom FROM tot))
-        |         END AS s
-        |  FROM wp w
-        |  LEFT JOIN uni u USING (tok)
-        |  LEFT JOIN uni up ON up.tok = w.prev
-        |  LEFT JOIN big b ON b.prev = w.prev AND b.tok = w.tok
-        |  WHERE w.doc_id % 2 = 1
-        |), perdoc AS (
-        |  SELECT doc_id, count(*) AS n_tokens, avg(s) AS s FROM sc GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |       round(coalesce(p.s, 0.0), 6) AS avg_surprisal
-        |FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        |WHERE d.doc_id % 2 = 1
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_quality_surprisal_incr" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS tok
-        |  FROM documents
-        |), census AS (
-        |  SELECT tok, count(*) AS n FROM toks WHERE doc_id % 2 = 0 GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(n) AS DOUBLE) + CAST(count(*) AS DOUBLE) + 1.0 AS denom
-        |  FROM census
-        |), perdoc AS (
-        |  SELECT t.doc_id, count(*) AS n_tokens,
-        |         avg(-log2(CAST(coalesce(c.n, 0) + 1 AS DOUBLE)
-        |                   / (SELECT denom FROM tot))) AS s
-        |  FROM toks t LEFT JOIN census c USING (tok)
-        |  WHERE t.doc_id % 2 = 1
-        |  GROUP BY t.doc_id
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |       round(coalesce(p.s, 0.0), 6) AS avg_surprisal
-        |FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        |WHERE d.doc_id % 2 = 1
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Same deterministic augmentation, same RE2-compatible patterns,
-    // same replacement cascade order (EMAIL -> IP -> SSN -> PHONE).
-    "q_pii_redact" ->
-      """WITH aug AS (
-        |  SELECT doc_id,
-        |         text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-        |         '@example.com from 10.0.' || CAST(doc_id % 256 AS VARCHAR) ||
-        |         '.7 ssn 123-45-6789 tel +1 555 123 4567' AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
-        |  CAST(len(regexp_extract_all(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS INT) AS n_ips,
-        |  CAST(len(regexp_extract_all(t, '\b\d{3}-\d{2}-\d{4}\b')) AS INT) AS n_ssns,
-        |  CAST(len(regexp_extract_all(t, '(?:\+?\d{1,2}[ -])?\(?\d{3}\)?[ -]?\d{3}[ -]?\d{4}\b')) AS INT) AS n_phones,
-        |  md5(regexp_replace(regexp_replace(regexp_replace(regexp_replace(t,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
-        |      '\b\d{3}-\d{2}-\d{4}\b', '[SSN]', 'g'),
-        |      '(?:\+?\d{1,2}[ -])?\(?\d{3}\)?[ -]?\d{3}[ -]?\d{4}\b', '[PHONE]', 'g')) AS redacted_fp
-        |FROM aug ORDER BY doc_id""".stripMargin,
-
-    // Full pipeline replay: quality + langid + fingerprint projections,
-    // the two gates, keep-lowest-id dedup, chunk boundaries, and the
-    // per-source token-budget cumsum — one CTE per pipeline stage.
-    "q_corpus_prep" ->
-      """WITH sc AS (
-        |  SELECT doc_id, source, text,
-        |         length(text) AS n_chars,
-        |         regexp_extract_all(text, '\S+') AS toks,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-        |         len(list_filter(regexp_extract_all(lower(text), '\S+'), x -> x IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS en,
-        |         len(list_filter(regexp_extract_all(lower(text), '\S+'), x -> x IN
-        |           ('el','la','de','que','y','en','un','una','los','es'))) AS es,
-        |         len(list_filter(regexp_extract_all(lower(text), '\S+'), x -> x IN
-        |           ('der','die','das','und','ist','ein','eine','zu','den','nicht'))) AS de,
-        |         len(list_filter(regexp_extract_all(lower(text), '\S+'), x -> x IN
-        |           ('le','la','les','de','et','un','une','est','que','pour'))) AS fr
-        |  FROM documents
-        |), q AS (
-        |  SELECT doc_id, source, toks,
-        |    round((
-        |      (CASE WHEN len(toks) BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN len(toks) > 0 AND CAST(n_chars AS DOUBLE)/len(toks) BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN len(toks) > 0 THEN CAST(en AS DOUBLE)/len(toks) ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) AS quality,
-        |    CASE
-        |      WHEN regexp_matches(text, '[ぁ-ゟ゠-ヿ]') THEN 'ja'
-        |      WHEN regexp_matches(text, '[가-힣]') THEN 'ko'
-        |      WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-        |      WHEN regexp_matches(text, '[А-яЁё]') THEN 'ru'
-        |      WHEN regexp_matches(text, '[؀-ۿ]') THEN 'ar'
-        |      WHEN regexp_matches(text, '[ऀ-ॿ]') THEN 'hi'
-        |      WHEN greatest(en, es, de, fr) > 0 THEN
-        |        CASE WHEN en = greatest(en, es, de, fr) THEN 'en'
-        |             WHEN es = greatest(en, es, de, fr) THEN 'es'
-        |             WHEN de = greatest(en, es, de, fr) THEN 'de'
-        |             ELSE 'fr' END
-        |      ELSE 'und'
-        |    END AS lang_pred,
-        |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM sc
-        |), kept AS (
-        |  SELECT doc_id, source, toks,
-        |         row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-        |  FROM q WHERE quality >= 0.5 AND lang_pred = 'en'
-        |), k2 AS (
-        |  SELECT doc_id, source, len(toks) AS n_tok,
-        |         CASE WHEN len(toks) <= 0 THEN 0
-        |              WHEN len(toks) <= 64 THEN 1
-        |              ELSE ((len(toks) - 64 + 47) // 48) + 1 END AS n_chunks
-        |  FROM kept WHERE rn = 1
-        |), c AS (
-        |  SELECT doc_id, source, n_tok, unnest(range(n_chunks)) AS chunk_id FROM k2
-        |), ch AS (
-        |  SELECT doc_id, source, chunk_id,
-        |         doc_id * 1000 + chunk_id AS chunk_uid,
-        |         least(64, n_tok - chunk_id * 48) AS n_chunk_tokens
-        |  FROM c
-        |)
-        |SELECT CAST(chunk_uid AS BIGINT) AS chunk_uid, doc_id,
-        |       CAST(chunk_id AS INT) AS chunk_id, source,
-        |       CAST(n_chunk_tokens AS INT) AS n_chunk_tokens,
-        |       CAST(floor((sum(n_chunk_tokens) OVER (PARTITION BY source ORDER BY chunk_uid
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_chunk_tokens)
-        |             / 1024.0) AS INT) AS shard_idx
-        |FROM ch ORDER BY chunk_uid""".stripMargin,
-
-    // Window 64 / stride 48; integer ceil-division chunk count; DuckDB
-    // list slices are 1-based inclusive and clamp like Spark's slice().
-    "q_chunk_docs" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS toks FROM documents
-        |), n AS (
-        |  SELECT doc_id, toks, len(toks) AS n_tok,
-        |         CASE WHEN len(toks) <= 0 THEN 0
-        |              WHEN len(toks) <= 64 THEN 1
-        |              ELSE ((len(toks) - 64 + 47) // 48) + 1 END AS n_chunks
-        |  FROM t
-        |), c AS (
-        |  SELECT doc_id, toks, n_tok, unnest(range(n_chunks)) AS chunk_id FROM n
-        |)
-        |SELECT doc_id,
-        |       CAST(chunk_id AS INT) AS chunk_id,
-        |       CAST(least(64, n_tok - chunk_id * 48) AS INT) AS n_chunk_tokens,
-        |       array_to_string(toks[chunk_id * 48 + 1 : chunk_id * 48 + 64], ' ') AS chunk_text
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "q_explode_tokens" ->
-      """SELECT t AS token, CAST(count(*) AS BIGINT) AS n
-        |FROM (SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS t FROM documents)
-        |GROUP BY t ORDER BY n DESC, token LIMIT 20""".stripMargin,
-
-    "q_text_quality" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         length(text) AS n_chars,
-        |         len(regexp_extract_all(text, '\S+')) AS n_tok,
-        |         len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       round((
-        |         (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |         (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-        |               THEN 1.0 ELSE 0.0 END) +
-        |         (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |               THEN 1.0 ELSE 0.0 END) +
-        |         least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-        |       ) / 4.0, 4) AS quality
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Readability replay: identical regex counters (whole-text match
-    // counts = per-word sums since groups cannot span whitespace),
-    // INT casts to match the engine's int counters, then the two fixed
-    // formula chains.
-    "q_text_readability" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |         len(regexp_extract_all(text, '\S+')) AS w,
-        |         greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS snt,
-        |         len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |           + (len(regexp_extract_all(text, '\S+'))
-        |              - len(regexp_extract_all(lower(text), '\S*[aeiouy]\S*'))) AS syl
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       CAST(w AS INT) AS n_words,
-        |       CAST(snt AS INT) AS n_sentences,
-        |       CAST(syl AS INT) AS n_syllables,
-        |       CASE WHEN w > 0 THEN
-        |         round(206.835 - 1.015 * (CAST(w AS DOUBLE) / snt)
-        |               - 84.6 * (CAST(syl AS DOUBLE) / w), 4) + 0.0e0 END AS flesch,
-        |       CASE WHEN w > 0 THEN
-        |         round(0.39 * (CAST(w AS DOUBLE) / snt)
-        |               + 11.8 * (CAST(syl AS DOUBLE) / w) - 15.59, 4) + 0.0e0 END AS fk_grade
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Mann-Whitney AUC replay: (source, distinct score) counts, the
-    // rows-strictly-below cumulative, doubled-midrank BIGINT sum, one
-    // final division — identical integer arithmetic to the engine.
-    "q_roc_auc" -> (qualityScoredCte +
-      """, cnt AS (
-        |  SELECT source, score,
-        |         CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-        |         CAST(sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS BIGINT) AS neg
-        |  FROM sc GROUP BY 1, 2
-        |), cum AS (
-        |  SELECT *, CAST(sum(pos + neg) OVER (PARTITION BY source ORDER BY score
-        |              ROWS UNBOUNDED PRECEDING) - (pos + neg) AS BIGINT) AS below
-        |  FROM cnt
-        |), t AS (
-        |  SELECT source, CAST(sum(pos) AS BIGINT) AS n_pos,
-        |         CAST(sum(neg) AS BIGINT) AS n_neg,
-        |         CAST(sum(pos * (2 * (below + 1) + (pos + neg) - 1)) AS BIGINT) AS rank2
-        |  FROM cum GROUP BY 1
-        |)
-        |SELECT source, n_pos, n_neg,
-        |       CASE WHEN n_pos > 0 AND n_neg > 0
-        |            THEN round(CAST(rank2 - n_pos * (n_pos + 1) AS DOUBLE)
-        |                       / (2 * n_pos * n_neg), 6) END AS auc
-        |FROM t ORDER BY source""".stripMargin),
-
-    // ROC points replay: descending-threshold cumulative integer
-    // tp/fp over the same distinct-score counts, two ratio divisions.
-    "q_roc_curve" -> (qualityScoredCte +
-      """, cnt AS (
-        |  SELECT source, score,
-        |         CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-        |         CAST(sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS BIGINT) AS neg
-        |  FROM sc GROUP BY 1, 2
-        |), c AS (
-        |  SELECT source, score AS threshold,
-        |         CAST(sum(pos) OVER wd AS BIGINT) AS tp,
-        |         CAST(sum(neg) OVER wd AS BIGINT) AS fp,
-        |         CAST(sum(pos) OVER (PARTITION BY source) AS BIGINT) AS n_pos,
-        |         CAST(sum(neg) OVER (PARTITION BY source) AS BIGINT) AS n_neg
-        |  FROM cnt
-        |  WINDOW wd AS (PARTITION BY source ORDER BY score DESC
-        |                ROWS UNBOUNDED PRECEDING)
-        |)
-        |SELECT source, threshold, tp, fp,
-        |       CASE WHEN n_pos > 0 THEN round(CAST(tp AS DOUBLE) / n_pos, 6) END AS tpr,
-        |       CASE WHEN n_neg > 0 THEN round(CAST(fp AS DOUBLE) / n_neg, 6) END AS fpr
-        |FROM c ORDER BY source, threshold""".stripMargin),
-
-    // Calibration replay: fixed-width bins off the same double
-    // arithmetic (score * 10, floor, clamp), decimal-staged mean
-    // score, integer-ratio positive rate.
-    "q_calibration" -> (qualityScoredCte +
-      """, b AS (
-        |  SELECT source, y, score,
-        |         least(CAST(floor(score * 10) AS BIGINT), 9) AS bin
-        |  FROM sc WHERE score IS NOT NULL
-        |)
-        |SELECT source, bin,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-        |       round(CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE)
-        |             / count(score), 6) AS mean_score,
-        |       round(CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / count(*), 6) AS pos_rate
-        |FROM b GROUP BY 1, 2 ORDER BY source, bin""".stripMargin),
-
-    // Brier replay: the calibration bin scaffold, (score − y)² as an
-    // exact DECIMAL(7,6)² fold, per-bin 6dp-rounded diffs squared and
-    // weighted through decimals, one double division per output.
-    // Kappa replay (r16): both raters recomputed per doc — the 4-gate
-    // quality score (the q_text_quality grid) and the Gopher rule
-    // conjunction (the q_quality_gopher chain) — then confusion cells,
-    // integer marginal cross-products, and the fixed-order IEEE kappa
-    // assembly.
-    // Gwet AC1 replay (r17): the q_label_kappa panel through the
-    // confusion cells, then the summed-marginal integer fold and the
-    // fixed-order AC1 assembly (signed-zero canonicalized).
-    "q_label_ac1" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         regexp_extract_all(text, '\S+') AS t,
-        |         string_split(text, chr(10)) AS ln
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id,
-        |         CAST(len(t) AS BIGINT) AS n_words,
-        |         length(text) AS n_chars,
-        |         len(list_filter(t, x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS mean_word_len,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST((length(text) - length(replace(text, '#', '')))
-        |                + len(regexp_extract_all(text, '\.\.\.|…')) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS symbol_ratio,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '^\s*[-*•]'))) AS DOUBLE) / len(ln), 6) AS bullet_frac,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '(\.\.\.|…)\s*$'))) AS DOUBLE) / len(ln), 6) AS ellipsis_line_frac,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS alpha_frac,
-        |         CAST(list_contains(list_transform(t, x -> lower(x)), 'the') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'be') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'to') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'of') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'and') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'that') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'have') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'with') AS BIGINT)
-        |           AS stopword_hits
-        |  FROM s
-        |), r AS (
-        |  SELECT
-        |    (round((
-        |      (CASE WHEN n_words BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_words > 0 AND CAST(n_chars AS DOUBLE)/n_words BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN n_words > 0 THEN CAST(n_stop AS DOUBLE)/n_words ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) >= 0.5) AS a,
-        |    (n_words BETWEEN 50 AND 100000
-        |     AND mean_word_len BETWEEN 3.0 AND 10.0
-        |     AND symbol_ratio <= 0.1
-        |     AND bullet_frac <= 0.9
-        |     AND ellipsis_line_frac <= 0.3
-        |     AND alpha_frac >= 0.8
-        |     AND stopword_hits >= 2) AS b
-        |  FROM m
-        |), cells AS (
-        |  SELECT a, b, CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1, 2
-        |), tot AS (
-        |  SELECT CAST(sum(c) AS BIGINT) AS n,
-        |         CAST(coalesce(sum(CASE WHEN a = b THEN c END), 0) AS BIGINT) AS agree
-        |  FROM cells
-        |), ma AS (
-        |  SELECT a, CAST(sum(c) AS BIGINT) AS na FROM cells GROUP BY 1
-        |), mb AS (
-        |  SELECT b, CAST(sum(c) AS BIGINT) AS nb FROM cells GROUP BY 1
-        |), cat AS (
-        |  SELECT coalesce(ma.a, mb.b) AS k,
-        |         coalesce(na, 0) + coalesce(nb, 0) AS m
-        |  FROM ma FULL JOIN mb ON ma.a = mb.b
-        |), sk AS (
-        |  SELECT CAST(coalesce(sum(m * (2 * (SELECT n FROM tot) - m)), 0) AS BIGINT) AS s,
-        |         CAST(count(*) AS BIGINT) AS kk
-        |  FROM cat
-        |)
-        |SELECT n,
-        |  round(CAST(agree AS DOUBLE) / CAST(n AS DOUBLE), 6) AS po,
-        |  CASE WHEN kk > 1
-        |       THEN round(CAST(s AS DOUBLE)
-        |                  / (CAST(2 * n AS DOUBLE) * CAST(2 * n AS DOUBLE)
-        |                     * CAST(kk - 1 AS DOUBLE)), 6)
-        |  END AS pe_gamma,
-        |  CASE WHEN kk > 1
-        |       THEN round((CAST(agree AS DOUBLE) / CAST(n AS DOUBLE)
-        |                   - CAST(s AS DOUBLE)
-        |                     / (CAST(2 * n AS DOUBLE) * CAST(2 * n AS DOUBLE)
-        |                        * CAST(kk - 1 AS DOUBLE)))
-        |                  / (1.0 - CAST(s AS DOUBLE)
-        |                           / (CAST(2 * n AS DOUBLE) * CAST(2 * n AS DOUBLE)
-        |                              * CAST(kk - 1 AS DOUBLE))), 6)
-        |            + 0.0e0
-        |  END AS ac1
-        |FROM tot, sk
-        |WHERE n > 0""".stripMargin,
-
-    "q_label_kappa" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         regexp_extract_all(text, '\S+') AS t,
-        |         string_split(text, chr(10)) AS ln
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id,
-        |         CAST(len(t) AS BIGINT) AS n_words,
-        |         length(text) AS n_chars,
-        |         len(list_filter(t, x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS mean_word_len,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST((length(text) - length(replace(text, '#', '')))
-        |                + len(regexp_extract_all(text, '\.\.\.|…')) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS symbol_ratio,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '^\s*[-*•]'))) AS DOUBLE) / len(ln), 6) AS bullet_frac,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '(\.\.\.|…)\s*$'))) AS DOUBLE) / len(ln), 6) AS ellipsis_line_frac,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS alpha_frac,
-        |         CAST(list_contains(list_transform(t, x -> lower(x)), 'the') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'be') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'to') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'of') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'and') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'that') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'have') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'with') AS BIGINT)
-        |           AS stopword_hits
-        |  FROM s
-        |), r AS (
-        |  SELECT
-        |    (round((
-        |      (CASE WHEN n_words BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_words > 0 AND CAST(n_chars AS DOUBLE)/n_words BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN n_words > 0 THEN CAST(n_stop AS DOUBLE)/n_words ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) >= 0.5) AS a,
-        |    (n_words BETWEEN 50 AND 100000
-        |     AND mean_word_len BETWEEN 3.0 AND 10.0
-        |     AND symbol_ratio <= 0.1
-        |     AND bullet_frac <= 0.9
-        |     AND ellipsis_line_frac <= 0.3
-        |     AND alpha_frac >= 0.8
-        |     AND stopword_hits >= 2) AS b
-        |  FROM m
-        |), cells AS (
-        |  SELECT a, b, CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1, 2
-        |), tot AS (
-        |  SELECT CAST(sum(c) AS BIGINT) AS n,
-        |         CAST(coalesce(sum(CASE WHEN a = b THEN c END), 0) AS BIGINT) AS agree
-        |  FROM cells
-        |), ma AS (
-        |  SELECT a, CAST(sum(c) AS BIGINT) AS na FROM cells GROUP BY 1
-        |), mb AS (
-        |  SELECT b, CAST(sum(c) AS BIGINT) AS nb FROM cells GROUP BY 1
-        |), pp AS (
-        |  SELECT CAST(coalesce(sum(ma.na * mb.nb), 0) AS BIGINT) AS spe
-        |  FROM ma JOIN mb ON ma.a = mb.b
-        |)
-        |SELECT n,
-        |  round(CAST(agree AS DOUBLE) / CAST(n AS DOUBLE), 6) AS po,
-        |  round(CAST(spe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS pe,
-        |  CASE WHEN CAST(spe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) < 1.0
-        |       THEN round((CAST(agree AS DOUBLE) / CAST(n AS DOUBLE)
-        |                   - CAST(spe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-        |                  / (1.0 - CAST(spe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6)
-        |  END AS kappa
-        |FROM tot, pp
-        |WHERE n > 0""".stripMargin,
-
-    // Weighted-kappa replay (r16): the quality grid quartiled, the
-    // Flesch band, integer confusion cells, exact Σf·d and Σr·c·d
-    // numerators, two divisions and the assembly.
-    "q_label_kappa_weighted" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         len(regexp_extract_all(text, '\S+')) AS w,
-        |         greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS snt,
-        |         len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |           + (len(regexp_extract_all(text, '\S+'))
-        |              - len(regexp_extract_all(lower(text), '\S*[aeiouy]\S*'))) AS syl,
-        |         len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-        |         length(text) AS n_chars
-        |  FROM documents
-        |  WHERE len(regexp_extract_all(text, '\S+')) > 0
-        |), g AS (
-        |  SELECT
-        |    least(CAST(floor(round((
-        |      (CASE WHEN w BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN w > 0 AND CAST(n_chars AS DOUBLE)/w BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN w > 0 THEN CAST(n_stop AS DOUBLE)/w ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) * 4) AS BIGINT), 3) AS i,
-        |    (CASE WHEN round(206.835 - 1.015 * (CAST(w AS DOUBLE) / snt)
-        |                 - 84.6 * (CAST(syl AS DOUBLE) / w), 4) >= 80 THEN 3
-        |          WHEN round(206.835 - 1.015 * (CAST(w AS DOUBLE) / snt)
-        |                 - 84.6 * (CAST(syl AS DOUBLE) / w), 4) >= 60 THEN 2
-        |          WHEN round(206.835 - 1.015 * (CAST(w AS DOUBLE) / snt)
-        |                 - 84.6 * (CAST(syl AS DOUBLE) / w), 4) >= 30 THEN 1
-        |          ELSE 0 END) AS j
-        |  FROM s
-        |), cells AS (
-        |  SELECT i, j, CAST(count(*) AS BIGINT) AS c FROM g GROUP BY 1, 2
-        |), obs AS (
-        |  SELECT CAST(sum(c) AS BIGINT) AS n,
-        |         CAST(coalesce(sum(c * (i - j) * (i - j)), 0) AS BIGINT) AS od
-        |  FROM cells
-        |), ra AS (
-        |  SELECT i, CAST(sum(c) AS BIGINT) AS ri FROM cells GROUP BY 1
-        |), cb AS (
-        |  SELECT j, CAST(sum(c) AS BIGINT) AS cj FROM cells GROUP BY 1
-        |), ex AS (
-        |  SELECT CAST(coalesce(sum(ra.ri * cb.cj * (ra.i - cb.j) * (ra.i - cb.j)), 0)
-        |         AS BIGINT) AS ed
-        |  FROM ra, cb
-        |)
-        |SELECT n,
-        |  round(CAST(od AS DOUBLE) / CAST(n AS DOUBLE), 6) AS d_o,
-        |  round(CAST(ed AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS d_e,
-        |  CASE WHEN ed > 0
-        |       THEN round(1.0 - (CAST(od AS DOUBLE) / CAST(n AS DOUBLE))
-        |                  / (CAST(ed AS DOUBLE)
-        |                     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6)
-        |  END AS kappa_w
-        |FROM obs, ex
-        |WHERE n > 0""".stripMargin,
-
-    // Alpha replay (r16): the Fleiss rater chains with r3 nullable
-    // (abstains on 'und'), unpairable units dropped, the 6dp-grid
-    // per-unit disagreement folded as exact decimals, integer D_e.
-    "q_label_alpha" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         regexp_extract_all(text, '\S+') AS t,
-        |         string_split(text, chr(10)) AS ln,
-        |         regexp_extract_all(lower(text), '\S+') AS lt
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id, text,
-        |         CAST(len(t) AS BIGINT) AS n_words,
-        |         length(text) AS n_chars,
-        |         len(list_filter(t, x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS mean_word_len,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST((length(text) - length(replace(text, '#', '')))
-        |                + len(regexp_extract_all(text, '\.\.\.|…')) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS symbol_ratio,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '^\s*[-*•]'))) AS DOUBLE) / len(ln), 6) AS bullet_frac,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '(\.\.\.|…)\s*$'))) AS DOUBLE) / len(ln), 6) AS ellipsis_line_frac,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS alpha_frac,
-        |         CAST(list_contains(list_transform(t, x -> lower(x)), 'the') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'be') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'to') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'of') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'and') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'that') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'have') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'with') AS BIGINT)
-        |           AS stopword_hits,
-        |         len(list_filter(lt, x -> x IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS en,
-        |         len(list_filter(lt, x -> x IN
-        |           ('el','la','de','que','y','en','un','una','los','es'))) AS es,
-        |         len(list_filter(lt, x -> x IN
-        |           ('der','die','das','und','ist','ein','eine','zu','den','nicht'))) AS de,
-        |         len(list_filter(lt, x -> x IN
-        |           ('le','la','les','de','et','un','une','est','que','pour'))) AS fr
-        |  FROM s
-        |), r AS (
-        |  SELECT doc_id,
-        |    (round((
-        |      (CASE WHEN n_words BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_words > 0 AND CAST(n_chars AS DOUBLE)/n_words BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN n_words > 0 THEN CAST(n_stop AS DOUBLE)/n_words ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) >= 0.5) AS r1,
-        |    (n_words BETWEEN 50 AND 100000
-        |     AND mean_word_len BETWEEN 3.0 AND 10.0
-        |     AND symbol_ratio <= 0.1
-        |     AND bullet_frac <= 0.9
-        |     AND ellipsis_line_frac <= 0.3
-        |     AND alpha_frac >= 0.8
-        |     AND stopword_hits >= 2) AS r2,
-        |    (CASE
-        |       WHEN regexp_matches(text, '[ぁ-ゟ゠-ヿ]') THEN 'ja'
-        |       WHEN regexp_matches(text, '[가-힣]') THEN 'ko'
-        |       WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-        |       WHEN regexp_matches(text, '[А-яЁё]') THEN 'ru'
-        |       WHEN regexp_matches(text, '[؀-ۿ]') THEN 'ar'
-        |       WHEN regexp_matches(text, '[ऀ-ॿ]') THEN 'hi'
-        |       WHEN greatest(en, es, de, fr) > 0 THEN
-        |         CASE WHEN en = greatest(en, es, de, fr) THEN 'en'
-        |              WHEN es = greatest(en, es, de, fr) THEN 'es'
-        |              WHEN de = greatest(en, es, de, fr) THEN 'de'
-        |              ELSE 'fr' END
-        |       ELSE 'und'
-        |     END) AS pl
-        |  FROM m
-        |), longf AS (
-        |  SELECT doc_id AS u, CAST(r1 AS VARCHAR) AS k FROM r
-        |  UNION ALL SELECT doc_id, CAST(r2 AS VARCHAR) FROM r
-        |  UNION ALL SELECT doc_id, CAST(pl = 'en' AS VARCHAR) FROM r
-        |    WHERE pl <> 'und'
-        |), nik AS (
-        |  SELECT u, k, CAST(count(*) AS BIGINT) AS c FROM longf GROUP BY 1, 2
-        |), mper AS (
-        |  SELECT u, CAST(sum(c) AS BIGINT) AS m FROM nik GROUP BY 1
-        |), cells AS (
-        |  SELECT nik.u, nik.k, nik.c, mper.m
-        |  FROM nik JOIN mper ON mper.u = nik.u WHERE mper.m >= 2
-        |), dot AS (
-        |  SELECT CAST(coalesce(sum(CAST(round(CAST(du AS DOUBLE)
-        |           / CAST(m - 1 AS DOUBLE), 6) AS DECIMAL(28,6))), 0)
-        |         AS DECIMAL(28,6)) AS sdo
-        |  FROM (SELECT u, m, CAST(sum(c * (m - c)) AS BIGINT) AS du
-        |        FROM cells GROUP BY 1, 2)
-        |), ckt AS (
-        |  SELECT k, CAST(sum(c) AS BIGINT) AS ck FROM cells GROUP BY 1
-        |), nn AS (
-        |  SELECT CAST(sum(c) AS BIGINT) AS n FROM cells
-        |), de AS (
-        |  SELECT CAST(coalesce(sum(ckt.ck * (nn.n - ckt.ck)), 0) AS BIGINT) AS sde
-        |  FROM ckt, nn
-        |), nu AS (
-        |  SELECT CAST(count(DISTINCT u) AS BIGINT) AS n_units FROM cells
-        |), ncat AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_categories FROM ckt
-        |)
-        |SELECT nu.n_units, nn.n AS n_assignments, ncat.n_categories,
-        |  round(CAST(sdo AS DOUBLE) / CAST(n AS DOUBLE), 6) AS d_o,
-        |  round(CAST(sde AS DOUBLE)
-        |        / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)), 6) AS d_e,
-        |  CASE WHEN sde > 0
-        |       THEN round(1.0 - (CAST(sdo AS DOUBLE) / CAST(n AS DOUBLE))
-        |                  / (CAST(sde AS DOUBLE)
-        |                     / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))), 6)
-        |  END AS alpha
-        |FROM nu, nn, ncat, dot, de
-        |WHERE n > 0""".stripMargin,
-
-    // Fleiss replay (r16): the three keep/drop raters per doc (quality
-    // grid, Gopher chain, langid decision = 'en'), melted long, then
-    // the exact-integer P̄ / P̄e numerators and the fixed-order kappa
-    // assembly.
-    // Surprisal-quartile vs quality-quartile weighted kappa (r17): the
-    // unigram-surprisal chain, order-statistic cutpoints at the
-    // quantilesDisc ranks floor(q(n-1))+1, boolean-sum grading, and
-    // the Cohen-1968 quadratic assembly.
-    "q_label_kappa_surprisal" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS tok
-        |  FROM documents
-        |), census AS (
-        |  SELECT tok, count(*) AS tf FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(tf) AS DOUBLE) AS total FROM census
-        |), sur AS (
-        |  SELECT t.doc_id, round(avg(-log2(CAST(c.tf AS DOUBLE)
-        |           / (SELECT total FROM tot))), 6) AS s
-        |  FROM toks t JOIN census c USING (tok) GROUP BY t.doc_id
-        |), nn AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n FROM sur
-        |), rk AS (
-        |  SELECT s, row_number() OVER (ORDER BY s) AS rn FROM sur
-        |), cuts AS (
-        |  SELECT
-        |    max(CASE WHEN rn = CAST(floor(0.25 * CAST((SELECT n FROM nn) - 1
-        |          AS DOUBLE)) AS BIGINT) + 1 THEN s END) AS c1,
-        |    max(CASE WHEN rn = CAST(floor(0.5 * CAST((SELECT n FROM nn) - 1
-        |          AS DOUBLE)) AS BIGINT) + 1 THEN s END) AS c2,
-        |    max(CASE WHEN rn = CAST(floor(0.75 * CAST((SELECT n FROM nn) - 1
-        |          AS DOUBLE)) AS BIGINT) + 1 THEN s END) AS c3
-        |  FROM rk
-        |), qd AS (
-        |  SELECT doc_id,
-        |         len(regexp_extract_all(text, '\S+')) AS w,
-        |         len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-        |         length(text) AS n_chars
-        |  FROM documents
-        |  WHERE len(regexp_extract_all(text, '\S+')) > 0
-        |), qg AS (
-        |  SELECT doc_id,
-        |    least(CAST(floor(round((
-        |      (CASE WHEN w BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN w > 0 AND CAST(n_chars AS DOUBLE)/w BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN w > 0 THEN CAST(n_stop AS DOUBLE)/w ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) * 4) AS BIGINT), 3) AS j
-        |  FROM qd
-        |), g AS (
-        |  SELECT CAST(sur.s > cuts.c1 AS BIGINT)
-        |         + CAST(sur.s > cuts.c2 AS BIGINT)
-        |         + CAST(sur.s > cuts.c3 AS BIGINT) AS i,
-        |         qg.j
-        |  FROM sur JOIN qg USING (doc_id), cuts
-        |), cells AS (
-        |  SELECT i, j, CAST(count(*) AS BIGINT) AS c FROM g GROUP BY 1, 2
-        |), obs AS (
-        |  SELECT CAST(sum(c) AS BIGINT) AS n,
-        |         CAST(coalesce(sum(c * (i - j) * (i - j)), 0) AS BIGINT) AS od
-        |  FROM cells
-        |), ra AS (
-        |  SELECT i, CAST(sum(c) AS BIGINT) AS ri FROM cells GROUP BY 1
-        |), cb AS (
-        |  SELECT j, CAST(sum(c) AS BIGINT) AS cj FROM cells GROUP BY 1
-        |), ex AS (
-        |  SELECT CAST(coalesce(sum(ra.ri * cb.cj * (ra.i - cb.j) * (ra.i - cb.j)), 0)
-        |         AS BIGINT) AS ed
-        |  FROM ra, cb
-        |)
-        |SELECT n,
-        |  round(CAST(od AS DOUBLE) / CAST(n AS DOUBLE), 6) AS d_o,
-        |  round(CAST(ed AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS d_e,
-        |  CASE WHEN ed > 0
-        |       THEN round(1.0 - (CAST(od AS DOUBLE) / CAST(n AS DOUBLE))
-        |                  / (CAST(ed AS DOUBLE)
-        |                     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6)
-        |            + 0.0e0
-        |  END AS kappa_w
-        |FROM obs, ex
-        |WHERE n > 0""".stripMargin,
-
-    // Interval-alpha replay (r17): surprisal chain + rank cutpoints,
-    // the quality/Flesch ordinal graders, lang-gated abstention, then
-    // the moment-identity folds (2*m*S2 - 2*S1^2) and the two-division
-    // assembly (signed-zero canonicalized).
-    "q_label_alpha_interval" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS tok
-        |  FROM documents
-        |), census AS (
-        |  SELECT tok, count(*) AS tf FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(tf) AS DOUBLE) AS total FROM census
-        |), sur AS (
-        |  SELECT t.doc_id, round(avg(-log2(CAST(c.tf AS DOUBLE)
-        |           / (SELECT total FROM tot))), 6) AS s
-        |  FROM toks t JOIN census c USING (tok) GROUP BY t.doc_id
-        |), nn AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n FROM sur
-        |), rk AS (
-        |  SELECT s, row_number() OVER (ORDER BY s) AS rn FROM sur
-        |), cuts AS (
-        |  SELECT
-        |    max(CASE WHEN rn = CAST(floor(0.25 * CAST((SELECT n FROM nn) - 1
-        |          AS DOUBLE)) AS BIGINT) + 1 THEN s END) AS c1,
-        |    max(CASE WHEN rn = CAST(floor(0.5 * CAST((SELECT n FROM nn) - 1
-        |          AS DOUBLE)) AS BIGINT) + 1 THEN s END) AS c2,
-        |    max(CASE WHEN rn = CAST(floor(0.75 * CAST((SELECT n FROM nn) - 1
-        |          AS DOUBLE)) AS BIGINT) + 1 THEN s END) AS c3
-        |  FROM rk
-        |), qd AS (
-        |  SELECT doc_id,
-        |         len(regexp_extract_all(text, '\S+')) AS w,
-        |         greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS snt,
-        |         len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |           + (len(regexp_extract_all(text, '\S+'))
-        |              - len(regexp_extract_all(lower(text), '\S*[aeiouy]\S*'))) AS syl,
-        |         len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-        |         length(text) AS n_chars
-        |  FROM documents
-        |  WHERE len(regexp_extract_all(text, '\S+')) > 0
-        |), g12 AS (
-        |  SELECT doc_id,
-        |    least(CAST(floor(round((
-        |      (CASE WHEN w BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN w > 0 AND CAST(n_chars AS DOUBLE)/w BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN w > 0 THEN CAST(n_stop AS DOUBLE)/w ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) * 4) AS BIGINT), 3) AS g1,
-        |    (CASE WHEN round(206.835 - 1.015 * (CAST(w AS DOUBLE) / snt)
-        |                 - 84.6 * (CAST(syl AS DOUBLE) / w), 4) >= 80 THEN 3
-        |          WHEN round(206.835 - 1.015 * (CAST(w AS DOUBLE) / snt)
-        |                 - 84.6 * (CAST(syl AS DOUBLE) / w), 4) >= 60 THEN 2
-        |          WHEN round(206.835 - 1.015 * (CAST(w AS DOUBLE) / snt)
-        |                 - 84.6 * (CAST(syl AS DOUBLE) / w), 4) >= 30 THEN 1
-        |          ELSE 0 END) AS g2
-        |  FROM qd
-        |), votes AS (
-        |  SELECT doc_id AS u, CAST(g1 AS BIGINT) AS x FROM g12
-        |  UNION ALL SELECT doc_id, CAST(g2 AS BIGINT) FROM g12
-        |  UNION ALL
-        |  SELECT s.doc_id,
-        |         CAST(s.s > cuts.c1 AS BIGINT) + CAST(s.s > cuts.c2 AS BIGINT)
-        |           + CAST(s.s > cuts.c3 AS BIGINT)
-        |  FROM sur s JOIN documents d USING (doc_id), cuts
-        |  WHERE d.lang = 'en'
-        |), per AS (
-        |  SELECT u, CAST(count(*) AS BIGINT) AS m,
-        |         CAST(sum(x) AS BIGINT) AS s1,
-        |         CAST(sum(x * x) AS BIGINT) AS s2
-        |  FROM votes GROUP BY 1
-        |), pairable AS (
-        |  SELECT * FROM per WHERE m >= 2
-        |), dt AS (
-        |  SELECT coalesce(sum(CAST(round(
-        |           CAST(2 * m * s2 - 2 * s1 * s1 AS DOUBLE)
-        |           / CAST(m - 1 AS DOUBLE), 6) AS DECIMAL(28,6))),
-        |         CAST(0 AS DECIMAL(28,6))) AS sdo
-        |  FROM pairable
-        |), tt AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_units,
-        |         CAST(coalesce(sum(m), 0) AS BIGINT) AS n,
-        |         CAST(coalesce(sum(s1), 0) AS BIGINT) AS ts1,
-        |         CAST(coalesce(sum(s2), 0) AS BIGINT) AS ts2
-        |  FROM pairable
-        |)
-        |SELECT n_units, n AS n_assignments,
-        |  round(CAST(sdo AS DOUBLE) / CAST(n AS DOUBLE), 6) AS d_o,
-        |  round(CAST(2 * n * ts2 - 2 * ts1 * ts1 AS DOUBLE)
-        |        / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)), 6) AS d_e,
-        |  CASE WHEN 2 * n * ts2 - 2 * ts1 * ts1 > 0
-        |       THEN round(1.0 - (CAST(sdo AS DOUBLE) / CAST(n AS DOUBLE))
-        |                  / (CAST(2 * n * ts2 - 2 * ts1 * ts1 AS DOUBLE)
-        |                     / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))), 6)
-        |            + 0.0e0
-        |  END AS alpha
-        |FROM tt, dt
-        |WHERE n > 0""".stripMargin,
-
-    "q_label_kappa_fleiss" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |         regexp_extract_all(text, '\S+') AS t,
-        |         string_split(text, chr(10)) AS ln,
-        |         regexp_extract_all(lower(text), '\S+') AS lt
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id, text,
-        |         CAST(len(t) AS BIGINT) AS n_words,
-        |         length(text) AS n_chars,
-        |         len(list_filter(t, x -> lower(x) IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |         len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS mean_word_len,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST((length(text) - length(replace(text, '#', '')))
-        |                + len(regexp_extract_all(text, '\.\.\.|…')) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS symbol_ratio,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '^\s*[-*•]'))) AS DOUBLE) / len(ln), 6) AS bullet_frac,
-        |         round(CAST(len(list_filter(ln, x -> regexp_matches(x, '(\.\.\.|…)\s*$'))) AS DOUBLE) / len(ln), 6) AS ellipsis_line_frac,
-        |         round(CASE WHEN len(t) > 0
-        |           THEN CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(t)
-        |           ELSE 0.0 END, 6) AS alpha_frac,
-        |         CAST(list_contains(list_transform(t, x -> lower(x)), 'the') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'be') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'to') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'of') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'and') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'that') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'have') AS BIGINT)
-        |           + CAST(list_contains(list_transform(t, x -> lower(x)), 'with') AS BIGINT)
-        |           AS stopword_hits,
-        |         len(list_filter(lt, x -> x IN
-        |           ('the','a','of','and','to','in','is','it','that','for'))) AS en,
-        |         len(list_filter(lt, x -> x IN
-        |           ('el','la','de','que','y','en','un','una','los','es'))) AS es,
-        |         len(list_filter(lt, x -> x IN
-        |           ('der','die','das','und','ist','ein','eine','zu','den','nicht'))) AS de,
-        |         len(list_filter(lt, x -> x IN
-        |           ('le','la','les','de','et','un','une','est','que','pour'))) AS fr
-        |  FROM s
-        |), r AS (
-        |  SELECT doc_id,
-        |    (round((
-        |      (CASE WHEN n_words BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_words > 0 AND CAST(n_chars AS DOUBLE)/n_words BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN n_words > 0 THEN CAST(n_stop AS DOUBLE)/n_words ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) >= 0.5) AS r1,
-        |    (n_words BETWEEN 50 AND 100000
-        |     AND mean_word_len BETWEEN 3.0 AND 10.0
-        |     AND symbol_ratio <= 0.1
-        |     AND bullet_frac <= 0.9
-        |     AND ellipsis_line_frac <= 0.3
-        |     AND alpha_frac >= 0.8
-        |     AND stopword_hits >= 2) AS r2,
-        |    (CASE
-        |       WHEN regexp_matches(text, '[ぁ-ゟ゠-ヿ]') THEN 'ja'
-        |       WHEN regexp_matches(text, '[가-힣]') THEN 'ko'
-        |       WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-        |       WHEN regexp_matches(text, '[А-яЁё]') THEN 'ru'
-        |       WHEN regexp_matches(text, '[؀-ۿ]') THEN 'ar'
-        |       WHEN regexp_matches(text, '[ऀ-ॿ]') THEN 'hi'
-        |       WHEN greatest(en, es, de, fr) > 0 THEN
-        |         CASE WHEN en = greatest(en, es, de, fr) THEN 'en'
-        |              WHEN es = greatest(en, es, de, fr) THEN 'es'
-        |              WHEN de = greatest(en, es, de, fr) THEN 'de'
-        |              ELSE 'fr' END
-        |       ELSE 'und'
-        |     END = 'en') AS r3
-        |  FROM m
-        |), longf AS (
-        |  SELECT doc_id AS u, CAST(r1 AS VARCHAR) AS k FROM r
-        |  UNION ALL SELECT doc_id, CAST(r2 AS VARCHAR) FROM r
-        |  UNION ALL SELECT doc_id, CAST(r3 AS VARCHAR) FROM r
-        |), nik AS (
-        |  SELECT u, k, CAST(count(*) AS BIGINT) AS c FROM longf GROUP BY 1, 2
-        |), per AS (
-        |  SELECT u, CAST(sum(c) AS BIGINT) AS m,
-        |         CAST(sum(c * c) AS BIGINT) AS ss
-        |  FROM nik GROUP BY 1
-        |), tt AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_units,
-        |         CAST(max(m) AS BIGINT) AS m_raters,
-        |         CAST(sum(ss - m) AS BIGINT) AS num
-        |  FROM per
-        |), ckt AS (
-        |  SELECT CAST(coalesce(sum(ck * ck), 0) AS BIGINT) AS sck2
-        |  FROM (SELECT k, CAST(sum(c) AS BIGINT) AS ck FROM nik GROUP BY 1)
-        |)
-        |SELECT n_units, m_raters,
-        |  round(CAST(num AS DOUBLE)
-        |        / (CAST(n_units AS DOUBLE) * CAST(m_raters AS DOUBLE)
-        |           * CAST(m_raters - 1 AS DOUBLE)), 6) AS p_bar,
-        |  round(CAST(sck2 AS DOUBLE)
-        |        / (CAST(n_units * m_raters AS DOUBLE)
-        |           * CAST(n_units * m_raters AS DOUBLE)), 6) AS p_e,
-        |  CASE WHEN CAST(sck2 AS DOUBLE)
-        |            / (CAST(n_units * m_raters AS DOUBLE)
-        |               * CAST(n_units * m_raters AS DOUBLE)) < 1.0
-        |       THEN round(
-        |         (CAST(num AS DOUBLE)
-        |          / (CAST(n_units AS DOUBLE) * CAST(m_raters AS DOUBLE)
-        |             * CAST(m_raters - 1 AS DOUBLE))
-        |          - CAST(sck2 AS DOUBLE)
-        |            / (CAST(n_units * m_raters AS DOUBLE)
-        |               * CAST(n_units * m_raters AS DOUBLE)))
-        |         / (1.0 - CAST(sck2 AS DOUBLE)
-        |                  / (CAST(n_units * m_raters AS DOUBLE)
-        |                     * CAST(n_units * m_raters AS DOUBLE))), 6)
-        |  END AS kappa
-        |FROM tt, ckt
-        |WHERE n_units > 0""".stripMargin,
-
-    "q_brier" -> (qualityScoredCte +
-      """, b AS (
-        |  SELECT source, y, score,
-        |         least(CAST(floor(score * 10) AS BIGINT), 9) AS bin
-        |  FROM sc WHERE score IS NOT NULL
-        |), pb AS (
-        |  SELECT source, bin,
-        |         CAST(count(*) AS BIGINT) AS n_k,
-        |         CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS pos_k,
-        |         sum(CAST(score AS DECIMAL(18,6))) AS ssum_k,
-        |         sum((CAST(score AS DECIMAL(7,6))
-        |                - CAST(CASE WHEN y THEN 1 ELSE 0 END AS DECIMAL(7,6)))
-        |             * (CAST(score AS DECIMAL(7,6))
-        |                - CAST(CASE WHEN y THEN 1 ELSE 0 END AS DECIMAL(7,6)))) AS sq_k
-        |  FROM b GROUP BY 1, 2
-        |), tot AS (
-        |  SELECT source,
-        |         CAST(sum(n_k) AS BIGINT) AS n,
-        |         CAST(sum(pos_k) AS BIGINT) AS n_pos,
-        |         CAST(sum(sq_k) AS DOUBLE) AS sq,
-        |         round(CAST(sum(pos_k) AS DOUBLE) / sum(n_k), 6) AS base
-        |  FROM pb GROUP BY 1
-        |), bk AS (
-        |  SELECT pb.source, pb.n_k,
-        |         round(CAST(pb.ssum_k AS DOUBLE) / pb.n_k, 6) AS ms_k,
-        |         round(CAST(pb.pos_k AS DOUBLE) / pb.n_k, 6) AS rate_k,
-        |         t.base
-        |  FROM pb JOIN tot t USING (source)
-        |), terms AS (
-        |  SELECT source,
-        |         sum(CAST(round(ms_k - rate_k, 6) AS DECIMAL(7,6))
-        |             * CAST(round(ms_k - rate_k, 6) AS DECIMAL(7,6))
-        |             * CAST(n_k AS DECIMAL(20,0))) AS rel_sum,
-        |         sum(CAST(round(rate_k - base, 6) AS DECIMAL(7,6))
-        |             * CAST(round(rate_k - base, 6) AS DECIMAL(7,6))
-        |             * CAST(n_k AS DECIMAL(20,0))) AS res_sum
-        |  FROM bk GROUP BY 1
-        |)
-        |SELECT t.source, t.n, t.n_pos,
-        |       round(t.sq / t.n, 6) AS brier,
-        |       round(CAST(te.rel_sum AS DOUBLE) / t.n, 6) AS reliability,
-        |       round(CAST(te.res_sum AS DOUBLE) / t.n, 6) AS resolution,
-        |       round(t.base * (1.0 - t.base), 6) AS uncertainty
-        |FROM tot t JOIN terms te USING (source)
-        |ORDER BY t.source""".stripMargin),
-
-    // PR points replay: same cnt/window scaffold as q_roc_curve, with
-    // precision = tp/(tp+fp) and recall = tp/n_pos.
-    "q_pr_curve" -> (qualityScoredCte +
-      """, cnt AS (
-        |  SELECT source, score,
-        |         CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-        |         CAST(sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS BIGINT) AS neg
-        |  FROM sc GROUP BY 1, 2
-        |), c AS (
-        |  SELECT source, score AS threshold,
-        |         CAST(sum(pos) OVER wd AS BIGINT) AS tp,
-        |         CAST(sum(neg) OVER wd AS BIGINT) AS fp,
-        |         CAST(sum(pos) OVER (PARTITION BY source) AS BIGINT) AS n_pos
-        |  FROM cnt
-        |  WINDOW wd AS (PARTITION BY source ORDER BY score DESC
-        |                ROWS UNBOUNDED PRECEDING)
-        |)
-        |SELECT source, threshold, tp, fp,
-        |       round(CAST(tp AS DOUBLE) / (tp + fp), 6) AS precision,
-        |       CASE WHEN n_pos > 0 THEN round(CAST(tp AS DOUBLE) / n_pos, 6) END AS recall
-        |FROM c ORDER BY source, threshold""".stripMargin),
-
-    // AP replay: per-threshold term (pos * CAST(tp AS DOUBLE)) /
-    // (tp + fp) rounded onto the 12dp grid, exact decimal fold, one
-    // division by n_pos — the identical staging to the engine.
-    "q_avg_precision" -> (qualityScoredCte +
-      """, cnt AS (
-        |  SELECT source, score,
-        |         CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-        |         CAST(sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS BIGINT) AS neg
-        |  FROM sc GROUP BY 1, 2
-        |), c AS (
-        |  SELECT source, pos,
-        |         CAST(sum(pos) OVER wd AS BIGINT) AS tp,
-        |         CAST(sum(neg) OVER wd AS BIGINT) AS fp
-        |  FROM cnt
-        |  WINDOW wd AS (PARTITION BY source ORDER BY score DESC
-        |                ROWS UNBOUNDED PRECEDING)
-        |), agg AS (
-        |  SELECT source, CAST(sum(pos) AS BIGINT) AS n_pos,
-        |         sum(CAST(round((pos * CAST(tp AS DOUBLE)) / (tp + fp), 12)
-        |                   AS DECIMAL(28,12))) AS ap_sum
-        |  FROM c GROUP BY 1
-        |)
-        |SELECT source, n_pos,
-        |       CASE WHEN n_pos > 0
-        |            THEN round(CAST(ap_sum AS DOUBLE) / n_pos, 6)
-        |       END AS avg_precision
-        |FROM agg ORDER BY source""".stripMargin),
-
-    // Best-F1 replay: per-threshold F1 as one integer-ratio division
-    // rounded 6dp, argmax by (f1 desc, threshold desc) via row_number.
-    "q_best_f1" -> (qualityScoredCte +
-      """, cnt AS (
-        |  SELECT source, score,
-        |         CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-        |         CAST(sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS BIGINT) AS neg
-        |  FROM sc GROUP BY 1, 2
-        |), c AS (
-        |  SELECT source, score,
-        |         CAST(sum(pos) OVER wd AS BIGINT) AS tp,
-        |         CAST(sum(neg) OVER wd AS BIGINT) AS fp,
-        |         CAST(sum(pos) OVER (PARTITION BY source) AS BIGINT) AS n_pos
-        |  FROM cnt
-        |  WINDOW wd AS (PARTITION BY source ORDER BY score DESC
-        |                ROWS UNBOUNDED PRECEDING)
-        |), f AS (
-        |  SELECT source, score, tp, fp,
-        |         round(2 * CAST(tp AS DOUBLE)
-        |               / (2 * tp + fp + (n_pos - tp)), 6) AS f1,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY round(2 * CAST(tp AS DOUBLE)
-        |                          / (2 * tp + fp + (n_pos - tp)), 6) DESC,
-        |                    score DESC) AS rn
-        |  FROM c WHERE n_pos > 0
-        |)
-        |SELECT source, score AS threshold, tp, fp, f1
-        |FROM f WHERE rn = 1 ORDER BY source""".stripMargin),
-
-    "q_multimodal_features" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id,
-        |         octet_length(encode(text)) AS n_bytes,
-        |         sha256(text) AS h
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |       CAST(n_bytes AS INT) AS n_bytes,
-        |       CAST(16 + 4*((strpos('0123456789abcdef', h[1]) - 1)*16
-        |                    + strpos('0123456789abcdef', h[2]) - 1) AS INT) AS width,
-        |       CAST(16 + 4*((strpos('0123456789abcdef', h[3]) - 1)*16
-        |                    + strpos('0123456789abcdef', h[4]) - 1) AS INT) AS height,
-        |       CAST(1 AS INT) AS n_frames
-        |FROM s ORDER BY media_id""".stripMargin,
-
-    // Image-codec replay: the md5 pixel formula, every lattice point of
-    // the 8x8 image (the 64-point grid visits each pixel once), integer
-    // channel sums, luma sums in (y, x) order per quadrant, the /n/255
-    // normalizations through float32. e0 suffixes force DOUBLE literals
-    // (DuckDB parses bare decimals as DECIMAL, which would change the
-    // arithmetic). The PNG bytes never appear — PNG is lossless, so the
-    // decoded pixels ARE the formula's values.
-    "q_image_features" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, x.x AS x, y.y AS y,
-        |         md5(CAST(d.doc_id AS VARCHAR) || ':' ||
-        |             CAST(x.x AS VARCHAR) || ':' || CAST(y.y AS VARCHAR)) AS h
-        |  FROM documents d, range(8) x(x), range(8) y(y)
-        |), rgb AS (
-        |  SELECT doc_id, x, y,
-        |    (strpos('0123456789abcdef', substr(h,1,1))-1)*16 +
-        |      (strpos('0123456789abcdef', substr(h,2,1))-1) AS r,
-        |    (strpos('0123456789abcdef', substr(h,3,1))-1)*16 +
-        |      (strpos('0123456789abcdef', substr(h,4,1))-1) AS g,
-        |    (strpos('0123456789abcdef', substr(h,5,1))-1)*16 +
-        |      (strpos('0123456789abcdef', substr(h,6,1))-1) AS b
-        |  FROM px
-        |), agg AS (
-        |  SELECT doc_id,
-        |    sum(r) AS sr, sum(g) AS sg, sum(b) AS sb,
-        |    list_sum(list(0.299e0*r + 0.587e0*g + 0.114e0*b ORDER BY y, x)
-        |      FILTER (WHERE y < 4 AND x < 4)) AS ltl,
-        |    list_sum(list(0.299e0*r + 0.587e0*g + 0.114e0*b ORDER BY y, x)
-        |      FILTER (WHERE y < 4 AND x >= 4)) AS ltr,
-        |    list_sum(list(0.299e0*r + 0.587e0*g + 0.114e0*b ORDER BY y, x)
-        |      FILTER (WHERE y >= 4 AND x < 4)) AS lbl,
-        |    list_sum(list(0.299e0*r + 0.587e0*g + 0.114e0*b ORDER BY y, x)
-        |      FILTER (WHERE y >= 4 AND x >= 4)) AS lbr
-        |  FROM rgb GROUP BY doc_id
-        |)
-        |SELECT doc_id AS media_id,
-        |       CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
-        |       CAST(1 AS INT) AS n_frames,
-        |       round(CAST(CAST(sr/64e0/255e0 AS FLOAT) AS DOUBLE), 6) AS r_mean,
-        |       round(CAST(CAST(sg/64e0/255e0 AS FLOAT) AS DOUBLE), 6) AS g_mean,
-        |       round(CAST(CAST(sb/64e0/255e0 AS FLOAT) AS DOUBLE), 6) AS b_mean,
-        |       round(CAST(CAST(ltl/16e0/255e0 AS FLOAT) AS DOUBLE), 6) AS luma_tl,
-        |       round(CAST(CAST(ltr/16e0/255e0 AS FLOAT) AS DOUBLE), 6) AS luma_tr,
-        |       round(CAST(CAST(lbl/16e0/255e0 AS FLOAT) AS DOUBLE), 6) AS luma_bl,
-        |       round(CAST(CAST(lbr/16e0/255e0 AS FLOAT) AS DOUBLE), 6) AS luma_br,
-        |       round(CAST(CAST(1.0e0 AS FLOAT) AS DOUBLE), 6) AS aspect
-        |FROM agg ORDER BY media_id""".stripMargin,
-
-    // Analytic replay of the audio codec round-trip: the sample at frame
-    // k of doc id is ((first md5 hex byte of "id_k") - 128) * 256 on the
-    // signed-16-bit lattice; window w of 4 covers frames
-    // [n*w//4, n*(w+1)//4). RMS = sqrt(mean((v/32768)^2)); the per-window
-    // value passes through FLOAT (the decoder's envelope is float32)
-    // before rounding, mirroring AudioInfo.windowRms.
-    "q_audio_features" ->
-      """WITH base AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST(400 + (n_chars % 5) * 80 AS BIGINT) AS n
-        |  FROM documents
-        |), frames AS (
-        |  SELECT media_id, n, unnest(range(0, n)) AS k FROM base
-        |), samp AS (
-        |  SELECT media_id, n, k,
-        |         CAST(((strpos('0123456789abcdef',
-        |                  substr(md5(CAST(media_id AS VARCHAR) || '_' ||
-        |                         CAST(k AS VARCHAR)), 1, 1)) - 1) * 16
-        |             + (strpos('0123456789abcdef',
-        |                  substr(md5(CAST(media_id AS VARCHAR) || '_' ||
-        |                         CAST(k AS VARCHAR)), 2, 1)) - 1)
-        |             - 128) * 256 AS DOUBLE) AS v
-        |  FROM frames
-        |), win AS (
-        |  SELECT s.media_id, w.w, s.v
-        |  FROM samp s, (SELECT unnest(range(0, 4)) AS w) w
-        |  WHERE s.k >= (s.n * w.w) // 4 AND s.k < (s.n * (w.w + 1)) // 4
-        |), winrms AS (
-        |  SELECT media_id, w,
-        |         round(CAST(CAST(sqrt(avg(power(v / 32768.0, 2))) AS FLOAT)
-        |               AS DOUBLE), 6) AS win_rms
-        |  FROM win GROUP BY media_id, w
-        |), overall AS (
-        |  SELECT media_id,
-        |         round(sqrt(avg(power(v / 32768.0, 2))), 6) AS rms
-        |  FROM samp GROUP BY media_id
-        |)
-        |SELECT b.media_id,
-        |       CAST(44 + 2 * b.n AS BIGINT) AS n_bytes,
-        |       CAST(8000 AS BIGINT) AS sample_rate,
-        |       CAST(1 AS BIGINT) AS channels,
-        |       b.n AS n_frames,
-        |       round(b.n / 8000.0, 6) AS duration_s,
-        |       o.rms,
-        |       CAST(wr.w AS BIGINT) AS win_idx,
-        |       wr.win_rms
-        |FROM base b
-        |JOIN overall o USING (media_id)
-        |JOIN winrms wr USING (media_id)
-        |ORDER BY media_id, win_idx""".stripMargin,
-
-    "q_knn_join" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
-        |SELECT id_l, id_r, cos_sim, CAST(rn AS INT) AS rank FROM (
-        |  SELECT a.vec_id AS id_l, b.vec_id AS id_r,
-        |         round(list_dot_product(a.e, b.e) /
-        |               (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))), 6) + 0.0e0 AS cos_sim,
-        |         row_number() OVER (PARTITION BY a.vec_id
-        |                            ORDER BY round(list_dot_product(a.e, b.e) /
-        |                              (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))), 6) DESC,
-        |                            b.vec_id) AS rn
-        |  FROM v a JOIN v b ON a.vec_id <> b.vec_id
-        |) WHERE rn <= 5 ORDER BY id_l, rn""".stripMargin,
-
-    "q_sim_topk" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0
-        |)
-        |SELECT vec_id,
-        |       round(list_dot_product(CAST(embedding AS DOUBLE[]), qe) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qe, qe))), 6) + 0.0e0 AS cos_sim
-        |FROM embeddings, q
-        |WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    // Hard-negative replay: anchors 0-2 cross candidates, rounded
-    // cosine, role split on the banded grid, per-anchor rank window.
-    "q_hard_negatives" ->
-      """WITH a AS (
-        |  SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS va
-        |  FROM embeddings WHERE vec_id <= 2
-        |), c AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vc
-        |  FROM embeddings WHERE vec_id > 2
-        |), s AS (
-        |  SELECT a.anchor_id, c.vec_id,
-        |         round(list_dot_product(va, vc) /
-        |               (sqrt(list_dot_product(va, va))
-        |                * sqrt(list_dot_product(vc, vc))), 6) + 0.0e0 AS cos_sim
-        |  FROM c, a WHERE c.vec_id <> a.anchor_id
-        |), m AS (
-        |  SELECT anchor_id, vec_id, cos_sim, 'positive' AS role
-        |  FROM s WHERE cos_sim >= 0.95
-        |  UNION ALL
-        |  SELECT anchor_id, vec_id, cos_sim, 'hard_negative' AS role FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY anchor_id
-        |                ORDER BY cos_sim DESC, vec_id) AS rk
-        |    FROM s WHERE cos_sim >= 0.2 AND cos_sim < 0.9)
-        |  WHERE rk <= 10
-        |)
-        |SELECT anchor_id, vec_id, cos_sim, role
-        |FROM m ORDER BY anchor_id, role, cos_sim DESC, vec_id""".stripMargin,
-
-    // Filtered exact search: q_sim_topk restricted to the label=1 slice.
-    "q_sim_filtered" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0
-        |)
-        |SELECT vec_id,
-        |       round(list_dot_product(CAST(embedding AS DOUBLE[]), qe) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qe, qe))), 6) + 0.0e0 AS cos_sim
-        |FROM embeddings, q
-        |WHERE vec_id <> 0 AND label = 1
-        |ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    // Exhaustive probe (nprobe = nlist) of the filtered IVF index is
-    // filtered brute force by construction — same SQL as q_sim_filtered.
-    "q_sim_ivf_filtered" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0
-        |)
-        |SELECT vec_id,
-        |       round(list_dot_product(CAST(embedding AS DOUBLE[]), qe) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qe, qe))), 6) + 0.0e0 AS cos_sim
-        |FROM embeddings, q
-        |WHERE vec_id <> 0 AND label = 1
-        |ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    // The auto-widen probe's pool target (80) exceeds the predicate's
-    // match count at every SF, so it provably widens to nprobe = nlist
-    // — filtered brute force, same cosine SQL over the thinner slice.
-    "q_sim_ivf_widen" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0
-        |)
-        |SELECT vec_id,
-        |       round(list_dot_product(CAST(embedding AS DOUBLE[]), qe) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qe, qe))), 6) + 0.0e0 AS cos_sim
-        |FROM embeddings, q
-        |WHERE vec_id <> 0 AND vec_id % 100 = 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    // Every query's widened prefix provably covers all cells (slice
-    // smaller than the pool target), so per-query rows are filtered
-    // brute force: rank-windowed cosine over the slice, self excluded.
-    "q_sim_ivf_widen_batch" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
-        |  FROM embeddings WHERE vec_id IN (0, 1, 2)
-        |), c AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings WHERE vec_id <> 0 AND vec_id % 100 = 0
-        |), scored AS (
-        |  SELECT q.qid, c.vec_id AS id,
-        |         round(list_dot_product(c.e, q.qe) /
-        |               (sqrt(list_dot_product(c.e, c.e)) *
-        |                sqrt(list_dot_product(q.qe, q.qe))), 6) + 0.0e0 AS cos_sim
-        |  FROM q, c WHERE c.vec_id <> q.qid
-        |)
-        |SELECT qid, id, cos_sim, rank FROM (
-        |  SELECT qid, id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |                ORDER BY cos_sim DESC, id) AS INT) AS rank
-        |  FROM scored
-        |) WHERE rank <= 20
-        |ORDER BY qid, rank""".stripMargin,
-
-    // Exhaustive-shortlist PQ re-rank is brute force by construction
-    // (every row reaches the full-precision re-scan) — plain MIPS dot,
-    // not cosine, matching pqTopKReranked's scoring.
-    "q_sim_pq_exhaustive" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0
-        |)
-        |SELECT vec_id,
-        |       round(list_dot_product(CAST(embedding AS DOUBLE[]), qe), 6) + 0.0e0 AS score
-        |FROM embeddings, q
-        |WHERE vec_id <> 0
-        |ORDER BY score DESC, vec_id LIMIT 20""".stripMargin,
-
-    // PCA->IVF exhaustive mode: all cells probed, shortlist covers the
-    // corpus, re-rank is exact full-dim cosine — brute force by
-    // construction, independent of eigenbasis and cells (q_sim_topk's
-    // SQL).
-    "q_sim_pca_ivf" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0
-        |)
-        |SELECT vec_id,
-        |       round(list_dot_product(CAST(embedding AS DOUBLE[]), qe) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qe, qe))), 6) + 0.0e0 AS cos_sim
-        |FROM embeddings, q
-        |WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    // Exhaustive probe (nprobe = nlist) of the rebalanced IVF index is
-    // brute force by construction — the oracle is q_sim_topk's SQL.
-    "q_sim_ivf_rebalanced" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0
-        |)
-        |SELECT vec_id,
-        |       round(list_dot_product(CAST(embedding AS DOUBLE[]), qe) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qe, qe))), 6) + 0.0e0 AS cos_sim
-        |FROM embeddings, q
-        |WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    "q_sim_rerank" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe,
-        |         CAST(embedding AS DOUBLE[])[1:16] AS q16
-        |  FROM embeddings WHERE vec_id = 0
-        |), cand AS (
-        |  SELECT vec_id FROM (
-        |    SELECT vec_id,
-        |           round(list_dot_product(CAST(embedding AS DOUBLE[])[1:16], q16) /
-        |                 (sqrt(list_dot_product(CAST(embedding AS DOUBLE[])[1:16],
-        |                                        CAST(embedding AS DOUBLE[])[1:16])) *
-        |                  sqrt(list_dot_product(q16, q16))), 6) AS cs
-        |    FROM embeddings, q
-        |    WHERE vec_id <> 0
-        |    ORDER BY cs DESC, vec_id LIMIT 60)
-        |)
-        |SELECT e.vec_id,
-        |       round(list_dot_product(CAST(e.embedding AS DOUBLE[]), qe) /
-        |             (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |              sqrt(list_dot_product(qe, qe))), 6) + 0.0e0 AS cos_sim
-        |FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN q
-        |ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    "q_sim_truncated" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[])[1:16] AS qe FROM embeddings WHERE vec_id = 0
-        |)
-        |SELECT vec_id,
-        |       round(list_dot_product(CAST(embedding AS DOUBLE[])[1:16], qe) /
-        |             (sqrt(list_dot_product(CAST(embedding AS DOUBLE[])[1:16],
-        |                                    CAST(embedding AS DOUBLE[])[1:16])) *
-        |              sqrt(list_dot_product(qe, qe))), 6) + 0.0e0 AS cos_sim
-        |FROM embeddings, q
-        |WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    // SQ8: replay the deterministic quantization pipeline — per-dim
-    // min/max over the full corpus, floor-rounded 0..255 codes, decode
-    // to bucket midpoints, sequential-sum dot, 6dp-rounded per-query
-    // top-10 (rounding before ranking keeps tie order engine-exact).
-    "q_sim_sq8" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |x AS (SELECT vec_id, unnest(v) AS x, unnest(range(1, len(v)+1)) AS dim FROM e),
-        |d AS (SELECT dim, min(x) AS mn, max(x) AS mx FROM x GROUP BY dim),
-        |q AS (SELECT vec_id,
-        |             list(CASE WHEN mx = mn THEN mn
-        |                       ELSE mn + (least(255, CAST(floor((x - mn) * 255.0 / (mx - mn)) AS INT)) + 0.5)
-        |                                 * (mx - mn) / 255.0 END
-        |                  ORDER BY dim) AS dec
-        |      FROM x JOIN d USING (dim) GROUP BY vec_id),
-        |s AS (SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-        |             round(list_dot_product(a.dec, b.dec), 6) + 0.0e0 AS qscore
-        |      FROM q a JOIN q b ON a.vec_id < 5 AND a.vec_id <> b.vec_id),
-        |r AS (SELECT qid, vec_id, qscore,
-        |             CAST(row_number() OVER (PARTITION BY qid ORDER BY qscore DESC, vec_id) AS INT) AS rnk
-        |      FROM s)
-        |SELECT qid, vec_id, qscore, rnk FROM r WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin,
-
-    // Sign bits are pure functions of the data (x > 0 per dimension), so
-    // DuckDB replays the Hamming ranking exactly: count dimensions whose
-    // sign differs from the query's, ties id-ascending.
-    "q_sim_binary" ->
-      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id,
-        |       CAST(len(list_filter(range(1, len(e.embedding) + 1),
-        |                            r -> (e.embedding[r] > 0) != (q.qe[r] > 0))) AS INT) AS hamming
-        |FROM embeddings e, q
-        |WHERE e.vec_id <> 0
-        |ORDER BY hamming, vec_id LIMIT 20""".stripMargin,
-
-    "q_sim_binary_batch" ->
-      """WITH h AS (
-        |  SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-        |         CAST(len(list_filter(range(1, len(b.embedding) + 1),
-        |                              r -> (b.embedding[r] > 0) != (a.embedding[r] > 0))) AS INT) AS hamming
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < 5 AND a.vec_id <> b.vec_id),
-        |r AS (SELECT qid, vec_id, hamming,
-        |             CAST(row_number() OVER (PARTITION BY qid ORDER BY hamming, vec_id) AS INT) AS rnk
-        |      FROM h)
-        |SELECT qid, vec_id, hamming, rnk FROM r WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin,
-
-    "q_emb_neardup" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |       round(list_dot_product(a.e, b.e) /
-        |             (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))), 6) + 0.0e0 AS cos_sim
-        |FROM v a JOIN v b ON a.vec_id < b.vec_id
-        |WHERE list_dot_product(a.e, b.e) /
-        |      (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_multimodal_meta" ->
-      """SELECT doc_id AS media_id,
-        |       'text' AS modality,
-        |       CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-        |       sha256(text) AS content_sha
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "q_string_funcs" ->
-      """SELECT p_partkey,
-        |       upper(p_brand) AS brand_upper,
-        |       substring(p_name, 1, 10) AS name_prefix,
-        |       concat_ws('|', p_brand, p_type) AS brand_type,
-        |       regexp_replace(p_name, '[aeiou]', '', 'g') AS name_novowels,
-        |       CAST(length(p_name) AS INT) AS name_len
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q_array_agg" ->
-      """SELECT o_custkey,
-        |       array_to_string(list_sort(list(o_orderpriority)), ',') AS priorities_csv,
-        |       CAST(len(list_distinct(list(o_orderpriority))) AS INT) AS n_distinct_prio,
-        |       CAST(count(*) AS BIGINT) AS n_orders
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-    "q_sql_surface" ->
-      """SELECT vec_id,
-        |       round(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                              CAST(embedding AS DOUBLE[])), 6) AS norm2
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "q_salted_agg" ->
-      """SELECT user_id,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_map_funcs" ->
-      """SELECT event_id,
-        |       CAST(json_extract(props, '$.k') AS INT) AS k_val,
-        |       CAST(len(json_keys(props)) AS INT) AS n_keys
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // Portable-HLL replay: register = first 2 md5 hex chars, w = next
-    // 13 (the house h52 parse), rho = 53 - bitlength(w) via bin(),
-    // integer Σ 2^(53-rho) + 2^53 per absent register, then the
-    // identical 3-op raw-estimate arithmetic with the SAME alpha*m^2
-    // literal the engine embeds.
-    "q_hll_distinct" -> portableHllOracleSql,
-
-    // Sketch-union composition identity: merged shards == one-shot.
-    "q_hll_merge" -> portableHllOracleSql,
-
-    "q_hll_overlap" -> portableHllOverlapOracleSql,
-    "q_pref_bt_order" -> bradleyTerryOrderOracleSql(10),
-    "q_pref_item_wilson" -> (prefCmpCteSql +
-      """, d AS (
-        |  SELECT item, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN iswin THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM (SELECT w AS item, TRUE AS iswin FROM cmpx
-        |        UNION ALL SELECT l, FALSE FROM cmpx)
-        |  GROUP BY 1
-        |), c AS (
-        |  SELECT item, n, k,
-        |         CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-        |         (1.96 * 1.96) / CAST(n AS DOUBLE) AS z2n
-        |  FROM d
-        |), w AS (
-        |  SELECT item, n, k, p, z2n,
-        |         (p + z2n / 2.0) / (1.0 + z2n) AS center,
-        |         (1.96 * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE)
-        |                      + z2n / (4.0 * CAST(n AS DOUBLE)))) / (1.0 + z2n) AS half
-        |  FROM c
-        |)
-        |SELECT item, n AS n_comparisons, k AS n_wins, round(p, 6) AS rate,
-        |       round(center - half, 6) + 0.0e0 AS wilson_lo,
-        |       round(center + half, 6) + 0.0e0 AS wilson_hi
-        |FROM w
-        |ORDER BY item""".stripMargin),
-    "q_pref_bt_se" -> bradleyTerrySeOracleSql(10),
-    "q_pref_judge_bias" -> judgeQcOracleSql(10),
-    "q_label_dawid_skene" -> dawidSkeneOracleSql(5),
-    "q_label_consensus_scalar" -> scalarConsensusOracleSql(5),
-    "q_label_rater_scale" -> scalarRaterOracleSql(5),
-    "q_label_route" -> dawidSkeneRouteOracleSql(5, "0.333"),
-    "q_label_drift" -> labelDriftOracleSql,
-    "q_label_monitor" -> labelDriftOracleSql,
-    "q_label_gold" -> labelGoldOracleSql,
-    "q_pref_position_drift" -> positionDriftOracleSql,
-    "q_label_ds_confusion" -> dawidSkeneConfusionOracleSql(5),
-    "q_pref_bradley_terry" -> bradleyTerryOracleSql(10),
-    "q_pref_consistency" -> prefConsistencyOracleSql,
-    "q_pref_connectivity" -> prefConnectivityOracleSql,
-    "q_pref_plackett_luce" -> plackettLuceOracleSql(10),
-    "q_pref_rank_centrality" -> rankCentralityOracleSql(10),
-    "q_pref_bt_by_lang" -> btBySliceOracleSql(10),
-    "q_pref_list_connectivity" -> listConnectivityOracleSql,
-    "q_pref_list_top1" -> (listwisePosCteSql +
-      """, d AS (
-        |  SELECT item, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM posx WHERE m >= 2 GROUP BY 1
-        |), c AS (
-        |  SELECT item, n, k,
-        |         CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-        |         (1.96 * 1.96) / CAST(n AS DOUBLE) AS z2n
-        |  FROM d
-        |), wx AS (
-        |  SELECT item, n, k, p, z2n,
-        |         (p + z2n / 2.0) / (1.0 + z2n) AS center,
-        |         (1.96 * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE)
-        |                      + z2n / (4.0 * CAST(n AS DOUBLE)))) / (1.0 + z2n) AS half
-        |  FROM c
-        |)
-        |SELECT item, n AS n_rankings, k AS n_top, round(p, 6) AS rate,
-        |       round(center - half, 6) + 0.0e0 AS wilson_lo,
-        |       round(center + half, 6) + 0.0e0 AS wilson_hi
-        |FROM wx
-        |ORDER BY item""".stripMargin),
-    "q_pref_list_consistency" -> (listwisePosCteSql +
-      """, lb AS MATERIALIZED (
-        |  SELECT a.item AS w, b.item AS l
-        |  FROM posx a JOIN posx b ON b.grp = a.grp AND b.pos > a.pos
-        |  WHERE a.m >= 2
-        |)""".stripMargin +
-      consistencyChainSql("lb")),
-    "q_pref_calibration" -> bradleyTerryCalibrationOracleSql(10),
-    "q_pref_bt_ties" -> bradleyTerryTiesOracleSql(10, "1.5"),
-
-    // Position-bias replay: the shared cmpx records carry the
-    // first-position source; one census + the chi-square gate.
-    // Verbosity-bias replay (r17): the pref q CTE carrying token
-    // counts, "longer side" in place of "shown first", same census +
-    // chi-square gate.
-    "q_pref_length_bias" ->
-      """WITH q AS MATERIALIZED (
-        |  SELECT doc_id, source, n_tok,
-        |    round((
-        |      (CASE WHEN n_tok BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_tok > 0 AND CAST(n_chars AS DOUBLE)/n_tok BETWEEN 2 AND 12
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      (CASE WHEN n_chars > 0 AND CAST(n_punct AS DOUBLE)/n_chars <= 0.2
-        |            THEN 1.0 ELSE 0.0 END) +
-        |      least(CASE WHEN n_tok > 0 THEN CAST(n_stop AS DOUBLE)/n_tok ELSE 0.0 END * 5.0, 1.0)
-        |    ) / 4.0, 4) AS q
-        |  FROM (SELECT doc_id, source,
-        |          length(text) AS n_chars,
-        |          len(regexp_extract_all(text, '\S+')) AS n_tok,
-        |          len(list_filter(regexp_extract_all(text, '\S+'), x -> lower(x) IN
-        |            ('the','a','of','and','to','in','is','it','that','for'))) AS n_stop,
-        |          len(regexp_extract_all(text, $$[.,;:!?'"()\[\]{}-]$$)) AS n_punct
-        |        FROM documents)
-        |), cm AS MATERIALIZED (
-        |  SELECT CASE WHEN a.q > b.q THEN a.source
-        |              WHEN a.q < b.q THEN b.source
-        |              ELSE least(a.source, b.source) END AS w,
-        |         CASE WHEN a.n_tok >= b.n_tok THEN a.source
-        |              ELSE b.source END AS f
-        |  FROM q a JOIN q b ON b.doc_id = a.doc_id + 1
-        |  WHERE a.source <> b.source
-        |)
-        |SELECT n, n_first_wins,
-        |  round(CAST(n_first_wins AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |    AS first_win_rate,
-        |  round(CAST((2 * n_first_wins - n) * (2 * n_first_wins - n) AS DOUBLE)
-        |        / CAST(n AS DOUBLE), 6) AS chi2,
-        |  (CAST((2 * n_first_wins - n) * (2 * n_first_wins - n) AS DOUBLE)
-        |   / CAST(n AS DOUBLE) > 3.841) AS biased
-        |FROM (SELECT CAST(count(*) AS BIGINT) AS n,
-        |             CAST(sum(CASE WHEN w = f THEN 1 ELSE 0 END) AS BIGINT)
-        |               AS n_first_wins
-        |      FROM cm)
-        |WHERE n > 0""".stripMargin,
-
-    "q_pref_position_bias" -> (prefCmpCteSql +
-      """
-        |SELECT n, n_first_wins,
-        |  round(CAST(n_first_wins AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |    AS first_win_rate,
-        |  round(CAST((2 * n_first_wins - n) * (2 * n_first_wins - n) AS DOUBLE)
-        |        / CAST(n AS DOUBLE), 6) AS chi2,
-        |  (CAST((2 * n_first_wins - n) * (2 * n_first_wins - n) AS DOUBLE)
-        |   / CAST(n AS DOUBLE) > 3.841) AS biased
-        |FROM (SELECT CAST(count(*) AS BIGINT) AS n,
-        |             CAST(sum(CASE WHEN w = f THEN 1 ELSE 0 END) AS BIGINT)
-        |               AS n_first_wins
-        |      FROM cmpx)
-        |WHERE n > 0""".stripMargin),
-
-    "q_json_extract" ->
-      """SELECT CAST(json_extract(props, '$.k') AS INT) % 10 AS k_mod,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(json_extract(props, '$.k') AS INT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY k_mod ORDER BY k_mod""".stripMargin,
-
-    "q_percentile" ->
-      """SELECT l_returnflag,
-        |       quantile_cont(l_quantity, 0.5) AS median_qty,
-        |       quantile_cont(l_extendedprice, 0.9) AS p90_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_join_part_supp" ->
-      """SELECT p_brand,
-        |       CAST(count(*) AS BIGINT) AS n_items,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-        |       CAST(count(DISTINCT s_suppkey) AS BIGINT) AS n_suppliers
-        |FROM lineitem
-        |JOIN part     ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-
-    "q_window_rank" ->
-      """SELECT event_id, user_id, rn, rk, drk FROM (
-        |  SELECT event_id, user_id,
-        |         CAST(row_number() OVER w AS INT) AS rn,
-        |         CAST(rank() OVER w AS INT) AS rk,
-        |         CAST(dense_rank() OVER w AS INT) AS drk
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY value DESC, event_id)
-        |) WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin,
-
-    "q_window_lag" ->
-      """SELECT event_id, user_id,
-        |       CAST(floor(epoch(ts)) AS BIGINT)
-        |         - lag(CAST(floor(epoch(ts)) AS BIGINT), 1) OVER w AS secs_since_prev,
-        |       lead(event_type, 1) OVER w AS next_type
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_window_running" ->
-      """SELECT event_id, user_id,
-        |       CAST(sum(CAST(value AS DECIMAL(38,12))) OVER w AS DOUBLE) AS running_value,
-        |       CAST(count(*) OVER w AS BIGINT) AS event_seq
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_window_pct" ->
-      """SELECT event_id, event_type,
-        |       round(percent_rank() OVER w, 6) AS pct_rank,
-        |       round(cume_dist() OVER w, 6) AS cume,
-        |       CAST(ntile(4) OVER w AS INT) AS quartile
-        |FROM events
-        |WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT CAST(hour(ts) AS INT) AS event_hour,
-        |       CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-        |       CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
-        |       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-        |       CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-        |       CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error
-        |FROM events GROUP BY event_hour ORDER BY event_hour""".stripMargin,
-
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    "q_sink_partitioned" ->
-      """SELECT o_orderpriority,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM orders
-        |WHERE year(o_orderdate) = 1997
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q_upsert_merge" ->
-      """WITH updates AS (
-        |  SELECT o_orderkey, o_orderstatus, '1-URGENT' AS o_orderpriority,
-        |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) + 1000 AS DOUBLE) AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 97 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 100000000, o_orderstatus, o_orderpriority, o_totalprice
-        |  FROM orders WHERE o_orderkey % 89 = 3
-        |), merged AS (
-        |  SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice FROM orders
-        |  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates)
-        |  UNION ALL
-        |  SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice FROM updates
-        |)
-        |SELECT o_orderstatus, o_orderpriority,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM merged
-        |GROUP BY o_orderstatus, o_orderpriority
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-
-    "q_upsert_partitioned" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, CAST(year(o_orderdate) AS INT) AS o_year, o_totalprice
-        |  FROM orders
-        |), updates AS (
-        |  SELECT o_orderkey, CAST(o_year + 1 AS INT) AS o_year,
-        |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) + 500 AS DOUBLE) AS o_totalprice
-        |  FROM base WHERE o_orderkey % 131 = 0
-        |), merged AS (
-        |  SELECT o_orderkey, o_year, o_totalprice FROM base
-        |  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates)
-        |  UNION ALL
-        |  SELECT o_orderkey, o_year, o_totalprice FROM updates
-        |)
-        |SELECT o_year,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM merged
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    "q_cdc_apply" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        |), changes AS (
-        |  SELECT o_orderkey, o_orderstatus,
-        |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) + 100 AS DOUBLE) AS o_totalprice,
-        |         1 AS seq, 'upsert' AS op
-        |  FROM base WHERE o_orderkey % 113 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, 'X',
-        |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) + 200 AS DOUBLE),
-        |         2, 'upsert'
-        |  FROM base WHERE o_orderkey % 113 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice, 3, 'delete'
-        |  FROM base WHERE o_orderkey % 127 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 200000000, o_orderstatus, o_totalprice, 1, 'upsert'
-        |  FROM base WHERE o_orderkey % 151 = 3
-        |), latest AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY seq DESC) AS rn
-        |    FROM changes) WHERE rn = 1
-        |), applied AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM base
-        |  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM latest)
-        |  UNION ALL
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM latest
-        |  WHERE lower(op) <> 'delete'
-        |)
-        |SELECT o_orderstatus,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM applied
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_scd2" ->
-      """WITH base AS (
-        |  SELECT c_custkey, c_acctbal FROM customer
-        |), hist AS (
-        |  SELECT c_custkey, c_acctbal, DATE '2024-01-01' AS valid_from,
-        |         c_custkey % 5 <> 0 AS is_current
-        |  FROM base
-        |  UNION ALL
-        |  SELECT c_custkey, CAST(CAST(c_acctbal AS DECIMAL(18,2)) + 100 AS DOUBLE),
-        |         DATE '2024-02-01', c_custkey % 10 <> 0
-        |  FROM base WHERE c_custkey % 5 = 0
-        |  UNION ALL
-        |  SELECT c_custkey, CAST(CAST(c_acctbal AS DECIMAL(18,2)) + 200 AS DOUBLE),
-        |         DATE '2024-03-01', true
-        |  FROM base WHERE c_custkey % 10 = 0
-        |)
-        |SELECT is_current, valid_from,
-        |       CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-        |FROM hist
-        |GROUP BY is_current, valid_from
-        |ORDER BY is_current, valid_from""".stripMargin,
-
-    // Schema-evolution replay: even-id rows predate the new column and
-    // read as null there; odd-id rows carry their source.
-    "q_schema_evolution" ->
-      """SELECT doc_id, lang,
-        |       CASE WHEN doc_id % 2 = 1 THEN source END AS source
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_time_travel" ->
-      """WITH v2 AS (
-        |  SELECT o_orderpriority, o_totalprice FROM orders
-        |  WHERE year(o_orderdate) <= 1996
-        |), v3 AS (
-        |  SELECT o_orderpriority, o_totalprice FROM orders
-        |  WHERE year(o_orderdate) >= 1997
-        |), u AS (
-        |  SELECT 2 AS version, * FROM v2
-        |  UNION ALL
-        |  SELECT 3 AS version, * FROM v3
-        |)
-        |SELECT version, o_orderpriority,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM u
-        |GROUP BY version, o_orderpriority
-        |ORDER BY version, o_orderpriority""".stripMargin,
-
-    "q_budget_sample" ->
-      """WITH scoped AS (
-        |  SELECT lang, n_chars, doc_id, md5(CAST(doc_id AS VARCHAR)) AS k
-        |  FROM documents WHERE lang IN ('en', 'de', 'fr', 'zh')
-        |), c AS (
-        |  SELECT lang, n_chars,
-        |         sum(n_chars) OVER (
-        |           PARTITION BY lang ORDER BY k, doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_chars AS excl
-        |  FROM scoped
-        |)
-        |SELECT lang,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars_kept
-        |FROM c
-        |WHERE excl < CASE lang WHEN 'en' THEN 30000 WHEN 'de' THEN 10000
-        |                       WHEN 'fr' THEN 1000000 ELSE 0 END
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q_exact_kth" ->
-      """WITH n AS (
-        |  SELECT count(*) AS c FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |), ranked AS (
-        |  SELECT l_extendedprice AS v,
-        |         row_number() OVER (ORDER BY l_extendedprice) AS rn
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |), ks AS (
-        |  SELECT 'p25' AS pct, (c - 1) // 4 + 1 AS k FROM n
-        |  UNION ALL
-        |  SELECT 'p50', (c - 1) // 2 + 1 FROM n
-        |  UNION ALL
-        |  SELECT 'p99', (c - 1) * 99 // 100 + 1 FROM n
-        |)
-        |SELECT pct, CAST(k AS BIGINT) AS k,
-        |       (SELECT v FROM ranked WHERE rn = k) AS kth_value
-        |FROM ks ORDER BY pct""".stripMargin,
-
-    "q_join_bloom" ->
-      """SELECT o.o_orderstatus,
-        |       CAST(count(*) AS BIGINT) AS n_items,
-        |       CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) *
-        |                (CAST(1 AS DECIMAL(18,2)) - CAST(l.l_discount AS DECIMAL(18,2))))
-        |            AS DOUBLE) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderpriority = '1-URGENT'
-        |GROUP BY o.o_orderstatus
-        |ORDER BY o.o_orderstatus""".stripMargin
-  )
+  lazy val queries: Map[String, Contract.Build] =
+    registry.map { case (name, c) => name -> c.build }
+
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case (name, Contract(_, _, Some(sql), _)) => name -> sql }
+
+  /** Names run by Bench: every contract not marked `bench = false`. */
+  lazy val benchQueries: Seq[String] =
+    contracts.filter(_.bench).map(_.name).sorted
 }

@@ -32,6 +32,17 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
+  /** SPARK_GRAFT_CPUS, the local core count, or `default` when unset.
+    * A value that is not a positive integer fails here, naming it, rather
+    * than reaching `local[...]` or a JSON number field as a raw string.
+    */
+  def envCpus(default: Int): Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case None => default
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
   /** Local session with WARN logging, used by mains and tests. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 1)).getOrCreate()

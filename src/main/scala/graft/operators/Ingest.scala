@@ -73,7 +73,10 @@ object Ingest {
     * and eager evaluation charged every ingest 2 count jobs even when
     * nothing read them (q_ingest_increment pays 4). First access runs
     * the counts; both inputs are deterministic (the landed parquet and
-    * the batch lineage), so laziness changes when, never what.
+    * the batch lineage), so laziness changes when, never what — with one
+    * exception: read `dropped` BEFORE replaying the same batchId. The
+    * replay overwrites `outPath/batch=<batchId>`, so a result held across
+    * it counts the replay's survivors or fails on deleted part files.
     */
   final class IngestResult(
       val survivors: DataFrame, droppedThunk: () => Long) {
@@ -113,18 +116,24 @@ object Ingest {
 
   /** Fold one batch into the standing corpus state. The batch text is
     * SKETCHED EXACTLY ONCE (r16 — was once per consumer, 4x): one
-    * persisted [[Dedup.fingerprintIndex]] frame feeds the drop probe,
-    * the index delta, and (through the landed delta) both link-grade
-    * pair sweeps, whose band keys derive row-locally from signature
-    * array slices. The surviving (novel) batch rows land under
-    * `outPath/batch=<batchId>` (OVERWRITE — replay-idempotent,
+    * persisted [[Dedup.fingerprintIndex]] frame (`fpBatch`) feeds the
+    * unified index sweep, the index delta, and (through the landed
+    * delta) the within-batch link sweep, whose band keys derive
+    * row-locally from signature array slices. The unified cross sweep
+    * (r20) reads the cached `fpBatch` against the standing index; its
+    * verified pairs (`candPairs`, persisted) serve both the drop probe
+    * and the survivor-vs-index links. The surviving (novel) batch rows
+    * land under `outPath/batch=<batchId>` (OVERWRITE — replay-idempotent,
     * partition-discoverable, the durable corpus increment a 100 TB
     * pipeline keeps anyway), and the survivor fingerprints land under
-    * `indexPath/delta=<batchId>` BEFORE the pair sweeps so both sweeps
-    * read LANDED files: accurate size stats for the join planner (an
-    * in-memory cache of the same rows left every sketch join
-    * un-broadcast and ran 4x slower, measured at sf0.1). Writing the
-    * delta early is replay-safe by construction — the index probe
+    * `indexPath/delta=<batchId>` BEFORE the within-batch sweep, so that
+    * sweep reads LANDED files: accurate size stats for the join planner
+    * (an in-memory cache of the same rows left every sketch join
+    * un-broadcast and ran 4x slower, measured at sf0.1). Only the
+    * within-batch sweep gets that guarantee: the cross sweep runs before
+    * anything lands, on in-memory frames, and has not been re-measured
+    * against the r16 broadcast concern since the r20 rewrite. Writing
+    * the delta early is replay-safe by construction — the index probe
     * excludes the current batch id ([[readIndex]]), and the cluster
     * fold that follows is idempotent. Every link pair (in-batch +
     * survivor-vs-index) folds into `clusterStorePath`.

@@ -1283,7 +1283,8 @@ object Kernels {
     * long[perms], or empty when the doc has < n tokens (the caller
     * drops those rows, matching the explode-of-empty behavior).
     * The oracle replays the identical arithmetic in SQL (see
-    * SparkEntry.minhashSigCte); DedupSpec pins the JVM reference.
+    * graft.contract.OracleSql.minhashCtes); DedupSpec pins the JVM
+    * reference.
     */
   def minhashSig(s: UTF8String, n: Int, perms: Int): ArrayData = {
     val bytes = s.getBytes

@@ -1,5 +1,7 @@
 package graft
 
+import graft.contract.Contract
+
 /** Every declared query must run on sf0.001 — catches runtime regressions
   * in any operator before the driver's sf0.01 gate does.
   */
@@ -11,6 +13,14 @@ class EntrySmokeSpec extends SparkSpec {
 
   test("every oracle key has a query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("a contract name listed in two families fails the registry, naming it") {
+    val familyA = Seq(Contract("q_dup", (s, d) => s.range(1).toDF()),
+      Contract("q_a", (s, d) => s.range(1).toDF()))
+    val familyB = Seq(Contract("q_dup", (s, d) => s.range(2).toDF(), "SELECT 1"))
+    val e = intercept[IllegalArgumentException](Contract.registry(familyA ++ familyB))
+    assert(e.getMessage.contains("duplicate contract names: q_dup"))
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -10,6 +10,7 @@ Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 import json
 import sys
 from pathlib import Path
+from typing import Optional
 
 import duckdb
 import pandas as pd
@@ -26,12 +27,45 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def main(sf_dir: str, out_dir: str) -> int:
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """An in-memory DuckDB with one view per testdata table."""
     con = duckdb.connect()
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
         if p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def frame_diff(got: pd.DataFrame, want: pd.DataFrame) -> Optional[str]:
+    """None when two canon() frames are equal bit for bit, else why not."""
+    if list(got.columns) != list(want.columns):
+        return f"columns {list(got.columns)} != {list(want.columns)}"
+    if len(got) != len(want):
+        return f"rows {len(got)} != {len(want)}"
+    diff_cols = []
+    for c in got.columns:
+        a, b = got[c], want[c]
+        # The driver hashes BIT PATTERNS: compare floats bitwise so
+        # +0.0 vs -0.0 (and NaN boxing) fail here like they fail there.
+        # Pandas `==` equates ±0.0, which let a signed-zero mismatch
+        # ship red two rounds running (r13/r14 q_emb_covariance).
+        if str(a.dtype) in ("float64", "float32") and str(a.dtype) == str(b.dtype):
+            u = "u8" if str(a.dtype) == "float64" else "u4"
+            eq = pd.Series(a.to_numpy().view(u) == b.to_numpy().view(u))
+        else:
+            eq = (a == b) | (a.isna() & b.isna())
+        if not bool(eq.all()):
+            idx = int((~eq).idxmax())
+            diff_cols.append(f"{c}[row {idx}: {a[idx]!r} != {b[idx]!r}, "
+                             f"dtypes {a.dtype}/{b.dtype}]")
+    if diff_cols:
+        return f"value diffs: {'; '.join(diff_cols[:3])}"
+    return None
+
+
+def main(sf_dir: str, out_dir: str) -> int:
+    con = connect(sf_dir)
     oracle = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
 
     n_pass = n_fail = 0
@@ -50,33 +84,9 @@ def main(sf_dir: str, out_dir: str) -> int:
             print(f"FAIL {name}: {e}")
             n_fail += 1
             continue
-        if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}")
-            n_fail += 1
-            continue
-        if len(got) != len(want):
-            print(f"FAIL {name}: rows {len(got)} != {len(want)}")
-            n_fail += 1
-            continue
-        diff_cols = []
-        for c in got.columns:
-            a, b = got[c], want[c]
-            # The driver hashes BIT PATTERNS: compare floats bitwise so
-            # +0.0 vs -0.0 (and NaN boxing) fail here like they fail there.
-            # Pandas `==` equates ±0.0, which let a signed-zero mismatch
-            # ship red two rounds running (r13/r14 q_emb_covariance).
-            if str(a.dtype) in ("float64", "float32") and str(a.dtype) == str(b.dtype):
-                import numpy as np
-                u = "u8" if str(a.dtype) == "float64" else "u4"
-                eq = pd.Series(a.to_numpy().view(u) == b.to_numpy().view(u))
-            else:
-                eq = (a == b) | (a.isna() & b.isna())
-            if not bool(eq.all()):
-                idx = int((~eq).idxmax())
-                diff_cols.append(f"{c}[row {idx}: {a[idx]!r} != {b[idx]!r}, "
-                                 f"dtypes {a.dtype}/{b.dtype}]")
-        if diff_cols:
-            print(f"FAIL {name}: value diffs: {'; '.join(diff_cols[:3])}")
+        diff = frame_diff(got, want)
+        if diff:
+            print(f"FAIL {name}: {diff}")
             n_fail += 1
         else:
             print(f"PASS {name} ({len(got)} rows)")
